@@ -6,25 +6,20 @@ pure pyarrow + the codec kernels. This is the table-level analog of the
 reference's local decompress call (``cuszplus_decompress`` is an
 in-process function, src/cuda_float_compress.cpp:88-91): a tool, test,
 or downstream service can pull a small extract without paying a JVM.
-Trust and visibility rules are IDENTICAL to the Spark decode paths:
 
-* only lineage-committed ``(part_id, run_id)`` pairs are read (crashed
-  runs are inert), with the same ``as_of`` snapshot semantics;
-* committed merge-on-read tombstones are applied (``_SUCCESS``-marked
-  ``deletes/run-*`` dirs only);
-* chunk pruning uses the exact int-domain zone maps (int/timestamp/date
-  columns — where vmin/vmax are exact, so pruning can never drop a
-  matching row); string/float predicates are applied as exact filters
-  after decode.
+The table's metadata comes from ``snapshot.Snapshot``, the same object
+the Spark decode paths read: the committed ``(part_id, run_id)`` pairs
+under ``as_of``, the union schema, the live tombstone runs, the block
+files and the filesystem (bare paths and ``file://`` alike). Only chunk
+pruning is local: the exact int-domain zone maps (int/timestamp/date
+columns, where vmin/vmax are exact, so pruning can never drop a matching
+row); string/float predicates are applied as exact filters after decode.
 
 Intended for metadata-scale and extract-scale reads (the driver-side
 use case); the 100 TB path is ``decode_table_direct``.
 """
 
 from __future__ import annotations
-
-import glob
-import os
 
 import numpy as np
 import pyarrow as pa
@@ -36,72 +31,13 @@ from cuda_float_compress_spark.operators.decode import (
     _STD_ARROW,
     _predicate_value,
 )
+from cuda_float_compress_spark.operators.deletes import ADDRESS_COLS
+from cuda_float_compress_spark.snapshot import Snapshot
 
 __all__ = ["read_table_local"]
 
 _INT_EXACT_PTYPES = ("int64", "int32", "timestamp_us", "timestamp_ntz",
                      "date32")
-
-
-def _committed_pairs(out_dir: str, as_of: float | None) -> set[tuple]:
-    lin = pq.read_table(
-        f"{out_dir}/lineage",
-        columns=["part_id", "run_id", "status", "finished_at"],
-    )
-    mask = pc.equal(lin.column("status"), "done")
-    if as_of is not None:
-        mask = pc.and_(mask, pc.less_equal(
-            lin.column("finished_at"), float(as_of)))
-    lin = lin.filter(mask)
-    return set(zip(lin.column("part_id").to_pylist(),
-                   lin.column("run_id").to_pylist()))
-
-
-def _table_columns_local(out_dir: str) -> list[tuple[str, str]]:
-    man = pq.read_table(f"{out_dir}/manifest",
-                        columns=["col", "col_idx", "ptype"])
-    rows = sorted(
-        {(man.column("col_idx")[i].as_py(), man.column("col")[i].as_py(),
-          man.column("ptype")[i].as_py()) for i in range(man.num_rows)}
-    )
-    out: list[tuple[str, str]] = []
-    seen: dict[str, str] = {}
-    for _, col, ptype in rows:
-        prev = seen.get(col)
-        if prev is None:
-            seen[col] = ptype
-            out.append((col, ptype))
-        elif prev != ptype:
-            if {prev, ptype} == {"timestamp_us", "timestamp_ntz"}:
-                # same INT96-ambiguity coalesce as decode.table_columns
-                seen[col] = "timestamp_us"
-                out[[c for c, _ in out].index(col)] = (col, "timestamp_us")
-            else:
-                raise ValueError(
-                    f"column {col!r} appended with conflicting types "
-                    f"{prev!r} and {ptype!r}"
-                )
-    return out
-
-
-def _tombstone_set(out_dir: str, as_of: float | None = None) -> set[tuple]:
-    runs = [
-        d for d in glob.glob(os.path.join(out_dir, "deletes", "run-*"))
-        if os.path.exists(os.path.join(d, "_SUCCESS"))
-    ]
-    tombs: set[tuple] = set()
-    for d in runs:
-        t = pq.read_table(d)
-        if as_of is not None and "committed_at" in t.column_names:
-            # Iceberg position-delete time scoping: a snapshot dated
-            # before the delete committed still sees the rows. Legacy
-            # runs without the stamp apply unconditionally.
-            t = t.filter(pc.fill_null(pc.less_equal(
-                t.column("committed_at"), float(as_of)), True))
-        tombs.update(zip(t.column("_part_id").to_pylist(),
-                         t.column("_chunk_id").to_pylist(),
-                         t.column("_pos").to_pylist()))
-    return tombs
 
 
 def _chunk_pruned(pred_by_col: dict, names, vmins, vmaxs, i) -> bool:
@@ -166,15 +102,18 @@ def read_table_local(
     """Decode an encoded table into one in-memory ``pyarrow.Table``
     without Spark. ``predicates`` uses the decode-pushdown language
     ([(col, op, literal)], AND semantics; ops ==, <, <=, >, >=, in)."""
-    committed = _committed_pairs(out_dir, as_of)
-    cols = _table_columns_local(out_dir)
+    snap = Snapshot.resolve(out_dir, as_of=as_of)
+    committed = snap.pairs
+    cols = snap.columns
     if columns is not None:
         want_set = set(columns) | {c for c, _, _ in (predicates or [])}
         cols = [(c, p) for c, p in cols if c in want_set]
     ptypes = dict(cols)
     tombs_by_chunk: dict[tuple, list[int]] = {}
-    if apply_deletes:
-        for p_, c_, pos in _tombstone_set(out_dir, as_of=as_of):
+    for run in (snap.tombstone_runs if apply_deletes else []):
+        t = pq.read_table(f"{snap.root}/{run}", columns=list(ADDRESS_COLS),
+                          filesystem=snap.fs)
+        for p_, c_, pos in zip(*(t[c].to_pylist() for c in ADDRESS_COLS)):
             tombs_by_chunk.setdefault((p_, c_), []).append(pos)
 
     # exact int-domain zone-map predicates prune chunks; everything is
@@ -190,8 +129,8 @@ def read_table_local(
     pieces: list[pa.Table] = []
     meta_cols = ["part_id", "chunk_id", "col", "codec", "n", "n_nulls",
                  "params", "run_id", "vmin", "vmax", "payload"]
-    for f in sorted(glob.glob(f"{out_dir}/blocks/*.parquet")):
-        tbl = pq.ParquetFile(f, memory_map=True, buffer_size=0).read(
+    for path, _ in snap.block_files:
+        tbl = pq.ParquetFile(path, filesystem=snap.fs).read(
             columns=meta_cols, use_threads=False,
         )
         part = tbl.column("part_id").to_pylist()
@@ -210,7 +149,8 @@ def read_table_local(
         dead: set[tuple] = set()
         for i in range(tbl.num_rows):
             key = (part[i], chunk[i])
-            if (part[i], run_ids[i]) not in committed:
+            if (committed is not None
+                    and (part[i], run_ids[i]) not in committed):
                 continue
             if _chunk_pruned(pred_by_col, names, vmins, vmaxs, i):
                 dead.add(key)

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.operators import chunks as C
+from cuda_float_compress_spark.snapshot import Snapshot
 
 _SPARK_TYPE = {
     "string": "string",
@@ -46,21 +47,7 @@ _STD_ARROW = {
 }
 
 
-def _repair_if_needed(out_dir: str) -> None:
-    import os
-
-    if not os.path.exists(f"{out_dir}/blocks") and os.path.exists(
-        f"{out_dir}/blocks_vacuum_old"
-    ):
-        # a crash inside vacuum's (non-atomic) two-rename swap left the
-        # table without a blocks dir — repair before reading
-        from cuda_float_compress_spark.operators.maintain import repair_vacuum
-
-        repair_vacuum(out_dir)
-
-
 def blocks_of(spark: SparkSession, out_dir: str) -> DataFrame:
-    _repair_if_needed(out_dir)
     # mergeSchema: appends across engine versions mix block layouts in one
     # dir (bloom + vsum columns added r6); the default single-footer schema
     # sample could silently drop — or fail on — the newer columns
@@ -69,153 +56,10 @@ def blocks_of(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-# --- driver-side metadata fast path (r7 optimization) -----------------------
-#
-# Reading table METADATA (lineage commit pairs, the union column schema)
-# through Spark costs 2-4 driver-blocking jobs (~0.2-0.4 s each: schema
-# inference + collect) before any payload work starts — measured ~1.1 s of
-# pure setup per decode at bench scale. The rows involved are metadata-scale
-# (one lineage row per part per run; one (col, ptype) row per column per
-# block file), so up to _META_FILE_CAP files they are read driver-side with
-# pyarrow — the same local-vs-Spark split the encode path already uses for
-# its manifest build (direct.py: <=256 block files => driver-side pyarrow).
-# Beyond the cap, or on any read error, every caller falls back to the
-# original Spark jobs — behavior is identical, only the transport changes.
-
-_META_FILE_CAP = 1024
-_META_FALLBACK = object()  # sentinel: metadata too large/remote for driver
-
-
-def _local_files(path: str, cap: int = _META_FILE_CAP) -> list[str] | None:
-    import glob as _glob
-    import os
-
-    files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-    if not files or len(files) > cap:
-        return None
-    return files
-
-
-def _lineage_rows_local(out_dir: str):
-    """[(part_id, run_id, status, finished_at)] via driver-side pyarrow;
-    None when the table has no lineage dir (externally assembled blocks —
-    trusted as-is, matching committed_blocks); _META_FALLBACK when the
-    lineage is too large for a driver read or unreadable."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    if "://" in str(out_dir) or str(out_dir).startswith("file:"):
-        # hdfs://, s3a://, file:/...: os.path/glob cannot see the dir — a
-        # bare isdir()==False here must mean FALLBACK (Spark read), never
-        # "table has no lineage, trust every block"
-        return _META_FALLBACK
-    lin_dir = os.path.join(out_dir, "lineage")
-    if not os.path.isdir(lin_dir):
-        return None
-    files = _local_files(lin_dir)
-    if files is None:
-        return _META_FALLBACK
-    rows = []
-    try:
-        for f in files:
-            t = pq.ParquetFile(f, memory_map=True, buffer_size=0).read(
-                columns=["part_id", "run_id", "status", "finished_at"],
-                use_threads=False,
-            )
-            rows.extend(zip(
-                t.column("part_id").to_pylist(),
-                t.column("run_id").to_pylist(),
-                t.column("status").to_pylist(),
-                t.column("finished_at").to_pylist(),
-            ))
-    except Exception:
-        return _META_FALLBACK
-    return rows
-
-
-def _committed_pairs(lineage_rows, as_of=None, since=None) -> set:
-    """Committed (part_id, run_id) pairs with the optional time window —
-    the Python twin of committed_blocks' lineage filter + ambiguity check
-    (same refusal: two committed runs on one part would double rows)."""
-    pairs = set()
-    for p, r, s, ft in lineage_rows:
-        if s != "done":
-            continue
-        if as_of is not None and not (ft is not None and ft <= float(as_of)):
-            continue
-        if since is not None and not (ft is not None and ft > float(since)):
-            continue
-        pairs.add((p, r))
-    per_part: dict = {}
-    for p, r in pairs:
-        prev = per_part.setdefault(p, r)
-        if prev != r:
-            raise ValueError(
-                f"part {p} was committed by 2 different runs — the table "
-                "is ambiguous (two encodes appended to one dir?); "
-                "vacuum/rebuild it"
-            )
-    return pairs
-
-
-def _apply_union_schema(ordered: list[tuple[str, str]]) -> list[tuple[str, str]]:
-    """The union-schema merge over DISTINCT (col, ptype) rows in first-seen
-    column order — shared by the Spark and pyarrow metadata paths (see
-    table_columns for the evolution/conflict rules)."""
-    out: list[tuple[str, str]] = []
-    seen: dict[str, str] = {}
-    for col, ptype in ordered:
-        prev = seen.get(col)
-        if prev is None:
-            seen[col] = ptype
-            out.append((col, ptype))
-        elif prev != ptype:
-            if {prev, ptype} == {"timestamp_us", "timestamp_ntz"}:
-                # benign mix: both store int64 UTC micros (see table_columns)
-                seen[col] = "timestamp_us"
-                out[[c for c, _ in out].index(col)] = (col, "timestamp_us")
-                continue
-            raise ValueError(
-                f"column {col!r} was appended with conflicting types "
-                f"{prev!r} and {ptype!r}; re-encode the offending run"
-            )
-    return out
-
-
-def table_columns_local(files: list[str], committed: set | None):
-    """table_columns computed driver-side from the block files' metadata
-    columns (payloads never touched — parquet column projection). Rows
-    from uncommitted runs are excluded when ``committed`` is given, exactly
-    like the Spark path over committed_blocks. Returns _META_FALLBACK on
-    any read error."""
-    import pyarrow.parquet as pq
-
-    trips: set = set()
-    try:
-        for f in files:
-            t = pq.ParquetFile(f, memory_map=True, buffer_size=0).read(
-                columns=["part_id", "run_id", "col", "col_idx", "ptype"],
-                use_threads=False,
-            )
-            parts = t.column("part_id").to_pylist()
-            runs = t.column("run_id").to_pylist()
-            cols = t.column("col").to_pylist()
-            idxs = t.column("col_idx").to_pylist()
-            pts = t.column("ptype").to_pylist()
-            for i in range(t.num_rows):
-                if committed is not None and (parts[i], runs[i]) not in committed:
-                    continue
-                trips.add((idxs[i], cols[i], pts[i]))
-    except Exception:
-        return _META_FALLBACK
-    return _apply_union_schema([(c, p) for _, c, p in sorted(trips)])
-
-
 def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     """Commit history of an encoded dir (Iceberg-style snapshot listing):
     one row per committed run with its finish time, parts, and sizes."""
-    lin = spark.read.parquet(f"{out_dir}/lineage").filter(F.col("status") == "done")
+    lin = spark.createDataFrame(Snapshot.resolve(out_dir).committed_rows)
     return (
         lin.groupBy("run_id")
         .agg(
@@ -227,6 +71,15 @@ def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
         )
         .orderBy("committed_at")
     )
+
+
+def _committed_blocks(spark: SparkSession, snap: Snapshot) -> DataFrame:
+    blocks = blocks_of(spark, snap.out_dir)
+    if snap.pairs is None:
+        return blocks
+    lin = spark.createDataFrame(sorted(snap.pairs),
+                                "part_id int, run_id string")
+    return blocks.join(F.broadcast(lin), ["part_id", "run_id"], "left_semi")
 
 
 def committed_blocks(
@@ -247,75 +100,11 @@ def committed_blocks(
     only runs committed strictly after that instant. A consumer that
     remembers the last lineage timestamp it processed reads exactly the
     appended-since-then slice (CDC-style over the append-only table);
-    ``since=t1, as_of=t2`` brackets a window."""
-    blocks = blocks_of(spark, out_dir)
-    # fast path: lineage is metadata-scale — read it driver-side with
-    # pyarrow (no Spark jobs) and ship the committed pairs as a literal
-    # broadcast frame; semantics identical to the Spark read below
-    lrows = _lineage_rows_local(out_dir)
-    if lrows is None:
-        return blocks
-    # the literal-frame shortcut is for metadata-SCALE commit sets; a
-    # million-part table (one big lineage file still passes the file-count
-    # gate) would pay a slow driver->JVM pickle here — use the Spark read
-    if lrows is not _META_FALLBACK and len(lrows) <= 100_000:
-        pairs = _committed_pairs(lrows, as_of=as_of, since=since)
-        lin = spark.createDataFrame(
-            sorted(pairs), "part_id int, run_id string"
-        )
-        return blocks.join(
-            F.broadcast(lin), ["part_id", "run_id"], "left_semi"
-        )
-    try:
-        lin = spark.read.parquet(f"{out_dir}/lineage").filter(
-            F.col("status") == "done"
-        )
-        if as_of is not None:
-            lin = lin.filter(F.col("finished_at") <= float(as_of))
-        if since is not None:
-            lin = lin.filter(F.col("finished_at") > float(since))
-        lin = lin.select("part_id", "run_id").distinct()
-        # a part committed by MORE THAN ONE run means two encodes were
-        # appended to the same dir (both resume=False) — decoding would
-        # silently double rows; refuse (metadata-scale check)
-        dup = (
-            lin.groupBy("part_id")
-            .agg(F.countDistinct("run_id").alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(1)
-            .collect()
-        )
-        if dup:
-            raise ValueError(
-                f"part {dup[0]['part_id']} in {out_dir} was committed by "
-                f"{dup[0]['n']} different runs — the table is ambiguous "
-                "(two encodes appended to one dir?); vacuum/rebuild it"
-            )
-    except ValueError:
-        raise
-    except Exception:
-        return blocks
-    return blocks.join(F.broadcast(lin), ["part_id", "run_id"], "left_semi")
-
-
-def table_columns(blocks: DataFrame) -> list[tuple[str, str]]:
-    """[(col, ptype)] in original column order — metadata-only collect.
-    Under schema evolution (append runs with differing column sets) the
-    result is the UNION schema, ordered by first-seen column index; the
-    same column re-appended with a DIFFERENT ptype is refused — silently
-    picking one would decode the other run's chunks as garbage."""
-    rows = (
-        blocks.select("col", "col_idx", "ptype").distinct()
-        .orderBy("col_idx", "col").collect()
+    ``since=t1, as_of=t2`` brackets a window. See ``snapshot.Snapshot``
+    for the trust rules."""
+    return _committed_blocks(
+        spark, Snapshot.resolve(out_dir, as_of=as_of, since=since)
     )
-    # note on the timestamp_us/timestamp_ntz coalesce inside
-    # _apply_union_schema: Spark writes TimestampType as parquet INT96,
-    # which pyarrow reads tz-NAIVE, so the direct-read path classifies the
-    # same column ntz while the DataFrame path (tz-aware Arrow batches)
-    # classifies it us — e.g. a merge_rows append onto a directly-encoded
-    # table. INT96 is UTC-adjusted by spec, so the instants are identical
-    # either way; the union coalesces to the tz-aware type.
-    return _apply_union_schema([(r["col"], r["ptype"]) for r in rows])
 
 
 _TS_PTYPES = ("timestamp_us", "timestamp_ntz")
@@ -362,12 +151,12 @@ def _predicate_value(v, ptype: str) -> int:
 
 
 def _bloom_literal(v, ptype: str):
-    """Bloom filters over int columns hash the DECIMAL TEXT of the values
-    (encode.py builds them from ``str(int)``), while zone maps compare the
-    ``_predicate_value``-normalized number — so a coerced probe literal
-    (``5.0`` against an int column) would hash ``b"5.0"`` vs the build
-    side's ``b"5"`` and yield a false "definitely absent". Coerce integral
-    literals to int before hashing; anything non-coercible probes as-is."""
+    """A probe literal in the form the encoder hashed the column's values
+    (bloom_hashes hashes ``str(value)``; see the bloom build in
+    encode.py). Probing another form — ``123`` against a float column
+    hashes ``b"123"`` where the build side hashed ``b"123.0"`` — yields a
+    false "definitely absent" and silently prunes matching chunks.
+    Int literals that are not integral stay as-is: no int equals them."""
     if ptype in ("int64", "int32"):
         try:
             iv = int(v)
@@ -375,6 +164,15 @@ def _bloom_literal(v, ptype: str):
                 return iv
         except (TypeError, ValueError):
             pass
+        return v
+    if ptype in ("date32",) + _TS_PTYPES:
+        return _predicate_value(v, ptype)
+    if ptype == "float32":
+        import numpy as np
+
+        return float(np.float32(v)) + 0.0
+    if ptype == "float64":
+        return float(v) + 0.0
     return v
 
 
@@ -613,32 +411,16 @@ def decode_table(
     ``since`` (exclusive): decode only runs committed after that instant —
     the incremental-consumer read (see committed_blocks)."""
     from cuda_float_compress_spark.operators.deletes import (
+        _tombstones,
         anti_join_tombstones,
-        tombstones_df,
     )
 
-    tombs = tombstones_df(spark, out_dir, as_of=as_of) if apply_deletes else None
-    blocks = committed_blocks(spark, out_dir, as_of=as_of, since=since)
+    snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
+    tombs = _tombstones(spark, snap) if apply_deletes else None
+    blocks = _committed_blocks(spark, snap)
     if parts is not None:
         blocks = blocks.filter(F.col("part_id").isin([int(p) for p in parts]))
-    # schema via the driver-side pyarrow fast path when it can mirror the
-    # Spark collect exactly: full-table reads (no parts subset) with the
-    # committed set scoped by the same as_of/since window
-    cols = None
-    if parts is None:
-        blk_files = _local_files(f"{out_dir}/blocks")
-        if blk_files is not None:
-            lrows = _lineage_rows_local(out_dir)
-            if lrows is not _META_FALLBACK:
-                scoped = (
-                    _committed_pairs(lrows, as_of=as_of, since=since)
-                    if lrows is not None else None
-                )
-                got = table_columns_local(blk_files, scoped)
-                if got is not _META_FALLBACK:
-                    cols = got
-    if cols is None:
-        cols = table_columns(blocks)
+    cols = snap.columns
     if predicates:
         # level 1: whole-part pruning from the manifest rollups
         keep_parts = qualifying_parts(spark, out_dir, predicates)

@@ -30,12 +30,13 @@ added merge-on-read to immutable data files.
 
 from __future__ import annotations
 
-import glob
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cuda_float_compress_spark.snapshot import Snapshot
 
 __all__ = ["delete_rows", "delete_rows_by_keys", "tombstones_df",
            "ADDRESS_COLS"]
@@ -51,23 +52,16 @@ def tombstones_df(spark: SparkSession, out_dir: str,
 
     ``as_of`` scopes deletes in time (the Iceberg sequence-number rule
     for position deletes): a snapshot read dated BEFORE a delete
-    committed must still see the rows. Legacy delete runs predating the
-    ``committed_at`` column apply unconditionally (mergeSchema surfaces
-    them as null)."""
-    runs = [
-        d for d in glob.glob(os.path.join(out_dir, "deletes", "run-*"))
-        if os.path.exists(os.path.join(d, "_SUCCESS"))
-    ]
-    if not runs:
+    committed must still see the rows (see ``snapshot.Snapshot``)."""
+    return _tombstones(spark, Snapshot.resolve(out_dir, as_of=as_of))
+
+
+def _tombstones(spark: SparkSession, snap: Snapshot) -> DataFrame | None:
+    if not snap.tombstone_runs:
         return None
-    df = spark.read.option("mergeSchema", "true").parquet(*runs)
-    if "committed_at" not in df.columns:
-        df = df.withColumn("committed_at", F.lit(None).cast("double"))
-    if as_of is not None:
-        df = df.filter(
-            F.col("committed_at").isNull()
-            | (F.col("committed_at") <= float(as_of))
-        )
+    df = spark.read.option("mergeSchema", "true").parquet(
+        *(f"{snap.out_dir}/{run}" for run in snap.tombstone_runs)
+    )
     return df.select(
         F.col("_part_id").cast("int"),
         F.col("_chunk_id").cast("long"),

@@ -32,6 +32,7 @@ from cuda_float_compress_spark.operators.encode import (
     _encode_chunk_to_rows,
     completed_parts,
 )
+from cuda_float_compress_spark.snapshot import LINEAGE_SCHEMA, Snapshot
 
 SPLITS_SCHEMA = ("part_id int, file string, rg_start int, rg_end int, "
                  "row_start bigint, row_end bigint, est_bytes bigint")
@@ -92,70 +93,20 @@ def decode_table_direct(spark: SparkSession, out_dir: str,
     from cuda_float_compress_spark.operators.decode import (
         _SPARK_TYPE,
         _STD_ARROW,
-        blocks_of,
-        table_columns,
-    )
-
-    from cuda_float_compress_spark.operators.decode import (
+        _committed_blocks,
         _exact_filter,
         qualifying_chunks,
     )
 
-    from cuda_float_compress_spark.operators.decode import (
-        _META_FALLBACK,
-        _committed_pairs,
-        _lineage_rows_local,
-        _local_files,
-        _repair_if_needed,
-        committed_blocks,
-        table_columns_local,
-    )
-
-    # metadata setup (schema + committed pairs) via driver-side pyarrow
-    # when the table's metadata is local and file-count-bounded — the Spark
-    # metadata jobs this replaces cost ~1.1 s of pure driver setup per
-    # decode at bench scale (see decode.py fast-path note). Falls back to
-    # the original Spark jobs for big/remote tables or on any read error.
-    _repair_if_needed(out_dir)
-    blocks = None  # the Spark blocks frame — only needed for pruning below
-    cols = None
-    committed: set | None = None
-    blk_files = _local_files(f"{out_dir}/blocks")
-    lrows = _lineage_rows_local(out_dir) if blk_files is not None else _META_FALLBACK
-    if blk_files is not None and lrows is not _META_FALLBACK:
-        # schema = union over ALL committed runs (no time scoping — parity
-        # with the Spark path, which derives it from committed_blocks
-        # without as_of); the trust set IS time-scoped
-        pairs_all = _committed_pairs(lrows) if lrows is not None else None
-        cols = table_columns_local(blk_files, pairs_all)
-        if cols is not _META_FALLBACK and lrows is not None:
-            committed = (
-                pairs_all if (as_of is None and since is None)
-                else _committed_pairs(lrows, as_of=as_of, since=since)
-            )
-    if cols is None or cols is _META_FALLBACK:
-        blocks = committed_blocks(spark, out_dir)
-        cols = table_columns(blocks)
-        # committed (part_id, run_id) pairs: workers read block files
-        # directly with pyarrow, so the lineage trust filter ships as a
-        # closure set (metadata-scale — one entry per part per run)
-        try:
-            lin = spark.read.parquet(f"{out_dir}/lineage").filter(
-                F.col("status") == "done"
-            )
-            if as_of is not None:
-                lin = lin.filter(F.col("finished_at") <= float(as_of))
-            if since is not None:
-                lin = lin.filter(F.col("finished_at") > float(since))
-            lin_rows = lin.select("part_id", "run_id").distinct().collect()
-            committed = {(r["part_id"], r["run_id"]) for r in lin_rows}
-        except Exception:
-            committed = None
+    snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
+    cols = snap.columns
+    # workers read block files directly with pyarrow, so the lineage trust
+    # filter ships as a closure set (one entry per part per run)
+    committed = snap.pairs
     all_ptypes = dict(cols)
     keep_keys: set[int] | None = None
     if predicates or any_of:
-        if blocks is None:
-            blocks = committed_blocks(spark, out_dir)
+        blocks = _committed_blocks(spark, snap)
     if predicates:
         from cuda_float_compress_spark.operators.decode import (
             qualifying_parts,
@@ -196,11 +147,11 @@ def decode_table_direct(spark: SparkSession, out_dir: str,
     want_cols = [c for c, _ in cols]
     from cuda_float_compress_spark.operators.deletes import (
         ADDRESS_COLS,
+        _tombstones,
         anti_join_tombstones,
-        tombstones_df,
     )
 
-    tombs = tombstones_df(spark, out_dir, as_of=as_of) if apply_deletes else None
+    tombs = _tombstones(spark, snap) if apply_deletes else None
     address = bool(with_row_address or tombs is not None)
     out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[p]}" for c, p in cols)
     arrow_schema = pa.schema([pa.field(c, _STD_ARROW[p]) for c, p in cols])
@@ -222,19 +173,17 @@ def decode_table_direct(spark: SparkSession, out_dir: str,
     # batch; parallelize preserves element->partition order.
     import heapq
 
-    files = sorted(
-        glob.glob(f"{out_dir}/blocks/*.parquet"),
-        key=lambda f: -os.path.getsize(f),
-    )
+    files = sorted(snap.block_files, key=lambda f: -f[1])
     slots = max(spark.sparkContext.defaultParallelism, 1)
     n_tasks = max(1, min(len(files), slots * 4))
     heap = [(0, i) for i in range(n_tasks)]
     bins: list[list] = [[] for _ in range(n_tasks)]
-    for f in files:
+    for f, size in files:
         load, i = heapq.heappop(heap)
         bins[i].append((f,))
-        heapq.heappush(heap, (load + os.path.getsize(f), i))
+        heapq.heappush(heap, (load + size, i))
     bins = [b for b in bins if b]
+    fs = snap.fs
     files_df = spark.createDataFrame(
         spark.sparkContext.parallelize(bins, max(len(bins), 1)).flatMap(
             lambda b: b
@@ -247,9 +196,7 @@ def decode_table_direct(spark: SparkSession, out_dir: str,
             for row in batch.to_pylist():
                 # mmap + single-threaded: tasks already saturate the
                 # cores; pyarrow's intra-read threads only thrash here
-                tbl = pq.ParquetFile(
-                    row["file"], memory_map=True, buffer_size=0
-                ).read(
+                tbl = pq.ParquetFile(row["file"], filesystem=fs).read(
                     columns=["part_id", "chunk_id", "col", "codec", "n",
                              "n_nulls", "params", "run_id", "payload"],
                     use_threads=False,
@@ -430,34 +377,22 @@ _MANIFEST_ARROW = pa.schema([
     ("run_id", pa.string()),
 ])
 
-_LINEAGE_ARROW = pa.schema([
-    ("part_id", pa.int32()),
-    ("n_chunks", pa.int64()),
-    ("n_rows", pa.int64()),
-    ("raw_bytes", pa.int64()),
-    ("enc_bytes", pa.int64()),
-    ("run_id", pa.string()),
-    ("status", pa.string()),
-    ("finished_at", pa.float64()),
-    ("salts_json", pa.string()),
-])
-
-
-def _atomic_parquet_append(dir_path: str, tbl: pa.Table, name: str) -> None:
+def _atomic_parquet_append(fs, dir_path: str, tbl: pa.Table,
+                           name: str) -> None:
     """Append one parquet file to a dataset dir with atomic visibility:
     write under a dot-prefixed temp name (ignored by every parquet
-    reader), then os.rename into place."""
-    os.makedirs(dir_path, exist_ok=True)
-    tmp = os.path.join(dir_path, f".inprogress-{name}")
-    pq.write_table(tbl, tmp)
-    os.rename(tmp, os.path.join(dir_path, name))
+    reader), then rename into place."""
+    fs.create_dir(dir_path, recursive=True)
+    tmp = f"{dir_path}/.inprogress-{name}"
+    pq.write_table(tbl, tmp, filesystem=fs)
+    fs.move(tmp, f"{dir_path}/{name}")
 
 
 _MANIFEST_META_COLS = ["part_id", "col", "col_idx", "ptype", "n", "n_nulls",
                        "raw_bytes", "enc_bytes", "codec", "vmin", "vmax"]
 
 
-def _manifest_rows_driver_side(blk_files: list[str],
+def _manifest_rows_driver_side(fs, blk_files: list[str],
                                run_id: str) -> list[dict]:
     """build_manifest's aggregate computed on the driver from the block
     files' METADATA columns (payloads never read — parquet column
@@ -466,7 +401,7 @@ def _manifest_rows_driver_side(blk_files: list[str],
     mixed-writer parity test."""
     import pyarrow.dataset as ds
 
-    tbl = ds.dataset(blk_files, format="parquet").to_table(
+    tbl = ds.dataset(blk_files, format="parquet", filesystem=fs).to_table(
         columns=_MANIFEST_META_COLS,
         filter=ds.field("run_id") == run_id,
     )
@@ -502,22 +437,27 @@ def _manifest_rows_driver_side(blk_files: list[str],
     return out
 
 
-def _commit_metadata_driver_side(out_dir: str, man_rows: list[dict],
+def _commit_metadata_driver_side(out_dir: str, before: set[str],
                                  run_id: str,
                                  salts: dict | None = None) -> None:
-    """Manifest + lineage appends for a direct-encode run, written
-    driver-side with pyarrow instead of two Spark write jobs: the rows are
-    metadata-scale (parts x cols), and each Spark job carries ~0.5 s of
-    fixed driver latency on this host — a serial tail that directly caps
-    the N -> 4N scaling-efficiency quotient. Schemas mirror the shuffle
-    path's Spark-written files EXACTLY (types checked by
+    """Commit an encode run: its manifest is built from the block files its
+    append added (every file not in ``before``), then the manifest and
+    lineage appends are written driver-side with pyarrow instead of Spark
+    jobs: the rows are metadata-scale (parts x cols), and each Spark job
+    carries ~0.5 s of fixed driver latency in local mode — a serial tail
+    that directly caps the N -> 4N scaling-efficiency quotient. Schemas
+    mirror the Spark-written files EXACTLY (types checked by
     tests/test_direct.py mixed-writer round trip), so one table dir can
     carry appends from both writers. The lineage write lands LAST — it is
     the run's commit point (decode trusts only lineage-committed parts)."""
+    snap = Snapshot.resolve(out_dir)
+    added = [p for p, _ in snap.all_block_files if p not in before]
+    man_rows = (_manifest_rows_driver_side(snap.fs, added, run_id)
+                if added else [])
     man_cols = {f.name: [r[f.name] for r in man_rows]
                 for f in _MANIFEST_ARROW}
     _atomic_parquet_append(
-        f"{out_dir}/manifest",
+        snap.fs, f"{snap.root}/manifest",
         pa.Table.from_pydict(man_cols, schema=_MANIFEST_ARROW),
         f"part-direct-{run_id}.parquet",
     )
@@ -544,8 +484,8 @@ def _commit_metadata_driver_side(out_dir: str, man_rows: list[dict],
         "salts_json": [json.dumps(salts or {})] * len(per_part),
     }
     _atomic_parquet_append(
-        f"{out_dir}/lineage",
-        pa.Table.from_pydict(lin_cols, schema=_LINEAGE_ARROW),
+        snap.fs, f"{snap.root}/lineage",
+        pa.Table.from_pydict(lin_cols, schema=LINEAGE_SCHEMA),
         f"part-direct-{run_id}.parquet",
     )
 
@@ -649,6 +589,7 @@ def encode_table_direct(
         )
         blocks = splits_df.mapInArrow(encode_split, schema=BLOCKS_SCHEMA)
         with metrics.stage("encode_write"):
+            before = {p for p, _ in Snapshot.resolve(out_dir).all_block_files}
             # payload bytes are already entropy-coded: parquet-level snappy
             # on top is a wasted (re)compression pass on write AND a
             # decompression pass on every read (metadata columns are ~100 B)
@@ -657,29 +598,7 @@ def encode_table_direct(
             ).parquet(f"{out_dir}/blocks")
 
         with metrics.stage("manifest"):
-            # Manifest build + manifest/lineage appends are driver-side:
-            # the rows are metadata-scale (parts x cols), and every Spark
-            # job here costs ~0.5 s of fixed driver latency — a pure
-            # serial-tail Amdahl term that directly caps the measured
-            # N -> 4N scaling efficiency. Small tables (file count up to
-            # ~4x-slots bins) read the block METADATA columns with a
-            # driver-side pyarrow dataset scan; beyond that (a real
-            # cluster's thousands of task files) the same aggregate runs
-            # as a Spark job.
-            blk_files = glob.glob(f"{out_dir}/blocks/*.parquet")
-            if len(blk_files) <= 256:
-                man_rows = _manifest_rows_driver_side(blk_files, run_id)
-            else:
-                from cuda_float_compress_spark.operators.encode import (
-                    build_manifest,
-                )
-
-                written = spark.read.parquet(f"{out_dir}/blocks").filter(
-                    F.col("run_id") == run_id
-                )
-                man_rows = [r.asDict() for r in
-                            build_manifest(written, run_id).collect()]
-            _commit_metadata_driver_side(out_dir, man_rows, run_id)
+            _commit_metadata_driver_side(out_dir, before, run_id)
 
     snap = metrics.snapshot()
     snap["run_id"] = run_id

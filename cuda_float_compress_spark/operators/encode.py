@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 from cuda_float_compress_spark.metrics import EngineMetrics
 from cuda_float_compress_spark.operators import chunks as C
 from cuda_float_compress_spark.plans import plan_partitions, skewed_hosts
+from cuda_float_compress_spark.snapshot import Snapshot
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -203,13 +204,14 @@ def _encode_chunk_to_rows(tbl: pa.Table, part_id: int, chunk_id: int,
             nn = arr.drop_null() if n_nulls else arr
             if ptype in ("string", "binary"):
                 bloom = bloom_build(nn.to_pylist())
-            elif ptype in ("int64", "int32"):
-                # ints hash via their decimal text form — the same bytes
-                # bloom_hashes derives from a probe literal
-                bloom = bloom_build(
-                    str(v)
-                    for v in nn.to_numpy(zero_copy_only=False).tolist()
-                )
+            elif ptype in ("float32", "float64"):
+                # + 0.0 folds -0.0 into 0.0: the two compare equal
+                bloom = bloom_build(v + 0.0 for v in nn.to_pylist())
+            elif ptype != "list_float32":
+                # int, date and timestamp columns hash the decimal text of
+                # their zone-map int (days, micros) — the form
+                # decode._bloom_literal gives a probe literal
+                bloom = bloom_build(str(v) for v in np_vals.tolist())
         cols["bloom"].append(bloom)
         cols["payload"].append(payload)
         if acc is not None:
@@ -298,16 +300,13 @@ def completed_parts(
     streaming replay, where each epoch owns [epoch*n_parts, +n_parts) and
     collecting EVERY epoch's ids would grow the driver list and the isin()
     predicate without bound over the stream's lifetime."""
-    try:
-        lineage = spark.read.parquet(f"{out_dir}/lineage")
-    except Exception:
+    rows = Snapshot.resolve(out_dir).committed_rows
+    if rows is None:
         return []
-    done = lineage.filter(F.col("status") == "done")
-    if lo is not None:
-        done = done.filter(F.col("part_id") >= lo)
-    if hi is not None:
-        done = done.filter(F.col("part_id") < hi)
-    return [r["part_id"] for r in done.select("part_id").distinct().collect()]
+    return sorted(
+        p for p in set(rows["part_id"].to_pylist())
+        if (lo is None or p >= lo) and (hi is None or p < hi)
+    )
 
 
 def salts_from_lineage(spark: SparkSession, out_dir: str) -> dict | None:
@@ -316,20 +315,11 @@ def salts_from_lineage(spark: SparkSession, out_dir: str) -> dict | None:
     stage metadata-only — no input scan — which is the right call for
     periodic re-encodes and streaming epochs where the host distribution
     drifts slowly."""
-    try:
-        lineage = spark.read.parquet(f"{out_dir}/lineage")
-    except Exception:
+    rows = Snapshot.resolve(out_dir).committed_rows
+    if rows is None or rows.num_rows == 0:
         return None
-    rows = (
-        lineage.filter(F.col("status") == "done")
-        .orderBy(F.col("finished_at").desc())
-        .select("salts_json")
-        .limit(1)
-        .collect()
-    )
-    if not rows or rows[0]["salts_json"] is None:
-        return None
-    return json.loads(rows[0]["salts_json"])
+    latest = rows.sort_by([("finished_at", "descending")])["salts_json"][0]
+    return None if latest.as_py() is None else json.loads(latest.as_py())
 
 
 def encode_table(
@@ -432,7 +422,13 @@ def encode_table(
     )
     blocks = planned.mapInArrow(encoder, schema=BLOCKS_SCHEMA)
 
+    # lazy import: direct.py imports this module
+    from cuda_float_compress_spark.operators.direct import (
+        _commit_metadata_driver_side,
+    )
+
     with metrics.stage("encode_write"):
+        before = {p for p, _ in Snapshot.resolve(out_dir).all_block_files}
         # payload is already entropy-coded; skip parquet-level recompression
         blocks.write.mode("append").option(
             "compression", "uncompressed"
@@ -440,55 +436,8 @@ def encode_table(
 
     with metrics.stage("manifest"):
         # aggregate ONLY this run's blocks: stale partials from a crashed
-        # earlier run (blocks written, lineage missing) must not double-count.
-        # r7: like the direct path, metadata-scale dirs (<= 256 block files)
-        # build manifest + lineage driver-side with pyarrow — the Spark
-        # read-back/groupBy/write chain here was ~4 driver-blocking jobs
-        # (~0.7 s) per encode. Falls back to the Spark jobs on any error or
-        # beyond the file cap (lazy import: direct.py imports this module).
-        import glob as _glob
-
-        from cuda_float_compress_spark.operators import direct as _direct
-
-        blk_files = _glob.glob(f"{out_dir}/blocks/*.parquet")
-        man_rows = None
-        if len(blk_files) <= 256:
-            try:
-                man_rows = _direct._manifest_rows_driver_side(
-                    blk_files, run_id
-                )
-            except Exception:
-                man_rows = None
-        if man_rows is not None:
-            _direct._commit_metadata_driver_side(
-                out_dir, man_rows, run_id, salts=salts
-            )
-        else:
-            written = spark.read.parquet(f"{out_dir}/blocks").filter(
-                F.col("run_id") == run_id
-            )
-            manifest = build_manifest(written, run_id)
-            manifest.write.mode("append").parquet(f"{out_dir}/manifest")
-
-            # lineage derives from the (tiny) manifest — one blocks scan
-            # total, and that scan is column-pruned (payload never read back)
-            manifest_rows = spark.read.parquet(f"{out_dir}/manifest").filter(
-                F.col("run_id") == run_id
-            )
-            lineage = (
-                manifest_rows.groupBy("part_id")
-                .agg(
-                    F.max("n_chunks").alias("n_chunks"),
-                    F.max("n_values").alias("n_rows"),
-                    F.sum("raw_bytes").alias("raw_bytes"),
-                    F.sum("enc_bytes").alias("enc_bytes"),
-                )
-                .withColumn("run_id", F.lit(run_id))
-                .withColumn("status", F.lit("done"))
-                .withColumn("finished_at", F.lit(time.time()))
-                .withColumn("salts_json", F.lit(json.dumps(salts)))
-            )
-            lineage.write.mode("append").parquet(f"{out_dir}/lineage")
+        # earlier run (blocks written, lineage missing) must not double-count
+        _commit_metadata_driver_side(out_dir, before, run_id, salts=salts)
 
     snap = metrics.snapshot()
     snap["run_id"] = run_id

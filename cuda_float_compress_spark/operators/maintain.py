@@ -244,17 +244,16 @@ def compact(
     run it when qualifying_chunks starts selecting most of the table.
 
     Returns {'chunks_before', 'chunks_after', ...}."""
-    from cuda_float_compress_spark.operators.decode import (
-        committed_blocks,
-        table_columns,
-    )
-    from cuda_float_compress_spark.operators.deletes import tombstones_df
+    from cuda_float_compress_spark.operators.decode import _committed_blocks
+    from cuda_float_compress_spark.operators.deletes import _tombstones
     from cuda_float_compress_spark.operators.encode import _encode_chunk_to_rows
+    from cuda_float_compress_spark.snapshot import Snapshot
 
     run_id = run_id or uuid.uuid4().hex[:12]
-    blocks = committed_blocks(spark, src_dir)
+    snap = Snapshot.resolve(src_dir)
+    blocks = _committed_blocks(spark, snap)
     chunks_before = blocks.select("part_id", "chunk_id").distinct().count()
-    cols = table_columns(blocks)
+    cols = snap.columns
     col_ptypes = dict(cols)
     ordered = [c for c, _ in cols]
     # preserve Bloom-filter coverage across compaction: rebuild filters for
@@ -264,7 +263,7 @@ def compact(
         for r in blocks.filter(F.col("bloom").isNotNull())
         .select("col").distinct().collect()
     ) if "bloom" in blocks.columns else frozenset()
-    tombs = tombstones_df(spark, src_dir)
+    tombs = _tombstones(spark, snap)
 
     def _recompact(key: tuple, tbl: pa.Table,
                    tomb_tbl: pa.Table | None) -> pa.Table:

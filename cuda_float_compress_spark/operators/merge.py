@@ -41,10 +41,12 @@ import os
 import shutil
 import uuid
 
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.operators.deletes import ADDRESS_COLS
+from cuda_float_compress_spark.snapshot import Snapshot
 
 __all__ = ["merge_rows"]
 
@@ -88,8 +90,6 @@ def merge_rows(
     # 1. old-version addresses, BEFORE the append — materialized so the
     #    lazy plan can never be re-evaluated against the post-append table
     staging = os.path.join(out_dir, "deletes", f"_staging-{run_id}")
-    import time as _time
-
     addr = (
         decode_table_direct(spark, out_dir, columns=[key_col],
                             with_row_address=True)
@@ -105,10 +105,9 @@ def merge_rows(
     n_tomb = spark.read.parquet(staging).count()
 
     # 2. append the new versions as their own run on a disjoint part range
-    lineage = spark.read.parquet(f"{out_dir}/lineage")
-    max_part = lineage.filter(F.col("status") == "done").agg(
-        F.max("part_id")
-    ).collect()[0][0]
+    committed = Snapshot.resolve(out_dir).committed_rows
+    max_part = (pc.max(committed["part_id"]).as_py()
+                if committed is not None else None)
     part_offset = int(max_part) + 1 if max_part is not None else 0
     enc = encode_table(
         spark, updates, out_dir, url_col=url_col, n_parts=n_parts,
@@ -116,14 +115,18 @@ def merge_rows(
         part_offset=part_offset, run_id=run_id,
     )
 
-    # 3. stamp committed_at now that the new run's lineage is committed
-    #    (time.time() here >= the run's finished_at, so every as_of that
-    #    applies these tombstones also trusts the replacement rows), then
+    # 3. stamp committed_at with the new run's lineage finished_at, so the
+    #    tombstones and the replacement rows appear at the same as_of
+    #    instant (no snapshot shows both versions, or neither), then
     #    atomic tombstone publish: old versions retire in one rename
+    lin = Snapshot.resolve(out_dir).committed_rows
+    finished_at = pc.max(
+        lin.filter(pc.equal(lin["run_id"], run_id))["finished_at"]
+    ).as_py()
     stamped = os.path.join(out_dir, "deletes", f"_staging-{run_id}-stamp")
     (
         spark.read.parquet(staging)
-        .withColumn("committed_at", F.lit(_time.time()))
+        .withColumn("committed_at", F.lit(finished_at).cast("double"))
         .write.parquet(stamped)
     )
     final = os.path.join(out_dir, "deletes", f"run-{run_id}")

@@ -50,14 +50,15 @@ def agg_int_column(
     is O(1) chunks per predicate edge, so a range-restricted sum still
     reads metadata + two chunks instead of the table."""
     from cuda_float_compress_spark.operators.decode import (
-        committed_blocks,
+        _committed_blocks,
         covered_chunks,
         qualifying_chunks,
     )
-    from cuda_float_compress_spark.operators.deletes import tombstones_df
     from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.snapshot import Snapshot
 
-    blocks = committed_blocks(spark, out_dir)
+    snap = Snapshot.resolve(out_dir)
+    blocks = _committed_blocks(spark, snap)
     stats = blocks.filter(F.col("col") == col).select(
         "part_id", "chunk_id", "ptype", "n", "n_nulls", "vmin", "vmax",
         *(["vsum"] if "vsum" in blocks.columns else []),
@@ -69,7 +70,7 @@ def agg_int_column(
     meta_ok = (
         ptype in _INT_PTYPES
         and "vsum" in blocks.columns
-        and tombstones_df(spark, out_dir) is None
+        and not snap.tombstone_runs
     )
     if meta_ok:
         # schema evolution: chunks written before the column existed

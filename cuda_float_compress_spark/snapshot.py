@@ -1,0 +1,252 @@
+"""The table Snapshot: the one reader of an encoded table's metadata.
+
+An encoded table dir holds ``blocks/`` (one row per chunk x column, the
+payload beside its stats), ``manifest/``, ``lineage/`` (one row per part
+per committed run: the commit log) and ``deletes/run-*`` (merge-on-read
+tombstones). :meth:`Snapshot.resolve` is the only code that reads
+``lineage/`` and ``deletes/`` or lists ``blocks/``. Every reader (both
+Spark decode transports, the Spark-free ``localio`` reader, metadata
+aggregation, compaction) and every resume/merge writer takes its facts
+from here, so they cannot disagree:
+
+* **Committed pairs.** ``(part_id, run_id)`` is committed when lineage
+  holds a ``status == 'done'`` row for it. ``as_of`` keeps runs finished
+  at or before that instant (time travel); ``since`` keeps runs finished
+  strictly after it (incremental reads). A dir without ``lineage/``
+  (externally assembled blocks) is trusted as-is: ``pairs is None``. A
+  part committed by two runs would decode twice, so any read of such a
+  table raises ``ValueError``.
+* **Schema.** The union of ``(col, ptype)`` over the block rows of ALL
+  committed runs, in first-seen column order. It ignores ``as_of``,
+  ``since`` and any part or column restriction, so every reader of one
+  table returns the same columns; chunks that predate a column decode
+  it as nulls. A ``timestamp_us``/``timestamp_ntz`` mix coalesces to
+  ``timestamp_us``; any other re-typed column is refused.
+* **Tombstones.** ``deletes/run-*`` dirs carrying the job-commit
+  ``_SUCCESS`` marker. Each run's rows carry one ``committed_at`` stamp;
+  under ``as_of`` a run applies when that stamp is at or before it.
+  Runs written before the stamp existed always apply.
+* **Block files.** The ``blocks/*.parquet`` files holding at least one
+  row of a committed pair in the window, with their sizes.
+
+Paths go through ``pyarrow.fs.FileSystem.from_uri``; a bare path is
+local. ``file://`` and bare paths therefore take the same code, and a
+scheme pyarrow cannot open (``s3a://``, or ``hdfs://`` without libhdfs)
+raises here instead of reading as an empty table.
+
+Only ``lineage/`` is read eagerly; everything else is derived on first
+use, so resume and merge, which need only the commit log, never touch
+the block files.
+"""
+
+from __future__ import annotations
+
+import functools
+import os
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
+
+__all__ = ["Snapshot", "LINEAGE_SCHEMA"]
+
+LINEAGE_SCHEMA = pa.schema([
+    ("part_id", pa.int32()),
+    ("n_chunks", pa.int64()),
+    ("n_rows", pa.int64()),
+    ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()),
+    ("run_id", pa.string()),
+    ("status", pa.string()),
+    ("finished_at", pa.float64()),
+    ("salts_json", pa.string()),
+])
+
+_SCHEMA_COLS = ["part_id", "run_id", "col_idx", "col", "ptype"]
+
+
+def _open(out_dir: str) -> tuple[pafs.FileSystem, str]:
+    if "://" in out_dir or out_dir.startswith("file:"):
+        fs, root = pafs.FileSystem.from_uri(out_dir)
+    else:
+        fs, root = pafs.LocalFileSystem(), os.path.abspath(out_dir)
+    if isinstance(fs, pafs.LocalFileSystem):
+        fs = pafs.LocalFileSystem(use_mmap=True)
+    return fs, root.rstrip("/")
+
+
+def _exists(fs: pafs.FileSystem, path: str) -> bool:
+    return fs.get_file_info(path).type != pafs.FileType.NotFound
+
+
+def _listdir(fs: pafs.FileSystem, path: str) -> list[pafs.FileInfo]:
+    return fs.get_file_info(pafs.FileSelector(path, allow_not_found=True))
+
+
+def _union_schema(rows) -> list[tuple[str, str]]:
+    """Merge distinct ``(col, ptype)`` rows, given in column order, into
+    the table schema (see the module docstring for the rule)."""
+    out: list[tuple[str, str]] = []
+    seen: dict[str, str] = {}
+    for col, ptype in rows:
+        prev = seen.get(col)
+        if prev is None:
+            seen[col] = ptype
+            out.append((col, ptype))
+        elif prev != ptype:
+            if {prev, ptype} == {"timestamp_us", "timestamp_ntz"}:
+                # Spark writes TimestampType as INT96, which pyarrow reads
+                # tz-naive: the direct encode classifies such a column ntz
+                # while the DataFrame encode classifies it us. Both store
+                # int64 UTC micros, so the instants agree either way.
+                seen[col] = "timestamp_us"
+                out[[c for c, _ in out].index(col)] = (col, "timestamp_us")
+                continue
+            raise ValueError(
+                f"column {col!r} was appended with conflicting types "
+                f"{prev!r} and {ptype!r}; re-encode the offending run"
+            )
+    return out
+
+
+class Snapshot:
+    """One table's metadata at one point in time (see the module
+    docstring). Build it with :meth:`resolve`."""
+
+    def __init__(self, out_dir: str, as_of: float | None,
+                 since: float | None):
+        self.out_dir = out_dir
+        self.as_of = as_of
+        self.since = since
+        self.fs, self.root = _open(out_dir)
+        if not _exists(self.fs, f"{self.root}/blocks") and _exists(
+            self.fs, f"{self.root}/blocks_vacuum_old"
+        ):
+            # a crash inside vacuum's two-rename swap left no blocks dir
+            from cuda_float_compress_spark.operators.maintain import (
+                repair_vacuum,
+            )
+
+            repair_vacuum(self.root)
+        lin = f"{self.root}/lineage"
+        #: every lineage row as written (None: the dir has no lineage)
+        self.lineage: pa.Table | None = (
+            ds.dataset(lin, schema=LINEAGE_SCHEMA, filesystem=self.fs,
+                       format="parquet").to_table()
+            if _exists(self.fs, lin) else None
+        )
+
+    @classmethod
+    def resolve(cls, out_dir: str, as_of: float | None = None,
+                since: float | None = None) -> Snapshot:
+        return cls(str(out_dir), as_of, since)
+
+    @functools.cached_property
+    def committed_rows(self) -> pa.Table | None:
+        """The lineage rows of committed (``status == 'done'``) parts."""
+        if self.lineage is None:
+            return None
+        return self.lineage.filter(pc.equal(self.lineage["status"], "done"))
+
+    @functools.cached_property
+    def _all_pairs(self) -> frozenset | None:
+        rows = self.committed_rows
+        if rows is None:
+            return None
+        pairs = frozenset(zip(rows["part_id"].to_pylist(),
+                              rows["run_id"].to_pylist()))
+        per_part: dict = {}
+        for p, r in pairs:
+            if per_part.setdefault(p, r) != r:
+                raise ValueError(
+                    f"part {p} in {self.out_dir} was committed by 2 "
+                    "different runs; the table is ambiguous (two encodes "
+                    "appended to one dir?); vacuum/rebuild it"
+                )
+        return pairs
+
+    @functools.cached_property
+    def pairs(self) -> frozenset | None:
+        """Committed ``(part_id, run_id)`` pairs inside the ``as_of`` /
+        ``since`` window; None when the dir has no lineage."""
+        everything = self._all_pairs
+        if everything is None or (self.as_of is None and self.since is None):
+            return everything
+        rows = self.committed_rows  # null finished_at fails both windows
+        if self.as_of is not None:
+            rows = rows.filter(
+                pc.less_equal(rows["finished_at"], float(self.as_of)))
+        if self.since is not None:
+            rows = rows.filter(
+                pc.greater(rows["finished_at"], float(self.since)))
+        return frozenset(zip(rows["part_id"].to_pylist(),
+                             rows["run_id"].to_pylist()))
+
+    @functools.cached_property
+    def all_block_files(self) -> list[tuple[str, int]]:
+        """``[(path, size)]`` of every block file, committed or not."""
+        return sorted(
+            (i.path, i.size) for i in _listdir(self.fs, f"{self.root}/blocks")
+            if i.type == pafs.FileType.File
+            and i.base_name.endswith(".parquet")
+            and not i.base_name.startswith((".", "_"))
+        )
+
+    @functools.cached_property
+    def _block_scan(self) -> tuple[list, list]:
+        # one pass over the block files' metadata columns (payloads are
+        # never read): distinct (part, run, col) rows per file give both
+        # the schema and which files hold committed rows
+        all_pairs, pairs = self._all_pairs, self.pairs
+        trips: set = set()
+        live: list[tuple[str, int]] = []
+        for path, size in self.all_block_files:
+            meta = pq.ParquetFile(path, filesystem=self.fs).read(
+                columns=_SCHEMA_COLS, use_threads=False,
+            ).group_by(_SCHEMA_COLS).aggregate([])
+            in_window = False
+            for p, r, idx, col, ptype in zip(
+                    *(meta[c].to_pylist() for c in _SCHEMA_COLS)):
+                if all_pairs is None or (p, r) in all_pairs:
+                    trips.add((idx, col, ptype))
+                in_window = in_window or pairs is None or (p, r) in pairs
+            if in_window:
+                live.append((path, size))
+        return _union_schema((c, p) for _, c, p in sorted(trips)), live
+
+    @property
+    def columns(self) -> list[tuple[str, str]]:
+        """The union schema: ``[(col, ptype)]`` in column order."""
+        return self._block_scan[0]
+
+    @property
+    def block_files(self) -> list[tuple[str, int]]:
+        """``[(path, size)]`` of the block files holding committed rows in
+        the window; paths are on :attr:`fs`."""
+        return self._block_scan[1]
+
+    @functools.cached_property
+    def tombstone_runs(self) -> list[str]:
+        """Live delete runs as paths relative to the table root
+        (``deletes/run-<id>``)."""
+        runs = [i for i in _listdir(self.fs, f"{self.root}/deletes")
+                if i.type == pafs.FileType.Directory
+                and i.base_name.startswith("run-")]
+        marks = self.fs.get_file_info([f"{i.path}/_SUCCESS" for i in runs])
+        live = sorted(i.path for i, m in zip(runs, marks)
+                      if m.type != pafs.FileType.NotFound)
+        if self.as_of is not None:
+            live = [p for p in live if self._applies_at(p, self.as_of)]
+        return [p[len(self.root) + 1:] for p in live]
+
+    def _applies_at(self, run: str, as_of: float) -> bool:
+        # Iceberg position-delete time scoping: a snapshot dated before
+        # the delete committed still sees the rows
+        d = ds.dataset(run, filesystem=self.fs, format="parquet")
+        if "committed_at" not in d.schema.names:
+            return True
+        stamp = pc.min(d.to_table(columns=["committed_at"])["committed_at"])
+        return stamp.as_py() is None or stamp.as_py() <= float(as_of)
+

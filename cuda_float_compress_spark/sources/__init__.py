@@ -83,13 +83,12 @@ def publish_blocks_iceberg(out_dir: str, timestamp_ms: int) -> dict:
     publishes (per epoch / after vacuum or compact) give Iceberg readers
     time travel over the table's commit history. Read back with
     ``read_iceberg(spark, out_dir)`` or any Iceberg runtime."""
-    import glob as _glob
-
+    from cuda_float_compress_spark.snapshot import Snapshot
     from cuda_float_compress_spark.sources.iceberg import (
         export_iceberg_metadata,
     )
 
-    files = sorted(_glob.glob(os.path.join(out_dir, "blocks", "*.parquet")))
+    files = [p for p, _ in Snapshot.resolve(out_dir).all_block_files]
     if not files:
         raise ValueError(f"no block files under {out_dir}/blocks")
     return export_iceberg_metadata(out_dir, files, timestamp_ms)

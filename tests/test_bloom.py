@@ -176,3 +176,49 @@ def test_probe_with_coerced_int_literal_not_falsely_absent(spark, encoded_docs):
         blocks, [("doc_id", "in", [123, 250])]
     ).collect()
     assert sorted(map(key, in_float)) == sorted(map(key, in_int))
+
+
+def test_float_and_date_probes_match_the_build_form(spark, tmp_path):
+    """Bloom filters hash str(value), so a probe literal in
+    another form (123 against a float column, a datetime against a date
+    column) hashed different bytes than the build side and could prune a
+    matching chunk as "definitely absent". Float and date columns now
+    carry filters, and every literal form of a stored value keeps exactly
+    the chunk that holds it."""
+    import datetime as dt
+
+    from cuda_float_compress_spark.operators.decode import (
+        committed_blocks,
+        qualifying_chunks,
+    )
+    from cuda_float_compress_spark.operators.encode import encode_table
+
+    out = str(tmp_path / "fbloom")
+    day0 = dt.date(2024, 1, 1)
+    rows = [(i, f"doc://d/{i}", float(i), day0 + dt.timedelta(days=i))
+            for i in range(300)]
+    df = spark.createDataFrame(
+        rows, "doc_id: long, url: string, score: double, day: date")
+    encode_table(spark, df, out, n_parts=1, resume=False,
+                 sort_keys=["doc_id"], chunk_rows=32,
+                 bloom_cols=["score", "day"])
+    blocks = committed_blocks(spark, out)
+    assert blocks.filter(
+        F.col("col").isin("score", "day") & F.col("bloom").isNull()
+    ).count() == 0
+    holder = {
+        (r["part_id"], r["chunk_id"])
+        for r in qualifying_chunks(blocks, [("doc_id", "==", 123)]).collect()
+    }
+    assert len(holder) == 1
+    day123 = day0 + dt.timedelta(days=123)
+    for pred in [("score", "==", 123), ("score", "==", 123.0),
+                 ("score", "in", [123, 5000]), ("day", "==", day123),
+                 ("day", "==", dt.datetime(2024, 5, 3)),
+                 ("day", "==", (day123 - dt.date(1970, 1, 1)).days)]:
+        got = {(r["part_id"], r["chunk_id"])
+               for r in qualifying_chunks(blocks, [pred]).collect()}
+        assert got == holder, pred
+    # a value inside the chunk's zone-map range but absent from the chunk
+    # is pruned by its filter
+    assert qualifying_chunks(blocks, [("score", "==", 123.5)]).count() == 0

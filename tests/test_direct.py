@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from cuda_float_compress_spark.operators.decode import decode_table
 from cuda_float_compress_spark.operators.direct import encode_table_direct, plan_splits
@@ -1057,3 +1058,51 @@ def test_cli_stats(spark, tmp_path, capsys):
     assert rep["ratio"] > 2.0
     assert cols["lang"]["codecs"]  # every column reports its codec set
     assert cols["text"]["n_values"] == 400
+
+
+def _small_docs(spark, n: int, extra: bool = False):
+    rows = [(i, f"doc://d/{i}", "en") + ((i,) if extra else ())
+            for i in range(n)]
+    schema = "doc_id: long, url: string, lang: string" + (
+        ", extra: long" if extra else "")
+    return spark.createDataFrame(rows, schema)
+
+
+_READERS = ("decode_table", "decode_table_direct", "read_table_local")
+
+
+@pytest.mark.parametrize("reader", _READERS)
+def test_uncommitted_run_adds_no_column(spark, tmp_path, read_cols_count,
+                                        reader):
+    """A crash between a run's manifest append and its lineage append
+    leaves an uncommitted run: its rows AND its columns stay invisible.
+    read_table_local used to take the schema from the manifest and show
+    the crashed run's column."""
+    import os
+
+    from cuda_float_compress_spark.operators.encode import encode_table
+
+    out = str(tmp_path / "phantom")
+    encode_table(spark, _small_docs(spark, 300), out, n_parts=2,
+                 resume=False, sort_keys=["doc_id"])
+    encode_table(spark, _small_docs(spark, 50, extra=True), out, n_parts=2,
+                 resume=False, sort_keys=["doc_id"], part_offset=10,
+                 run_id="crashed")
+    os.remove(f"{out}/lineage/part-direct-crashed.parquet")
+    assert read_cols_count(reader, out) == (
+        ["doc_id", "url", "lang"], 300)
+
+
+@pytest.mark.parametrize("reader", _READERS)
+def test_doubly_committed_parts_refused(spark, tmp_path, read_cols_count,
+                                        reader):
+    """Two runs committing the same parts make the table ambiguous: every
+    reader refuses it. read_table_local used to return both copies."""
+    from cuda_float_compress_spark.operators.encode import encode_table
+
+    out = str(tmp_path / "twice")
+    for _ in range(2):
+        encode_table(spark, _small_docs(spark, 200), out, n_parts=2,
+                     resume=False, sort_keys=["doc_id"])
+    with pytest.raises(ValueError, match="committed by 2 different runs"):
+        read_cols_count(reader, out)

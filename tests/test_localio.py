@@ -15,9 +15,7 @@ from cuda_float_compress_spark.operators.encode import encode_table
 from cuda_float_compress_spark.operators.merge import merge_rows
 
 
-@pytest.fixture()
-def docs_table(spark, tmp_path):
-    out = str(tmp_path / "lio")
+def _encode_docs(spark, out: str) -> str:
     rows = [(i, f"doc://d/{i}", ["en", "de", "fr"][i % 3], i * 7 % 100)
             for i in range(300)]
     df = spark.createDataFrame(
@@ -26,6 +24,11 @@ def docs_table(spark, tmp_path):
     encode_table(spark, df, out, n_parts=3, resume=False,
                  sort_keys=["doc_id"], chunk_rows=64)
     return out
+
+
+@pytest.fixture()
+def docs_table(spark, tmp_path):
+    return _encode_docs(spark, str(tmp_path / "lio"))
 
 
 def _spark_rows(df):
@@ -89,3 +92,42 @@ def test_local_read_as_of(spark, docs_table):
     early = read_table_local(docs_table, as_of=t0)
     assert early.num_rows == 300
     assert read_table_local(docs_table).num_rows == 301
+
+
+READERS = ("decode_table", "decode_table_direct", "read_table_local")
+
+
+@pytest.fixture(scope="module")
+def shared_docs(spark, tmp_path_factory):
+    return _encode_docs(spark, str(tmp_path_factory.mktemp("forms")))
+
+
+@pytest.fixture(scope="module")
+def shared_deleted_docs(spark, tmp_path_factory):
+    out = _encode_docs(spark, str(tmp_path_factory.mktemp("forms_del")))
+    delete_rows(spark, out, [("lang", "==", "de")])
+    return out
+
+
+@pytest.mark.parametrize("form", ["bare", "file_uri"])
+@pytest.mark.parametrize("reader", READERS)
+def test_every_reader_takes_every_path_form(read_cols_count, shared_docs,
+                                            reader, form):
+    """A file:// URI read the same table as its bare path. It used to
+    read as an empty table in decode_table_direct and read_table_local
+    (their globs saw no files) instead of failing or reading it."""
+    path = shared_docs if form == "bare" else "file://" + shared_docs
+    cols, n = read_cols_count(reader, path)
+    assert (cols, n) == (["doc_id", "url", "lang", "score"], 300)
+
+
+@pytest.mark.parametrize("form", ["bare", "file_uri"])
+@pytest.mark.parametrize("reader", READERS)
+def test_every_reader_applies_deletes_by_path_form(
+        read_cols_count, shared_deleted_docs, reader, form):
+    """Tombstones apply under a file:// URI too: decode_table used to find
+    none there and return all 300 rows."""
+    path = (shared_deleted_docs if form == "bare"
+            else "file://" + shared_deleted_docs)
+    assert read_cols_count(reader, path)[1] == 200
+

@@ -195,5 +195,12 @@ def test_merge_tombstones_stamped_after_append_commit(spark, docs_table):
     assert len(got) == 300
     assert got[5] == ["en", "de", "fr"][5 % 3]
     assert got[17] == ["en", "de", "fr"][17 % 3]
+    # snapshot cut AT the run's commit: the tombstones (stamped with the
+    # run's finished_at) and the replacement rows appear together, so each
+    # updated key shows exactly once
+    at = [r["doc_id"] for r in decode_table_direct(
+        spark, docs_table, as_of=fin).select("doc_id").collect()]
+    assert len(at) == 300
+    assert at.count(5) == 1 and at.count(17) == 1
     # no staging leftovers after a successful merge
     assert glob.glob(os.path.join(docs_table, "deletes", "_staging-*")) == []

@@ -126,3 +126,17 @@ def test_metadata_agg_evolution_falls_back(spark, evolved_table):
     assert row["n_rows"] == 150
     assert row["n_nulls"] == 100
     assert row["sum"] == sum(i * 2 for i in range(50))
+
+
+@pytest.mark.parametrize(
+    "reader", ["decode_table", "decode_table_direct", "read_table_local"])
+def test_readers_agree_on_columns_under_as_of(spark, evolved_table,
+                                              read_cols_count, reader):
+    """The schema is the union over every committed run, whatever the
+    as_of window: a snapshot dated between the runs still returns the
+    later run's column (as nulls). decode_table used to narrow it."""
+    from cuda_float_compress_spark.operators.decode import snapshots
+
+    first = snapshots(spark, evolved_table).collect()[0]["committed_at"]
+    assert read_cols_count(reader, evolved_table, as_of=first) == (
+        ["doc_id", "url", "lang", "score"], 100)
