@@ -10,10 +10,11 @@ or downstream service can pull a small extract without paying a JVM.
 The table's metadata comes from ``snapshot.Snapshot``, the same object
 the Spark decode paths read: the committed ``(part_id, run_id)`` pairs
 under ``as_of``, the union schema, the live tombstone runs, the block
-files and the filesystem (bare paths and ``file://`` alike). Only chunk
-pruning is local: the exact int-domain zone maps (int/timestamp/date
-columns, where vmin/vmax are exact, so pruning can never drop a matching
-row); string/float predicates are applied as exact filters after decode.
+files and the filesystem (bare paths and ``file://`` alike). Chunks
+are pruned by ``operators.decode.prune`` over ``Snapshot.chunk_stats``,
+the pruner both Spark readers use (zone maps on every ptype, Bloom
+filters for ``==``/``in``); the exact filter then runs on the decoded
+rows.
 
 Intended for metadata-scale and extract-scale reads (the driver-side
 use case); the 100 TB path is ``decode_table_direct``.
@@ -27,42 +28,11 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from cuda_float_compress_spark.operators import chunks as Ch
-from cuda_float_compress_spark.operators.decode import (
-    _STD_ARROW,
-    _predicate_value,
-)
+from cuda_float_compress_spark.operators.decode import _STD_ARROW, prune
 from cuda_float_compress_spark.operators.deletes import ADDRESS_COLS
 from cuda_float_compress_spark.snapshot import Snapshot
 
 __all__ = ["read_table_local"]
-
-_INT_EXACT_PTYPES = ("int64", "int32", "timestamp_us", "timestamp_ntz",
-                     "date32")
-
-
-def _chunk_pruned(pred_by_col: dict, names, vmins, vmaxs, i) -> bool:
-    """True when block row i's zone map PROVES no row matches (exact
-    int-domain columns only — callers pass only those predicates)."""
-    preds = pred_by_col.get(names[i])
-    if not preds:
-        return False
-    vmin, vmax = vmins[i], vmaxs[i]
-    if vmin is None or vmax is None:
-        return False
-    for op, key in preds:
-        if op == "==" and not (vmin <= key <= vmax):
-            return True
-        if op == ">=" and vmax < key:
-            return True
-        if op == ">" and vmax <= key:
-            return True
-        if op == "<=" and vmin > key:
-            return True
-        if op == "<" and vmin >= key:
-            return True
-        if op == "in" and all(not (vmin <= k <= vmax) for k in key):
-            return True
-    return False
 
 
 def _exact_mask(tbl: pa.Table, predicates: list[tuple],
@@ -70,7 +40,8 @@ def _exact_mask(tbl: pa.Table, predicates: list[tuple],
     mask = None
     for col, op, lit in predicates:
         arr = tbl.column(col)
-        if ptypes.get(col) in ("timestamp_us", "timestamp_ntz"):
+        ts = ptypes.get(col) in ("timestamp_us", "timestamp_ntz")
+        if ts and op != "in":
             lit = pa.scalar(lit, type=arr.type)
         if op == "==":
             m = pc.equal(arr, lit)
@@ -83,7 +54,8 @@ def _exact_mask(tbl: pa.Table, predicates: list[tuple],
         elif op == ">=":
             m = pc.greater_equal(arr, lit)
         elif op == "in":
-            m = pc.is_in(arr, value_set=pa.array(list(lit)))
+            m = pc.is_in(arr, value_set=pa.array(
+                list(lit), type=arr.type if ts else None))
         else:
             raise ValueError(f"unsupported predicate op: {op!r}")
         m = pc.fill_null(m, False)
@@ -116,19 +88,13 @@ def read_table_local(
         for p_, c_, pos in zip(*(t[c].to_pylist() for c in ADDRESS_COLS)):
             tombs_by_chunk.setdefault((p_, c_), []).append(pos)
 
-    # exact int-domain zone-map predicates prune chunks; everything is
-    # ALSO exact-filtered after decode, so pruning is purely an optimization
-    pred_by_col: dict[str, list] = {}
-    for c, op, lit in (predicates or []):
-        if ptypes.get(c) in _INT_EXACT_PTYPES and op in (
-                "==", "<", "<=", ">", ">=", "in"):
-            key = ([_predicate_value(v, ptypes[c]) for v in lit]
-                   if op == "in" else _predicate_value(lit, ptypes[c]))
-            pred_by_col.setdefault(c, []).append((op, key))
+    # the zone maps / Bloom filters prune chunks; everything is ALSO
+    # exact-filtered after decode, so pruning is purely an optimization
+    keep = prune(snap.chunk_stats, predicates) if predicates else None
 
     pieces: list[pa.Table] = []
     meta_cols = ["part_id", "chunk_id", "col", "codec", "n", "n_nulls",
-                 "params", "run_id", "vmin", "vmax", "payload"]
+                 "params", "run_id", "payload"]
     for path, _ in snap.block_files:
         tbl = pq.ParquetFile(path, filesystem=snap.fs).read(
             columns=meta_cols, use_threads=False,
@@ -141,23 +107,19 @@ def read_table_local(
         nnulls = tbl.column("n_nulls").to_pylist()
         params = tbl.column("params").to_pylist()
         run_ids = tbl.column("run_id").to_pylist()
-        vmins = tbl.column("vmin").to_pylist()
-        vmaxs = tbl.column("vmax").to_pylist()
         payloads = tbl.column("payload")
         by_chunk: dict[tuple, dict] = {}
         chunk_n: dict[tuple, int] = {}
-        dead: set[tuple] = set()
         for i in range(tbl.num_rows):
             key = (part[i], chunk[i])
-            if (committed is not None
-                    and (part[i], run_ids[i]) not in committed):
+            if ((committed is not None
+                 and (part[i], run_ids[i]) not in committed)
+                    or (keep is not None and key not in keep)):
                 continue
-            if _chunk_pruned(pred_by_col, names, vmins, vmaxs, i):
-                dead.add(key)
             chunk_n[key] = ns[i]
             if names[i] in ptypes:
                 by_chunk.setdefault(key, {})[names[i]] = i
-        for key in sorted(k for k in chunk_n if k not in dead):
+        for key in sorted(chunk_n):
             colmap = by_chunk.get(key, {})
             n_rows = chunk_n[key]
             out = {}

@@ -14,28 +14,26 @@ Layout: the filter is a little-endian bitset (bit ``p`` lives at byte
 stored in the nullable ``bloom`` column of the blocks schema.  Hashing is
 the repo's portable-md5 scheme (see memory: portable-hash contract):
 ``h1 = md5[0:8]``, ``h2 = md5[8:16] | 1`` (both masked to 63 bits), probe
-``j`` at ``(h1 % m + j * (h2 % m)) % m``.  Build side (numpy/python in the
-encoder) and probe side (JVM expression over the metadata DataFrame)
-implement the same arithmetic; ``tests/test_bloom.py`` pins them against
-each other.
+``j`` at ``(h1 % m + j * (h2 % m)) % m``.  The encoder builds filters
+with :func:`bloom_build`; the driver-side pruner
+(``operators/decode.py`` ``prune``) probes them with
+:func:`bloom_contains`.
 
-Scale: filters ride the existing blocks parquet (metadata-scale); probing
-is a whole-stage-codegen expression over chunk metadata rows — never a
-payload read, never driver-side iteration over chunks.
+Scale: filters ride the existing blocks parquet (metadata-scale) and
+reach the driver in ``Snapshot.chunk_stats``, which the table read
+already loads; probing is a few hashes per chunk with a filter on the
+predicate's column, never a payload read.
 
 Parity note: the reference (catid/cuda_float_compress) has no predicate
 machinery at all — this extends the engine's pushdown layer
-(operators/decode.py qualifying_chunks) the way Parquet/ORC attach Bloom
+(operators/decode.py prune) the way Parquet/ORC attach Bloom
 filters to row groups.
 """
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-__all__ = ["bloom_hashes", "bloom_build", "bloom_probe_expr",
+__all__ = ["bloom_hashes", "bloom_build", "bloom_contains",
            "BLOOM_K", "BLOOM_BITS_PER_KEY"]
 
 BLOOM_K = 7
@@ -79,7 +77,7 @@ def bloom_build(values, bits_per_key: int = BLOOM_BITS_PER_KEY,
 
 
 def bloom_contains(filt: bytes, value, k: int = BLOOM_K) -> bool:
-    """Python-side probe twin (tests + driver-side uses)."""
+    """True unless ``value`` is definitely absent from the filter."""
     m = len(filt) * 8
     h1, h2 = bloom_hashes(value)
     a, b = h1 % m, h2 % m
@@ -88,27 +86,3 @@ def bloom_contains(filt: bytes, value, k: int = BLOOM_K) -> bool:
         if not (filt[p >> 3] >> (p & 7)) & 1:
             return False
     return True
-
-
-def bloom_probe_expr(bloom_col: Column, value,
-                     k: int = BLOOM_K) -> Column:
-    """JVM-side "maybe contains" over a binary bloom column: True when the
-    filter is NULL (no evidence → keep) or every probe bit is set.  Pure
-    built-in expressions — runs inside codegen over metadata rows."""
-    h1, h2 = bloom_hashes(value)
-    m = (F.octet_length(bloom_col) * 8).cast("long")
-    a = F.pmod(F.lit(h1), m)
-    b = F.pmod(F.lit(h2), m)
-    ok = F.lit(True)
-    for j in range(k):
-        p = F.pmod(a + F.lit(j) * b, m).cast("int")
-        byte = F.conv(
-            F.hex(bloom_col.substr(
-                (F.shiftright(p, 3) + F.lit(1)), F.lit(1)
-            )),
-            16, 10,
-        ).cast("int")
-        # bit_get takes a Column position (shiftright's numBits must be a
-        # Python int, so it can't express a per-row shift)
-        ok = ok & (F.bit_get(byte, F.pmod(p, F.lit(8))) == 1)
-    return F.when(bloom_col.isNull(), F.lit(True)).otherwise(ok)

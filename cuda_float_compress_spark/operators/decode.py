@@ -14,10 +14,14 @@ flattened data skew into uniform chunks).
 from __future__ import annotations
 
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.operators import chunks as C
+from cuda_float_compress_spark.operators.bloom import bloom_contains
 from cuda_float_compress_spark.snapshot import Snapshot
 
 _SPARK_TYPE = {
@@ -176,175 +180,135 @@ def _bloom_literal(v, ptype: str):
     return v
 
 
-def qualifying_chunks(blocks: DataFrame, predicates: list[tuple]) -> DataFrame:
-    """(part_id, chunk_id) keys whose zone-map stats MIGHT satisfy all
-    predicates — a metadata-only query (payload column never read). Chunks
-    without stats are kept (can't prune what wasn't measured)."""
-    from cuda_float_compress_spark.operators.bloom import bloom_probe_expr
-
-    # tables encoded before the bloom column existed prune on zone maps only
-    has_bloom = "bloom" in blocks.columns
-    stat_cols = ["part_id", "chunk_id", "vmin", "vmax", "ptype"] + (
-        ["bloom"] if has_bloom else []
-    )
-
-    def _bloom_maybe(member):
-        # "definitely absent" per the chunk's Bloom filter (null filter or
-        # non-bloomable value => maybe). Only equality-shaped ops use this.
-        if not has_bloom:
-            return F.lit(True)
-        return bloom_probe_expr(F.col("bloom"), member)
-
-    keys = blocks.select("part_id", "chunk_id").distinct()
-    for col, op, value in predicates:
-        stats = blocks.filter(F.col("col") == col).select(*stat_cols)
-        ptype = stats.select("ptype").first()["ptype"]
-        v = None if op == "in" else _predicate_value(value, ptype)
-        if op in (">=", ">"):
-            keep = F.col("vmax").isNull() | (F.col("vmax") >= v)
-        elif op in ("==", "="):
-            keep = (
-                F.col("vmin").isNull()
-                | ((F.col("vmin") <= v) & (F.col("vmax") >= v))
-            ) & _bloom_maybe(_bloom_literal(value, ptype))
-        elif op in ("<=", "<"):
-            keep = F.col("vmin").isNull() | (F.col("vmin") <= v)
-        elif op == "in":
-            # keep the chunk if ANY list member could fall in [vmin, vmax]
-            # (v is the list here; each member converts like an equality)
-            # AND, when a Bloom filter is present, might be in the chunk
-            any_hit = F.lit(False)
-            for member in value:
-                mv = _predicate_value(member, ptype)
-                any_hit = any_hit | (
-                    (F.col("vmin") <= mv) & (F.col("vmax") >= mv)
-                    & _bloom_maybe(_bloom_literal(member, ptype))
-                )
-            keep = F.col("vmin").isNull() | any_hit
-        else:
-            raise ValueError(f"unsupported predicate op: {op}")
-        keys = keys.join(
-            stats.filter(keep).select("part_id", "chunk_id"),
-            ["part_id", "chunk_id"],
-            "left_semi",
-        )
-    return keys
-
-
-def qualifying_parts(
-    spark: SparkSession, out_dir: str, predicates: list[tuple]
-) -> list[int] | None:
-    """Part ids whose MANIFEST rollup stats (per-part min vmin / max vmax,
-    written by build_manifest) might satisfy all predicates — level 1 of
-    two-level pruning: whole parts drop before any CHUNK metadata is
-    scanned (at 100 TB the chunk metadata is itself a job). Returns None
-    when the manifest predates the rollup columns (no part pruning;
-    chunk-level pruning still applies). Conservative by construction:
-    null stats keep the part, stale extra manifest rows only WIDEN ranges,
-    and Bloom filters don't roll up (equality probes prune at chunk
-    level only)."""
-    try:
-        man = spark.read.option("mergeSchema", "true").parquet(
-            f"{out_dir}/manifest"
-        )
-    except Exception:
-        return None
-    if "vmin" not in man.columns:
-        return None
-    keys = man.select("part_id").distinct()
-    for col, op, value in predicates:
-        stats = man.filter(F.col("col") == col).select(
-            "part_id", "vmin", "vmax", "ptype"
-        )
-        first = stats.limit(1).collect()
-        if not first:
-            continue  # column unknown at part level (evolution) — keep all
-        ptype = first[0]["ptype"]
-        v = None if op == "in" else _predicate_value(value, ptype)
-        if op in (">=", ">"):
-            keep = F.col("vmax").isNull() | (F.col("vmax") >= v)
-        elif op in ("<=", "<"):
-            keep = F.col("vmin").isNull() | (F.col("vmin") <= v)
-        elif op in ("==", "="):
-            keep = F.col("vmin").isNull() | (
-                (F.col("vmin") <= v) & (F.col("vmax") >= v)
-            )
-        elif op == "in":
-            any_hit = F.lit(False)
-            for member in value:
-                mv = _predicate_value(member, ptype)
-                any_hit = any_hit | (
-                    (F.col("vmin") <= mv) & (F.col("vmax") >= mv)
-                )
-            keep = F.col("vmin").isNull() | any_hit
-        else:
-            raise ValueError(f"unsupported predicate op: {op}")
-        keys = keys.join(
-            stats.filter(keep).select("part_id").distinct(),
-            "part_id", "left_semi",
-        )
-    return [r["part_id"] for r in keys.collect()]
-
-
 _EXACT_STAT_PTYPES = (
     "int64", "int32", "timestamp_us", "timestamp_ntz", "date32",
     "float32", "float64",
 )
 
 
-def covered_chunks(blocks: DataFrame, predicates: list[tuple]) -> DataFrame:
-    """(part_id, chunk_id) keys where EVERY row provably satisfies ALL
-    predicates, from metadata alone — the complement of pruning: these
-    chunks can contribute their pre-computed statistics (n, vsum, ...)
-    to an aggregate without any payload read; only the boundary chunks
-    (qualifying minus covered) need decoding.
-
-    Sound only where chunk stats are EXACT per value: int family,
-    timestamps/dates (micros/days), and floats (float_key64 is an order
-    isomorphism, so key comparisons mirror value comparisons). String
-    prefixes are NOT exact — string predicates yield no covered chunks.
-    A chunk with nulls in a predicate column is never covered (nulls
-    fail every predicate)."""
-    keys = blocks.select("part_id", "chunk_id").distinct()
-    for col, op, value in predicates:
-        stats = blocks.filter(F.col("col") == col).select(
-            "part_id", "chunk_id", "vmin", "vmax", "n_nulls", "ptype"
-        )
-        first = stats.select("ptype").first()
-        ptype = first["ptype"] if first else None
-        if ptype not in _EXACT_STAT_PTYPES:
-            return keys.limit(0)
-        v = None if op == "in" else _predicate_value(value, ptype)
-        base = (
-            F.col("vmin").isNotNull() & F.col("vmax").isNotNull()
-            & (F.col("n_nulls") == 0)
-        )
-        if op == ">=":
-            cond = F.col("vmin") >= v
-        elif op == ">":
-            cond = F.col("vmin") > v
-        elif op == "<=":
-            cond = F.col("vmax") <= v
-        elif op == "<":
-            cond = F.col("vmax") < v
-        elif op in ("==", "="):
-            cond = (F.col("vmin") == v) & (F.col("vmax") == v)
-        elif op == "in":
-            anyeq = F.lit(False)
-            for member in value:
-                mv = _predicate_value(member, ptype)
-                anyeq = anyeq | (
-                    (F.col("vmin") == mv) & (F.col("vmax") == mv)
-                )
-            cond = anyeq
+def _keep_mask(rows: pa.Table, op: str, value, ptype: str,
+               covered: bool) -> pa.Array:
+    """Per stats row of one predicate's column: might the predicate hold
+    for some row of the chunk (``covered``: provably for every row)?"""
+    vmin, vmax = rows["vmin"], rows["vmax"]
+    if op == "=":
+        op = "=="
+    if op not in ("==", "<", "<=", ">", ">=", "in"):
+        raise ValueError(f"unsupported predicate op: {op}")
+    members = value if op == "in" else [value]
+    keys = [_predicate_value(m, ptype) for m in members]
+    if covered:
+        # nulls fail every predicate, so a chunk holding any is never
+        # covered; only exact stats can prove a bound
+        cmp = {">=": pc.greater_equal, ">": pc.greater,
+               "<=": pc.less_equal, "<": pc.less}
+        if op in cmp:
+            hit = cmp[op](vmax if op[0] == "<" else vmin, keys[0])
         else:
-            raise ValueError(f"unsupported predicate op: {op}")
-        keys = keys.join(
-            stats.filter(base & cond).select("part_id", "chunk_id"),
-            ["part_id", "chunk_id"],
-            "left_semi",
-        )
-    return keys
+            hit = pa.array([False] * rows.num_rows)
+            for k in keys:
+                hit = pc.or_kleene(hit, pc.and_kleene(pc.equal(vmin, k),
+                                                      pc.equal(vmax, k)))
+        exact = pc.and_(pc.and_(pc.is_valid(vmin), pc.is_valid(vmax)),
+                        pc.equal(rows["n_nulls"], 0))
+        return pc.fill_null(pc.and_kleene(exact, hit), False)
+    # null stats were never measured: keep
+    if op in (">=", ">"):
+        return pc.fill_null(pc.greater_equal(vmax, keys[0]), True)
+    if op in ("<=", "<"):
+        return pc.fill_null(pc.less_equal(vmin, keys[0]), True)
+    blooms = (rows["bloom"].to_pylist() if "bloom" in rows.column_names
+              else [None] * rows.num_rows)
+    hit = pa.array([False] * rows.num_rows)
+    for m, k in zip(members, keys):
+        # equality probes: the zone map must span the literal, and a Bloom
+        # filter's "definitely absent" prunes (probed with the literal in
+        # the form the encoder hashed)
+        lit = _bloom_literal(m, ptype)
+        maybe = pa.array([b is None or bloom_contains(b, lit)
+                          for b in blooms])
+        span = pc.or_kleene(pc.is_null(vmin), pc.and_kleene(
+            pc.less_equal(vmin, k), pc.greater_equal(vmax, k)))
+        hit = pc.or_kleene(hit, pc.and_kleene(span, maybe))
+    return pc.fill_null(hit, False)
+
+
+def prune(stats: pa.Table, predicates: list[tuple], covered: bool = False,
+          keys: tuple = ("part_id", "chunk_id")) -> set[tuple]:
+    """The keys (default ``(part_id, chunk_id)``) of ``stats`` rows whose
+    zone maps and Bloom filters MIGHT satisfy all ``predicates``; with
+    ``covered``, those where every row provably does. The one chunk
+    pruner: every reader calls it on the driver over
+    ``Snapshot.chunk_stats`` (``qualifying_parts`` over the manifest's
+    per-part rollups).
+
+    ``stats`` holds ``col, ptype, vmin, vmax`` and optionally ``n_nulls``
+    and ``bloom`` per key and column. Null stats keep a key. A key with
+    no stats row for a predicate's column is dropped: its rows predate
+    the column and decode it as null, which no predicate matches. Only
+    exact stats cover: string zone maps are prefixes, so a string
+    predicate covers nothing."""
+    out = set(zip(*(stats[k].to_pylist() for k in keys)))
+    for col, op, value in predicates:
+        rows = stats.filter(pc.equal(stats["col"], col))
+        ptype = rows["ptype"][0].as_py() if rows.num_rows else None
+        if covered and ptype not in _EXACT_STAT_PTYPES:
+            return set()
+        if rows.num_rows:
+            rows = rows.filter(_keep_mask(rows, op, value, ptype, covered))
+        out &= set(zip(*(rows[k].to_pylist() for k in keys)))
+    return out
+
+
+def pruned_keys(stats: pa.Table, predicates: list[tuple] | None,
+                any_of: list[list[tuple]] | None) -> set[tuple] | None:
+    """``(part_id, chunk_id)`` keys a read with ``predicates`` (AND) and
+    ``any_of`` (OR of conjunctions) must decode; None keeps every chunk."""
+    keep = prune(stats, predicates) if predicates else None
+    if any_of:
+        union = set().union(*(prune(stats, conj) for conj in any_of))
+        keep = union if keep is None else keep & union
+    return keep
+
+
+def qualifying_chunks(blocks: DataFrame, predicates: list[tuple]) -> DataFrame:
+    """``(part_id, chunk_id)`` keys of the block rows in ``blocks`` whose
+    stats MIGHT satisfy all predicates: :func:`prune` over the collected
+    stat columns (the payload column is never read)."""
+    stats = blocks.select(*(c for c in ("part_id", "chunk_id", "col",
+                                        "ptype", "vmin", "vmax", "bloom")
+                            if c in blocks.columns)).toArrow()
+    return blocks.sparkSession.createDataFrame(
+        sorted(prune(stats, predicates)), "part_id int, chunk_id bigint")
+
+
+def qualifying_parts(
+    spark: SparkSession, out_dir: str, predicates: list[tuple]
+) -> list[int] | None:
+    """Part ids whose MANIFEST rollup stats (per-part min vmin / max vmax,
+    written by build_manifest) might satisfy all predicates: :func:`prune`
+    over the rollups, read with pyarrow. Returns None when the manifest
+    predates the rollup columns. Conservative by construction: null
+    stats keep the part, a column the manifest does not know keeps every
+    part, stale extra manifest rows only WIDEN ranges, and Bloom filters
+    don't roll up."""
+    snap = Snapshot.resolve(out_dir)
+    try:
+        files = ds.dataset(f"{snap.root}/manifest", filesystem=snap.fs,
+                           format="parquet").files
+    except FileNotFoundError:
+        return None
+    # runs of different engine versions mix manifest layouts
+    schema = pa.unify_schemas(
+        [pq.read_schema(f, filesystem=snap.fs) for f in files])
+    if "vmin" not in schema.names:
+        return None
+    man = ds.dataset(files, schema=schema, filesystem=snap.fs,
+                     format="parquet").to_table(
+        columns=["part_id", "col", "ptype", "vmin", "vmax"])
+    known = set(man["col"].to_pylist())
+    return sorted(p for (p,) in prune(
+        man, [pr for pr in predicates if pr[0] in known], keys=("part_id",)))
 
 
 def _exact_condition(predicates: list[tuple], ptypes: dict):
@@ -421,20 +385,12 @@ def decode_table(
     if parts is not None:
         blocks = blocks.filter(F.col("part_id").isin([int(p) for p in parts]))
     cols = snap.columns
-    if predicates:
-        # level 1: whole-part pruning from the manifest rollups
-        keep_parts = qualifying_parts(spark, out_dir, predicates)
-        if keep_parts is not None:
-            blocks = blocks.filter(F.col("part_id").isin(keep_parts))
-        # level 2: chunk pruning from block metadata
-        keys = qualifying_chunks(blocks, predicates)
-        blocks = blocks.join(keys, ["part_id", "chunk_id"], "left_semi")
-    if any_of:
-        union = None
-        for conj in any_of:
-            k = qualifying_chunks(blocks, conj)
-            union = k if union is None else union.unionByName(k).distinct()
-        blocks = blocks.join(union, ["part_id", "chunk_id"], "left_semi")
+    keep = pruned_keys(snap.chunk_stats, predicates, any_of)
+    if keep is not None:
+        keys = spark.createDataFrame(sorted(keep),
+                                     "part_id int, chunk_id bigint")
+        blocks = blocks.join(F.broadcast(keys), ["part_id", "chunk_id"],
+                             "left_semi")
     if columns is not None:
         want = set(columns) | {c for c, _, _ in (predicates or [])} | {
             c for conj in (any_of or []) for c, _, _ in conj

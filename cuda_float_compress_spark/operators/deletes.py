@@ -30,9 +30,9 @@ added merge-on-read to immutable data files.
 
 from __future__ import annotations
 
-import os
 import uuid
 
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,6 +42,7 @@ __all__ = ["delete_rows", "delete_rows_by_keys", "tombstones_df",
            "ADDRESS_COLS"]
 
 ADDRESS_COLS = ("_part_id", "_chunk_id", "_pos")
+TOMBSTONE_SCHEMA = "_part_id int, _chunk_id bigint, _pos bigint"
 
 
 def tombstones_df(spark: SparkSession, out_dir: str,
@@ -59,13 +60,10 @@ def tombstones_df(spark: SparkSession, out_dir: str,
 def _tombstones(spark: SparkSession, snap: Snapshot) -> DataFrame | None:
     if not snap.tombstone_runs:
         return None
-    df = spark.read.option("mergeSchema", "true").parquet(
+    # delete_rows and merge_rows write exactly these types; an explicit
+    # schema spares the schema-merge job
+    return spark.read.schema(TOMBSTONE_SCHEMA).parquet(
         *(f"{snap.out_dir}/{run}" for run in snap.tombstone_runs)
-    )
-    return df.select(
-        F.col("_part_id").cast("int"),
-        F.col("_chunk_id").cast("long"),
-        F.col("_pos").cast("long"),
     )
 
 
@@ -139,7 +137,15 @@ def _commit_tombstones(spark, out_dir: str, addr: DataFrame,
                        run_id: str) -> dict:
     import time
 
-    path = os.path.join(out_dir, "deletes", f"run-{run_id}")
-    addr.withColumn("committed_at", F.lit(time.time())).write.parquet(path)
-    n = spark.read.parquet(path).count()
-    return {"run_id": run_id, "tombstones": int(n)}
+    rel = f"deletes/run-{run_id}"
+    addr.withColumn("committed_at", F.lit(time.time())).write.parquet(
+        f"{out_dir}/{rel}")
+    return {"run_id": run_id, "tombstones": footer_rows(out_dir, rel)}
+
+
+def footer_rows(out_dir: str, rel: str) -> int:
+    """Rows of the parquet dir ``rel`` (relative to the table root), from
+    the file footers alone: no Spark job, no data read."""
+    snap = Snapshot.resolve(out_dir)
+    return ds.dataset(f"{snap.root}/{rel}", filesystem=snap.fs,
+                      format="parquet").count_rows()

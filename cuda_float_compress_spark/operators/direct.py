@@ -93,9 +93,8 @@ def decode_table_direct(spark: SparkSession, out_dir: str,
     from cuda_float_compress_spark.operators.decode import (
         _SPARK_TYPE,
         _STD_ARROW,
-        _committed_blocks,
         _exact_filter,
-        qualifying_chunks,
+        pruned_keys,
     )
 
     snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
@@ -104,35 +103,10 @@ def decode_table_direct(spark: SparkSession, out_dir: str,
     # filter ships as a closure set (one entry per part per run)
     committed = snap.pairs
     all_ptypes = dict(cols)
-    keep_keys: set[int] | None = None
-    if predicates or any_of:
-        blocks = _committed_blocks(spark, snap)
-    if predicates:
-        from cuda_float_compress_spark.operators.decode import (
-            qualifying_parts,
-        )
-
-        # level 1: whole-part pruning from the manifest rollups (the chunk
-        # metadata scan below shrinks to the surviving parts)
-        keep_parts = qualifying_parts(spark, out_dir, predicates)
-        pruned = (
-            blocks.filter(F.col("part_id").isin(keep_parts))
-            if keep_parts is not None else blocks
-        )
-        # level 2: chunk-level zone maps / Bloom; key set is manifest-scale
-        # (one entry per surviving chunk) and ships to tasks via the closure
-        keys = qualifying_chunks(pruned, predicates).collect()
-        keep_keys = {(r["part_id"] << 32) | r["chunk_id"] for r in keys}
-    if any_of:
-        union_keys: set[int] = set()
-        for conj in any_of:
-            union_keys |= {
-                (r["part_id"] << 32) | r["chunk_id"]
-                for r in qualifying_chunks(blocks, conj).collect()
-            }
-        keep_keys = (
-            union_keys if keep_keys is None else keep_keys & union_keys
-        )
+    # zone maps / Bloom filters prune on the driver; the key set is
+    # manifest-scale (one entry per surviving chunk) and ships the same way
+    kept = pruned_keys(snap.chunk_stats, predicates, any_of)
+    keep_keys = None if kept is None else {(p << 32) | c for p, c in kept}
     if chunk_keys is not None:
         keep_keys = (
             set(chunk_keys) if keep_keys is None

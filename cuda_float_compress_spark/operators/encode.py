@@ -101,10 +101,8 @@ _BLOCKS_ARROW = pa.schema(
 def build_manifest(written, run_id: str):
     """Per-(part, col) manifest aggregate, shared by every writer (encode,
     direct, compact, rewrite). Includes PART-LEVEL zone-map rollups
-    (min vmin / max vmax): two-level pruning reads these to drop whole
-    parts before touching any chunk metadata — at 100 TB the chunk
-    metadata itself is a scan worth skipping (the Iceberg
-    manifest-stats move)."""
+    (min vmin / max vmax), which ``decode.qualifying_parts`` prunes whole
+    parts by (the Iceberg manifest-stats move)."""
     return (
         written.groupBy("part_id", "col", "col_idx", "ptype")
         .agg(

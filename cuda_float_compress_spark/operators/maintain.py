@@ -15,6 +15,7 @@ import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.fs as pafs
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -35,10 +36,15 @@ def reencode_columns(
     codec_overrides: dict[str, str],
     run_id: str | None = None,
 ) -> dict:
-    """Re-encode only ``codec_overrides`` columns; copy every other block row
-    unchanged. Output dir gets fresh manifest/lineage."""
+    """Re-encode only ``codec_overrides`` columns; copy every other
+    committed block row unchanged. Output dir gets fresh manifest/lineage
+    and the source's live tombstones: every ``(part, chunk, pos)`` address
+    is kept, so they delete the same rows."""
+    from cuda_float_compress_spark.operators.decode import committed_blocks
+    from cuda_float_compress_spark.snapshot import Snapshot
+
     run_id = run_id or uuid.uuid4().hex[:12]
-    blocks = spark.read.parquet(f"{src_dir}/blocks")
+    blocks = committed_blocks(spark, src_dir)
     touched = blocks.filter(F.col("col").isin(list(codec_overrides)))
     untouched = blocks.filter(~F.col("col").isin(list(codec_overrides)))
 
@@ -68,7 +74,10 @@ def reencode_columns(
     new_blocks = untouched.unionByName(reencoded).withColumn(
         "run_id", F.lit(run_id)
     )
-    new_blocks.write.mode("overwrite").parquet(f"{dst_dir}/blocks")
+    # one task per part writes all its rows, so no chunk spans two files
+    # (decode_table_direct decodes each file on its own)
+    new_blocks.repartition("part_id").write.mode("overwrite").parquet(
+        f"{dst_dir}/blocks")
 
     written = spark.read.parquet(f"{dst_dir}/blocks")
     manifest = build_manifest(written, run_id)
@@ -87,6 +96,12 @@ def reencode_columns(
         .withColumn("salts_json", F.lit(json.dumps({})))
     )
     lineage.write.mode("overwrite").parquet(f"{dst_dir}/lineage")
+    src, dst = Snapshot.resolve(src_dir), Snapshot.resolve(dst_dir)
+    for run in src.tombstone_runs:
+        dst.fs.create_dir(f"{dst.root}/{run}")
+        pafs.copy_files(f"{src.root}/{run}", f"{dst.root}/{run}",
+                        source_filesystem=src.fs,
+                        destination_filesystem=dst.fs)
     agg = written.agg(
         F.sum("raw_bytes").alias("raw"), F.sum("enc_bytes").alias("enc")
     ).collect()[0]

@@ -20,7 +20,7 @@ Crash/visibility contract (single writer, no transaction log):
 2. The update rows are appended and their lineage committed. From here
    a concurrent reader sees at worst BOTH versions of an updated row
    (transient duplicates), never a missing row.
-3. The staging dir is os.rename'd to ``deletes/run-<id>`` — the atomic
+3. The staging dir is renamed to ``deletes/run-<id>`` — the atomic
    publish that retires the old versions.
 
 A crash between 2 and 3 leaves duplicates, not data loss, and re-running
@@ -36,16 +36,18 @@ Iceberg-style table store needs.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
 import uuid
 
 import pyarrow.compute as pc
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cuda_float_compress_spark.operators.deletes import ADDRESS_COLS
+from cuda_float_compress_spark.operators.deletes import (
+    ADDRESS_COLS,
+    TOMBSTONE_SCHEMA,
+    footer_rows,
+)
 from cuda_float_compress_spark.snapshot import Snapshot
 
 __all__ = ["merge_rows"]
@@ -84,12 +86,16 @@ def merge_rows(
         )
 
     # sweep staging dirs abandoned by crashed merges (inert to readers)
-    for stale in glob.glob(os.path.join(out_dir, "deletes", "_staging-*")):
-        shutil.rmtree(stale, ignore_errors=True)
+    snap = Snapshot.resolve(out_dir)
+    fs, deletes = snap.fs, f"{snap.root}/deletes"
+    for stale in fs.get_file_info(pafs.FileSelector(
+            deletes, allow_not_found=True)):
+        if stale.base_name.startswith("_staging-"):
+            fs.delete_dir(stale.path)
 
     # 1. old-version addresses, BEFORE the append — materialized so the
     #    lazy plan can never be re-evaluated against the post-append table
-    staging = os.path.join(out_dir, "deletes", f"_staging-{run_id}")
+    staging = f"deletes/_staging-{run_id}"
     addr = (
         decode_table_direct(spark, out_dir, columns=[key_col],
                             with_row_address=True)
@@ -101,11 +107,11 @@ def merge_rows(
         # apply the tombstones without seeing the replacement rows —
         # updated keys would vanish from that snapshot. Stamped in step 3.
     )
-    addr.write.parquet(staging)
-    n_tomb = spark.read.parquet(staging).count()
+    addr.write.parquet(f"{out_dir}/{staging}")
+    n_tomb = footer_rows(out_dir, staging)
 
     # 2. append the new versions as their own run on a disjoint part range
-    committed = Snapshot.resolve(out_dir).committed_rows
+    committed = snap.committed_rows
     max_part = (pc.max(committed["part_id"]).as_py()
                 if committed is not None else None)
     part_offset = int(max_part) + 1 if max_part is not None else 0
@@ -123,15 +129,14 @@ def merge_rows(
     finished_at = pc.max(
         lin.filter(pc.equal(lin["run_id"], run_id))["finished_at"]
     ).as_py()
-    stamped = os.path.join(out_dir, "deletes", f"_staging-{run_id}-stamp")
+    stamped = f"{staging}-stamp"
     (
-        spark.read.parquet(staging)
+        spark.read.schema(TOMBSTONE_SCHEMA).parquet(f"{out_dir}/{staging}")
         .withColumn("committed_at", F.lit(finished_at).cast("double"))
-        .write.parquet(stamped)
+        .write.parquet(f"{out_dir}/{stamped}")
     )
-    final = os.path.join(out_dir, "deletes", f"run-{run_id}")
-    os.rename(stamped, final)
-    shutil.rmtree(staging, ignore_errors=True)
+    fs.move(f"{snap.root}/{stamped}", f"{deletes}/run-{run_id}")
+    fs.delete_dir(f"{snap.root}/{staging}")
     return {
         "run_id": run_id,
         "appended": int(counts["n"]),

@@ -3,8 +3,9 @@
 Every chunk already carries exact per-column statistics in the blocks
 metadata — ``n``, ``n_nulls``, ``vmin``/``vmax`` (exact VALUES for
 int-family columns), and (round 6) ``vsum`` for int32/int64. A full-table
-``count / sum / min / max`` therefore needs only the metadata rows: at
-100 TB that is MBs of stats instead of decoding every payload — the same
+``count / sum / min / max`` therefore needs only the metadata rows, which
+the driver already holds (``Snapshot.chunk_stats``): at 100 TB that is
+MBs of stats instead of decoding every payload — the same
 move as answering ``SELECT count(*)`` from parquet row-group footers.
 
 Correctness gates (fall back to a real decode when any is violated):
@@ -22,6 +23,8 @@ is always correct and merely FAST when the metadata allows.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,43 +52,27 @@ def agg_int_column(
     boundary (decoded + exactly filtered). On a sorted table the boundary
     is O(1) chunks per predicate edge, so a range-restricted sum still
     reads metadata + two chunks instead of the table."""
-    from cuda_float_compress_spark.operators.decode import (
-        _committed_blocks,
-        covered_chunks,
-        qualifying_chunks,
-    )
+    from cuda_float_compress_spark.operators.decode import prune
     from cuda_float_compress_spark.operators.direct import decode_table_direct
     from cuda_float_compress_spark.snapshot import Snapshot
 
     snap = Snapshot.resolve(out_dir)
-    blocks = _committed_blocks(spark, snap)
-    stats = blocks.filter(F.col("col") == col).select(
-        "part_id", "chunk_id", "ptype", "n", "n_nulls", "vmin", "vmax",
-        *(["vsum"] if "vsum" in blocks.columns else []),
-    )
-    first = stats.limit(1).collect()
-    if not first:
+    stats = snap.chunk_stats
+    rows = stats.filter(pc.equal(stats["col"], col))
+    if not rows.num_rows:
         raise ValueError(f"column {col!r} not present in {out_dir}")
-    ptype = first[0]["ptype"]
+    # schema evolution: chunks written before the column existed
+    # contribute all-null rows in both decode paths but carry no stats
+    # row for it, so the metadata aggregate would undercount n_rows and
+    # n_nulls; decode when any live chunk lacks one
     meta_ok = (
-        ptype in _INT_PTYPES
-        and "vsum" in blocks.columns
+        rows["ptype"][0].as_py() in _INT_PTYPES
         and not snap.tombstone_runs
+        and len(set(zip(rows["part_id"].to_pylist(),
+                        rows["chunk_id"].to_pylist())))
+        == len(set(zip(stats["part_id"].to_pylist(),
+                       stats["chunk_id"].to_pylist())))
     )
-    if meta_ok:
-        # schema evolution: chunks written before the column existed
-        # contribute all-null rows in both decode paths but carry no
-        # stats row for it — the metadata aggregate would silently
-        # undercount n_rows/n_nulls. One metadata-scale probe; decode
-        # when any live chunk lacks coverage.
-        uncovered = (
-            blocks.groupBy("part_id", "chunk_id")
-            .agg(F.max((F.col("col") == col).cast("int")).alias("has"))
-            .filter(F.col("has") == 0)
-            .limit(1)
-            .count()
-        )
-        meta_ok = uncovered == 0
 
     def _decode_agg(chunk_keys=None):
         dec = decode_table_direct(
@@ -103,41 +90,26 @@ def agg_int_column(
     if not meta_ok:
         return _decode_agg()
 
+    boundary = None
     if predicates:
-        cov_df = covered_chunks(blocks, predicates)
-        # boundary = qualifying minus covered: small by design (O(1)
-        # chunks per predicate edge on a sorted table), so collecting its
-        # keys for the chunk-restricted decode is metadata-scale. The
-        # covered set can be LARGE (most of the table) — it stays a
-        # DataFrame and restricts the stats aggregate via a semi-join.
-        boundary = {
-            (r["part_id"] << 32) | r["chunk_id"]
-            for r in qualifying_chunks(blocks, predicates)
-            .join(cov_df, ["part_id", "chunk_id"], "left_anti")
-            .collect()
-        }
-        stats = stats.join(cov_df, ["part_id", "chunk_id"], "left_semi")
-    else:
-        boundary = None
+        # covered chunks contribute their stats; boundary = qualifying
+        # minus covered, small by design (O(1) chunks per predicate edge
+        # on a sorted table), decodes
+        covered = prune(stats, predicates, covered=True)
+        boundary = {(p << 32) | c
+                    for p, c in prune(stats, predicates) - covered}
+        rows = rows.filter(pa.array([
+            k in covered for k in zip(rows["part_id"].to_pylist(),
+                                      rows["chunk_id"].to_pylist())]))
 
-    row = stats.agg(
-        F.sum("n").alias("n_rows"),
-        F.sum("n_nulls").alias("n_nulls"),
-        F.sum("vsum").alias("sum"),
-        F.min("vmin").alias("min"),
-        F.max("vmax").alias("max"),
-        F.sum(
-            F.when(
-                F.col("vsum").isNull() & (F.col("n") > F.col("n_nulls")),
-                1,
-            ).otherwise(0)
-        ).alias("_missing_sums"),
-    ).collect()[0]
-    if row["_missing_sums"] != 0:
-        # an overflowed / legacy-run chunk poisons the metadata sum
+    # a chunk with values but no sum overflowed int64 or predates vsum
+    if pc.sum(pc.and_(pc.is_null(rows["vsum"]),
+                      pc.greater(rows["n"], rows["n_nulls"]))).as_py():
         return _decode_agg()
-    parts = [(row["n_rows"] or 0, row["n_nulls"] or 0, row["sum"],
-              row["min"], row["max"])]
+    parts = [(pc.sum(rows["n"]).as_py() or 0,
+              pc.sum(rows["n_nulls"]).as_py() or 0,
+              pc.sum(rows["vsum"]).as_py(),
+              pc.min(rows["vmin"]).as_py(), pc.max(rows["vmax"]).as_py())]
     if boundary:
         b = _decode_agg(chunk_keys=boundary).collect()[0]
         parts.append((b["n_rows"], b["n_nulls"], b["sum"],

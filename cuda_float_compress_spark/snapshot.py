@@ -28,6 +28,11 @@ from here, so they cannot disagree:
   Runs written before the stamp existed always apply.
 * **Block files.** The ``blocks/*.parquet`` files holding at least one
   row of a committed pair in the window, with their sizes.
+* **Chunk stats.** Those files' block rows of the in-window pairs,
+  without the payload: the zone maps, Bloom filters and counts that
+  chunk pruning and metadata aggregation read on the driver. They come
+  from the same pass over the block files as the schema, and hold
+  O(chunks x columns) rows.
 
 Paths go through ``pyarrow.fs.FileSystem.from_uri``; a bare path is
 local. ``file://`` and bare paths therefore take the same code, and a
@@ -65,6 +70,23 @@ LINEAGE_SCHEMA = pa.schema([
 ])
 
 _SCHEMA_COLS = ["part_id", "run_id", "col_idx", "col", "ptype"]
+# the metadata columns of a block file: everything but the payload
+_SCAN = pa.schema([
+    ("part_id", pa.int32()),
+    ("chunk_id", pa.int64()),
+    ("run_id", pa.string()),
+    ("col_idx", pa.int32()),
+    ("col", pa.string()),
+    ("ptype", pa.string()),
+    ("n", pa.int64()),
+    ("n_nulls", pa.int64()),
+    ("vmin", pa.int64()),
+    ("vmax", pa.int64()),
+    ("vsum", pa.int64()),
+    ("bloom", pa.binary()),
+])
+_STATS_COLS = ["part_id", "chunk_id", "col", "ptype", "n", "n_nulls",
+               "vmin", "vmax", "vsum", "bloom"]
 
 
 def _open(out_dir: str) -> tuple[pafs.FileSystem, str]:
@@ -195,26 +217,48 @@ class Snapshot:
         )
 
     @functools.cached_property
-    def _block_scan(self) -> tuple[list, list]:
+    def _block_scan(self) -> tuple[list, list, pa.Table]:
         # one pass over the block files' metadata columns (payloads are
         # never read): distinct (part, run, col) rows per file give both
-        # the schema and which files hold committed rows
+        # the schema and which files hold committed rows, and the rows of
+        # the in-window pairs are the chunk stats
         all_pairs, pairs = self._all_pairs, self.pairs
         trips: set = set()
         live: list[tuple[str, int]] = []
+        stats: list[pa.Table] = []
         for path, size in self.all_block_files:
-            meta = pq.ParquetFile(path, filesystem=self.fs).read(
-                columns=_SCHEMA_COLS, use_threads=False,
-            ).group_by(_SCHEMA_COLS).aggregate([])
-            in_window = False
+            f = pq.ParquetFile(path, filesystem=self.fs)
+            have = set(f.schema_arrow.names)
+            got = f.read(columns=[c for c in _SCAN.names if c in have],
+                         use_threads=False)
+            # layouts older than vsum/bloom read those stats as null
+            meta = pa.table({
+                fld.name: (got[fld.name].cast(fld.type) if fld.name in have
+                           else pa.nulls(got.num_rows, fld.type))
+                for fld in _SCAN
+            })
+            distinct = meta.select(_SCHEMA_COLS).group_by(
+                _SCHEMA_COLS).aggregate([])
+            seen, win = set(), set()
             for p, r, idx, col, ptype in zip(
-                    *(meta[c].to_pylist() for c in _SCHEMA_COLS)):
+                    *(distinct[c].to_pylist() for c in _SCHEMA_COLS)):
+                seen.add((p, r))
                 if all_pairs is None or (p, r) in all_pairs:
                     trips.add((idx, col, ptype))
-                in_window = in_window or pairs is None or (p, r) in pairs
-            if in_window:
-                live.append((path, size))
-        return _union_schema((c, p) for _, c, p in sorted(trips)), live
+                if pairs is None or (p, r) in pairs:
+                    win.add((p, r))
+            if not win:
+                continue
+            live.append((path, size))
+            if win != seen:
+                meta = meta.filter(pa.array([
+                    k in win for k in zip(meta["part_id"].to_pylist(),
+                                          meta["run_id"].to_pylist())]))
+            stats.append(meta.select(_STATS_COLS))
+        chunk_stats = (pa.concat_tables(stats) if stats
+                       else _SCAN.empty_table().select(_STATS_COLS))
+        return (_union_schema((c, p) for _, c, p in sorted(trips)), live,
+                chunk_stats)
 
     @property
     def columns(self) -> list[tuple[str, str]]:
@@ -226,6 +270,14 @@ class Snapshot:
         """``[(path, size)]`` of the block files holding committed rows in
         the window; paths are on :attr:`fs`."""
         return self._block_scan[1]
+
+    @property
+    def chunk_stats(self) -> pa.Table:
+        """One row per committed block row in the window: ``part_id,
+        chunk_id, col, ptype, n, n_nulls, vmin, vmax, vsum, bloom``. The
+        driver prunes chunks and answers metadata aggregates from it
+        (``operators.decode.prune``)."""
+        return self._block_scan[2]
 
     @functools.cached_property
     def tombstone_runs(self) -> list[str]:

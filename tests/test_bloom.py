@@ -1,7 +1,6 @@
-"""Bloom filters on encoded chunks: build/probe twins agree, the JVM probe
-expression matches the Python probe, and an equality predicate on an
-unsorted high-cardinality column prunes to ~1 chunk where zone maps keep
-everything."""
+"""Bloom filters on encoded chunks: build and probe agree, and an equality
+predicate on an unsorted high-cardinality column prunes to ~1 chunk where
+zone maps keep everything."""
 from __future__ import annotations
 
 import pytest
@@ -11,7 +10,6 @@ from cuda_float_compress_spark.operators.bloom import (
     bloom_build,
     bloom_contains,
     bloom_hashes,
-    bloom_probe_expr,
 )
 
 
@@ -34,24 +32,6 @@ def test_false_positive_rate_reasonable():
 def test_empty_and_null_only_builds_none():
     assert bloom_build([]) is None
     assert bloom_build([None, None]) is None
-
-
-def test_probe_expr_matches_python_twin(spark):
-    filt = bloom_build([f"k{i}" for i in range(100)])
-    df = spark.createDataFrame([(bytearray(filt),)], "bloom: binary")
-    probes = [f"k{i}" for i in range(0, 100, 7)] + [
-        f"miss{i}" for i in range(40)
-    ]
-    for value in probes:
-        got = df.select(
-            bloom_probe_expr(F.col("bloom"), value).alias("hit")
-        ).collect()[0]["hit"]
-        assert got == bloom_contains(filt, value), value
-    # null filter => maybe
-    dfn = spark.createDataFrame([(None,)], "bloom: binary")
-    assert dfn.select(
-        bloom_probe_expr(F.col("bloom"), "anything").alias("h")
-    ).collect()[0]["h"] is True
 
 
 def test_int_values_hash_like_their_text_form():

@@ -310,6 +310,46 @@ def test_reencode_single_column(spark, tmp_path):
     assert all(r["ok"] for r in rep)
 
 
+def test_reencode_skips_uncommitted_runs(spark, tmp_path):
+    """reencode_columns copied the block rows of a crashed run and stamped
+    them with its own committed run_id, so they decoded as duplicates."""
+    from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.operators.maintain import reencode_columns
+
+    src = str(tmp_path / "ru_src")
+    enc1 = str(tmp_path / "ru_enc1")
+    enc2 = str(tmp_path / "ru_enc2")
+    generate_webpages_df(spark, 600, partitions=2).write.parquet(src)
+    encode_table_direct(spark, src, enc1, resume=False,
+                        target_rows_per_split=300)
+    blocks = spark.read.parquet(f"{enc1}/blocks")
+    blocks.withColumn("run_id", F.lit("crashed-run")).write.mode(
+        "append").parquet(f"{enc1}/blocks")
+    reencode_columns(spark, enc1, enc2, {"lang": "bytes_rle"})
+    assert decode_table_direct(spark, enc2).count() == 600
+
+
+def test_reencode_keeps_deletes(spark, tmp_path):
+    """reencode_columns dropped the source's tombstones, so deleted rows
+    came back in the rewritten table."""
+    from cuda_float_compress_spark.operators.deletes import delete_rows
+    from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.operators.maintain import reencode_columns
+
+    src = str(tmp_path / "rd_src")
+    enc1 = str(tmp_path / "rd_enc1")
+    enc2 = str(tmp_path / "rd_enc2")
+    generate_webpages_df(spark, 600, partitions=2).write.parquet(src)
+    encode_table_direct(spark, src, enc1, resume=False,
+                        target_rows_per_split=300)
+    assert delete_rows(spark, enc1, [("lang", "==", "en")])["tombstones"] > 0
+    reencode_columns(spark, enc1, enc2, {"lang": "bytes_rle"})
+    want = sorted(r["url"] for r in decode_table_direct(
+        spark, enc1, columns=["url"]).collect())
+    assert sorted(r["url"] for r in decode_table_direct(
+        spark, enc2, columns=["url"]).collect()) == want
+
+
 def test_compact_merges_stream_chunks(spark, tmp_path):
     from cuda_float_compress_spark.operators.maintain import compact
     from cuda_float_compress_spark.streaming import encode_stream

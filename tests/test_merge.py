@@ -72,6 +72,22 @@ def test_merge_updates_and_inserts(spark, docs_table):
     assert _rows(decode_table(spark, docs_table)) == expect
 
 
+@pytest.mark.parametrize("form", ["bare", "file_uri"])
+def test_merge_takes_every_path_form(spark, docs_table, form):
+    """On a file:// table the publish rename failed after the append had
+    committed, leaving both versions of every updated key, and the sweep
+    of stale staging dirs never matched."""
+    stale = os.path.join(docs_table, "deletes", "_staging-crashed")
+    os.makedirs(stale)
+    path = docs_table if form == "bare" else "file://" + docs_table
+    stats = merge_rows(spark, path, _updates_df(spark, [5, 17, 100], [1000]),
+                       key_col="url")
+    assert stats["tombstones"] == 3
+    assert _rows(decode_table_direct(spark, path)) == _expected_after_merge(
+        [5, 17, 100], [1000])
+    assert not glob.glob(os.path.join(docs_table, "deletes", "_staging-*"))
+
+
 def test_merge_twice_latest_wins(spark, docs_table):
     merge_rows(spark, docs_table, _updates_df(spark, [5], [1000]),
                key_col="url")
