@@ -1,18 +1,24 @@
 """The decode job: blocks parquet -> the original DataFrame, bit-identical.
 
-Column-pruned by construction: requesting a subset of columns filters block
-rows BEFORE the shuffle and decodes only those payloads — the engine-level
-analog of parquet column pruning (a scan that decodes all columns for a
-2-column projection would be wrong at 100 TB).
+One chunk assembler, :func:`assemble_chunks`, rebuilds chunks from block
+rows for every reader: the Spark transport (:func:`decode_table`), the
+Spark-free ``localio.read_table_local`` and ``maintain.compact``. It keeps
+the rows of committed ``(part_id, run_id)`` pairs and of kept chunks,
+refuses a ``(part_id, chunk_id, col)`` seen twice, null-fills columns a
+chunk predates and casts to the standard Arrow types.
 
-Reconstruction groups block rows by (part_id, chunk_id) with
-``applyInArrow`` — one group == one chunk == a few MB, so groups are
-uniformly sized regardless of host skew (the encode-side salting already
-flattened data skew into uniform chunks).
+The Spark transport reads block files inside the Python workers. Chunk
+pruning (:func:`prune`) runs on the driver over ``Snapshot.chunk_stats``;
+``Snapshot.file_groups`` splits the block files into groups that share
+no chunk, and only the groups holding a kept chunk are LPT-packed into
+one task per core. Each task reads its groups with pyarrow, so block
+rows are never shuffled and decoded rows cross into the JVM once.
+Columns a read does not want are never decoded.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -22,6 +28,7 @@ from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.operators import chunks as C
 from cuda_float_compress_spark.operators.bloom import bloom_contains
+from cuda_float_compress_spark.session import lpt_frame
 from cuda_float_compress_spark.snapshot import Snapshot
 
 _SPARK_TYPE = {
@@ -348,6 +355,80 @@ def _exact_filter(df: DataFrame, predicates: list[tuple], ptypes: dict) -> DataF
     return df.filter(_exact_condition(predicates, ptypes))
 
 
+_BLOCK_COLS = ["part_id", "chunk_id", "col", "codec", "n", "n_nulls",
+               "params", "run_id", "payload"]
+
+
+def read_group(fs, files: list[str]) -> pa.Table:
+    """The block rows of one file group (``Snapshot.file_groups``), read
+    from all of its files together (mmap, single-threaded: decode tasks
+    already fill the cores)."""
+    tbls = [pq.ParquetFile(f, filesystem=fs).read(columns=_BLOCK_COLS,
+                                                  use_threads=False)
+            for f in files]
+    return (tbls[0] if len(tbls) == 1
+            else pa.concat_tables(tbls, promote_options="permissive"))
+
+
+def kept_groups(snap: Snapshot, keep: set | None) -> list[list[tuple]]:
+    """The ``[(path, size)]`` file lists of the groups holding a chunk of
+    ``keep`` (every group when None)."""
+    return [files for files, keys in snap.file_groups
+            if keep is None or not keys.isdisjoint(keep)]
+
+
+def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
+                    pairs: frozenset | None = None, keep: set | None = None,
+                    deleted: dict | None = None, verify: bool = True):
+    """Decode the chunks of ``blocks``, the block rows of one file group
+    (or one part), in ``(part_id, chunk_id)`` order. Yields ``(part_id,
+    chunk_id, n_rows, arrays)`` with one array per ``cols`` entry.
+
+    Rows outside the committed ``pairs`` or the ``keep`` chunk keys (None:
+    no filter) are skipped. A ``(part_id, chunk_id, col)`` seen twice
+    raises ``ValueError``: one of the rows would silently win. A column
+    the chunk predates decodes as nulls, so a chunk holding no wanted
+    column still yields its rows. ``deleted`` maps a chunk key to row
+    positions to drop (tombstones applied in place)."""
+    part, chunk, names, codecs, ns, nnulls, params, runs = (
+        blocks[c].to_pylist() for c in _BLOCK_COLS[:-1])
+    payloads = blocks["payload"]
+    rows: dict[tuple, dict] = {}
+    for i, key in enumerate(zip(part, chunk)):
+        if ((pairs is not None and (key[0], runs[i]) not in pairs)
+                or (keep is not None and key not in keep)):
+            continue
+        colmap = rows.setdefault(key, {})
+        if names[i] in colmap:
+            raise ValueError(
+                f"duplicate block for part={key[0]} chunk={key[1]} "
+                f"col={names[i]}: conflicting rows in one file group"
+            )
+        colmap[names[i]] = i
+    for key in sorted(rows):
+        colmap = rows[key]
+        n_rows = ns[next(iter(colmap.values()))]
+        arrays = []
+        for c, ptype in cols:
+            i = colmap.get(c)
+            if i is None:
+                arrays.append(pa.nulls(n_rows, _STD_ARROW[ptype]))
+                continue
+            arr = C.decode_column_chunk(payloads[i].as_py(), codecs[i],
+                                        params[i], ns[i], nnulls[i], ptype,
+                                        verify=verify)
+            if not arr.type.equals(_STD_ARROW[ptype]):
+                arr = arr.cast(_STD_ARROW[ptype])
+            arrays.append(arr)
+        gone = (deleted or {}).get(key)
+        if gone:
+            mask = np.ones(n_rows, dtype=bool)
+            mask[[g for g in gone if g < n_rows]] = False
+            n_rows = int(mask.sum())
+            arrays = [a.filter(pa.array(mask)) for a in arrays]
+        yield key[0], key[1], n_rows, arrays
+
+
 def decode_table(
     spark: SparkSession,
     out_dir: str,
@@ -359,132 +440,111 @@ def decode_table(
     apply_deletes: bool = True,
     any_of: list[list[tuple]] | None = None,
     since: float | None = None,
+    with_row_address: bool = False,
+    chunk_keys: set | None = None,
 ) -> DataFrame:
-    """Decode the encoded table. ``predicates`` — [(col, op, literal)] with op
-    in <, <=, ==, >=, > — prune whole chunks via zone-map stats BEFORE any
-    payload is read (the encoded format's analog of parquet predicate
-    pushdown), then apply the exact filter to the decoded rows. ``as_of``
-    (epoch seconds) time-travels the append-only table to a past snapshot
-    (see committed_blocks). ``parts`` restricts the decode to a part-id
-    subset (incremental consumers: the part_id is the unit of progress).
-    ``apply_deletes``: anti-join committed tombstones (operators/deletes) —
-    on by default; both decode paths agree on merge-on-read semantics.
-    ``any_of``: OR-of-conjunctions — chunk pruning via the UNION of each
-    conjunction's qualifying set, exact OR filter after decode (parity
-    with decode_table_direct).
-    ``since`` (exclusive): decode only runs committed after that instant —
-    the incremental-consumer read (see committed_blocks)."""
+    """Decode the encoded table (also importable as
+    ``operators.direct.decode_table_direct``).
+
+    ``predicates``: [(col, op, literal)] with op in <, <=, ==, >=, >, in
+    (AND). Zone maps and Bloom filters prune whole chunks on the driver
+    before any payload is read (the encoded format's analog of parquet
+    predicate pushdown); the exact filter then runs on the decoded rows.
+    ``any_of``: a DISJUNCTION of conjunctions, [[...], [...]] meaning
+    (conj1 OR conj2): chunk pruning keeps the UNION of each
+    conjunction's chunks and the exact row filter is the matching OR.
+    Composes with ``predicates`` as a further AND.
+    ``as_of`` / ``since`` (epoch seconds): lineage-timestamp snapshot and
+    incremental windows (see committed_blocks).
+    ``parts``: decode only these part ids (incremental consumers: the
+    part_id is the unit of progress). ``keep_part_id``: emit ``part_id``
+    as the first column.
+    ``chunk_keys``: decode only these ``(part_id << 32 | chunk_id)`` keys
+    (metadata_agg decodes only its BOUNDARY chunks this way).
+    ``parts``, ``chunk_keys`` and predicate pruning intersect.
+    ``apply_deletes``: anti-join committed tombstones (operators/deletes),
+    on by default so merge-on-read deletes are never resurrected.
+    ``with_row_address``: emit the stable (_part_id, _chunk_id, _pos)
+    address columns last (delete_rows computes tombstones from them)."""
     from cuda_float_compress_spark.operators.deletes import (
+        ADDRESS_COLS,
         _tombstones,
         anti_join_tombstones,
     )
 
     snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
-    tombs = _tombstones(spark, snap) if apply_deletes else None
-    blocks = _committed_blocks(spark, snap)
-    if parts is not None:
-        blocks = blocks.filter(F.col("part_id").isin([int(p) for p in parts]))
+    all_ptypes = dict(snap.columns)
     cols = snap.columns
-    keep = pruned_keys(snap.chunk_stats, predicates, any_of)
-    if keep is not None:
-        keys = spark.createDataFrame(sorted(keep),
-                                     "part_id int, chunk_id bigint")
-        blocks = blocks.join(F.broadcast(keys), ["part_id", "chunk_id"],
-                             "left_semi")
     if columns is not None:
         want = set(columns) | {c for c, _, _ in (predicates or [])} | {
             c for conj in (any_of or []) for c, _, _ in conj
         }
         cols = [(c, p) for c, p in cols if c in want]
-        # prune PAYLOADS, not metadata rows: a chunk written before a
-        # wanted column existed (schema evolution) must still reach its
-        # decode group so its rows come back (wanted column = nulls) —
-        # the null payload keeps the shuffle metadata-sized for unwanted
-        # columns while the `n` field carries the chunk's row count
-        blocks = blocks.withColumn(
-            "payload",
-            F.when(F.col("col").isin(list(want)), F.col("payload")),
-        )
+    keep = pruned_keys(snap.chunk_stats, predicates, any_of)
+    restrict = []
+    if chunk_keys is not None:
+        restrict.append({(k >> 32, k & 0xFFFFFFFF) for k in chunk_keys})
+    if parts is not None:
+        ps = {int(p) for p in parts}
+        restrict.append({k for _, keys in snap.file_groups for k in keys
+                         if k[0] in ps})
+    for r in restrict:
+        keep = r if keep is None else keep & r
+    tombs = _tombstones(spark, snap) if apply_deletes else None
+    address = with_row_address or tombs is not None
 
-    out_fields = [f"`{c}` {_SPARK_TYPE[p]}" for c, p in cols]
+    fields = [pa.field(c, _STD_ARROW[p]) for c, p in cols]
     if keep_part_id:
-        out_fields = ["part_id int"] + out_fields
-    arrow_fields = [pa.field(c, _STD_ARROW[p]) for c, p in cols]
-    if keep_part_id:
-        arrow_fields = [pa.field("part_id", pa.int32())] + arrow_fields
-    if tombs is not None:
-        out_fields += ["_part_id int", "_chunk_id bigint", "_pos bigint"]
-        arrow_fields += [pa.field("_part_id", pa.int32()),
-                         pa.field("_chunk_id", pa.int64()),
-                         pa.field("_pos", pa.int64())]
-    out_schema = ", ".join(out_fields)
-    arrow_schema = pa.schema(arrow_fields)
-    col_ptypes = dict(cols)
-    with_address = tombs is not None
+        fields.insert(0, pa.field("part_id", pa.int32()))
+    if address:
+        fields += [pa.field("_part_id", pa.int32()),
+                   pa.field("_chunk_id", pa.int64()),
+                   pa.field("_pos", pa.int64())]
+    arrow_schema = pa.schema(fields)
+    out_schema = ", ".join(
+        ([] if not keep_part_id else ["part_id int"])
+        + [f"`{c}` {_SPARK_TYPE[p]}" for c, p in cols]
+        + ([] if not address
+           else ["_part_id int", "_chunk_id bigint", "_pos bigint"]))
 
-    def decode_chunk(key: tuple, tbl: pa.Table) -> pa.Table:
-        # applyInArrow passes grouping keys as pyarrow scalars
-        part_id = key[0].as_py() if hasattr(key[0], "as_py") else int(key[0])
-        by_col = {}
-        n_rows = None
-        payloads = tbl.column("payload").to_pylist()
-        names = tbl.column("col").to_pylist()
-        codecs = tbl.column("codec").to_pylist()
-        params = tbl.column("params").to_pylist()
-        ns = tbl.column("n").to_pylist()
-        n_nulls = tbl.column("n_nulls").to_pylist()
-        for i, name in enumerate(names):
-            if payloads[i] is None:
-                # projection-pruned metadata row: contributes the chunk's
-                # row count only (see the payload-nulling in decode_table)
-                n_rows = int(ns[i])
-                continue
-            ptype = col_ptypes[name]
-            if name in by_col:
-                # duplicate (part_id, chunk_id, col) would silently overwrite
-                # a column with rows from a different run/epoch — corruption,
-                # fail loudly (committed_blocks should have prevented this)
-                raise ValueError(
-                    f"duplicate block for part={key[0]} chunk={key[1]} "
-                    f"col={name}: conflicting runs in {out_dir}/blocks"
-                )
-            arr = C.decode_column_chunk(
-                payloads[i], codecs[i], params[i], int(ns[i]), int(n_nulls[i]), ptype
-            )
-            if not arr.type.equals(_STD_ARROW[ptype]):
-                arr = arr.cast(_STD_ARROW[ptype])
-            by_col[name] = arr
-            n_rows = int(ns[i])
-        out = {}
-        if keep_part_id:
-            out["part_id"] = pa.array([int(part_id)] * n_rows, type=pa.int32())
-        for c, ptype_ in cols:
-            if c not in by_col:  # column added after this chunk was written
-                by_col[c] = pa.nulls(n_rows, _STD_ARROW[ptype_])
-            out[c] = by_col[c]
-        if with_address:
-            chunk_id = key[1].as_py() if hasattr(key[1], "as_py") else int(key[1])
-            out["_part_id"] = pa.array([int(part_id)] * n_rows,
-                                       type=pa.int32())
-            out["_chunk_id"] = pa.array([int(chunk_id)] * n_rows,
-                                        type=pa.int64())
-            out["_pos"] = pa.array(range(n_rows), type=pa.int64())
-        return pa.table(out, schema=arrow_schema)
+    # the workers read block files directly with pyarrow, so the lineage
+    # trust filter and the kept keys ship as closure sets (metadata-scale)
+    groups = kept_groups(snap, keep)
+    groups_df, _ = lpt_frame(
+        spark, [([p for p, _ in files],) for files in groups],
+        [sum(size for _, size in files) for files in groups],
+        "files array<string>", per_core=1)
+    fs, pairs = snap.fs, snap.pairs
 
-    decoded = (
-        blocks.groupBy("part_id", "chunk_id").applyInArrow(decode_chunk, out_schema)
-    )
+    def decode_groups(batches):
+        for batch in batches:
+            for files in batch.column("files").to_pylist():
+                for part_id, chunk_id, n, arrays in assemble_chunks(
+                        read_group(fs, files), cols, pairs, keep):
+                    if keep_part_id:
+                        arrays.insert(0, pa.array(
+                            np.full(n, part_id, dtype=np.int32)))
+                    if address:
+                        arrays += [
+                            pa.array(np.full(n, part_id, dtype=np.int32)),
+                            pa.array(np.full(n, chunk_id, dtype=np.int64)),
+                            pa.array(np.arange(n, dtype=np.int64))]
+                    yield pa.RecordBatch.from_arrays(arrays,
+                                                     schema=arrow_schema)
+
+    decoded = groups_df.mapInArrow(decode_groups, schema=out_schema)
     if tombs is not None:
         decoded = anti_join_tombstones(decoded, tombs)
-        keep = (["part_id"] if keep_part_id else []) + [c for c, _ in cols]
-        decoded = decoded.select(*keep)
     if predicates:
-        decoded = _exact_filter(decoded, predicates, dict(cols))
+        decoded = _exact_filter(decoded, predicates, all_ptypes)
     if any_of:
         disj = F.lit(False)
         for conj in any_of:
-            disj = disj | _exact_condition(conj, dict(cols))
+            disj = disj | _exact_condition(conj, all_ptypes)
         decoded = decoded.filter(disj)
-    if (predicates or any_of) and columns is not None:
-        decoded = decoded.select(*[c for c, _ in cols if c in set(columns)])
+    out = ((["part_id"] if keep_part_id else [])
+           + [c for c, _ in cols if columns is None or c in set(columns)]
+           + (list(ADDRESS_COLS) if with_row_address else []))
+    if out != decoded.columns:
+        decoded = decoded.select(*out)
     return decoded

@@ -16,9 +16,10 @@ Mechanics:
   a fully distributed job: only row ADDRESSES cross the wire, never row
   data, and the Spark job-commit ``_SUCCESS`` marker makes the tombstone
   set atomic (readers ignore half-written delete dirs).
-* Both decode paths (``decode_table`` and ``decode_table_direct``)
-  anti-join committed tombstones on the address key; AQE broadcasts the
-  tombstone side when it is small (the common case).
+* The Spark decode transport (``decode.decode_table``) anti-joins
+  committed tombstones on the address key; AQE broadcasts the tombstone
+  side when it is small (the common case). ``read_table_local`` drops
+  them per chunk in the chunk assembler.
 * :func:`~cuda_float_compress_spark.operators.maintain.compact`
   MATERIALIZES tombstones — deleted rows are physically dropped and the
   compacted table starts with an empty delete set.
@@ -95,13 +96,13 @@ def delete_rows(
 
     Already-deleted rows are not re-tombstoned (the address scan itself
     applies existing tombstones). Returns {'run_id', 'tombstones'}."""
-    from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.operators.decode import decode_table
 
     if not predicates:
         raise ValueError("delete_rows requires at least one predicate")
     run_id = run_id or uuid.uuid4().hex[:12]
     pred_cols = sorted({c for c, _, _ in predicates})
-    addr = decode_table_direct(
+    addr = decode_table(
         spark, out_dir, columns=pred_cols, predicates=predicates,
         with_row_address=True,
     ).select(*ADDRESS_COLS)
@@ -121,12 +122,12 @@ def delete_rows_by_keys(
     One decode pass over the key column semi-joins the list (AQE
     broadcasts it when small; otherwise a shuffle on the key only — row
     payloads never move). Rows already deleted are not re-tombstoned."""
-    from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.operators.decode import decode_table
 
     run_id = run_id or uuid.uuid4().hex[:12]
     addr = (
-        decode_table_direct(spark, out_dir, columns=[key_col],
-                            with_row_address=True)
+        decode_table(spark, out_dir, columns=[key_col],
+                     with_row_address=True)
         .join(keys.select(key_col).distinct(), key_col, "left_semi")
         .select(*ADDRESS_COLS)
     )

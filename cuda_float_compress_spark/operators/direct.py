@@ -11,6 +11,9 @@ the same locality argument as Iceberg/Spark storage-partitioned execution.
 
 part_id = split index over the (deterministically sorted) file list, so
 checkpoint-resume re-derives identical assignments from the same input.
+
+``decode_table_direct`` is another name for ``operators.decode.decode_table``,
+the one Spark decode transport, kept for callers that import it from here.
 """
 
 from __future__ import annotations
@@ -24,14 +27,17 @@ import uuid
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.metrics import EngineMetrics
+from cuda_float_compress_spark.operators.decode import (  # noqa: F401
+    decode_table as decode_table_direct,
+)
 from cuda_float_compress_spark.operators.encode import (
     BLOCKS_SCHEMA,
     _encode_chunk_to_rows,
     completed_parts,
 )
+from cuda_float_compress_spark.session import lpt_frame
 from cuda_float_compress_spark.snapshot import LINEAGE_SCHEMA, Snapshot
 
 SPLITS_SCHEMA = ("part_id int, file string, rg_start int, rg_end int, "
@@ -57,208 +63,6 @@ def _to_us_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
     if not changed:
         return rb
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
-
-
-def decode_table_direct(spark: SparkSession, out_dir: str,
-                        columns: list[str] | None = None,
-                        predicates: list[tuple] | None = None,
-                        with_row_address: bool = False,
-                        apply_deletes: bool = True,
-                        chunk_keys: set | None = None,
-                        any_of: list[list[tuple]] | None = None,
-                        as_of: float | None = None,
-                        since: float | None = None):
-    """Shuffle-free decode: every encode task wrote whole chunks to its own
-    blocks file, so chunks never span files — each decode task reads one
-    blocks file with pyarrow and reconstructs its chunks locally. The
-    shuffle-based ``decode_table`` remains for blocks that were compacted or
-    rewritten by other tools.
-
-    ``apply_deletes``: anti-join committed tombstones (operators/deletes) —
-    on by default so merge-on-read deletes are never silently resurrected.
-    ``with_row_address``: emit the stable (_part_id, _chunk_id, _pos)
-    address columns (delete_rows uses this to compute tombstones).
-    ``chunk_keys``: restrict the decode to these (part_id << 32 | chunk_id)
-    keys (metadata_agg decodes only the BOUNDARY chunks this way);
-    composes with predicate pruning as an intersection.
-    ``any_of``: a DISJUNCTION of conjunctions — [[...], [...]] means
-    (conj1 OR conj2). Chunk pruning is the UNION of each conjunction's
-    qualifying set; the exact row filter is the matching OR. Composes
-    with ``predicates`` as a further AND.
-    ``as_of`` / ``since``: lineage-timestamp snapshot / incremental
-    windows — parity with decode_table (see committed_blocks)."""
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import chunks as Ch
-    from cuda_float_compress_spark.operators.decode import (
-        _SPARK_TYPE,
-        _STD_ARROW,
-        _exact_filter,
-        pruned_keys,
-    )
-
-    snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
-    cols = snap.columns
-    # workers read block files directly with pyarrow, so the lineage trust
-    # filter ships as a closure set (one entry per part per run)
-    committed = snap.pairs
-    all_ptypes = dict(cols)
-    # zone maps / Bloom filters prune on the driver; the key set is
-    # manifest-scale (one entry per surviving chunk) and ships the same way
-    kept = pruned_keys(snap.chunk_stats, predicates, any_of)
-    keep_keys = None if kept is None else {(p << 32) | c for p, c in kept}
-    if chunk_keys is not None:
-        keep_keys = (
-            set(chunk_keys) if keep_keys is None
-            else keep_keys & set(chunk_keys)
-        )
-    if columns is not None:
-        want = set(columns) | {c for c, _, _ in (predicates or [])} | {
-            c for conj in (any_of or []) for c, _, _ in conj
-        }
-        cols = [(c, p) for c, p in cols if c in want]
-    col_ptypes = dict(cols)
-    want_cols = [c for c, _ in cols]
-    from cuda_float_compress_spark.operators.deletes import (
-        ADDRESS_COLS,
-        _tombstones,
-        anti_join_tombstones,
-    )
-
-    tombs = _tombstones(spark, snap) if apply_deletes else None
-    address = bool(with_row_address or tombs is not None)
-    out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[p]}" for c, p in cols)
-    arrow_schema = pa.schema([pa.field(c, _STD_ARROW[p]) for c, p in cols])
-    if address:
-        out_schema += ", _part_id int, _chunk_id bigint, _pos bigint"
-        arrow_schema = pa.schema(
-            list(arrow_schema)
-            + [pa.field("_part_id", pa.int32()),
-               pa.field("_chunk_id", pa.int64()),
-               pa.field("_pos", pa.int64())]
-        )
-
-    # LPT bin-packing of blocks files into ~4x-slots tasks, LARGEST FIRST:
-    # raw sizes per split vary with document lengths (bench table: 5x
-    # file-size skew), so bins are balanced by bytes; and one task per FILE
-    # would pay this host's ~160 ms per-task scheduler latency per file
-    # (a streamed table's thousands of small run files must not become
-    # thousands of tasks). decode_file already loops every row in its
-    # batch; parallelize preserves element->partition order.
-    import heapq
-
-    files = sorted(snap.block_files, key=lambda f: -f[1])
-    slots = max(spark.sparkContext.defaultParallelism, 1)
-    n_tasks = max(1, min(len(files), slots * 4))
-    heap = [(0, i) for i in range(n_tasks)]
-    bins: list[list] = [[] for _ in range(n_tasks)]
-    for f, size in files:
-        load, i = heapq.heappop(heap)
-        bins[i].append((f,))
-        heapq.heappush(heap, (load + size, i))
-    bins = [b for b in bins if b]
-    fs = snap.fs
-    files_df = spark.createDataFrame(
-        spark.sparkContext.parallelize(bins, max(len(bins), 1)).flatMap(
-            lambda b: b
-        ),
-        "file string",
-    )
-
-    def decode_file(batches):
-        for batch in batches:
-            for row in batch.to_pylist():
-                # mmap + single-threaded: tasks already saturate the
-                # cores; pyarrow's intra-read threads only thrash here
-                tbl = pq.ParquetFile(row["file"], filesystem=fs).read(
-                    columns=["part_id", "chunk_id", "col", "codec", "n",
-                             "n_nulls", "params", "run_id", "payload"],
-                    use_threads=False,
-                )
-                part = tbl.column("part_id").to_numpy(zero_copy_only=False)
-                chunk = tbl.column("chunk_id").to_numpy(zero_copy_only=False)
-                names = tbl.column("col").to_pylist()
-                codecs = tbl.column("codec").to_pylist()
-                ns = tbl.column("n").to_pylist()
-                nnulls = tbl.column("n_nulls").to_pylist()
-                params = tbl.column("params").to_pylist()
-                run_ids = tbl.column("run_id").to_pylist()
-                payloads = tbl.column("payload")
-                keys = part.astype(np.int64) << np.int64(32) | chunk.astype(np.int64)
-                by_chunk: dict[int, dict] = {}
-                chunk_n: dict[int, int] = {}  # rows per LIVE chunk (any col)
-                for i in range(len(keys)):
-                    if keep_keys is not None and int(keys[i]) not in keep_keys:
-                        continue
-                    if committed is not None and (
-                        int(part[i]), run_ids[i]
-                    ) not in committed:
-                        continue  # stale partial from an uncommitted run
-                    chunk_n[int(keys[i])] = int(ns[i])
-                    if names[i] not in col_ptypes:
-                        continue
-                    colmap = by_chunk.setdefault(int(keys[i]), {})
-                    if names[i] in colmap:
-                        raise ValueError(
-                            f"duplicate block for part={int(part[i])} "
-                            f"chunk={int(chunk[i])} col={names[i]} in {row['file']}"
-                        )
-                    colmap[names[i]] = i
-                # iterate LIVE chunks, not just those carrying a wanted
-                # column: a chunk written before a column was added (schema
-                # evolution) decodes that column as nulls, and its rows
-                # must survive even when NO wanted column predates it
-                for ckey in sorted(chunk_n):
-                    colmap = by_chunk.get(ckey, {})
-                    out = {}
-                    n_rows = chunk_n[ckey]
-                    for c, ptype in cols:
-                        i = colmap.get(c)
-                        if i is None:  # column added after this chunk
-                            out[c] = pa.nulls(n_rows, _STD_ARROW[ptype])
-                            continue
-                        arr = Ch.decode_column_chunk(
-                            payloads[i].as_py(), codecs[i], params[i],
-                            int(ns[i]), int(nnulls[i]), ptype,
-                        )
-                        if not arr.type.equals(_STD_ARROW[ptype]):
-                            arr = arr.cast(_STD_ARROW[ptype])
-                        out[c] = arr
-                    tab = {c: out[c] for c in want_cols}
-                    if address:
-                        tab["_part_id"] = pa.array(
-                            np.full(n_rows, ckey >> 32, dtype=np.int32))
-                        tab["_chunk_id"] = pa.array(
-                            np.full(n_rows, ckey & 0xFFFFFFFF,
-                                    dtype=np.int64))
-                        tab["_pos"] = pa.array(
-                            np.arange(n_rows, dtype=np.int64))
-                    yield pa.table(
-                        tab, schema=arrow_schema
-                    ).to_batches(max_chunksize=1 << 30)[0]
-
-    decoded = files_df.mapInArrow(decode_file, schema=out_schema)
-    if tombs is not None:
-        decoded = anti_join_tombstones(decoded, tombs)
-    if predicates:
-        decoded = _exact_filter(decoded, predicates, all_ptypes)
-    if any_of:
-        from cuda_float_compress_spark.operators.decode import (
-            _exact_condition,
-        )
-
-        disj = F.lit(False)
-        for conj in any_of:
-            disj = disj | _exact_condition(conj, all_ptypes)
-        decoded = decoded.filter(disj)
-    keep = want_cols if columns is None else [
-        c for c in want_cols if c in set(columns)
-    ]
-    if with_row_address:
-        keep = keep + list(ADDRESS_COLS)
-    if keep != decoded.columns:
-        decoded = decoded.select(*keep)
-    return decoded
 
 
 def plan_splits(input_dir: str, target_rows_per_split: int = 131_072,
@@ -534,33 +338,14 @@ def encode_table_direct(
                             overrides, acc, run_id, profile,
                         )
 
-        # LPT bin-packing: biggest split first (document-length skew puts
-        # up to ~5x byte spread across equal-row splits), each assigned to
-        # the currently-lightest of ~4x-slots bins. One TASK per BIN, not
-        # per split: a table of many small files must not pay per-task
-        # scheduler latency per file (measured ~160 ms/task on this host —
-        # 90 one-file tasks cost 16 s of pure dispatch at 1 core; at 100 TB
-        # a million small files would be a million tasks). encode_split
-        # already iterates every split row in its batch, and each split
-        # keeps its own part_id, so (part, chunk) keys are unaffected.
-        import heapq
-
-        todo = sorted(todo, key=lambda s: -s[6])
-        slots = max(spark.sparkContext.defaultParallelism, 1)
-        n_tasks = max(1, min(len(todo), slots * 4))
-        heap = [(0, i) for i in range(n_tasks)]  # (bytes_assigned, bin)
-        bins: list[list] = [[] for _ in range(n_tasks)]
-        for s in todo:
-            load, i = heapq.heappop(heap)
-            bins[i].append(s)
-            heapq.heappush(heap, (load + s[6], i))
-        bins = [b for b in bins if b]
-        splits_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(bins, len(bins)).flatMap(
-                lambda b: b
-            ),
-            SPLITS_SCHEMA,
-        )
+        # LPT bin-packing into ~4x-slots tasks (lpt_frame): document-length
+        # skew puts up to ~5x byte spread across equal-row splits, and a
+        # table of many small files must not become one task per split (at
+        # 100 TB a million small files would be a million tasks).
+        # encode_split iterates every split row in its batch, and each
+        # split keeps its own part_id, so (part, chunk) keys are unaffected.
+        splits_df, n_tasks = lpt_frame(spark, todo, [s[6] for s in todo],
+                                       SPLITS_SCHEMA, per_core=4)
         blocks = splits_df.mapInArrow(encode_split, schema=BLOCKS_SCHEMA)
         with metrics.stage("encode_write"):
             before = {p for p, _ in Snapshot.resolve(out_dir).all_block_files}
@@ -578,6 +363,6 @@ def encode_table_direct(
     snap["run_id"] = run_id
     snap["skipped_parts"] = len(done)
     snap["n_splits"] = len(todo)
-    snap["n_tasks"] = len(bins) if todo else 0
+    snap["n_tasks"] = n_tasks if todo else 0
     snap["wall_sec"] = time.time() - t_start
     return snap

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.codecs import core
 from cuda_float_compress_spark.operators import chunks as C
-from cuda_float_compress_spark.operators.decode import _STD_ARROW
 from cuda_float_compress_spark.operators.encode import (
     _BLOCKS_ARROW,
     BLOCKS_SCHEMA,
@@ -74,8 +73,9 @@ def reencode_columns(
     new_blocks = untouched.unionByName(reencoded).withColumn(
         "run_id", F.lit(run_id)
     )
-    # one task per part writes all its rows, so no chunk spans two files
-    # (decode_table_direct decodes each file on its own)
+    # one task per part writes all its rows, so no chunk spans two files:
+    # the decode transport reads files that share a chunk as one group, and
+    # without this every file would share chunks, one group for the table
     new_blocks.repartition("part_id").write.mode("overwrite").parquet(
         f"{dst_dir}/blocks")
 
@@ -243,7 +243,9 @@ def compact(
     """Re-chunk an encoded dir: streaming ingest leaves many small tail
     chunks (one per micro-batch per part); compaction decodes per part and
     re-encodes at the target chunk size. Parts stay independent — the job is
-    a per-(part) applyInArrow with no cross-part shuffle of decoded data.
+    a per-(part) applyInArrow with no cross-part shuffle of decoded data;
+    each part's chunks are rebuilt by ``decode.assemble_chunks``, the
+    chunk assembler every reader uses.
 
     Merge-on-read tombstones (operators/deletes) are MATERIALIZED: deleted
     rows are physically dropped (blocks cogrouped with tombstones per
@@ -259,7 +261,10 @@ def compact(
     run it when qualifying_chunks starts selecting most of the table.
 
     Returns {'chunks_before', 'chunks_after', ...}."""
-    from cuda_float_compress_spark.operators.decode import _committed_blocks
+    from cuda_float_compress_spark.operators.decode import (
+        _committed_blocks,
+        assemble_chunks,
+    )
     from cuda_float_compress_spark.operators.deletes import _tombstones
     from cuda_float_compress_spark.operators.encode import _encode_chunk_to_rows
     from cuda_float_compress_spark.snapshot import Snapshot
@@ -269,7 +274,6 @@ def compact(
     blocks = _committed_blocks(spark, snap)
     chunks_before = blocks.select("part_id", "chunk_id").distinct().count()
     cols = snap.columns
-    col_ptypes = dict(cols)
     ordered = [c for c, _ in cols]
     # preserve Bloom-filter coverage across compaction: rebuild filters for
     # every column that carried one in the source (metadata-scale collect)
@@ -291,57 +295,17 @@ def compact(
                     i, name, empty.column(name).cast(pa.binary())
                 )
             return empty
-        # group incoming block rows by old chunk, decode, concat per column
-        names = tbl.column("col").to_pylist()
-        codecs = tbl.column("codec").to_pylist()
-        params = tbl.column("params").to_pylist()
-        ns = tbl.column("n").to_pylist()
-        nnulls = tbl.column("n_nulls").to_pylist()
-        chunk_ids = tbl.column("chunk_id").to_pylist()
-        payloads = tbl.column("payload")
-        per_chunk: dict[int, dict] = {}
-        for i in range(len(names)):
-            per_chunk.setdefault(chunk_ids[i], {})[names[i]] = i
         # tombstoned positions per chunk (this part's addresses only —
         # the cogroup routed them here)
-        tomb_pos: dict[int, set] = {}
-        if tomb_tbl is not None and tomb_tbl.num_rows:
-            tc = tomb_tbl.column("_chunk_id").to_pylist()
-            tp = tomb_tbl.column("_pos").to_pylist()
-            for c_, p_ in zip(tc, tp):
-                tomb_pos.setdefault(int(c_), set()).add(int(p_))
-        col_arrays: dict[str, list] = {c: [] for c in ordered}
-        for cid in sorted(per_chunk):
-            del_pos = tomb_pos.get(int(cid))
-            mask = None
-            # rows in this chunk, from any column present (all block rows
-            # of one chunk share n)
-            chunk_n = int(ns[next(iter(per_chunk[cid].values()))])
-            for c in ordered:
-                i = per_chunk[cid].get(c)
-                if i is None:
-                    # schema evolution: chunk predates the column — null
-                    # fill, mirroring decode_table_direct's union-schema
-                    # handling
-                    arr = pa.nulls(chunk_n, _STD_ARROW[col_ptypes[c]])
-                else:
-                    arr = C.decode_column_chunk(
-                        payloads[i].as_py(), codecs[i], params[i],
-                        int(ns[i]), int(nnulls[i]), col_ptypes[c],
-                    )
-                if del_pos:
-                    if mask is None:
-                        import numpy as np
-
-                        m = np.ones(len(arr), dtype=bool)
-                        m[[p for p in del_pos if p < len(arr)]] = False
-                        mask = pa.array(m)
-                    arr = arr.filter(mask)
-                col_arrays[c].append(arr)
-        full = pa.table(
-            {c: pa.concat_arrays([a.cast(a.type) for a in col_arrays[c]])
-             for c in ordered}
-        )
+        deleted: dict[tuple, list] = {}
+        if tomb_tbl is not None:
+            for c_, p_ in zip(tomb_tbl.column("_chunk_id").to_pylist(),
+                              tomb_tbl.column("_pos").to_pylist()):
+                deleted.setdefault((part_id, c_), []).append(p_)
+        pieces = [arrays for _, _, _, arrays in
+                  assemble_chunks(tbl, cols, deleted=deleted)]
+        full = pa.table({c: pa.concat_arrays([a[i] for a in pieces])
+                         for i, c in enumerate(ordered)})
         if sort_keys:
             import pyarrow.compute as pc
 

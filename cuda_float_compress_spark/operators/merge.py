@@ -72,7 +72,7 @@ def merge_rows(
     Returns {'run_id', 'appended', 'tombstones', 'part_offset'}.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.operators.decode import decode_table
     from cuda_float_compress_spark.operators.encode import encode_table
 
     counts = updates.agg(
@@ -97,8 +97,8 @@ def merge_rows(
     #    lazy plan can never be re-evaluated against the post-append table
     staging = f"deletes/_staging-{run_id}"
     addr = (
-        decode_table_direct(spark, out_dir, columns=[key_col],
-                            with_row_address=True)
+        decode_table(spark, out_dir, columns=[key_col],
+                     with_row_address=True)
         .join(updates.select(key_col).distinct(), key_col, "left_semi")
         .select(*ADDRESS_COLS)
         # committed_at (the as_of time-scope) is deliberately NOT stamped

@@ -52,8 +52,7 @@ def agg_int_column(
     boundary (decoded + exactly filtered). On a sorted table the boundary
     is O(1) chunks per predicate edge, so a range-restricted sum still
     reads metadata + two chunks instead of the table."""
-    from cuda_float_compress_spark.operators.decode import prune
-    from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.operators.decode import decode_table, prune
     from cuda_float_compress_spark.snapshot import Snapshot
 
     snap = Snapshot.resolve(out_dir)
@@ -62,7 +61,7 @@ def agg_int_column(
     if not rows.num_rows:
         raise ValueError(f"column {col!r} not present in {out_dir}")
     # schema evolution: chunks written before the column existed
-    # contribute all-null rows in both decode paths but carry no stats
+    # contribute all-null rows in every reader but carry no stats
     # row for it, so the metadata aggregate would undercount n_rows and
     # n_nulls; decode when any live chunk lacks one
     meta_ok = (
@@ -75,7 +74,7 @@ def agg_int_column(
     )
 
     def _decode_agg(chunk_keys=None):
-        dec = decode_table_direct(
+        dec = decode_table(
             spark, out_dir, columns=[col], predicates=predicates,
             chunk_keys=chunk_keys,
         )

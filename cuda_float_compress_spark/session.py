@@ -7,9 +7,10 @@ per-JVM knob that varies)."""
 
 from __future__ import annotations
 
+import heapq
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 CHUNK_ROWS = 32_768  # reference block = 32768 floats (src/cuszplus_f32.cu:21-28)
 
@@ -59,7 +60,9 @@ def get_spark(
         # a second driver-serial rename pass at job commit. Safe for this
         # engine's dirs by design: decode trusts only lineage-committed
         # (part, run) pairs, so files from a failed/partial job are inert
-        # (same argument as task retries), and vacuum reclaims them.
+        # (same argument as task retries), and vacuum reclaims them. A
+        # retry that leaves a committed file twice is refused by every
+        # reader (snapshot.Snapshot.file_groups), never read twice.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
     )
@@ -68,3 +71,24 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def lpt_frame(spark: SparkSession, rows: list[tuple], weights: list[int],
+              schema: str, per_core: int) -> tuple[DataFrame, int]:
+    """``rows`` as a DataFrame of at most ``per_core`` x defaultParallelism
+    partitions, one task each, packed LPT: heaviest row first, each into
+    the lightest partition so far, so tasks carry about equal bytes. One
+    task per row would pay the scheduler's per-task latency (~160 ms
+    measured in local mode) once per file or split. Returns the
+    DataFrame and its partition count."""
+    slots = max(spark.sparkContext.defaultParallelism, 1)
+    n = max(1, min(len(rows), slots * per_core))
+    heap = [(0, i) for i in range(n)]
+    bins: list[list] = [[] for _ in range(n)]
+    for w, row in sorted(zip(weights, rows), key=lambda wr: -wr[0]):
+        load, i = heapq.heappop(heap)
+        bins[i].append(row)
+        heapq.heappush(heap, (load + w, i))
+    bins = [b for b in bins if b]
+    rdd = spark.sparkContext.parallelize(bins, max(len(bins), 1))
+    return spark.createDataFrame(rdd.flatMap(lambda b: b), schema), len(bins)

@@ -4,8 +4,8 @@ An encoded table dir holds ``blocks/`` (one row per chunk x column, the
 payload beside its stats), ``manifest/``, ``lineage/`` (one row per part
 per committed run: the commit log) and ``deletes/run-*`` (merge-on-read
 tombstones). :meth:`Snapshot.resolve` is the only code that reads
-``lineage/`` and ``deletes/`` or lists ``blocks/``. Every reader (both
-Spark decode transports, the Spark-free ``localio`` reader, metadata
+``lineage/`` and ``deletes/`` or lists ``blocks/``. Every reader (the
+Spark decode transport, the Spark-free ``localio`` reader, metadata
 aggregation, compaction) and every resume/merge writer takes its facts
 from here, so they cannot disagree:
 
@@ -32,7 +32,13 @@ from here, so they cannot disagree:
   without the payload: the zone maps, Bloom filters and counts that
   chunk pruning and metadata aggregation read on the driver. They come
   from the same pass over the block files as the schema, and hold
-  O(chunks x columns) rows.
+  O(chunks x columns) rows, each tagged with the block file it came from.
+* **File groups.** The block files split into groups that share no
+  chunk, so a reader that decodes one group at a time sees every block
+  row of its chunks. The engine's writers give each chunk one file; a
+  Spark rewrite (vacuum) may split a chunk's rows over two. A block row
+  present twice (a block file copied by a task retry) raises
+  ``ValueError``.
 
 Paths go through ``pyarrow.fs.FileSystem.from_uri``; a bare path is
 local. ``file://`` and bare paths therefore take the same code, and a
@@ -87,6 +93,7 @@ _SCAN = pa.schema([
 ])
 _STATS_COLS = ["part_id", "chunk_id", "col", "ptype", "n", "n_nulls",
                "vmin", "vmax", "vsum", "bloom"]
+_CHUNK_KEY = ["part_id", "chunk_id"]
 
 
 def _open(out_dir: str) -> tuple[pafs.FileSystem, str]:
@@ -249,14 +256,17 @@ class Snapshot:
                     win.add((p, r))
             if not win:
                 continue
-            live.append((path, size))
             if win != seen:
                 meta = meta.filter(pa.array([
                     k in win for k in zip(meta["part_id"].to_pylist(),
                                           meta["run_id"].to_pylist())]))
-            stats.append(meta.select(_STATS_COLS))
-        chunk_stats = (pa.concat_tables(stats) if stats
-                       else _SCAN.empty_table().select(_STATS_COLS))
+            stats.append(meta.select(_STATS_COLS).append_column(
+                "file", pa.repeat(pa.scalar(len(live), pa.int32()),
+                                  meta.num_rows)))
+            live.append((path, size))
+        chunk_stats = (pa.concat_tables(stats) if stats else
+                       _SCAN.empty_table().select(_STATS_COLS).append_column(
+                           "file", pa.array([], pa.int32())))
         return (_union_schema((c, p) for _, c, p in sorted(trips)), live,
                 chunk_stats)
 
@@ -274,10 +284,49 @@ class Snapshot:
     @property
     def chunk_stats(self) -> pa.Table:
         """One row per committed block row in the window: ``part_id,
-        chunk_id, col, ptype, n, n_nulls, vmin, vmax, vsum, bloom``. The
-        driver prunes chunks and answers metadata aggregates from it
+        chunk_id, col, ptype, n, n_nulls, vmin, vmax, vsum, bloom`` and
+        ``file``, the row's index into :attr:`block_files`. The driver
+        prunes chunks and answers metadata aggregates from it
         (``operators.decode.prune``)."""
         return self._block_scan[2]
+
+    @functools.cached_property
+    def file_groups(self) -> list[tuple[list[tuple[str, int]], frozenset]]:
+        """``[(files, keys)]``: :attr:`block_files` united (union-find)
+        wherever two files hold rows of one ``(part_id, chunk_id)``, with
+        the chunk keys each group holds. Raises ``ValueError`` when a
+        ``(part_id, chunk_id, col)`` has two committed rows: the table
+        no longer says which one holds the column."""
+        stats = self.chunk_stats
+        rows = stats.group_by(_CHUNK_KEY + ["col"]).aggregate(
+            [("n", "count")])
+        dup = rows.filter(pc.greater(rows["n_count"], 1))
+        if dup.num_rows:
+            p, c, col = (dup[k][0].as_py() for k in _CHUNK_KEY + ["col"])
+            raise ValueError(
+                f"duplicate block for part={p} chunk={c} col={col}: two "
+                f"committed rows in {self.out_dir}/blocks (a block file "
+                "copied by a task retry?); remove the copy or rebuild"
+            )
+        parent = list(range(len(self.block_files)))
+
+        def root(i: int) -> int:
+            while parent[i] != i:
+                parent[i] = parent[parent[i]]
+                i = parent[i]
+            return i
+
+        first: dict = {}
+        places = stats.group_by(_CHUNK_KEY + ["file"]).aggregate([])
+        for p, c, f in zip(*(places[k].to_pylist()
+                             for k in _CHUNK_KEY + ["file"])):
+            parent[root(f)] = root(first.setdefault((p, c), f))
+        groups: dict[int, tuple[list, set]] = {}
+        for f, info in enumerate(self.block_files):
+            groups.setdefault(root(f), ([], set()))[0].append(info)
+        for key, f in first.items():
+            groups[root(f)][1].add(key)
+        return [(files, frozenset(keys)) for files, keys in groups.values()]
 
     @functools.cached_property
     def tombstone_runs(self) -> list[str]:

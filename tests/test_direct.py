@@ -1146,3 +1146,90 @@ def test_doubly_committed_parts_refused(spark, tmp_path, read_cols_count,
                      resume=False, sort_keys=["doc_id"])
     with pytest.raises(ValueError, match="committed by 2 different runs"):
         read_cols_count(reader, out)
+
+
+def _read_sorted(spark, reader: str, path: str):
+    """A full read through ``reader`` as a pyarrow table sorted by url."""
+    from cuda_float_compress_spark.localio import read_table_local
+    from cuda_float_compress_spark.operators.direct import decode_table_direct
+
+    if reader == "read_table_local":
+        tbl = read_table_local(path)
+    else:
+        fn = decode_table if reader == "decode_table" else decode_table_direct
+        tbl = fn(spark, path).toArrow()
+    return tbl.sort_by("url")
+
+
+@pytest.mark.parametrize("reader", _READERS)
+def test_chunk_split_across_vacuumed_files(spark, tmp_path, reader):
+    """vacuum rewrites blocks/ through a plain Spark read, which splits a
+    block file larger than maxPartitionBytes at row-group boundaries; one
+    can fall inside a chunk, so the chunk's column rows land in two
+    files. Every reader must still decode it as one chunk.
+    decode_table_direct and read_table_local used to decode each half on
+    its own: 2032 rows of 2000, 32 of them with a null url."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from cuda_float_compress_spark.operators.maintain import vacuum
+
+    src, out = str(tmp_path / "span_src"), str(tmp_path / "span")
+    generate_webpages_df(spark, 2000, partitions=1).select(
+        "url", "warc_ts", "html").write.parquet(src)
+    confs = {"parquet.block.size": "65536",
+             "spark.sql.files.maxPartitionBytes": "262144",
+             "spark.sql.files.openCostInBytes": "0"}
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        spark.conf.set("parquet.block.size", confs["parquet.block.size"])
+        for run in ("done", "crashed"):
+            encode_table_direct(spark, src, out, chunk_rows=32,
+                                resume=False, run_id=run)
+        os.remove(f"{out}/lineage/part-direct-crashed.parquet")
+        spark.conf.unset("parquet.block.size")
+        for k in ("spark.sql.files.maxPartitionBytes",
+                  "spark.sql.files.openCostInBytes"):
+            spark.conf.set(k, confs[k])
+        assert vacuum(spark, out)["rows_after"] > 0
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    files: dict = {}
+    for name in os.listdir(f"{out}/blocks"):
+        if name.endswith(".parquet"):
+            t = pq.read_table(f"{out}/blocks/{name}",
+                              columns=["part_id", "chunk_id"])
+            for key in zip(t["part_id"].to_pylist(),
+                           t["chunk_id"].to_pylist()):
+                files.setdefault(key, set()).add(name)
+    assert any(len(f) > 1 for f in files.values()), "no chunk was split"
+    want = pq.read_table(src).sort_by("url")
+    got = _read_sorted(spark, reader, out)
+    assert got.num_rows == 2000
+    for c in want.column_names:
+        assert got[c].equals(want[c].cast(got[c].type)), c
+
+
+@pytest.mark.parametrize("reader", _READERS)
+def test_duplicated_block_file_refused(spark, tmp_path, read_cols_count,
+                                       reader):
+    """A committed block file present twice under two names (what a
+    committer-v2 task retry can leave) holds every block row of its
+    chunks twice: every reader refuses the table. decode_table_direct
+    and read_table_local used to return 900 rows of 600."""
+    import glob
+    import shutil
+
+    src, out = str(tmp_path / "dup_src"), str(tmp_path / "dup")
+    generate_webpages_df(spark, 600, partitions=2).write.parquet(src)
+    encode_table_direct(spark, src, out, resume=False,
+                        target_rows_per_split=300)
+    first = sorted(glob.glob(f"{out}/blocks/*.parquet"))[0]
+    shutil.copy(first, f"{out}/blocks/part-99999-retry.parquet")
+    with pytest.raises(ValueError, match="duplicate block"):
+        read_cols_count(reader, out)

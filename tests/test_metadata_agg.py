@@ -41,12 +41,12 @@ def _expected(rows):
 
 def test_metadata_agg_matches_and_never_decodes(spark, enc_docs, monkeypatch):
     out, rows = enc_docs
-    import cuda_float_compress_spark.operators.direct as direct_mod
+    import cuda_float_compress_spark.operators.decode as decode_mod
 
     def _boom(*a, **k):
         raise AssertionError("metadata path must not decode payloads")
 
-    monkeypatch.setattr(direct_mod, "decode_table_direct", _boom)
+    monkeypatch.setattr(decode_mod, "decode_table", _boom)
     got = agg_int_column(spark, out, "v").collect()[0]
     assert (got["n_rows"], got["n_nulls"], got["sum"], got["min"],
             got["max"]) == _expected(rows)
@@ -116,15 +116,15 @@ def test_predicate_agg_covered_plus_boundary(spark, tmp_path, monkeypatch):
     encode_table(spark, df, out, n_parts=1, resume=False,
                  sort_keys=["v"], chunk_rows=100)
 
-    import cuda_float_compress_spark.operators.direct as direct_mod
+    import cuda_float_compress_spark.operators.decode as decode_mod
     calls = []
-    real = direct_mod.decode_table_direct
+    real = decode_mod.decode_table
 
     def spy(*a, **k):
         calls.append(k.get("chunk_keys"))
         return real(*a, **k)
 
-    monkeypatch.setattr(direct_mod, "decode_table_direct", spy)
+    monkeypatch.setattr(decode_mod, "decode_table", spy)
     got = agg_int_column(
         spark, out, "v", predicates=[("v", ">=", 150), ("v", "<", 1850)]
     ).collect()[0]

@@ -85,16 +85,16 @@ def test_pruned_read_equals_exact_filter(spark, bloom_table, reader, ptype,
 def test_local_reader_prunes_url_probe_by_bloom(bloom_table, monkeypatch):
     """read_table_local pruned only int-domain zone maps, so a url point
     probe decoded every chunk; the shared pruner reads the url filters."""
-    from cuda_float_compress_spark import localio
+    from cuda_float_compress_spark.operators import chunks
 
     decoded = []  # one url payload per chunk read
-    real = localio.Ch.decode_column_chunk
+    real = chunks.decode_column_chunk
 
     def counting(*args, **kw):
         decoded.append(1)
         return real(*args, **kw)
 
-    monkeypatch.setattr(localio.Ch, "decode_column_chunk", counting)
+    monkeypatch.setattr(chunks, "decode_column_chunk", counting)
     read_table_local(bloom_table, columns=["url"])
     total = len(decoded)
     decoded.clear()
@@ -102,6 +102,22 @@ def test_local_reader_prunes_url_probe_by_bloom(bloom_table, monkeypatch):
                            predicates=[("url", "==", _row(123)[1])])
     assert got.column("url").to_pylist() == [_row(123)[1]]
     assert total >= 8 and len(decoded) <= 2, (len(decoded), total)
+
+
+@pytest.mark.parametrize("reader", ["decode_table", "read_table_local"])
+def test_read_keeping_no_chunk_is_empty_and_typed(spark, bloom_table,
+                                                  reader):
+    """A predicate that prunes every chunk leaves no file group to read:
+    the result is empty, with the columns and types of a full read."""
+    none = [("doc_id", "==", 10**6)]
+    if reader == "read_table_local":
+        got = read_table_local(bloom_table, predicates=none)
+        assert got.num_rows == 0
+        assert got.schema == read_table_local(bloom_table).schema
+    else:
+        got = decode_table(spark, bloom_table, predicates=none)
+        assert got.count() == 0
+        assert got.schema == decode_table(spark, bloom_table).schema
 
 
 def test_predicate_resolve_starts_no_spark_job(spark, tmp_path):
