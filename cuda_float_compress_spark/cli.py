@@ -53,7 +53,8 @@ def main(argv: list[str] | None = None) -> int:
 
     cmp_ = sub.add_parser("compact")
     cmp_.add_argument("--out", required=True, help="source encoded dir")
-    cmp_.add_argument("--dest", required=True, help="compacted encoded dir")
+    cmp_.add_argument("--dest", required=True,
+                      help="new compacted encoded dir (must not hold a table)")
     cmp_.add_argument("--chunk-rows", type=int, default=32_768)
     cmp_.add_argument(
         "--sort-keys", default=None,

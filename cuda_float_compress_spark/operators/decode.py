@@ -293,9 +293,9 @@ def qualifying_parts(
     spark: SparkSession, out_dir: str, predicates: list[tuple]
 ) -> list[int] | None:
     """Part ids whose MANIFEST rollup stats (per-part min vmin / max vmax,
-    written by build_manifest) might satisfy all predicates: :func:`prune`
-    over the rollups, read with pyarrow. Returns None when the manifest
-    predates the rollup columns. Conservative by construction: null
+    written by encode.commit_blocks) might satisfy all predicates:
+    :func:`prune` over the rollups, read with pyarrow. Returns None when
+    the manifest predates the rollup columns. Conservative by construction: null
     stats keep the part, a column the manifest does not know keeps every
     part, stale extra manifest rows only WIDEN ranges, and Bloom filters
     don't roll up."""

@@ -11,6 +11,9 @@ the same locality argument as Iceberg/Spark storage-partitioned execution.
 
 part_id = split index over the (deterministically sorted) file list, so
 checkpoint-resume re-derives identical assignments from the same input.
+Each split's batches go through ``encode.encode_part``, the chunk cutter
+of every table writer, and the run commits through
+``encode.commit_blocks``, like the shuffle-path encode.
 
 ``decode_table_direct`` is another name for ``operators.decode.decode_table``,
 the one Spark decode transport, kept for callers that import it from here.
@@ -19,7 +22,6 @@ the one Spark decode transport, kept for callers that import it from here.
 from __future__ import annotations
 
 import glob
-import json
 import os
 import time
 import uuid
@@ -34,11 +36,11 @@ from cuda_float_compress_spark.operators.decode import (  # noqa: F401
 )
 from cuda_float_compress_spark.operators.encode import (
     BLOCKS_SCHEMA,
-    _encode_chunk_to_rows,
+    commit_blocks,
     completed_parts,
+    encode_part,
 )
 from cuda_float_compress_spark.session import lpt_frame
-from cuda_float_compress_spark.snapshot import LINEAGE_SCHEMA, Snapshot
 
 SPLITS_SCHEMA = ("part_id int, file string, rg_start int, rg_end int, "
                  "row_start bigint, row_end bigint, est_bytes bigint")
@@ -138,136 +140,6 @@ def plan_splits(input_dir: str, target_rows_per_split: int = 131_072,
     return splits
 
 
-_MANIFEST_ARROW = pa.schema([
-    ("part_id", pa.int32()),
-    ("col", pa.string()),
-    ("col_idx", pa.int32()),
-    ("ptype", pa.string()),
-    ("n_chunks", pa.int64()),
-    ("n_values", pa.int64()),
-    ("n_nulls", pa.int64()),
-    ("raw_bytes", pa.int64()),
-    ("enc_bytes", pa.int64()),
-    # element name + non-null mirror Spark's array<string> parquet layout
-    ("codecs", pa.list_(pa.field("element", pa.string(), nullable=False))),
-    ("vmin", pa.int64()),
-    ("vmax", pa.int64()),
-    ("run_id", pa.string()),
-])
-
-def _atomic_parquet_append(fs, dir_path: str, tbl: pa.Table,
-                           name: str) -> None:
-    """Append one parquet file to a dataset dir with atomic visibility:
-    write under a dot-prefixed temp name (ignored by every parquet
-    reader), then rename into place."""
-    fs.create_dir(dir_path, recursive=True)
-    tmp = f"{dir_path}/.inprogress-{name}"
-    pq.write_table(tbl, tmp, filesystem=fs)
-    fs.move(tmp, f"{dir_path}/{name}")
-
-
-_MANIFEST_META_COLS = ["part_id", "col", "col_idx", "ptype", "n", "n_nulls",
-                       "raw_bytes", "enc_bytes", "codec", "vmin", "vmax"]
-
-
-def _manifest_rows_driver_side(fs, blk_files: list[str],
-                               run_id: str) -> list[dict]:
-    """build_manifest's aggregate computed on the driver from the block
-    files' METADATA columns (payloads never read — parquet column
-    projection): bit-identical semantics to the Spark groupBy (count,
-    sums, sorted codec set, null-skipping min/max), pinned by the
-    mixed-writer parity test."""
-    import pyarrow.dataset as ds
-
-    tbl = ds.dataset(blk_files, format="parquet", filesystem=fs).to_table(
-        columns=_MANIFEST_META_COLS,
-        filter=ds.field("run_id") == run_id,
-    )
-    cols = {c: tbl.column(c).to_pylist() for c in _MANIFEST_META_COLS}
-    agg: dict[tuple, dict] = {}
-    for i in range(tbl.num_rows):
-        key = (cols["part_id"][i], cols["col"][i],
-               cols["col_idx"][i], cols["ptype"][i])
-        a = agg.get(key)
-        if a is None:
-            a = agg[key] = {
-                "part_id": key[0], "col": key[1], "col_idx": key[2],
-                "ptype": key[3], "n_chunks": 0, "n_values": 0,
-                "n_nulls": 0, "raw_bytes": 0, "enc_bytes": 0,
-                "codecs": set(), "vmin": None, "vmax": None,
-                "run_id": run_id,
-            }
-        a["n_chunks"] += 1
-        a["n_values"] += cols["n"][i]
-        a["n_nulls"] += cols["n_nulls"][i]
-        a["raw_bytes"] += cols["raw_bytes"][i]
-        a["enc_bytes"] += cols["enc_bytes"][i]
-        a["codecs"].add(cols["codec"][i])
-        vmin, vmax = cols["vmin"][i], cols["vmax"][i]
-        if vmin is not None and (a["vmin"] is None or vmin < a["vmin"]):
-            a["vmin"] = vmin
-        if vmax is not None and (a["vmax"] is None or vmax > a["vmax"]):
-            a["vmax"] = vmax
-    out = []
-    for a in agg.values():
-        a["codecs"] = sorted(a["codecs"])
-        out.append(a)
-    return out
-
-
-def _commit_metadata_driver_side(out_dir: str, before: set[str],
-                                 run_id: str,
-                                 salts: dict | None = None) -> None:
-    """Commit an encode run: its manifest is built from the block files its
-    append added (every file not in ``before``), then the manifest and
-    lineage appends are written driver-side with pyarrow instead of Spark
-    jobs: the rows are metadata-scale (parts x cols), and each Spark job
-    carries ~0.5 s of fixed driver latency in local mode — a serial tail
-    that directly caps the N -> 4N scaling-efficiency quotient. Schemas
-    mirror the Spark-written files EXACTLY (types checked by
-    tests/test_direct.py mixed-writer round trip), so one table dir can
-    carry appends from both writers. The lineage write lands LAST — it is
-    the run's commit point (decode trusts only lineage-committed parts)."""
-    snap = Snapshot.resolve(out_dir)
-    added = [p for p, _ in snap.all_block_files if p not in before]
-    man_rows = (_manifest_rows_driver_side(snap.fs, added, run_id)
-                if added else [])
-    man_cols = {f.name: [r[f.name] for r in man_rows]
-                for f in _MANIFEST_ARROW}
-    _atomic_parquet_append(
-        snap.fs, f"{snap.root}/manifest",
-        pa.Table.from_pydict(man_cols, schema=_MANIFEST_ARROW),
-        f"part-direct-{run_id}.parquet",
-    )
-    per_part: dict[int, dict] = {}
-    for r in man_rows:
-        p = per_part.setdefault(
-            r["part_id"],
-            {"n_chunks": 0, "n_rows": 0, "raw_bytes": 0, "enc_bytes": 0},
-        )
-        p["n_chunks"] = max(p["n_chunks"], r["n_chunks"])
-        p["n_rows"] = max(p["n_rows"], r["n_values"])
-        p["raw_bytes"] += r["raw_bytes"]
-        p["enc_bytes"] += r["enc_bytes"]
-    now = time.time()
-    lin_cols = {
-        "part_id": list(per_part),
-        "n_chunks": [p["n_chunks"] for p in per_part.values()],
-        "n_rows": [p["n_rows"] for p in per_part.values()],
-        "raw_bytes": [p["raw_bytes"] for p in per_part.values()],
-        "enc_bytes": [p["enc_bytes"] for p in per_part.values()],
-        "run_id": [run_id] * len(per_part),
-        "status": ["done"] * len(per_part),
-        "finished_at": [now] * len(per_part),
-        "salts_json": [json.dumps(salts or {})] * len(per_part),
-    }
-    _atomic_parquet_append(
-        snap.fs, f"{snap.root}/lineage",
-        pa.Table.from_pydict(lin_cols, schema=LINEAGE_SCHEMA),
-        f"part-direct-{run_id}.parquet",
-    )
-
-
 def encode_table_direct(
     spark: SparkSession,
     input_dir: str,
@@ -297,46 +169,36 @@ def encode_table_direct(
     if todo:
         acc = metrics.acc
 
+        def split_batches(row):
+            # the split's rows as Arrow batches; a sub-row-group split
+            # clips the streamed batches to its row range
+            pf = pq.ParquetFile(row["file"])
+            row_start, row_end = row["row_start"], row["row_end"]
+            offset = 0  # rows streamed so far within the rg range
+            for rb in pf.iter_batches(
+                batch_size=chunk_rows,
+                row_groups=range(row["rg_start"], row["rg_end"]),
+                columns=columns,
+            ):
+                if row_start >= 0:
+                    lo = max(row_start - offset, 0)
+                    hi = min(row_end - offset, rb.num_rows)
+                    offset += rb.num_rows
+                    if offset >= row_end and hi <= lo:
+                        break  # past our range: skip the tail decode
+                    if hi <= lo:
+                        continue
+                    if (lo, hi) != (0, rb.num_rows):
+                        rb = rb.slice(lo, hi - lo)
+                yield _to_us_batch(rb)
+
         def encode_split(batches):
             for batch in batches:
                 for row in batch.to_pylist():
-                    pf = pq.ParquetFile(row["file"])
-                    part_id = row["part_id"]
-                    row_start, row_end = row["row_start"], row["row_end"]
-                    chunk_id = 0
-                    buf, buf_rows, buf_bytes = [], 0, 0
-                    offset = 0  # rows streamed so far within the rg range
-                    for rb in pf.iter_batches(
-                        batch_size=chunk_rows,
-                        row_groups=range(row["rg_start"], row["rg_end"]),
-                        columns=columns,
-                    ):
-                        if row_start >= 0:  # sub-row-group split: clip the
-                            lo = max(row_start - offset, 0)  # batch to the
-                            hi = min(row_end - offset, rb.num_rows)  # range
-                            offset += rb.num_rows
-                            if offset >= row_end and hi <= lo:
-                                break  # past our range: skip the tail decode
-                            if hi <= lo:
-                                continue
-                            if (lo, hi) != (0, rb.num_rows):
-                                rb = rb.slice(lo, hi - lo)
-                        rb = _to_us_batch(rb)
-                        buf.append(rb)
-                        buf_rows += rb.num_rows
-                        buf_bytes += rb.nbytes
-                        if buf_rows >= chunk_rows or buf_bytes >= chunk_bytes:
-                            yield _encode_chunk_to_rows(
-                                pa.Table.from_batches(buf), part_id, chunk_id,
-                                overrides, acc, run_id, profile,
-                            )
-                            chunk_id += 1
-                            buf, buf_rows, buf_bytes = [], 0, 0
-                    if buf:
-                        yield _encode_chunk_to_rows(
-                            pa.Table.from_batches(buf), part_id, chunk_id,
-                            overrides, acc, run_id, profile,
-                        )
+                    yield from encode_part(
+                        split_batches(row), row["part_id"], chunk_rows,
+                        chunk_bytes, overrides, acc, run_id, profile,
+                    )
 
         # LPT bin-packing into ~4x-slots tasks (lpt_frame): document-length
         # skew puts up to ~5x byte spread across equal-row splits, and a
@@ -347,17 +209,7 @@ def encode_table_direct(
         splits_df, n_tasks = lpt_frame(spark, todo, [s[6] for s in todo],
                                        SPLITS_SCHEMA, per_core=4)
         blocks = splits_df.mapInArrow(encode_split, schema=BLOCKS_SCHEMA)
-        with metrics.stage("encode_write"):
-            before = {p for p, _ in Snapshot.resolve(out_dir).all_block_files}
-            # payload bytes are already entropy-coded: parquet-level snappy
-            # on top is a wasted (re)compression pass on write AND a
-            # decompression pass on every read (metadata columns are ~100 B)
-            blocks.write.mode("append").option(
-                "compression", "uncompressed"
-            ).parquet(f"{out_dir}/blocks")
-
-        with metrics.stage("manifest"):
-            _commit_metadata_driver_side(out_dir, before, run_id)
+        commit_blocks(blocks, out_dir, run_id, metrics)
 
     snap = metrics.snapshot()
     snap["run_id"] = run_id

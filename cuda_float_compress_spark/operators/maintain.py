@@ -6,26 +6,48 @@ other column's payloads — block rows of untouched columns are copied
 verbatim (at 100 TB, re-encoding one column must not cost a full decode of
 five). ``compact`` rewrites an encoded dir with a new chunk size (merging
 the small tail chunks accumulated by streaming ingest).
+
+Both write a NEW table: they raise ``ValueError`` when ``dst_dir``
+already holds ``blocks/``, ``manifest/``, ``lineage/`` or ``deletes/``
+(an old table's tombstones would delete rows of the new one). Both
+commit through ``encode.commit_blocks``, the write-and-commit of every
+table writer: blocks in uncompressed parquet, then manifest, then
+lineage, on the driver.
 """
 
 from __future__ import annotations
 
-import json
-import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.fs as pafs
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from cuda_float_compress_spark.codecs import core
 from cuda_float_compress_spark.operators import chunks as C
 from cuda_float_compress_spark.operators.encode import (
     _BLOCKS_ARROW,
     BLOCKS_SCHEMA,
-    build_manifest,
+    commit_blocks,
+    encode_part,
 )
+from cuda_float_compress_spark.snapshot import Snapshot
+
+
+def _new_table(dst_dir: str) -> Snapshot:
+    dst = Snapshot.resolve(dst_dir)
+    if dst.table_dirs:
+        raise ValueError(
+            f"{dst_dir} already holds {', '.join(dst.table_dirs)}: "
+            "compact and reencode_columns write a new table; pass a fresh "
+            "dst_dir"
+        )
+    return dst
+
+
+def _n_chunks(stats: pa.Table) -> int:
+    return stats.group_by(["part_id", "chunk_id"]).aggregate([]).num_rows
 
 
 def reencode_columns(
@@ -36,14 +58,17 @@ def reencode_columns(
     run_id: str | None = None,
 ) -> dict:
     """Re-encode only ``codec_overrides`` columns; copy every other
-    committed block row unchanged. Output dir gets fresh manifest/lineage
-    and the source's live tombstones: every ``(part, chunk, pos)`` address
-    is kept, so they delete the same rows."""
-    from cuda_float_compress_spark.operators.decode import committed_blocks
-    from cuda_float_compress_spark.snapshot import Snapshot
+    committed block row unchanged into the new table ``dst_dir``. The
+    source's live tombstones are copied first (every ``(part, chunk,
+    pos)`` address is kept, so they delete the same rows); the blocks are
+    written and committed after them, so a crash in between leaves
+    nothing committed. Returns the run id and the committed raw/encoded
+    byte totals."""
+    from cuda_float_compress_spark.operators.decode import _committed_blocks
 
     run_id = run_id or uuid.uuid4().hex[:12]
-    blocks = committed_blocks(spark, src_dir)
+    src, dst = Snapshot.resolve(src_dir), _new_table(dst_dir)
+    blocks = _committed_blocks(spark, src)
     touched = blocks.filter(F.col("col").isin(list(codec_overrides)))
     untouched = blocks.filter(~F.col("col").isin(list(codec_overrides)))
 
@@ -73,39 +98,19 @@ def reencode_columns(
     new_blocks = untouched.unionByName(reencoded).withColumn(
         "run_id", F.lit(run_id)
     )
-    # one task per part writes all its rows, so no chunk spans two files:
-    # the decode transport reads files that share a chunk as one group, and
-    # without this every file would share chunks, one group for the table
-    new_blocks.repartition("part_id").write.mode("overwrite").parquet(
-        f"{dst_dir}/blocks")
-
-    written = spark.read.parquet(f"{dst_dir}/blocks")
-    manifest = build_manifest(written, run_id)
-    manifest.write.mode("overwrite").parquet(f"{dst_dir}/manifest")
-    lineage = (
-        manifest.groupBy("part_id")
-        .agg(
-            F.max("n_chunks").alias("n_chunks"),
-            F.max("n_values").alias("n_rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("status", F.lit("done"))
-        .withColumn("finished_at", F.lit(time.time()))
-        .withColumn("salts_json", F.lit(json.dumps({})))
-    )
-    lineage.write.mode("overwrite").parquet(f"{dst_dir}/lineage")
-    src, dst = Snapshot.resolve(src_dir), Snapshot.resolve(dst_dir)
     for run in src.tombstone_runs:
         dst.fs.create_dir(f"{dst.root}/{run}")
         pafs.copy_files(f"{src.root}/{run}", f"{dst.root}/{run}",
                         source_filesystem=src.fs,
                         destination_filesystem=dst.fs)
-    agg = written.agg(
-        F.sum("raw_bytes").alias("raw"), F.sum("enc_bytes").alias("enc")
-    ).collect()[0]
-    return {"run_id": run_id, "raw_bytes": agg["raw"], "enc_bytes": agg["enc"]}
+    # one task per part writes all its rows, so no chunk spans two files:
+    # the decode transport reads files that share a chunk as one group, and
+    # without this every file would share chunks, one group for the table
+    manifest = commit_blocks(new_blocks.repartition("part_id"), dst_dir,
+                             run_id)
+    return {"run_id": run_id,
+            "raw_bytes": sum(r["raw_bytes"] for r in manifest),
+            "enc_bytes": sum(r["enc_bytes"] for r in manifest)}
 
 
 def repair_vacuum(out_dir: str) -> str | None:
@@ -240,10 +245,12 @@ def compact(
     run_id: str | None = None,
     sort_keys: list[str] | None = None,
 ) -> dict:
-    """Re-chunk an encoded dir: streaming ingest leaves many small tail
-    chunks (one per micro-batch per part); compaction decodes per part and
-    re-encodes at the target chunk size. Parts stay independent — the job is
-    a per-(part) applyInArrow with no cross-part shuffle of decoded data;
+    """Re-chunk an encoded dir into the new table ``dst_dir``: streaming
+    ingest leaves many small tail chunks (one per micro-batch per part);
+    compaction decodes per part and re-encodes with ``encode.encode_part``,
+    closing chunks at ``chunk_rows`` rows or ``chunk_bytes`` bytes,
+    whichever comes first. Parts stay independent — the job is a
+    per-(part) applyInArrow with no cross-part shuffle of decoded data;
     each part's chunks are rebuilt by ``decode.assemble_chunks``, the
     chunk assembler every reader uses.
 
@@ -260,74 +267,52 @@ def compact(
     ``rewrite_data_files(sort order)`` analog that restores pruning —
     run it when qualifying_chunks starts selecting most of the table.
 
-    Returns {'chunks_before', 'chunks_after', ...}."""
+    Returns {'chunks_before', 'chunks_after', ...}, counted from the
+    source's and the output's Snapshots."""
     from cuda_float_compress_spark.operators.decode import (
         _committed_blocks,
         assemble_chunks,
     )
     from cuda_float_compress_spark.operators.deletes import _tombstones
-    from cuda_float_compress_spark.operators.encode import _encode_chunk_to_rows
-    from cuda_float_compress_spark.snapshot import Snapshot
 
     run_id = run_id or uuid.uuid4().hex[:12]
     snap = Snapshot.resolve(src_dir)
+    _new_table(dst_dir)
     blocks = _committed_blocks(spark, snap)
-    chunks_before = blocks.select("part_id", "chunk_id").distinct().count()
+    stats = snap.chunk_stats
     cols = snap.columns
     ordered = [c for c, _ in cols]
     # preserve Bloom-filter coverage across compaction: rebuild filters for
-    # every column that carried one in the source (metadata-scale collect)
-    bloom_cols = frozenset(
-        r["col"]
-        for r in blocks.filter(F.col("bloom").isNotNull())
-        .select("col").distinct().collect()
-    ) if "bloom" in blocks.columns else frozenset()
+    # every column that carried one in the source
+    bloom_cols = frozenset(pc.unique(
+        stats.filter(pc.is_valid(stats["bloom"]))["col"]).to_pylist())
     tombs = _tombstones(spark, snap)
 
     def _recompact(key: tuple, tbl: pa.Table,
                    tomb_tbl: pa.Table | None) -> pa.Table:
         part_id = key[0].as_py() if hasattr(key[0], 'as_py') else int(key[0])
-        if tbl.num_rows == 0:  # tombstones for a part with no blocks
-            empty = pa.Table.from_batches([], schema=_BLOCKS_ARROW)
-            for name in ("payload", "bloom"):
-                i = empty.schema.get_field_index(name)
-                empty = empty.set_column(
-                    i, name, empty.column(name).cast(pa.binary())
-                )
-            return empty
-        # tombstoned positions per chunk (this part's addresses only —
-        # the cogroup routed them here)
-        deleted: dict[tuple, list] = {}
-        if tomb_tbl is not None:
-            for c_, p_ in zip(tomb_tbl.column("_chunk_id").to_pylist(),
-                              tomb_tbl.column("_pos").to_pylist()):
-                deleted.setdefault((part_id, c_), []).append(p_)
-        pieces = [arrays for _, _, _, arrays in
-                  assemble_chunks(tbl, cols, deleted=deleted)]
-        full = pa.table({c: pa.concat_arrays([a[i] for a in pieces])
-                         for i, c in enumerate(ordered)})
-        if sort_keys:
-            import pyarrow.compute as pc
-
-            full = full.take(pc.sort_indices(
-                full, sort_keys=[(k, "ascending") for k in sort_keys]
-            ))
-        # re-chunk at the target size and re-encode
         out_batches = []
-        off = 0
-        cid = 0
-        while off < full.num_rows:
-            piece = full.slice(off, chunk_rows)
-            out_batches.append(
-                _encode_chunk_to_rows(piece, part_id, cid, {}, None, run_id,
-                                      bloom_cols=bloom_cols)
-            )
-            off += piece.num_rows
-            cid += 1
-        if not out_batches:
-            result = pa.Table.from_batches([], schema=_BLOCKS_ARROW)
-        else:
-            result = pa.Table.from_batches(out_batches)
+        if tbl.num_rows:  # empty: tombstones for a part with no blocks
+            # tombstoned positions per chunk (this part's addresses only —
+            # the cogroup routed them here)
+            deleted: dict[tuple, list] = {}
+            if tomb_tbl is not None:
+                for c_, p_ in zip(tomb_tbl.column("_chunk_id").to_pylist(),
+                                  tomb_tbl.column("_pos").to_pylist()):
+                    deleted.setdefault((part_id, c_), []).append(p_)
+            pieces = [arrays for _, _, _, arrays in
+                      assemble_chunks(tbl, cols, deleted=deleted)]
+            full = pa.table({c: pa.concat_arrays([a[i] for a in pieces])
+                             for i, c in enumerate(ordered)})
+            if sort_keys:
+                full = full.take(pc.sort_indices(
+                    full, sort_keys=[(k, "ascending") for k in sort_keys]
+                ))
+            out_batches = list(encode_part(
+                full.to_batches(), part_id, chunk_rows, chunk_bytes, {},
+                run_id=run_id, bloom_cols=bloom_cols,
+            ))
+        result = pa.Table.from_batches(out_batches, schema=_BLOCKS_ARROW)
         # applyInArrow enforces binary (not large_binary) for BinaryType
         for name in ("payload", "bloom"):
             idx = result.schema.get_field_index(name)
@@ -351,27 +336,9 @@ def compact(
                 BLOCKS_SCHEMA,
             )
         )
-    new_blocks.write.mode("overwrite").parquet(f"{dst_dir}/blocks")
-    written = spark.read.parquet(f"{dst_dir}/blocks")
-    manifest = build_manifest(written, run_id)
-    manifest.write.mode("overwrite").parquet(f"{dst_dir}/manifest")
-    lineage = (
-        manifest.groupBy("part_id")
-        .agg(
-            F.max("n_chunks").alias("n_chunks"),
-            F.max("n_values").alias("n_rows"),
-            F.sum("raw_bytes").alias("raw_bytes"),
-            F.sum("enc_bytes").alias("enc_bytes"),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("status", F.lit("done"))
-        .withColumn("finished_at", F.lit(time.time()))
-        .withColumn("salts_json", F.lit(json.dumps({})))
-    )
-    lineage.write.mode("overwrite").parquet(f"{dst_dir}/lineage")
-    chunks_after = written.select("part_id", "chunk_id").distinct().count()
+    commit_blocks(new_blocks, dst_dir, run_id)
     return {
         "run_id": run_id,
-        "chunks_before": chunks_before,
-        "chunks_after": chunks_after,
+        "chunks_before": _n_chunks(stats),
+        "chunks_after": _n_chunks(Snapshot.resolve(dst_dir).chunk_stats),
     }

@@ -39,6 +39,9 @@ from here, so they cannot disagree:
   Spark rewrite (vacuum) may split a chunk's rows over two. A block row
   present twice (a block file copied by a task retry) raises
   ``ValueError``.
+* **Table dirs.** Which of ``blocks/``, ``manifest/``, ``lineage/`` and
+  ``deletes/`` exist; the writers of a new table (``compact``,
+  ``reencode_columns``) refuse a dir holding any of them.
 
 Paths go through ``pyarrow.fs.FileSystem.from_uri``; a bare path is
 local. ``file://`` and bare paths therefore take the same code, and a
@@ -212,6 +215,16 @@ class Snapshot:
                 pc.greater(rows["finished_at"], float(self.since)))
         return frozenset(zip(rows["part_id"].to_pylist(),
                              rows["run_id"].to_pylist()))
+
+    @functools.cached_property
+    def table_dirs(self) -> list[str]:
+        """Which of ``blocks``, ``manifest``, ``lineage`` and ``deletes``
+        the dir already holds; a writer of a new table refuses a dir
+        where this is not empty."""
+        names = ["blocks", "manifest", "lineage", "deletes"]
+        infos = self.fs.get_file_info([f"{self.root}/{n}" for n in names])
+        return [n for n, i in zip(names, infos)
+                if i.type != pafs.FileType.NotFound]
 
     @functools.cached_property
     def all_block_files(self) -> list[tuple[str, int]]:

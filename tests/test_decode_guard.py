@@ -1,10 +1,12 @@
-"""One decode path: chunks are rebuilt from block rows by
-``decode.assemble_chunks`` alone. Separate copies of that loop drifted
+"""One decode path and one chunk cutter: chunks are rebuilt from block
+rows by ``decode.assemble_chunks`` alone, and cut from rows by
+``encode.encode_part`` alone. Separate copies of those loops drifted
 apart and gave silent wrong answers (a chunk split across files decoded
-as two chunks; a copied block file read twice), so this test scans the
-package source and fails on a new one: a call of
-``chunks.decode_column_chunk`` outside the listed functions, or a
-``groupBy("part_id", "chunk_id")`` over block rows."""
+as two chunks; a copied block file read twice; a compaction that
+ignored ``chunk_bytes``), so these tests scan the package source and
+fail on a new one: a call of ``chunks.decode_column_chunk`` outside the
+listed functions, a ``groupBy("part_id", "chunk_id")`` over block rows,
+or a call of ``encode._encode_chunk_to_rows`` outside the cutter."""
 from __future__ import annotations
 
 import ast
@@ -57,4 +59,19 @@ def test_one_chunk_assembler():
                 stray.append(f"{where}: {ast.unparse(call)}")
     assert not stray, (
         "chunk decode outside decode.assemble_chunks:\n" + "\n".join(stray)
+    )
+
+
+def test_one_chunk_cutter():
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fns, call in _calls(ast.parse(path.read_text())):
+            if (_name(call.func) == "_encode_chunk_to_rows"
+                    and not (rel == "operators/encode.py"
+                             and "encode_part" in fns)):
+                stray.append(f"{rel}:{call.lineno} in "
+                             f"{'.'.join(fns) or '<module>'}")
+    assert not stray, (
+        "chunk cut outside encode.encode_part:\n" + "\n".join(stray)
     )

@@ -1036,10 +1036,10 @@ def test_cli_merge_and_sorted_compact(spark, tmp_path):
 
 
 def test_mixed_writer_metadata_schema_parity(spark, tmp_path):
-    """Direct encodes commit manifest/lineage driver-side with pyarrow;
-    Spark-path appends (e.g. merge_rows) write the same dirs via Spark.
-    Both writers' files must carry name/type-identical schemas and the
-    mixed dirs must stay readable and decodable."""
+    """A direct encode and a merge_rows append (a shuffle-path encode)
+    both commit manifest/lineage through encode.commit_blocks. Their
+    files in the mixed dirs must carry name/type-identical schemas, and
+    the dirs must stay readable and decodable."""
     import glob as _glob
 
     import pyarrow.parquet as _pq

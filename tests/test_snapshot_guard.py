@@ -15,9 +15,7 @@ PKG = pathlib.Path(cuda_float_compress_spark.__file__).parent
 
 # (module, function) that name lineage/ or deletes/ only to WRITE them
 WRITERS = {
-    ("operators/direct.py", "_commit_metadata_driver_side"),
-    ("operators/maintain.py", "reencode_columns"),
-    ("operators/maintain.py", "compact"),
+    ("operators/encode.py", "commit_blocks"),
     ("operators/merge.py", "merge_rows"),
     ("operators/deletes.py", "_commit_tombstones"),
 }
