@@ -419,13 +419,13 @@ def _dup_text_groups(spark, sf_dir):
 def _query_vec0(sf_dir: str) -> list:
     """The vec_id=0 query embedding, read driver-side with pyarrow: one
     row from a local parquet file does not need a Spark job (the old
-    filter+collect cost a full scan job per embedding query)."""
-    import pyarrow.compute as pc
+    filter+collect cost a full scan job per embedding query). The filter
+    is pushed into the read, so only that row is materialized."""
     import pyarrow.parquet as pq
 
-    t = pq.read_table(f"{sf_dir}/embeddings.parquet",
-                      columns=["vec_id", "embedding"])
-    return t.filter(pc.equal(t["vec_id"], 0))["embedding"][0].as_py()
+    t = pq.read_table(f"{sf_dir}/embeddings.parquet", columns=["embedding"],
+                      filters=[("vec_id", "==", 0)])
+    return t["embedding"][0].as_py()
 
 
 def _embedding_topk(spark, sf_dir):

@@ -9,7 +9,7 @@ or downstream service can pull a small extract without paying a JVM.
 
 The table's metadata comes from ``snapshot.Snapshot``, the same object
 the Spark decode transport reads: the committed ``(part_id, run_id)``
-pairs under ``as_of``, the union schema, the live tombstone runs, the
+pairs under ``as_of``, the union schema, the deleted row positions, the
 block file groups and the filesystem (bare paths and ``file://``
 alike). Chunks are pruned by ``decode.prune`` over
 ``Snapshot.chunk_stats`` and rebuilt by ``decode.assemble_chunks``, the
@@ -24,7 +24,6 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.parquet as pq
 
 from cuda_float_compress_spark.operators.decode import (
     _STD_ARROW,
@@ -33,7 +32,6 @@ from cuda_float_compress_spark.operators.decode import (
     prune,
     read_group,
 )
-from cuda_float_compress_spark.operators.deletes import ADDRESS_COLS
 from cuda_float_compress_spark.snapshot import Snapshot
 
 __all__ = ["read_table_local"]
@@ -84,12 +82,7 @@ def read_table_local(
         want_set = set(columns) | {c for c, _, _ in (predicates or [])}
         cols = [(c, p) for c, p in cols if c in want_set]
     ptypes = dict(cols)
-    deleted: dict[tuple, list[int]] = {}
-    for run in (snap.tombstone_runs if apply_deletes else []):
-        t = pq.read_table(f"{snap.root}/{run}", columns=list(ADDRESS_COLS),
-                          filesystem=snap.fs)
-        for p_, c_, pos in zip(*(t[c].to_pylist() for c in ADDRESS_COLS)):
-            deleted.setdefault((p_, c_), []).append(pos)
+    deleted = snap.deleted_positions if apply_deletes else None
 
     # the zone maps / Bloom filters prune chunks; everything is ALSO
     # exact-filtered after decode, so pruning is purely an optimization

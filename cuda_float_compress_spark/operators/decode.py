@@ -2,10 +2,11 @@
 
 One chunk assembler, :func:`assemble_chunks`, rebuilds chunks from block
 rows for every reader: the Spark transport (:func:`decode_table`), the
-Spark-free ``localio.read_table_local`` and ``maintain.compact``. It keeps
-the rows of committed ``(part_id, run_id)`` pairs and of kept chunks,
-refuses a ``(part_id, chunk_id, col)`` seen twice, null-fills columns a
-chunk predates and casts to the standard Arrow types.
+Spark-free ``localio.read_table_local`` and ``maintain.compact``, which
+runs on the same transport. It keeps the rows of committed ``(part_id,
+run_id)`` pairs and of kept chunks, refuses a ``(part_id, chunk_id,
+col)`` seen twice, null-fills columns a chunk predates and casts to the
+standard Arrow types.
 
 The Spark transport reads block files inside the Python workers. Chunk
 pruning (:func:`prune`) runs on the driver over ``Snapshot.chunk_stats``;
@@ -84,38 +85,22 @@ def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def _committed_blocks(spark: SparkSession, snap: Snapshot) -> DataFrame:
+def committed_blocks(
+    spark: SparkSession, out_dir: str, as_of: float | None = None,
+    since: float | None = None,
+) -> DataFrame:
+    """Block rows, as a Spark DataFrame, whose ``(part_id, run_id)`` is
+    committed in the ``as_of``/``since`` window of ``snapshot.Snapshot``
+    (a broadcast semi-join on its pairs; a dir without lineage is trusted
+    as-is). A public view for tools and probes: the engine's readers and
+    writers read block files through the Snapshot's file groups."""
+    snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
     blocks = blocks_of(spark, snap.out_dir)
     if snap.pairs is None:
         return blocks
     lin = spark.createDataFrame(sorted(snap.pairs),
                                 "part_id int, run_id string")
     return blocks.join(F.broadcast(lin), ["part_id", "run_id"], "left_semi")
-
-
-def committed_blocks(
-    spark: SparkSession, out_dir: str, as_of: float | None = None,
-    since: float | None = None,
-) -> DataFrame:
-    """Blocks whose (part_id, run_id) is committed ('done') in lineage.
-    Stale partials from a crashed run — blocks appended, lineage never
-    written — are filtered out here (metadata-scale broadcast semi-join).
-    Dirs without lineage (externally assembled blocks) are trusted as-is.
-
-    ``as_of`` (epoch seconds): TIME TRAVEL for the append-only table — trust
-    only runs committed at or before that instant, reproducing the table
-    exactly as a reader at that time saw it (Iceberg-snapshot semantics on
-    the lineage metadata).
-
-    ``since`` (epoch seconds, exclusive): the INCREMENTAL complement —
-    only runs committed strictly after that instant. A consumer that
-    remembers the last lineage timestamp it processed reads exactly the
-    appended-since-then slice (CDC-style over the append-only table);
-    ``since=t1, as_of=t2`` brackets a window. See ``snapshot.Snapshot``
-    for the trust rules."""
-    return _committed_blocks(
-        spark, Snapshot.resolve(out_dir, as_of=as_of, since=since)
-    )
 
 
 _TS_PTYPES = ("timestamp_us", "timestamp_ntz")
@@ -377,6 +362,15 @@ def kept_groups(snap: Snapshot, keep: set | None) -> list[list[tuple]]:
             if keep is None or not keys.isdisjoint(keep)]
 
 
+def group_frame(spark: SparkSession, groups: list[list[tuple]]) -> DataFrame:
+    """One ``files array<string>`` row per file group (``[(path, size)]``
+    lists), LPT-packed by bytes into one task per core: the task plan of
+    the decode transport and of the maintenance jobs that run on it."""
+    return lpt_frame(spark, [([p for p, _ in files],) for files in groups],
+                     [sum(size for _, size in files) for files in groups],
+                     "files array<string>", per_core=1)[0]
+
+
 def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
                     pairs: frozenset | None = None, keep: set | None = None,
                     deleted: dict | None = None, verify: bool = True):
@@ -455,7 +449,7 @@ def decode_table(
     conjunction's chunks and the exact row filter is the matching OR.
     Composes with ``predicates`` as a further AND.
     ``as_of`` / ``since`` (epoch seconds): lineage-timestamp snapshot and
-    incremental windows (see committed_blocks).
+    incremental windows (see ``snapshot.Snapshot``).
     ``parts``: decode only these part ids (incremental consumers: the
     part_id is the unit of progress). ``keep_part_id``: emit ``part_id``
     as the first column.
@@ -509,11 +503,7 @@ def decode_table(
 
     # the workers read block files directly with pyarrow, so the lineage
     # trust filter and the kept keys ship as closure sets (metadata-scale)
-    groups = kept_groups(snap, keep)
-    groups_df, _ = lpt_frame(
-        spark, [([p for p, _ in files],) for files in groups],
-        [sum(size for _, size in files) for files in groups],
-        "files array<string>", per_core=1)
+    groups_df = group_frame(spark, kept_groups(snap, keep))
     fs, pairs = snap.fs, snap.pairs
 
     def decode_groups(batches):

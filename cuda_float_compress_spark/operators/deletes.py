@@ -19,7 +19,7 @@ Mechanics:
 * The Spark decode transport (``decode.decode_table``) anti-joins
   committed tombstones on the address key; AQE broadcasts the tombstone
   side when it is small (the common case). ``read_table_local`` drops
-  them per chunk in the chunk assembler.
+  them per chunk in the chunk assembler (``Snapshot.deleted_positions``).
 * :func:`~cuda_float_compress_spark.operators.maintain.compact`
   MATERIALIZES tombstones — deleted rows are physically dropped and the
   compacted table starts with an empty delete set.
@@ -37,12 +37,11 @@ import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cuda_float_compress_spark.snapshot import Snapshot
+from cuda_float_compress_spark.snapshot import ADDRESS_COLS, Snapshot
 
 __all__ = ["delete_rows", "delete_rows_by_keys", "tombstones_df",
            "ADDRESS_COLS"]
 
-ADDRESS_COLS = ("_part_id", "_chunk_id", "_pos")
 TOMBSTONE_SCHEMA = "_part_id int, _chunk_id bigint, _pos bigint"
 
 

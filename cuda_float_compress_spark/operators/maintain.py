@@ -1,11 +1,23 @@
-"""Maintenance jobs over an encoded table: selective re-encode and
-compaction.
+"""Maintenance jobs over an encoded table: garbage collection, selective
+re-encode and compaction. Each takes its facts from ``snapshot.Snapshot``;
+none reads ``blocks/`` through Spark.
+
+``vacuum`` is file-level garbage collection: it deletes the block files
+that hold no committed ``(part_id, run_id)`` pair (the leftovers of
+crashed or retried runs) and never rewrites a live file, so it runs no
+Spark job and can never split or duplicate a chunk. A file mixing
+committed and stale rows (only a table rewritten by an older vacuum
+holds one) is kept and its stale rows reported; ``compact`` reclaims
+them.
 
 ``reencode_columns`` changes the codec of chosen columns WITHOUT touching any
 other column's payloads — block rows of untouched columns are copied
 verbatim (at 100 TB, re-encoding one column must not cost a full decode of
 five). ``compact`` rewrites an encoded dir with a new chunk size (merging
-the small tail chunks accumulated by streaming ingest).
+the small tail chunks accumulated by streaming ingest). Both read the
+Snapshot's file groups on the decode transport (``decode.group_frame`` ->
+``mapInArrow``, each task reading its groups with pyarrow), so block rows
+are never shuffled.
 
 Both write a NEW table: they raise ``ValueError`` when ``dst_dir``
 already holds ``blocks/``, ``manifest/``, ``lineage/`` or ``deletes/``
@@ -17,22 +29,34 @@ lineage, on the driver.
 
 from __future__ import annotations
 
+import itertools
 import uuid
 
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.operators import chunks as C
+from cuda_float_compress_spark.operators.decode import (
+    assemble_chunks,
+    group_frame,
+    read_group,
+)
 from cuda_float_compress_spark.operators.encode import (
     _BLOCKS_ARROW,
     BLOCKS_SCHEMA,
     commit_blocks,
     encode_part,
 )
-from cuda_float_compress_spark.snapshot import Snapshot
+from cuda_float_compress_spark.snapshot import (
+    Snapshot,
+    _exists,
+    _open,
+    conform,
+)
 
 
 def _new_table(dst_dir: str) -> Snapshot:
@@ -50,6 +74,13 @@ def _n_chunks(stats: pa.Table) -> int:
     return stats.group_by(["part_id", "chunk_id"]).aggregate([]).num_rows
 
 
+def _block_rows(fs, files: list[str]) -> pa.Table:
+    """Every column of a file group's block rows, in the writers' layout."""
+    return pa.concat_tables([
+        conform(pq.ParquetFile(f, filesystem=fs).read(use_threads=False),
+                _BLOCKS_ARROW) for f in files])
+
+
 def reencode_columns(
     spark: SparkSession,
     src_dir: str,
@@ -64,164 +95,106 @@ def reencode_columns(
     written and committed after them, so a crash in between leaves
     nothing committed. Returns the run id and the committed raw/encoded
     byte totals."""
-    from cuda_float_compress_spark.operators.decode import _committed_blocks
-
     run_id = run_id or uuid.uuid4().hex[:12]
     src, dst = Snapshot.resolve(src_dir), _new_table(dst_dir)
-    blocks = _committed_blocks(spark, src)
-    touched = blocks.filter(F.col("col").isin(list(codec_overrides)))
-    untouched = blocks.filter(~F.col("col").isin(list(codec_overrides)))
+    fs, pairs = src.fs, src.pairs
+    touched = pa.array(list(codec_overrides), pa.string())
 
-    def transform(batches):
+    def reencode(batches):
         for batch in batches:
-            rows = batch.to_pylist()
-            out = {name: [] for name in _BLOCKS_ARROW.names}
-            for r in rows:
-                arr = C.decode_column_chunk(
-                    r["payload"], r["codec"], r["params"], r["n"],
-                    r["n_nulls"], r["ptype"],
-                )
-                codec, payload, params_json, n, n_nulls = C.encode_column_chunk(
-                    arr, r["ptype"], codec_overrides[r["col"]]
-                )
-                for k in _BLOCKS_ARROW.names:
-                    out[k].append(r[k])
-                out["codec"][-1] = codec
-                out["params"][-1] = params_json
-                out["enc_bytes"][-1] = len(payload)
-                out["payload"][-1] = payload
-            yield pa.RecordBatch.from_pydict(out, schema=_BLOCKS_ARROW)
+            for files in batch.column("files").to_pylist():
+                rows = _block_rows(fs, files)
+                if pairs is not None:
+                    rows = rows.filter(pa.array([k in pairs for k in zip(
+                        rows["part_id"].to_pylist(),
+                        rows["run_id"].to_pylist())]))
+                # stamp the rewrite's run_id on every row (copied AND
+                # re-encoded): dst's lineage commits exactly these blocks
+                rows = rows.set_column(
+                    rows.schema.get_field_index("run_id"), "run_id",
+                    pa.repeat(pa.scalar(run_id), rows.num_rows))
+                hit = pc.is_in(rows["col"], value_set=touched)
+                yield from rows.filter(pc.invert(hit)).to_batches()
+                out = rows.filter(hit).to_pylist()
+                for r in out:
+                    arr = C.decode_column_chunk(
+                        r["payload"], r["codec"], r["params"], r["n"],
+                        r["n_nulls"], r["ptype"],
+                    )
+                    codec, payload, params, _, _ = C.encode_column_chunk(
+                        arr, r["ptype"], codec_overrides[r["col"]])
+                    r.update(codec=codec, params=params, payload=payload,
+                             enc_bytes=len(payload))
+                if out:
+                    yield pa.RecordBatch.from_pylist(out, schema=_BLOCKS_ARROW)
 
-    reencoded = touched.mapInArrow(transform, schema=BLOCKS_SCHEMA)
-    # stamp the rewrite's run_id on every row (copied AND re-encoded) so the
-    # dst dir's lineage commits exactly the blocks it contains
-    new_blocks = untouched.unionByName(reencoded).withColumn(
-        "run_id", F.lit(run_id)
-    )
     for run in src.tombstone_runs:
         dst.fs.create_dir(f"{dst.root}/{run}")
         pafs.copy_files(f"{src.root}/{run}", f"{dst.root}/{run}",
                         source_filesystem=src.fs,
                         destination_filesystem=dst.fs)
-    # one task per part writes all its rows, so no chunk spans two files:
-    # the decode transport reads files that share a chunk as one group, and
-    # without this every file would share chunks, one group for the table
-    manifest = commit_blocks(new_blocks.repartition("part_id"), dst_dir,
-                             run_id)
+    # a file group goes whole to one task, which writes one file, so no
+    # chunk spans two output files
+    manifest = commit_blocks(
+        group_frame(spark, [files for files, _ in src.file_groups])
+        .mapInArrow(reencode, schema=BLOCKS_SCHEMA), dst_dir, run_id)
     return {"run_id": run_id,
             "raw_bytes": sum(r["raw_bytes"] for r in manifest),
             "enc_bytes": sum(r["enc_bytes"] for r in manifest)}
 
 
-def repair_vacuum(out_dir: str) -> str | None:
-    """Recover from a crash inside vacuum's directory swap. The swap is two
-    os.rename calls — NOT atomic — so a crash can leave the table with no
-    ``blocks`` dir. The leftover ``blocks_vacuum_old`` dir marks exactly that
-    window; this repairs it:
+def _finish_legacy_swap(fs, root: str) -> None:
+    """Finish or roll back the directory swap of an older vacuum, which
+    rewrote ``blocks/`` into ``blocks_vacuum_tmp`` and swapped the two
+    with two non-atomic renames. A crash left ``blocks_vacuum_old``:
 
     - ``blocks`` present again  -> the swap finished; drop the old copy.
     - ``blocks`` missing, tmp rewrite complete (_SUCCESS) -> finish the swap.
-    - ``blocks`` missing, tmp incomplete -> roll the old copy back.
-
-    Called automatically at the start of every vacuum and by decode when the
-    blocks dir is missing. Returns the action taken (or None)."""
-    import os
-    import shutil
-
-    blocks_dir = f"{out_dir}/blocks"
-    tmp = f"{out_dir}/blocks_vacuum_tmp"
-    old = f"{out_dir}/blocks_vacuum_old"
-    if not os.path.exists(old):
-        return None
-    if os.path.exists(blocks_dir):
-        shutil.rmtree(old, ignore_errors=True)
-        return "dropped_old_copy"
-    # Two readers can race these renames (repair runs from the decode read
-    # path): whoever loses the rename just observes the winner's result —
-    # any OSError with blocks_dir present afterwards means repaired-by-other.
-    if os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        try:
-            os.rename(tmp, blocks_dir)
-        except OSError:
-            if not os.path.exists(blocks_dir):
-                raise
-        shutil.rmtree(old, ignore_errors=True)
-        return "completed_swap"
-    try:
-        os.rename(old, blocks_dir)
-    except OSError:
-        if not os.path.exists(blocks_dir):
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-        return "completed_swap"  # another repairer won the race
-    shutil.rmtree(tmp, ignore_errors=True)
-    return "rolled_back"
+    - ``blocks`` missing, tmp incomplete -> roll the old copy back."""
+    blocks, tmp, old = (f"{root}/{d}" for d in (
+        "blocks", "blocks_vacuum_tmp", "blocks_vacuum_old"))
+    if not _exists(fs, blocks) and _exists(fs, old):
+        fs.move(tmp if _exists(fs, f"{tmp}/_SUCCESS") else old, blocks)
+    for leftover in (old, tmp):
+        if _exists(fs, leftover):
+            fs.delete_dir(leftover)
 
 
 def vacuum(spark: SparkSession, out_dir: str) -> dict:
-    """Garbage-collect stale block rows: crashed/retried runs append blocks
-    whose (part_id, run_id) never commits to lineage — decode already
-    ignores them (committed_blocks), but they occupy storage forever.
-    Rewrites the blocks dir keeping only committed rows, then swaps
-    directories (readers of the old dir finish against the old files; the
-    Iceberg-style answer is the same swap done via metadata).
+    """Garbage-collect block files: crashed or retried runs append block
+    files whose ``(part_id, run_id)`` never commits to lineage. Every
+    reader already ignores them, but they occupy storage forever. Vacuum
+    deletes the files that hold no committed pair (``Snapshot.
+    all_block_files`` minus ``Snapshot.block_files``) and never rewrites
+    a live file, so live chunks stay where they are and no Spark job
+    runs. On entry it finishes or rolls back the interrupted directory
+    swap of an older vacuum (:func:`_finish_legacy_swap`).
 
-    The swap itself is two os.rename calls and therefore not atomic: a crash
-    between them leaves ``blocks_vacuum_old`` behind, which
-    :func:`repair_vacuum` (run on entry here and by decode) detects and
-    repairs in either direction. Returns {'rows_before', 'rows_after',
-    'bytes_reclaimed'}."""
-    import os
-    import shutil
+    Returns ``rows_before`` and ``rows_after`` (block rows, from the
+    parquet footers), ``bytes_reclaimed`` (the deleted files' sizes) and
+    ``stale_rows``: uncommitted rows left in files that also hold
+    committed ones. Only a table rewritten by an older vacuum has such a
+    file; ``compact`` drops those rows.
 
-    from cuda_float_compress_spark.operators.decode import committed_blocks
-
-    repair_vacuum(out_dir)
-    blocks_dir = f"{out_dir}/blocks"
-    before = spark.read.parquet(blocks_dir)
-    rows_before = before.count()
-    bytes_before = before.agg(F.sum("enc_bytes")).collect()[0][0] or 0
-    kept = committed_blocks(spark, out_dir)
-    rows_after = kept.count()
-    bytes_after = kept.agg(F.sum("enc_bytes")).collect()[0][0] or 0
-    if rows_after == rows_before:
-        return {"rows_before": rows_before, "rows_after": rows_after,
-                "bytes_reclaimed": 0}
-    tmp = f"{out_dir}/blocks_vacuum_tmp"
-    old = f"{out_dir}/blocks_vacuum_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    kept.write.mode("overwrite").parquet(tmp)
-    # sentinel: proves OUR rewrite is the dir that ends up at blocks/. A
-    # concurrent repair_vacuum can win the race in either direction —
-    # completing the swap (tmp -> blocks: sentinel present) or rolling it
-    # BACK when _SUCCESS markers are disabled (old -> blocks: sentinel
-    # absent, vacuum did NOT take effect). Underscore prefix = ignored by
-    # parquet readers, like _SUCCESS.
-    sentinel = f"_vacuum_{uuid.uuid4().hex[:12]}"
-    with open(os.path.join(tmp, sentinel), "w"):
-        pass
-    os.rename(blocks_dir, old)
-    try:
-        os.rename(tmp, blocks_dir)
-    except OSError:
-        if not os.path.isdir(blocks_dir):
-            raise
-        if not os.path.exists(os.path.join(blocks_dir, sentinel)):
-            # the racing repairer ROLLED BACK (tmp lacked _SUCCESS in its
-            # view): the table still holds the un-vacuumed blocks, so the
-            # stats this call computed describe a vacuum that never landed
-            raise RuntimeError(
-                "vacuum swap was rolled back by a concurrent repair_vacuum "
-                "(blocks dir restored from the pre-vacuum copy); re-run "
-                f"vacuum on {out_dir}"
-            )
-    os.remove(os.path.join(blocks_dir, sentinel))
-    shutil.rmtree(old, ignore_errors=True)
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "bytes_reclaimed": int(bytes_before - bytes_after),
-    }
+    Do not run it concurrently with a writer of the same table: a run
+    whose blocks are written but whose lineage is not yet committed
+    looks exactly like a crashed one, and its files would be deleted."""
+    fs, root = _open(out_dir)
+    _finish_legacy_swap(fs, root)
+    snap = Snapshot.resolve(out_dir)
+    live = {path for path, _ in snap.block_files}
+    rows_before = rows_after = reclaimed = 0
+    for path, size in snap.all_block_files:
+        n = pq.read_metadata(path, filesystem=snap.fs).num_rows
+        rows_before += n
+        if path in live:
+            rows_after += n
+        else:
+            snap.fs.delete_file(path)
+            reclaimed += size
+    return {"rows_before": rows_before, "rows_after": rows_after,
+            "bytes_reclaimed": reclaimed,
+            "stale_rows": rows_after - snap.chunk_stats.num_rows}
 
 
 def codec_histogram(spark: SparkSession, out_dir: str):
@@ -249,15 +222,17 @@ def compact(
     ingest leaves many small tail chunks (one per micro-batch per part);
     compaction decodes per part and re-encodes with ``encode.encode_part``,
     closing chunks at ``chunk_rows`` rows or ``chunk_bytes`` bytes,
-    whichever comes first. Parts stay independent — the job is a
-    per-(part) applyInArrow with no cross-part shuffle of decoded data;
-    each part's chunks are rebuilt by ``decode.assemble_chunks``, the
-    chunk assembler every reader uses.
+    whichever comes first. It runs on the decode transport: the
+    Snapshot's ``part_groups`` (file groups united so that each part is
+    re-chunked by one task) are LPT-packed into one task per core, each
+    task reads its groups with pyarrow and rebuilds their chunks with
+    ``decode.assemble_chunks``. Block rows are never shuffled, and the
+    block write is the only Spark job.
 
-    Merge-on-read tombstones (operators/deletes) are MATERIALIZED: deleted
-    rows are physically dropped (blocks cogrouped with tombstones per
-    part — addresses ship to exactly the task that decodes their chunks)
-    and the compacted table starts with an empty delete set.
+    Merge-on-read tombstones (operators/deletes) are MATERIALIZED: the
+    assembler drops the ``Snapshot.deleted_positions`` of each chunk, so
+    deleted rows are physically gone and the compacted table starts with
+    an empty delete set. Uncommitted rows are dropped too.
 
     ``sort_keys``: re-CLUSTER while compacting — each part's rows are
     sorted (one Arrow sort per part, no cross-part shuffle) before
@@ -265,20 +240,13 @@ def compact(
     part's chunks. Streaming ingest and merge/upsert appends interleave
     key ranges run by run; this is the Iceberg
     ``rewrite_data_files(sort order)`` analog that restores pruning —
-    run it when qualifying_chunks starts selecting most of the table.
+    run it when pruning starts keeping most of the table.
 
     Returns {'chunks_before', 'chunks_after', ...}, counted from the
     source's and the output's Snapshots."""
-    from cuda_float_compress_spark.operators.decode import (
-        _committed_blocks,
-        assemble_chunks,
-    )
-    from cuda_float_compress_spark.operators.deletes import _tombstones
-
     run_id = run_id or uuid.uuid4().hex[:12]
     snap = Snapshot.resolve(src_dir)
     _new_table(dst_dir)
-    blocks = _committed_blocks(spark, snap)
     stats = snap.chunk_stats
     cols = snap.columns
     ordered = [c for c, _ in cols]
@@ -286,57 +254,31 @@ def compact(
     # every column that carried one in the source
     bloom_cols = frozenset(pc.unique(
         stats.filter(pc.is_valid(stats["bloom"]))["col"]).to_pylist())
-    tombs = _tombstones(spark, snap)
+    fs, pairs, deleted = snap.fs, snap.pairs, snap.deleted_positions
 
-    def _recompact(key: tuple, tbl: pa.Table,
-                   tomb_tbl: pa.Table | None) -> pa.Table:
-        part_id = key[0].as_py() if hasattr(key[0], 'as_py') else int(key[0])
-        out_batches = []
-        if tbl.num_rows:  # empty: tombstones for a part with no blocks
-            # tombstoned positions per chunk (this part's addresses only —
-            # the cogroup routed them here)
-            deleted: dict[tuple, list] = {}
-            if tomb_tbl is not None:
-                for c_, p_ in zip(tomb_tbl.column("_chunk_id").to_pylist(),
-                                  tomb_tbl.column("_pos").to_pylist()):
-                    deleted.setdefault((part_id, c_), []).append(p_)
-            pieces = [arrays for _, _, _, arrays in
-                      assemble_chunks(tbl, cols, deleted=deleted)]
-            full = pa.table({c: pa.concat_arrays([a[i] for a in pieces])
-                             for i, c in enumerate(ordered)})
-            if sort_keys:
-                full = full.take(pc.sort_indices(
-                    full, sort_keys=[(k, "ascending") for k in sort_keys]
-                ))
-            out_batches = list(encode_part(
-                full.to_batches(), part_id, chunk_rows, chunk_bytes, {},
-                run_id=run_id, bloom_cols=bloom_cols,
-            ))
-        result = pa.Table.from_batches(out_batches, schema=_BLOCKS_ARROW)
-        # applyInArrow enforces binary (not large_binary) for BinaryType
-        for name in ("payload", "bloom"):
-            idx = result.schema.get_field_index(name)
-            result = result.set_column(
-                idx, name, result.column(name).cast(pa.binary())
-            )
-        return result
+    def recompact(batches):
+        for batch in batches:
+            for files in batch.column("files").to_pylist():
+                # chunks arrive in (part_id, chunk_id) order, so one part's
+                # rows are decoded at a time
+                for part_id, part in itertools.groupby(
+                        assemble_chunks(read_group(fs, files), cols, pairs,
+                                        deleted=deleted),
+                        key=lambda chunk: chunk[0]):
+                    pieces = [arrays for *_, arrays in part]
+                    full = pa.table({
+                        c: pa.concat_arrays([a[i] for a in pieces])
+                        for i, c in enumerate(ordered)})
+                    if sort_keys:
+                        full = full.take(pc.sort_indices(full, sort_keys=[
+                            (k, "ascending") for k in sort_keys]))
+                    yield from encode_part(
+                        full.to_batches(), part_id, chunk_rows, chunk_bytes,
+                        {}, run_id=run_id, bloom_cols=bloom_cols)
 
-    # applyInArrow validates the callable's arity: the grouped form takes
-    # (key, table), the cogrouped form (key, left, right) — wrap either way
-    if tombs is None:
-        new_blocks = blocks.groupBy("part_id").applyInArrow(
-            lambda key, tbl: _recompact(key, tbl, None), BLOCKS_SCHEMA
-        )
-    else:
-        new_blocks = (
-            blocks.groupBy("part_id")
-            .cogroup(tombs.groupBy("_part_id"))
-            .applyInArrow(
-                lambda key, tbl, tomb: _recompact(key, tbl, tomb),
-                BLOCKS_SCHEMA,
-            )
-        )
-    commit_blocks(new_blocks, dst_dir, run_id)
+    commit_blocks(
+        group_frame(spark, [files for files, _ in snap.part_groups])
+        .mapInArrow(recompact, schema=BLOCKS_SCHEMA), dst_dir, run_id)
     return {
         "run_id": run_id,
         "chunks_before": _n_chunks(stats),

@@ -35,10 +35,15 @@ from here, so they cannot disagree:
   O(chunks x columns) rows, each tagged with the block file it came from.
 * **File groups.** The block files split into groups that share no
   chunk, so a reader that decodes one group at a time sees every block
-  row of its chunks. The engine's writers give each chunk one file; a
-  Spark rewrite (vacuum) may split a chunk's rows over two. A block row
-  present twice (a block file copied by a task retry) raises
-  ``ValueError``.
+  row of its chunks; :attr:`Snapshot.part_groups` unites them further
+  so that no part spans two (the unit ``compact`` re-chunks). The
+  engine's writers give each chunk one file. Only a legacy table, whose
+  ``blocks/`` an older vacuum rewrote through a plain Spark read, may
+  hold a chunk split over two. A block row present twice (a block file
+  copied by a task retry) raises ``ValueError``.
+* **Deleted positions.** The live tombstones as ``(part_id, chunk_id)``
+  -> row positions, read with pyarrow: the form the chunk assembler
+  drops them in.
 * **Table dirs.** Which of ``blocks/``, ``manifest/``, ``lineage/`` and
   ``deletes/`` exist; the writers of a new table (``compact``,
   ``reencode_columns``) refuse a dir holding any of them.
@@ -50,7 +55,9 @@ raises here instead of reading as an empty table.
 
 Only ``lineage/`` is read eagerly; everything else is derived on first
 use, so resume and merge, which need only the commit log, never touch
-the block files.
+the block files. The Snapshot never writes: a table left without
+``blocks/`` by a crash inside an older vacuum's directory swap raises
+``ValueError`` until ``maintain.vacuum`` finishes or rolls back the swap.
 """
 
 from __future__ import annotations
@@ -64,7 +71,7 @@ import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 
-__all__ = ["Snapshot", "LINEAGE_SCHEMA"]
+__all__ = ["Snapshot", "LINEAGE_SCHEMA", "ADDRESS_COLS"]
 
 LINEAGE_SCHEMA = pa.schema([
     ("part_id", pa.int32()),
@@ -97,6 +104,8 @@ _SCAN = pa.schema([
 _STATS_COLS = ["part_id", "chunk_id", "col", "ptype", "n", "n_nulls",
                "vmin", "vmax", "vsum", "bloom"]
 _CHUNK_KEY = ["part_id", "chunk_id"]
+#: a row's stable address, the columns of a tombstone row
+ADDRESS_COLS = ("_part_id", "_chunk_id", "_pos")
 
 
 def _open(out_dir: str) -> tuple[pafs.FileSystem, str]:
@@ -115,6 +124,18 @@ def _exists(fs: pafs.FileSystem, path: str) -> bool:
 
 def _listdir(fs: pafs.FileSystem, path: str) -> list[pafs.FileInfo]:
     return fs.get_file_info(pafs.FileSelector(path, allow_not_found=True))
+
+
+def conform(got: pa.Table, schema: pa.Schema) -> pa.Table:
+    """``got``, block rows as some engine version wrote them, in
+    ``schema``: columns cast, and those an older layout lacks (vsum,
+    bloom) read as null."""
+    have = got.column_names
+    return pa.table({
+        fld.name: (got[fld.name].cast(fld.type) if fld.name in have
+                   else pa.nulls(got.num_rows, fld.type))
+        for fld in schema
+    })
 
 
 def _union_schema(rows) -> list[tuple[str, str]]:
@@ -156,12 +177,12 @@ class Snapshot:
         if not _exists(self.fs, f"{self.root}/blocks") and _exists(
             self.fs, f"{self.root}/blocks_vacuum_old"
         ):
-            # a crash inside vacuum's two-rename swap left no blocks dir
-            from cuda_float_compress_spark.operators.maintain import (
-                repair_vacuum,
+            # reading it as an empty table would be a silent wrong answer
+            raise ValueError(
+                f"{out_dir} has no blocks/ but a blocks_vacuum_old/: an "
+                "interrupted vacuum of an older engine version; run vacuum "
+                "on it to finish or roll back the swap"
             )
-
-            repair_vacuum(self.root)
         lin = f"{self.root}/lineage"
         #: every lineage row as written (None: the dir has no lineage)
         self.lineage: pa.Table | None = (
@@ -195,7 +216,7 @@ class Snapshot:
                 raise ValueError(
                     f"part {p} in {self.out_dir} was committed by 2 "
                     "different runs; the table is ambiguous (two encodes "
-                    "appended to one dir?); vacuum/rebuild it"
+                    "appended to one dir?); rebuild it"
                 )
         return pairs
 
@@ -248,15 +269,10 @@ class Snapshot:
         stats: list[pa.Table] = []
         for path, size in self.all_block_files:
             f = pq.ParquetFile(path, filesystem=self.fs)
-            have = set(f.schema_arrow.names)
+            have = f.schema_arrow.names
             got = f.read(columns=[c for c in _SCAN.names if c in have],
                          use_threads=False)
-            # layouts older than vsum/bloom read those stats as null
-            meta = pa.table({
-                fld.name: (got[fld.name].cast(fld.type) if fld.name in have
-                           else pa.nulls(got.num_rows, fld.type))
-                for fld in _SCAN
-            })
+            meta = conform(got, _SCAN)
             distinct = meta.select(_SCHEMA_COLS).group_by(
                 _SCHEMA_COLS).aggregate([])
             seen, win = set(), set()
@@ -303,13 +319,35 @@ class Snapshot:
         (``operators.decode.prune``)."""
         return self._block_scan[2]
 
+    def _united(self, key: list[str]) -> list[tuple[list, frozenset]]:
+        # block_files united (union-find) wherever two files hold rows of
+        # one ``key`` tuple, with the key tuples each group holds
+        parent = list(range(len(self.block_files)))
+
+        def root(i: int) -> int:
+            while parent[i] != i:
+                parent[i] = parent[parent[i]]
+                i = parent[i]
+            return i
+
+        first: dict = {}
+        places = self.chunk_stats.group_by(key + ["file"]).aggregate([])
+        for *k, f in zip(*(places[c].to_pylist() for c in key + ["file"])):
+            parent[root(f)] = root(first.setdefault(tuple(k), f))
+        groups: dict[int, tuple[list, set]] = {}
+        for f, info in enumerate(self.block_files):
+            groups.setdefault(root(f), ([], set()))[0].append(info)
+        for k, f in first.items():
+            groups[root(f)][1].add(k)
+        return [(files, frozenset(keys)) for files, keys in groups.values()]
+
     @functools.cached_property
     def file_groups(self) -> list[tuple[list[tuple[str, int]], frozenset]]:
-        """``[(files, keys)]``: :attr:`block_files` united (union-find)
-        wherever two files hold rows of one ``(part_id, chunk_id)``, with
-        the chunk keys each group holds. Raises ``ValueError`` when a
-        ``(part_id, chunk_id, col)`` has two committed rows: the table
-        no longer says which one holds the column."""
+        """``[(files, keys)]``: :attr:`block_files` united wherever two
+        files hold rows of one ``(part_id, chunk_id)``, with the chunk
+        keys each group holds. Raises ``ValueError`` when a ``(part_id,
+        chunk_id, col)`` has two committed rows: the table no longer says
+        which one holds the column."""
         stats = self.chunk_stats
         rows = stats.group_by(_CHUNK_KEY + ["col"]).aggregate(
             [("n", "count")])
@@ -321,25 +359,16 @@ class Snapshot:
                 f"committed rows in {self.out_dir}/blocks (a block file "
                 "copied by a task retry?); remove the copy or rebuild"
             )
-        parent = list(range(len(self.block_files)))
+        return self._united(_CHUNK_KEY)
 
-        def root(i: int) -> int:
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        first: dict = {}
-        places = stats.group_by(_CHUNK_KEY + ["file"]).aggregate([])
-        for p, c, f in zip(*(places[k].to_pylist()
-                             for k in _CHUNK_KEY + ["file"])):
-            parent[root(f)] = root(first.setdefault((p, c), f))
-        groups: dict[int, tuple[list, set]] = {}
-        for f, info in enumerate(self.block_files):
-            groups.setdefault(root(f), ([], set()))[0].append(info)
-        for key, f in first.items():
-            groups[root(f)][1].add(key)
-        return [(files, frozenset(keys)) for files, keys in groups.values()]
+    @functools.cached_property
+    def part_groups(self) -> list[tuple[list[tuple[str, int]], frozenset]]:
+        """``[(files, parts)]``: :attr:`file_groups` united wherever two
+        hold rows of one part, with the part ids each group holds. A
+        task that rewrites a part whole reads one such group."""
+        self.file_groups  # the duplicate-row check
+        return [(files, frozenset(p for (p,) in parts))
+                for files, parts in self._united(["part_id"])]
 
     @functools.cached_property
     def tombstone_runs(self) -> list[str]:
@@ -354,6 +383,19 @@ class Snapshot:
         if self.as_of is not None:
             live = [p for p in live if self._applies_at(p, self.as_of)]
         return [p[len(self.root) + 1:] for p in live]
+
+    @functools.cached_property
+    def deleted_positions(self) -> dict[tuple, list[int]]:
+        """``{(part_id, chunk_id): [pos, ...]}`` over the live tombstone
+        runs, read with pyarrow: the ``deleted`` argument of
+        ``decode.assemble_chunks``."""
+        deleted: dict[tuple, list[int]] = {}
+        for run in self.tombstone_runs:
+            t = pq.read_table(f"{self.root}/{run}", filesystem=self.fs,
+                              columns=list(ADDRESS_COLS))
+            for p, c, pos in zip(*(t[k].to_pylist() for k in ADDRESS_COLS)):
+                deleted.setdefault((p, c), []).append(pos)
+        return deleted
 
     def _applies_at(self, run: str, as_of: float) -> bool:
         # Iceberg position-delete time scoping: a snapshot dated before

@@ -88,9 +88,12 @@ def _check_add(a: dict) -> dict:
     return a
 
 
-def _read_checkpoint(log_dir: str) -> tuple[int, list[dict], dict | None] | None:
-    """(checkpoint_version, live add actions, protocol action or None)
-    from _last_checkpoint, or None when the table has no checkpoint yet."""
+def _read_checkpoint(
+    log_dir: str,
+) -> tuple[int, list[dict], dict | None, dict | None] | None:
+    """(checkpoint_version, live add actions, protocol action or None,
+    metaData action or None) from _last_checkpoint, or None when the table
+    has no checkpoint yet."""
     lc_path = os.path.join(log_dir, "_last_checkpoint")
     if not os.path.exists(lc_path):
         return None
@@ -107,17 +110,34 @@ def _read_checkpoint(log_dir: str) -> tuple[int, list[dict], dict | None] | None
         )
     tbl = pq.read_table(cp_path)
     adds = []
-    proto = None
+    proto = meta = None
     for row in tbl.to_pylist():
         add = row.get("add")
         if add and add.get("path"):
-            adds.append({k: v for k, v in add.items() if v is not None})
+            adds.append(_action(add))
         # checkpoints may carry remove tombstones for vacuum bookkeeping;
         # they are NOT part of the live file set and are skipped here
         p = row.get("protocol")
         if p and p.get("minReaderVersion") is not None:
-            proto = {k: v for k, v in p.items() if v is not None}
-    return version, adds, proto
+            proto = _action(p)
+        m = row.get("metaData")
+        if m and m.get("schemaString") is not None:
+            meta = _action(m)
+    return version, adds, proto, meta
+
+
+def _action(row: dict) -> dict:
+    """A checkpoint row's action in the shape the JSON log gives it: null
+    fields dropped, map columns (``configuration``, ``partitionValues``;
+    read as lists of key/value tuples) as dicts."""
+    def plain(v):
+        if isinstance(v, dict):
+            return _action(v)
+        if isinstance(v, list) and v and all(isinstance(x, tuple) for x in v):
+            return dict(v)
+        return v
+
+    return {k: plain(v) for k, v in row.items() if v is not None}
 
 
 def _replay(table_dir: str, version: int | None = None,
@@ -166,12 +186,12 @@ def _replay(table_dir: str, version: int | None = None,
         start = cp[0] + 1
         for add in cp[1]:
             live[add["path"]] = _check_add(add)
-        # metaData and protocol must still come from the log when the
-        # checkpoint rows didn't carry them — fall through to JSON replay
-        # below, plus a backward scan for the latest of each at or before
-        # the checkpoint (the protocol recorded there still gates THIS
-        # read: a DV-era table with a checkpoint must refuse, not read)
-        proto = cp[2]
+        # metaData and protocol come from the checkpoint rows; when a
+        # checkpoint lacks either, from the JSON replay below plus a
+        # backward scan for the latest of each at or before the
+        # checkpoint (the protocol recorded there still gates THIS read:
+        # a DV-era table with a checkpoint must refuse, not read)
+        proto, meta = cp[2], cp[3]
         for v, path in reversed(commits):
             if v > cp[0]:
                 continue

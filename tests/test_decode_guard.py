@@ -6,7 +6,12 @@ as two chunks; a copied block file read twice; a compaction that
 ignored ``chunk_bytes``), so these tests scan the package source and
 fail on a new one: a call of ``chunks.decode_column_chunk`` outside the
 listed functions, a ``groupBy("part_id", "chunk_id")`` over block rows,
-or a call of ``encode._encode_chunk_to_rows`` outside the cutter."""
+or a call of ``encode._encode_chunk_to_rows`` outside the cutter.
+
+Block files are read through the Snapshot's file groups alone: a Spark
+read of ``blocks/`` outside ``decode.blocks_of`` (the public Spark view
+kept for tools and probes) fails, and so does any call of
+``committed_blocks`` from the package."""
 from __future__ import annotations
 
 import ast
@@ -74,4 +79,24 @@ def test_one_chunk_cutter():
                              f"{'.'.join(fns) or '<module>'}")
     assert not stray, (
         "chunk cut outside encode.encode_part:\n" + "\n".join(stray)
+    )
+
+
+def test_no_spark_read_of_blocks():
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fns, call in _calls(ast.parse(path.read_text())):
+            where = f"{rel}:{call.lineno} in {'.'.join(fns) or '<module>'}"
+            name, text = _name(call.func), ast.unparse(call)
+            if (name == "parquet" and ".read" in ast.unparse(call.func)
+                    and "blocks" in text
+                    and not (rel == "operators/decode.py"
+                             and fns[-1:] == ("blocks_of",))):
+                stray.append(f"{where}: {text}")
+            if name in ("committed_blocks", "_committed_blocks"):
+                stray.append(f"{where}: {text}")
+    assert not stray, (
+        "block rows read through Spark outside decode.blocks_of:\n"
+        + "\n".join(stray)
     )

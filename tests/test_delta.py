@@ -353,6 +353,46 @@ def test_delta_checkpoint_row_protocol_still_gates(spark, tmp_path):
         read_delta_dir(spark, tdir)
 
 
+def test_delta_cleaned_log_reads_checkpoint_metadata(spark, tmp_path):
+    """Log cleanup deletes the JSON commits at or before the checkpoint,
+    so the metaData action survives only as a checkpoint row (its map
+    columns stored as parquet maps, as real writers store them). The
+    table must still read; it used to raise "Delta log has no metaData
+    action"."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tdir, info = _fixture_with_remove(tmp_path, checkpoint_at=1)
+    log = os.path.join(tdir, "_delta_log")
+    with open(os.path.join(log, f"{0:020d}.json")) as f:
+        meta = next(json.loads(line)["metaData"] for line in f
+                    if "metaData" in line)
+    cp = os.path.join(log, f"{1:020d}.checkpoint.parquet")
+    old = pq.read_table(cp)
+    str_map = pa.map_(pa.string(), pa.string())
+    schema = pa.schema([
+        old.schema.field("add"),
+        pa.field("metaData", pa.struct([
+            ("id", pa.string()),
+            ("format", pa.struct([("provider", pa.string()),
+                                  ("options", str_map)])),
+            ("schemaString", pa.string()),
+            ("partitionColumns", pa.list_(pa.string())),
+            ("configuration", str_map),
+            ("createdTime", pa.int64()),
+        ])),
+    ])
+    rows = [{"add": r["add"], "metaData": None} for r in old.to_pylist()]
+    rows.append({"add": None, "metaData": dict(
+        meta, format={"provider": "parquet", "options": []},
+        configuration=[("delta.columnMapping.mode", "none")])})
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), cp)
+    for v in (0, 1):
+        os.remove(os.path.join(log, f"{v:020d}.json"))
+    cur = read_delta_dir(spark, tdir)
+    assert sorted(r["id"] for r in cur.collect()) == [1, 2, 3, 4, 5]
+
+
 def test_delta_deletion_vector_add_refused(spark, tmp_path):
     """An add entry carrying a live deletion vector must refuse — reading
     the file without applying the DV would resurrect its deleted rows."""

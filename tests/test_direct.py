@@ -471,13 +471,15 @@ def test_migrate_ref_dir_parallel_bit_identical(spark, tmp_path):
 
 
 def test_vacuum_crash_window_repair(spark, tmp_path, scratch):
-    """A crash between vacuum's two renames leaves the table with no blocks
-    dir; repair_vacuum (also invoked by decode's blocks_of) restores it in
-    every crash window."""
+    """A crash between an older vacuum's two renames leaves the table with
+    no blocks dir. Readers refuse such a table (reading it as empty would
+    be a silent wrong answer) and never rename anything; vacuum finishes
+    or rolls back the swap in every crash window."""
     import os
     import shutil
 
-    from cuda_float_compress_spark.operators.maintain import repair_vacuum
+    from cuda_float_compress_spark.localio import read_table_local
+    from cuda_float_compress_spark.operators.maintain import vacuum
 
     src = str(tmp_path / "vcw_src")
     generate_webpages_df(spark, 400, partitions=2).write.parquet(src)
@@ -489,34 +491,44 @@ def test_vacuum_crash_window_repair(spark, tmp_path, scratch):
     )
     original = spark.read.parquet(src)
 
+    def readers_refuse():
+        for read in (lambda: decode_table(spark, scratch),
+                     lambda: read_table_local(scratch)):
+            with pytest.raises(ValueError, match="interrupted vacuum"):
+                read()
+        assert os.path.exists(old) and not os.path.exists(blocks)
+
     # window 1: crash between rename(blocks->old) and rename(tmp->blocks),
-    # tmp rewrite complete -> repair finishes the swap
+    # tmp rewrite complete -> vacuum finishes the swap
     shutil.copytree(blocks, tmp)
     os.rename(blocks, old)
-    assert repair_vacuum(scratch) == "completed_swap"
-    assert os.path.exists(blocks) and not os.path.exists(old)
+    readers_refuse()
+    vacuum(spark, scratch)
+    assert os.path.exists(blocks)
+    assert not os.path.exists(old) and not os.path.exists(tmp)
     rep = verify_roundtrip(original, decode_table(spark, scratch), "url").collect()
     assert all(r["ok"] for r in rep)
 
-    # window 2: same crash but tmp has no _SUCCESS -> roll back to old copy
+    # window 2: same crash but tmp has no _SUCCESS -> vacuum rolls back to
+    # the old copy (the one holding _SUCCESS)
     shutil.copytree(blocks, tmp)
     os.remove(f"{tmp}/_SUCCESS")
     os.rename(blocks, old)
-    assert repair_vacuum(scratch) == "rolled_back"
-    assert os.path.exists(blocks) and not os.path.exists(tmp)
-
-    # window 3: crash after the swap, old copy left behind -> dropped; the
-    # decode read path triggers the repair itself
-    shutil.copytree(blocks, old)
-    assert decode_table(spark, scratch).count() == 400
-    assert repair_vacuum(scratch) in (None, "dropped_old_copy")
-    assert not os.path.exists(old)
-
-    # and a blocks-dir-missing table heals transparently through decode
-    shutil.copytree(blocks, tmp)
-    os.rename(blocks, old)
+    readers_refuse()
+    vacuum(spark, scratch)
+    assert os.path.exists(f"{blocks}/_SUCCESS")
+    assert not os.path.exists(old) and not os.path.exists(tmp)
     rep = verify_roundtrip(original, decode_table(spark, scratch), "url").collect()
     assert all(r["ok"] for r in rep)
+
+    # window 3: crash after the swap, old copy left behind -> readers read
+    # blocks/ and leave the copy; vacuum drops it
+    shutil.copytree(blocks, old)
+    assert decode_table(spark, scratch).count() == 400
+    assert os.path.exists(old)
+    vacuum(spark, scratch)
+    assert not os.path.exists(old)
+    assert decode_table(spark, scratch).count() == 400
 
 
 def test_string_zone_map_pruning(spark, tmp_path, scratch):
@@ -592,107 +604,6 @@ def test_throughput_profile_roundtrip_bit_identical(spark, tmp_path, scratch):
     original = spark.read.parquet(src)
     rep = verify_roundtrip(original, decode_table(spark, scratch), "url").collect()
     assert all(r["ok"] for r in rep), rep
-
-
-def test_vacuum_survives_reader_repair_race(spark, tmp_path, scratch, monkeypatch):
-    """A concurrent reader's repair_vacuum can complete the swap BETWEEN a
-    live vacuum's two renames (it sees old+tmp(_SUCCESS) and can't tell a
-    crashed swap from a live one); the vacuum's own second rename then hits
-    ENOENT. That healthy vacuum must report success, not raise."""
-    import os
-
-    from cuda_float_compress_spark.operators import maintain
-
-    src = str(tmp_path / "race_src")
-    generate_webpages_df(spark, 400, partitions=2).write.parquet(src)
-    encode_table_direct(spark, src, scratch, resume=False,
-                        target_rows_per_split=200)
-    blocks_dir = f"{scratch}/blocks"
-    blocks = spark.read.parquet(blocks_dir)
-    n_committed = blocks.count()
-    blocks.withColumn("run_id", F.lit("crashed")).write.mode("append").parquet(
-        blocks_dir
-    )
-
-    real_rename = os.rename
-    state = {"in_repair": False, "raced": False}
-
-    def racing_rename(a, b):
-        # the reader wins the race exactly at vacuum's second rename
-        if (not state["in_repair"] and a == f"{scratch}/blocks_vacuum_tmp"
-                and b == blocks_dir):
-            state["in_repair"] = True
-            try:
-                assert maintain.repair_vacuum(scratch) == "completed_swap"
-                state["raced"] = True
-            finally:
-                state["in_repair"] = False
-        return real_rename(a, b)
-
-    monkeypatch.setattr(os, "rename", racing_rename)
-    stats = maintain.vacuum(spark, scratch)
-    assert state["raced"], "race was not exercised"
-    assert stats["rows_after"] == n_committed
-    assert spark.read.parquet(blocks_dir).count() == n_committed
-    original = spark.read.parquet(src)
-    rep = verify_roundtrip(original, decode_table(spark, scratch), "url").collect()
-    assert all(r["ok"] for r in rep)
-
-
-def test_vacuum_detects_rollback_race(spark, tmp_path, scratch, monkeypatch):
-    """The OTHER direction of the repair race: with _SUCCESS markers absent
-    (e.g. marksuccessfuljobs=false), a concurrent repair_vacuum ROLLS BACK
-    (old -> blocks). The live vacuum's swallowed-ENOENT path previously
-    reported rows_before/rows_after stats for a vacuum that never landed;
-    the sentinel check must turn that into a loud RuntimeError."""
-    import os
-    import shutil
-
-    import pytest as _pytest
-
-    from cuda_float_compress_spark.operators import maintain
-
-    src = str(tmp_path / "rb_src")
-    generate_webpages_df(spark, 400, partitions=2).write.parquet(src)
-    encode_table_direct(spark, src, scratch, resume=False,
-                        target_rows_per_split=200)
-    blocks_dir = f"{scratch}/blocks"
-    blocks = spark.read.parquet(blocks_dir)
-    n_total = blocks.count() * 2
-    blocks.withColumn("run_id", F.lit("crashed")).write.mode("append").parquet(
-        blocks_dir
-    )
-
-    real_rename = os.rename
-    state = {"in_repair": False, "raced": False}
-
-    def racing_rename(a, b):
-        if (not state["in_repair"] and a == f"{scratch}/blocks_vacuum_tmp"
-                and b == blocks_dir):
-            state["in_repair"] = True
-            try:
-                # the repairer's view: tmp has no _SUCCESS -> roll back
-                success = os.path.join(a, "_SUCCESS")
-                if os.path.exists(success):
-                    os.remove(success)
-                assert maintain.repair_vacuum(scratch) == "rolled_back"
-                state["raced"] = True
-            finally:
-                state["in_repair"] = False
-        return real_rename(a, b)
-
-    monkeypatch.setattr(os, "rename", racing_rename)
-    with _pytest.raises(RuntimeError, match="rolled back"):
-        maintain.vacuum(spark, scratch)
-    assert state["raced"], "race was not exercised"
-    # the table really is un-vacuumed (stale blocks still present)...
-    monkeypatch.setattr(os, "rename", real_rename)
-    assert spark.read.parquet(blocks_dir).count() == n_total
-    shutil.rmtree(f"{scratch}/blocks_vacuum_tmp", ignore_errors=True)
-    # ...and a re-run (as the error message instructs) completes it
-    stats = maintain.vacuum(spark, scratch)
-    assert stats["rows_after"] == n_total // 2
-    assert spark.read.parquet(blocks_dir).count() == n_total // 2
 
 
 def test_decode_parts_subset(spark, tmp_path, scratch):
@@ -1163,17 +1074,19 @@ def _read_sorted(spark, reader: str, path: str):
 
 @pytest.mark.parametrize("reader", _READERS)
 def test_chunk_split_across_vacuumed_files(spark, tmp_path, reader):
-    """vacuum rewrites blocks/ through a plain Spark read, which splits a
-    block file larger than maxPartitionBytes at row-group boundaries; one
-    can fall inside a chunk, so the chunk's column rows land in two
-    files. Every reader must still decode it as one chunk.
-    decode_table_direct and read_table_local used to decode each half on
-    its own: 2032 rows of 2000, 32 of them with a null url."""
+    """An older vacuum rewrote blocks/ through a plain Spark read, which
+    splits a block file larger than maxPartitionBytes at row-group
+    boundaries; one can fall inside a chunk, so the chunk's column rows
+    land in two files. The fixture makes that rewrite itself. Every
+    reader must still decode such a legacy table's split chunk as one
+    chunk. decode_table_direct and read_table_local used to decode each
+    half on its own: 2032 rows of 2000, 32 of them with a null url."""
     import os
+    import shutil
 
     import pyarrow.parquet as pq
 
-    from cuda_float_compress_spark.operators.maintain import vacuum
+    from cuda_float_compress_spark.operators.decode import committed_blocks
 
     src, out = str(tmp_path / "span_src"), str(tmp_path / "span")
     generate_webpages_df(spark, 2000, partitions=1).select(
@@ -1192,7 +1105,11 @@ def test_chunk_split_across_vacuumed_files(spark, tmp_path, reader):
         for k in ("spark.sql.files.maxPartitionBytes",
                   "spark.sql.files.openCostInBytes"):
             spark.conf.set(k, confs[k])
-        assert vacuum(spark, out)["rows_after"] > 0
+        # the older vacuum's rewrite: committed rows read and written back
+        # by Spark, then swapped in for blocks/
+        committed_blocks(spark, out).write.parquet(f"{out}/blocks_vacuum_tmp")
+        shutil.rmtree(f"{out}/blocks")
+        os.rename(f"{out}/blocks_vacuum_tmp", f"{out}/blocks")
     finally:
         for k, v in saved.items():
             if v is None:

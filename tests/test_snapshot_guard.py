@@ -2,7 +2,11 @@
 that reads an encoded table's ``lineage/`` or ``deletes/`` dirs or lists
 its ``blocks/`` files. Separate readers of those facts drifted apart and
 gave silent wrong answers, so this test scans the package source and
-fails on any new one. Writers of those dirs are listed by function."""
+fails on any new one. Writers of those dirs are listed by function.
+
+The Snapshot itself never writes: a reader that renamed or deleted table
+dirs could race a writer, so ``snapshot.py`` may not move, rename,
+delete or create anything, nor import the operators that do."""
 from __future__ import annotations
 
 import ast
@@ -59,3 +63,23 @@ def test_only_snapshot_reads_table_metadata():
     assert not stray, (
         "table metadata read outside snapshot.Snapshot:\n" + "\n".join(stray)
     )
+
+
+_WRITES = ("move", "rename", "create_dir", "rmtree")
+
+
+def test_snapshot_never_writes():
+    tree = ast.parse((PKG / "snapshot.py").read_text())
+    stray = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                f, "id", "")
+            if name in _WRITES or name.startswith("delete_"):
+                stray.append(f"{node.lineno}: {ast.unparse(node)}")
+        if (isinstance(node, ast.ImportFrom)
+                and "operators" in (node.module or "")):
+            stray.append(f"{node.lineno}: import from {node.module}")
+    assert not stray, "snapshot.py writes or imports an operator:\n" + (
+        "\n".join(stray))
