@@ -222,6 +222,17 @@ def rle_expand(values: np.ndarray, lengths: np.ndarray) -> np.ndarray:
     return np.repeat(values, lengths)
 
 
+def ragged_positions(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Flat positions of variable-length slots: ``starts[i] + j`` for
+    ``j < lens[i]``, slot after slot. The one ragged-gather index (null
+    repack, dictionary expansion, FSST symbol copy): a numpy gather with it
+    replaces a per-value Python loop."""
+    cs = np.zeros(len(lens), dtype=np.int64)
+    np.cumsum(lens[:-1], out=cs[1:])
+    within = np.arange(int(lens.sum()), dtype=np.int64) - np.repeat(cs, lens)
+    return np.repeat(starts, lens) + within
+
+
 # ---------------------------------------------------------------------------
 # Integer codecs: encode(np.int64) -> (payload, params); decode inverse.
 # params are JSON-safe scalars; n (value count) is carried by the manifest.
@@ -728,18 +739,11 @@ def fsst_decode_bytes(enc: bytes, symbols: list[bytes]) -> bytes:
     # literals: one scatter
     esc_out = offsets[:-1][is_esc]
     out[esc_out] = codes[np.minimum(starts[is_esc] + 1, n - 1)]
-    # symbols: one ragged gather (repeat + within-token index), no per-code loop
-    ne_tok = tok[~is_esc]
-    if len(ne_tok):
-        ne_off = offsets[:-1][~is_esc]
-        ne_len = lens[~is_esc]
-        total = int(ne_len.sum())
-        cs = np.zeros(len(ne_len), dtype=np.int64)
-        np.cumsum(ne_len[:-1], out=cs[1:])
-        within = np.arange(total, dtype=np.int64) - np.repeat(cs, ne_len)
-        out[np.repeat(ne_off, ne_len) + within] = sym_mat[
-            np.repeat(ne_tok, ne_len), within
-        ]
+    # symbols: one ragged gather from the flat symbol matrix, no per-code loop
+    ne_len = lens[~is_esc]
+    out[ragged_positions(offsets[:-1][~is_esc], ne_len)] = sym_mat.ravel()[
+        ragged_positions(tok[~is_esc].astype(np.int64) * _FSST_MAX_LEN, ne_len)
+    ]
     return out.tobytes()
 
 
@@ -752,212 +756,243 @@ def fsst_deserialize_table(buf: bytes) -> list[bytes]:
 
 
 # ---------------------------------------------------------------------------
-# Byte-string codecs. A "bytes chunk" is a list[bytes | None]; layout is
-# lengths (int64, -1 for null) + concatenated data, each section separately
-# encoded. Lengths go through the integer delta codec; data through
-# zstd / fsst+zstd / dict / rle.
+# Byte-string codecs. The codec domain is (lengths, data): lengths is int64
+# per value (-1 for null), data the non-null values concatenated, both taken
+# straight from Arrow buffers by ``bytes_ld``. Lengths go through the integer
+# delta codec; data through zstd / lz4 / fsst+zstd / dict / rle. The list
+# API (``encode_bytes_chunk``/``decode_bytes_chunk``) adapts list[bytes |
+# None] through Arrow onto the same table, so the wire format has one home.
 # ---------------------------------------------------------------------------
 
+_EMPTY_U8 = np.empty(0, dtype=np.uint8)
 
-def _lengths_and_data(items: list) -> tuple[np.ndarray, bytes]:
-    lengths = np.fromiter(
-        ((-1 if it is None else len(it)) for it in items), dtype=np.int64, count=len(items)
-    )
-    data = b"".join(it for it in items if it is not None)
+
+def bytes_ld(arr: pa.Array, with_data: bool = True) -> tuple[np.ndarray, object]:
+    """(lengths[-1=null], concatenated data) from a string/binary array,
+    via buffers (no per-item Python objects). ``data`` is a ZERO-COPY
+    np.uint8 view into the Arrow buffer whenever the values are already
+    contiguous (a fresh copy only on the null-slots-hold-bytes repack
+    path) — every consumer (zstd/lz4 via pa.Codec, pack_sections' join,
+    np.frombuffer, pa.py_buffer) takes buffer-protocol objects, so a
+    per-column ``.tobytes()`` copy would be pure overhead on the encode
+    hot path. ``with_data=False`` skips the data entirely (lengths-only
+    callers like raw_size_of)."""
+    if not (
+        pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    ):
+        arr = arr.cast(
+            pa.large_string() if pa.types.is_string(arr.type) else pa.large_binary()
+        )
+    if isinstance(arr, pa.ChunkedArray):
+        # chunk(0) is zero-copy; combine_chunks copies even for one chunk
+        arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
+    n = len(arr)
+    bufs = arr.buffers()
+    offsets = np.frombuffer(bufs[1], dtype=np.int64, count=n + 1, offset=arr.offset * 8)
+    lengths = np.diff(offsets).astype(np.int64)
+    data_buf = bufs[2]
+    if arr.null_count:
+        valid = np.array(arr.is_valid(), dtype=bool)
+        if (lengths[~valid] != 0).any():
+            marked = np.where(valid, lengths, -1)
+            if not with_data:
+                return marked, None
+            # a VALID Arrow array may keep bytes under null slots (sliced /
+            # externally-built buffers); slicing offsets[0]:offsets[-1] would
+            # then misalign every value after the null — repack instead
+            data = np.frombuffer(data_buf, dtype=np.uint8)[
+                ragged_positions(offsets[:-1][valid], lengths[valid])
+            ]
+            return marked, data
+        lengths = np.where(valid, lengths, -1)
+    if not with_data:
+        return lengths, None
+    if data_buf is not None and offsets[-1] > offsets[0]:
+        data = np.frombuffer(data_buf, dtype=np.uint8)[
+            offsets[0] : offsets[-1]
+        ]
+    else:
+        data = _EMPTY_U8
     return lengths, data
 
 
-def _split_by_lengths(lengths: np.ndarray, data: bytes) -> list:
-    sizes = lengths[lengths >= 0]
-    ends = np.cumsum(sizes)
-    starts = ends - sizes
-    out: list = [None] * len(lengths)
-    j = 0
-    for i in range(len(lengths)):
-        if lengths[i] >= 0:
-            out[i] = data[starts[j] : ends[j]]
-            j += 1
-    return out
-
-
-def bytes_zstd_encode(items: list) -> tuple[bytes, dict]:
-    lengths, data = _lengths_and_data(items)
-    len_payload, len_params = int_delta_encode(lengths)
-    payload = pack_sections(len_payload, zstd_compress(data))
-    return payload, {
-        "l_first": len_params["first"],
-        "l_width": len_params["width"],
-        "data_size": len(data),
-    }
-
-
-def bytes_zstd_decode(payload: bytes, params: dict, n: int) -> list:
-    len_buf, data_buf = unpack_sections(payload)
-    lengths = int_delta_decode(
-        len_buf, {"first": params["l_first"], "width": params["l_width"]}, n
+def ld_to_arrow(lengths: np.ndarray, data: bytes, ptype: str,
+                validated: bool = True) -> pa.Array:
+    """Inverse of ``bytes_ld``: a large_string (``ptype='string'``) or
+    large_binary array over (lengths, data), built from buffers."""
+    sizes = np.where(lengths >= 0, lengths, 0).astype(np.int64)
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(sizes, out=offsets[1:])
+    null_mask = lengths < 0
+    validity = None
+    if null_mask.any():
+        validity = pa.py_buffer(np.packbits(~null_mask, bitorder="little").tobytes())
+    # large_string shares large_binary's buffer layout; building it directly
+    # skips the cast's UTF8 validation pass (~13% of the 1-core decode floor).
+    # Safe WHEN the payload's integrity was established (crc32 verified, or
+    # the caller opted out for a trusted read): the data buffer is then our
+    # own encoder's output, which only ever stored bytes from a valid Arrow
+    # string column. LEGACY tables carry no crc — there a storage bit-flip
+    # could otherwise smuggle invalid UTF-8 into an Arrow string array, so
+    # the validating cast stays on that path (validated=False).
+    if ptype == "string" and not validated:
+        binary = pa.Array.from_buffers(
+            pa.large_binary(), len(lengths),
+            [validity, pa.py_buffer(offsets), pa.py_buffer(data)],
+            null_count=int(null_mask.sum()),
+        )
+        return binary.cast(pa.large_string())  # raises ArrowInvalid on rot
+    at = pa.large_string() if ptype == "string" else pa.large_binary()
+    return pa.Array.from_buffers(
+        at,
+        len(lengths),
+        # py_buffer(offsets) wraps the numpy array zero-copy (and holds a
+        # reference); .tobytes() would add a full extra pass over offsets
+        [validity, pa.py_buffer(offsets), pa.py_buffer(data)],
+        null_count=int(null_mask.sum()),
     )
-    data = zstd_decompress(data_buf, int(params["data_size"]))
-    return _split_by_lengths(lengths, data)
 
 
-def bytes_lz4_encode(items: list) -> tuple[bytes, dict]:
-    """bytes_zstd's layout with the lz4 entropy backend (throughput profile:
-    ~3-5x faster entropy stage for ~15-25% worse ratio on web text)."""
-    lengths, data = _lengths_and_data(items)
-    len_payload, len_params = int_delta_encode(lengths)
-    payload = pack_sections(len_payload, lz4_compress(data))
-    return payload, {
-        "l_first": len_params["first"],
-        "l_width": len_params["width"],
-        "data_size": len(data),
-    }
+def _lengths_encode(lengths: np.ndarray) -> tuple[bytes, dict]:
+    """The lengths section every byte-string codec leads with."""
+    payload, params = int_delta_encode(lengths)
+    return payload, {"l_first": params["first"], "l_width": params["width"]}
 
 
-def bytes_lz4_decode(payload: bytes, params: dict, n: int) -> list:
-    len_buf, data_buf = unpack_sections(payload)
-    lengths = int_delta_decode(
-        len_buf, {"first": params["l_first"], "width": params["l_width"]}, n
+def _lengths_decode(buf: bytes, params: dict, n: int) -> np.ndarray:
+    return int_delta_decode(
+        buf, {"first": params["l_first"], "width": params["l_width"]}, n
     )
-    data = lz4_decompress(data_buf, int(params["data_size"]))
-    return _split_by_lengths(lengths, data)
 
 
-def bytes_fsst_encode(items: list) -> tuple[bytes, dict]:
-    lengths, data = _lengths_and_data(items)
+def _bulk_codec(compress, decompress):
+    """(encode, decode) of lengths + one compressed data section: bytes_zstd
+    and bytes_lz4 (the throughput profile's backend: ~3-5x faster entropy
+    stage for ~15-25% worse ratio on web text)."""
+    def encode(lengths, data):
+        len_payload, params = _lengths_encode(lengths)
+        payload = pack_sections(len_payload, compress(data))
+        return payload, {**params, "data_size": len(data)}
+
+    def decode(payload, params, n):
+        len_buf, data_buf = unpack_sections(payload)
+        return (_lengths_decode(len_buf, params, n),
+                decompress(data_buf, int(params["data_size"])))
+
+    return encode, decode
+
+
+_zstd_encode, _zstd_decode = _bulk_codec(zstd_compress, zstd_decompress)
+
+
+def _fsst_encode(lengths, data):
     symbols = fsst_train(data)
     enc = fsst_encode_bytes(data, symbols)
-    len_payload, len_params = int_delta_encode(lengths)
+    len_payload, params = _lengths_encode(lengths)
     payload = pack_sections(
         len_payload, fsst_serialize_table(symbols), zstd_compress(enc)
     )
-    return payload, {
-        "l_first": len_params["first"],
-        "l_width": len_params["width"],
-        "enc_size": len(enc),
-        "data_size": len(data),
-    }
+    return payload, {**params, "enc_size": len(enc), "data_size": len(data)}
 
 
-def bytes_fsst_decode(payload: bytes, params: dict, n: int) -> list:
+def _fsst_decode(payload, params, n):
     len_buf, table_buf, enc_buf = unpack_sections(payload)
-    lengths = int_delta_decode(
-        len_buf, {"first": params["l_first"], "width": params["l_width"]}, n
-    )
     symbols = fsst_deserialize_table(table_buf)
     enc = zstd_decompress(enc_buf, int(params["enc_size"]))
-    data = fsst_decode_bytes(enc, symbols)
-    return _split_by_lengths(lengths, data)
+    return _lengths_decode(len_buf, params, n), fsst_decode_bytes(enc, symbols)
 
 
-def _factorize(items: list) -> tuple[np.ndarray, list]:
-    """codes (int64, -1 for null) + unique values in first-seen order.
-    Vectorized via Arrow dictionary_encode (C++, no per-value Python dict)."""
-    arr = pa.array(items, type=pa.large_binary())
-    dd = arr.dictionary_encode()
-    ind = dd.indices
-    if ind.null_count:
-        codes = ind.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
-    else:
-        codes = ind.to_numpy(zero_copy_only=False).astype(np.int64)
-    return codes, dd.dictionary.to_pylist()
+def _raw_encode(lengths, data):
+    len_payload, params = _lengths_encode(lengths)
+    return pack_sections(len_payload, data), params
 
 
-def bytes_dict_encode(items: list) -> tuple[bytes, dict]:
-    codes, uniq = _factorize(items)
-    dict_payload, dict_params = bytes_zstd_encode(uniq)
-    codes_payload, codes_params = int_for_encode(codes + 1)  # shift nulls to 0
-    payload = pack_sections(dict_payload, codes_payload)
-    return payload, {
-        "card": len(uniq),
-        "d_l_first": dict_params["l_first"],
-        "d_l_width": dict_params["l_width"],
-        "d_data_size": dict_params["data_size"],
-        "c_ref": codes_params["ref"],
-        "c_width": codes_params["width"],
-    }
+def _raw_decode(payload, params, n):
+    len_buf, data = unpack_sections(payload)
+    return _lengths_decode(len_buf, params, n), data
 
 
-def bytes_dict_decode(payload: bytes, params: dict, n: int) -> list:
-    dict_buf, codes_buf = unpack_sections(payload)
-    card = int(params["card"])
-    uniq = bytes_zstd_decode(
-        dict_buf,
-        {
-            "l_first": params["d_l_first"],
-            "l_width": params["d_l_width"],
-            "data_size": params["d_data_size"],
-        },
-        card,
+def _dict_section_encode(lengths, data) -> tuple[bytes, dict, np.ndarray]:
+    """The dictionary section of bytes_dict/bytes_rle: factorize through
+    Arrow's dictionary_encode (C++, first-seen order), store the distinct
+    values as a bytes_zstd chunk under ``d_``-prefixed params. Returns
+    (payload, params, codes) with codes 0 = null, 1..card."""
+    dd = ld_to_arrow(lengths, data, "binary").dictionary_encode()
+    ind = dd.indices.fill_null(-1) if dd.indices.null_count else dd.indices
+    codes = ind.to_numpy(zero_copy_only=False).astype(np.int64) + 1
+    payload, params = _zstd_encode(*bytes_ld(dd.dictionary))
+    params = {"card": len(dd.dictionary),
+              **{f"d_{k}": v for k, v in params.items()}}
+    return payload, params, codes
+
+
+def _dict_section_decode(buf, params, codes) -> tuple[np.ndarray, object]:
+    """Expand dictionary codes (0 = null, 1..card) to (lengths, data) with
+    one ragged gather — no per-value Python."""
+    u_lengths, u_data = _zstd_decode(
+        buf, {k[2:]: v for k, v in params.items() if k.startswith("d_")},
+        int(params["card"]),
     )
+    if len(u_lengths) == 0:  # all-null chunk: empty dictionary, every code 0
+        return np.full(len(codes), -1, dtype=np.int64), b""
+    lengths = np.where(codes == 0, -1, u_lengths[np.maximum(codes - 1, 0)])
+    sel = codes[codes > 0] - 1
+    u_starts = np.cumsum(u_lengths) - u_lengths
+    data = np.frombuffer(u_data, dtype=np.uint8)[
+        ragged_positions(u_starts[sel], u_lengths[sel])
+    ]
+    return lengths, data
+
+
+def _dict_encode(lengths, data):
+    dict_payload, params, codes = _dict_section_encode(lengths, data)
+    codes_payload, codes_params = int_for_encode(codes)
+    params.update(c_ref=codes_params["ref"], c_width=codes_params["width"])
+    return pack_sections(dict_payload, codes_payload), params
+
+
+def _dict_decode(payload, params, n):
+    dict_buf, codes_buf = unpack_sections(payload)
     codes = int_for_decode(
         codes_buf, {"ref": params["c_ref"], "width": params["c_width"]}, n
     )
-    return [None if c == 0 else uniq[c - 1] for c in codes]
+    return _dict_section_decode(dict_buf, params, codes)
 
 
-def bytes_rle_encode(items: list) -> tuple[bytes, dict]:
+def _rle_encode(lengths, data):
     """Dictionary + RLE on the code stream — the low-cardinality path for
     columns like ``lang`` (sorted-within-partition input makes long runs)."""
-    codes, uniq = _factorize(items)
-    dict_payload, dict_params = bytes_zstd_encode(uniq)
-    codes_payload, codes_params = int_rle_encode(codes + 1)
-    payload = pack_sections(dict_payload, codes_payload)
-    return payload, {
-        "card": len(uniq),
-        "d_l_first": dict_params["l_first"],
-        "d_l_width": dict_params["l_width"],
-        "d_data_size": dict_params["data_size"],
-        "r": codes_params,
-    }
+    dict_payload, params, codes = _dict_section_encode(lengths, data)
+    codes_payload, params["r"] = int_rle_encode(codes)
+    return pack_sections(dict_payload, codes_payload), params
 
 
-def bytes_rle_decode(payload: bytes, params: dict, n: int) -> list:
+def _rle_decode(payload, params, n):
     dict_buf, codes_buf = unpack_sections(payload)
-    card = int(params["card"])
-    uniq = bytes_zstd_decode(
-        dict_buf,
-        {
-            "l_first": params["d_l_first"],
-            "l_width": params["d_l_width"],
-            "data_size": params["d_data_size"],
-        },
-        card,
-    )
     codes = int_rle_decode(codes_buf, params["r"], n)
-    return [None if c == 0 else uniq[c - 1] for c in codes]
+    return _dict_section_decode(dict_buf, params, codes)
 
 
-def bytes_raw_encode(items: list) -> tuple[bytes, dict]:
-    lengths, data = _lengths_and_data(items)
-    len_payload, len_params = int_delta_encode(lengths)
-    payload = pack_sections(len_payload, data)
-    return payload, {"l_first": len_params["first"], "l_width": len_params["width"]}
-
-
-def bytes_raw_decode(payload: bytes, params: dict, n: int) -> list:
-    len_buf, data = unpack_sections(payload)
-    lengths = int_delta_decode(
-        len_buf, {"first": params["l_first"], "width": params["l_width"]}, n
-    )
-    return _split_by_lengths(lengths, data)
-
-
+#: name -> (encode(lengths, data) -> (payload, params),
+#:          decode(payload, params, n) -> (lengths, data)). Param keys and
+#: their order are part of the stored format (the params JSON is per chunk).
 BYTES_CODECS = {
-    "bytes_raw": (bytes_raw_encode, bytes_raw_decode),
-    "bytes_zstd": (bytes_zstd_encode, bytes_zstd_decode),
-    "bytes_lz4": (bytes_lz4_encode, bytes_lz4_decode),
-    "bytes_fsst": (bytes_fsst_encode, bytes_fsst_decode),
-    "bytes_dict": (bytes_dict_encode, bytes_dict_decode),
-    "bytes_rle": (bytes_rle_encode, bytes_rle_decode),
+    "bytes_raw": (_raw_encode, _raw_decode),
+    "bytes_zstd": (_zstd_encode, _zstd_decode),
+    "bytes_lz4": _bulk_codec(lz4_compress, lz4_decompress),
+    "bytes_fsst": (_fsst_encode, _fsst_decode),
+    "bytes_dict": (_dict_encode, _dict_decode),
+    "bytes_rle": (_rle_encode, _rle_decode),
 }
 
 
 def encode_bytes_chunk(items: list, codec: str) -> tuple[bytes, dict]:
-    return BYTES_CODECS[codec][0](items)
+    return BYTES_CODECS[codec][0](*bytes_ld(pa.array(items, pa.large_binary())))
 
 
 def decode_bytes_chunk(payload: bytes, codec: str, params: dict, n: int) -> list:
-    return BYTES_CODECS[codec][1](payload, params, n)
+    lengths, data = BYTES_CODECS[codec][1](payload, params, n)
+    return ld_to_arrow(lengths, data, "binary").to_pylist()
 
 
 # ---------------------------------------------------------------------------

@@ -4,7 +4,10 @@ The reference made this choice OFFLINE and froze it as #defines (the
 second-pass interleave beat varlen+exception-list, 2.94478x vs 2.73035x,
 cpu_compress_test/cpu_compress_test.cpp:55-66). We re-make the choice at
 RUNTIME per chunk: cheap statistics prune the candidate list, then trial
-encodes on a sample (or the full chunk when small) pick the min-size codec.
+encodes on a sample pick the min-size codec. Numeric chunks trial the whole
+chunk when small and contiguous windows otherwise; byte-string chunks trial
+a lengths+data slice of up to 256 strided values, on the same
+(lengths, data) codecs the chunk is then encoded with.
 
 Selection never affects correctness — every codec round-trips exactly — only
 size/speed, so sampling is safe.
@@ -24,13 +27,14 @@ entropy-backend choice, not a Python one):
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from cuda_float_compress_spark.codecs import core
 
 # Trial-encode the full chunk below this size; sample above it.
 _FULL_TRIAL_MAX = 4096
 _SAMPLE_VALUES = 1024
-_SAMPLE_BYTES = 1 << 16
 
 
 def _trial_size(encode, values) -> int:
@@ -94,53 +98,45 @@ def select_and_encode_int(
 
 
 def select_bytes_codec(
-    items: list, candidates: list[str] | None = None, profile: str = "ratio"
+    lengths: np.ndarray, data, profile: str = "ratio"
 ) -> str:
-    n = len(items)
-    if n == 0:
-        return "bytes_raw"
-    if candidates is None:
-        base = "bytes_zstd" if profile == "ratio" else "bytes_lz4"
-        cands = [base]
-        # low-cardinality detection on a value sample
-        step = max(1, n // _SAMPLE_VALUES)
-        sample_items = items[::step]
-        card = len({it for it in sample_items})
-        if card <= max(1, len(sample_items) // 2):
-            cands.append("bytes_dict")
-            cands.append("bytes_rle")
-        elif profile == "ratio":
-            # fsst trial only on high-cardinality string data, on a byte
-            # sample; dropped in throughput mode (trainer + encode pass cost
-            # more than the entire lz4 stage)
-            cands.append("bytes_fsst")
-    else:
-        cands = list(candidates)
+    """Min-size byte-string codec for the (lengths, data) of one chunk,
+    trialed on a lengths+data slice of up to 256 evenly strided values.
+    Low-cardinality samples add dict/rle to the bulk codec; otherwise the
+    ratio profile adds FSST when values are short (its sweet spot; long
+    documents go straight to zstd, which dominates there)."""
+    base = "bytes_zstd" if profile == "ratio" else "bytes_lz4"
+    n = len(lengths)
+    if n == 0 or len(data) == 0:
+        return base
+    sample = core.ld_to_arrow(lengths, data, "binary").take(
+        pa.array(np.arange(0, n, max(1, n // 256)))
+    )
+    s_lengths, s_data = core.bytes_ld(sample)
+    non_null = len(sample) - sample.null_count
+    card = pc.count_distinct(sample, mode="only_valid").as_py()
+    cands = [base]
+    if non_null and card <= max(1, non_null // 2):
+        cands += ["bytes_dict", "bytes_rle"]
+    # "short" is the CHUNK's bytes over the SAMPLE's values: above 256
+    # values this overstates the mean length by the stride, so FSST is
+    # trialed on long chunks only when their values are very short
+    elif profile == "ratio" and non_null and len(data) / non_null < 128:
+        cands.append("bytes_fsst")
     if len(cands) == 1:
-        return cands[0]
-    # build the trial sample
-    step = max(1, n // _SAMPLE_VALUES)
-    sample_items = items[::step]
-    total = 0
-    trial = []
-    for it in sample_items:
-        trial.append(it)
-        total += 0 if it is None else len(it)
-        if total > _SAMPLE_BYTES:
-            break
-    best, best_size = None, None
-    for name in cands:
-        size = _trial_size(core.BYTES_CODECS[name][0], trial)
-        if best_size is None or size < best_size:
-            best, best_size = name, size
-    return best
+        return base
+    return min(cands, key=lambda name: len(
+        core.BYTES_CODECS[name][0](s_lengths, s_data)[0]
+    ))
 
 
 def select_and_encode_bytes(
-    items: list, candidates: list[str] | None = None, profile: str = "ratio"
+    items: list, profile: str = "ratio"
 ) -> tuple[str, bytes, dict]:
-    codec = select_bytes_codec(items, candidates, profile)
-    payload, params = core.BYTES_CODECS[codec][0](items)
+    """List adapter: the engine's choice and encoding for list[bytes | None]."""
+    lengths, data = core.bytes_ld(pa.array(items, pa.large_binary()))
+    codec = select_bytes_codec(lengths, data, profile)
+    payload, params = core.BYTES_CODECS[codec][0](lengths, data)
     return codec, payload, params
 
 

@@ -42,8 +42,8 @@ def codec_trials_udtf():
 
             items = [text.encode("utf-8") if text is not None else None]
             raw = len(items[0]) if items[0] else 0
-            for name, (enc, _dec) in core.BYTES_CODECS.items():
-                payload, _ = enc(items)
+            for name in core.BYTES_CODECS:
+                payload, _ = core.encode_bytes_chunk(items, name)
                 yield name, len(payload), raw
 
     return CodecTrials

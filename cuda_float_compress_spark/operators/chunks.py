@@ -1,12 +1,16 @@
 """Typed column-chunk encode/decode: the bridge between Arrow record batches
-and the numpy codec kernels.
+and the codec tables in ``codecs/``. This module owns no codec. It maps an
+Arrow type to the engine's ptype, hands the values to ``codecs.core`` and
+lets ``codecs.select`` pick the codec; string/binary columns go in as
+``core.bytes_ld``'s (lengths, data), read straight from the offsets+data
+buffers with zero Python-object materialization (the Spark analog of the
+reference's register-resident hot loop, src/cuszplus_f32.cu:375).
 
-Works directly on Arrow buffers where possible (string/binary columns encode
-from the offsets+data buffers with zero Python-object materialization — the
-Spark analog of the reference's register-resident hot loop,
-src/cuszplus_f32.cu:375). Null handling is engine-level: a zstd'd validity
-bitmap section wraps the non-null payload, mirroring how the reference keeps
-its format concerns (padding, header) out of the core transform.
+What it adds is engine-level: a crc32 per payload in the params, and null
+handling — byte strings mark a null with length -1, other types wrap the
+non-null payload in a zstd'd validity bitmap section, mirroring how the
+reference keeps its format concerns (padding, header) out of the core
+transform.
 """
 
 from __future__ import annotations
@@ -76,103 +80,8 @@ def arrow_type_for(ptype: str) -> pa.DataType:
 
 
 # ---------------------------------------------------------------------------
-# Arrow <-> (lengths, data) / numpy extraction
+# Arrow -> numpy extraction
 # ---------------------------------------------------------------------------
-
-
-_EMPTY_U8 = np.empty(0, dtype=np.uint8)
-
-
-def _bytes_ld(arr: pa.Array, with_data: bool = True) -> tuple[np.ndarray, object]:
-    """(lengths[-1=null], concatenated data) from a string/binary array,
-    via buffers (no per-item Python objects). ``data`` is a ZERO-COPY
-    np.uint8 view into the Arrow buffer whenever the values are already
-    contiguous (a fresh copy only on the null-slots-hold-bytes repack
-    path) — every consumer (zstd/lz4 via pa.Codec, pack_sections' join,
-    np.frombuffer, pa.py_buffer) takes buffer-protocol objects, so the
-    old per-column ``.tobytes()`` copy was pure overhead on the encode
-    hot path. ``with_data=False`` skips the data entirely (lengths-only
-    callers like raw_size_of)."""
-    if not (
-        pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
-    ):
-        arr = arr.cast(
-            pa.large_string() if pa.types.is_string(arr.type) else pa.large_binary()
-        )
-    if isinstance(arr, pa.ChunkedArray):
-        # chunk(0) is zero-copy; combine_chunks copies even for one chunk
-        arr = arr.chunk(0) if arr.num_chunks == 1 else arr.combine_chunks()
-    n = len(arr)
-    bufs = arr.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=np.int64, count=n + 1, offset=arr.offset * 8)
-    lengths = np.diff(offsets).astype(np.int64)
-    data_buf = bufs[2]
-    if arr.null_count:
-        valid = np.array(arr.is_valid(), dtype=bool)
-        if (lengths[~valid] != 0).any():
-            marked = np.where(valid, lengths, -1)
-            if not with_data:
-                return marked, None
-            # a VALID Arrow array may keep bytes under null slots (sliced /
-            # externally-built buffers); slicing offsets[0]:offsets[-1] would
-            # then misalign every value after the null — repack instead
-            data_np = np.frombuffer(data_buf, dtype=np.uint8)
-            starts = offsets[:-1][valid]
-            lens_sel = lengths[valid]
-            total = int(lens_sel.sum())
-            if total:
-                cs = np.zeros(len(lens_sel), dtype=np.int64)
-                np.cumsum(lens_sel[:-1], out=cs[1:])
-                within = np.arange(total, dtype=np.int64) - np.repeat(cs, lens_sel)
-                data = data_np[np.repeat(starts, lens_sel) + within]
-            else:
-                data = _EMPTY_U8
-            return marked, data
-        lengths = np.where(valid, lengths, -1)
-    if not with_data:
-        return lengths, None
-    if data_buf is not None and offsets[-1] > offsets[0]:
-        data = np.frombuffer(data_buf, dtype=np.uint8)[
-            offsets[0] : offsets[-1]
-        ]
-    else:
-        data = _EMPTY_U8
-    return lengths, data
-
-
-def _ld_to_arrow(lengths: np.ndarray, data: bytes, ptype: str,
-                 validated: bool = True) -> pa.Array:
-    sizes = np.where(lengths >= 0, lengths, 0).astype(np.int64)
-    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
-    np.cumsum(sizes, out=offsets[1:])
-    null_mask = lengths < 0
-    validity = None
-    if null_mask.any():
-        validity = pa.py_buffer(np.packbits(~null_mask, bitorder="little").tobytes())
-    # large_string shares large_binary's buffer layout; building it directly
-    # skips the cast's UTF8 validation pass (~13% of the 1-core decode floor).
-    # Safe WHEN the payload's integrity was established (crc32 verified, or
-    # the caller opted out for a trusted read): the data buffer is then our
-    # own encoder's output, which only ever stored bytes from a valid Arrow
-    # string column. LEGACY tables carry no crc — there a storage bit-flip
-    # could otherwise smuggle invalid UTF-8 into an Arrow string array, so
-    # the validating cast stays on that path (validated=False).
-    if ptype == "string" and not validated:
-        binary = pa.Array.from_buffers(
-            pa.large_binary(), len(lengths),
-            [validity, pa.py_buffer(offsets), pa.py_buffer(data)],
-            null_count=int(null_mask.sum()),
-        )
-        return binary.cast(pa.large_string())  # raises ArrowInvalid on rot
-    at = pa.large_string() if ptype == "string" else pa.large_binary()
-    return pa.Array.from_buffers(
-        at,
-        len(lengths),
-        # py_buffer(offsets) wraps the numpy array zero-copy (and holds a
-        # reference); .tobytes() would add a full extra pass over offsets
-        [validity, pa.py_buffer(offsets), pa.py_buffer(data)],
-        null_count=int(null_mask.sum()),
-    )
 
 
 def _numeric_values_and_validity(arr: pa.Array, np_dtype) -> tuple[np.ndarray, np.ndarray | None]:
@@ -247,7 +156,7 @@ def raw_size_of(arr: pa.Array, ptype: str) -> int:
     """Logical uncompressed size (value bytes, nulls free) for ratio metrics."""
     if ptype in ("string", "binary"):
         # lengths-only: computing the size must not copy the data buffer
-        lengths, _ = _bytes_ld(arr, with_data=False)
+        lengths, _ = core.bytes_ld(arr, with_data=False)
         return int(np.where(lengths > 0, lengths, 0).sum())
     if ptype == "list_float32":
         flat = arr.flatten() if hasattr(arr, "flatten") else arr.values
@@ -269,12 +178,11 @@ def encode_column_chunk(
     n_nulls = arr.null_count
 
     if ptype in ("string", "binary"):
-        lengths, data = _bytes_ld(arr)
-        if codec_override:
-            codec = codec_override
-        else:
-            codec = _select_bytes_ld(lengths, data, profile)
-        payload, params = _LD_ENCODERS[codec](lengths, data)
+        lengths, data = core.bytes_ld(arr)
+        codec = codec_override or select.select_bytes_codec(
+            lengths, data, profile
+        )
+        payload, params = core.BYTES_CODECS[codec][0](lengths, data)
         return codec, payload, _params_with_crc(params, payload), n, n_nulls
 
     if ptype in ("timestamp_us", "timestamp_ntz", "int64", "int32", "date32"):
@@ -378,9 +286,9 @@ def _decode_column_chunk(
         integrity_checked = True
 
     if ptype in ("string", "binary"):
-        lengths, data = _LD_DECODERS[codec](payload, params, n)
-        return _ld_to_arrow(lengths, data, ptype,
-                            validated=integrity_checked)
+        lengths, data = core.BYTES_CODECS[codec][1](payload, params, n)
+        return core.ld_to_arrow(lengths, data, ptype,
+                                validated=integrity_checked)
 
     if ptype in ("timestamp_us", "timestamp_ntz", "int64", "int32", "date32"):
         inner, valid = _unwrap_nulls(payload, n, n_nulls)
@@ -413,237 +321,6 @@ def _numeric_to_arrow(vals: np.ndarray, valid: np.ndarray | None, ptype: str, n:
     full = np.zeros(n, dtype=vals.dtype)
     full[valid] = vals
     return pa.array(full, type=at, mask=~valid)
-
-
-# --- (lengths, data) fast-path encoders sharing the list-codec wire format ---
-
-
-def _ld_zstd_encode(lengths, data):
-    len_payload, len_params = core.int_delta_encode(lengths)
-    payload = core.pack_sections(len_payload, core.zstd_compress(data))
-    return payload, {
-        "l_first": len_params["first"], "l_width": len_params["width"],
-        "data_size": len(data),
-    }
-
-
-def _ld_zstd_decode(payload, params, n):
-    len_buf, data_buf = core.unpack_sections(payload)
-    lengths = core.int_delta_decode(
-        len_buf, {"first": params["l_first"], "width": params["l_width"]}, n
-    )
-    return lengths, core.zstd_decompress(data_buf, int(params["data_size"]))
-
-
-def _ld_lz4_encode(lengths, data):
-    len_payload, len_params = core.int_delta_encode(lengths)
-    payload = core.pack_sections(len_payload, core.lz4_compress(data))
-    return payload, {
-        "l_first": len_params["first"], "l_width": len_params["width"],
-        "data_size": len(data),
-    }
-
-
-def _ld_lz4_decode(payload, params, n):
-    len_buf, data_buf = core.unpack_sections(payload)
-    lengths = core.int_delta_decode(
-        len_buf, {"first": params["l_first"], "width": params["l_width"]}, n
-    )
-    return lengths, core.lz4_decompress(data_buf, int(params["data_size"]))
-
-
-def _ld_fsst_encode(lengths, data):
-    symbols = core.fsst_train(data)
-    enc = core.fsst_encode_bytes(data, symbols)
-    len_payload, len_params = core.int_delta_encode(lengths)
-    payload = core.pack_sections(
-        len_payload, core.fsst_serialize_table(symbols), core.zstd_compress(enc)
-    )
-    return payload, {
-        "l_first": len_params["first"], "l_width": len_params["width"],
-        "enc_size": len(enc), "data_size": len(data),
-    }
-
-
-def _ld_fsst_decode(payload, params, n):
-    len_buf, table_buf, enc_buf = core.unpack_sections(payload)
-    lengths = core.int_delta_decode(
-        len_buf, {"first": params["l_first"], "width": params["l_width"]}, n
-    )
-    symbols = core.fsst_deserialize_table(table_buf)
-    enc = core.zstd_decompress(enc_buf, int(params["enc_size"]))
-    return lengths, core.fsst_decode_bytes(enc, symbols)
-
-
-def _ld_raw_encode(lengths, data):
-    len_payload, len_params = core.int_delta_encode(lengths)
-    payload = core.pack_sections(len_payload, data)
-    return payload, {"l_first": len_params["first"], "l_width": len_params["width"]}
-
-
-def _ld_raw_decode(payload, params, n):
-    len_buf, data = core.unpack_sections(payload)
-    lengths = core.int_delta_decode(
-        len_buf, {"first": params["l_first"], "width": params["l_width"]}, n
-    )
-    return lengths, data
-
-
-# --- dict / dict+RLE in the (lengths, data) domain: Arrow dictionary_encode
-# for factorization (C++), ragged numpy gather for decode — no per-value
-# Python anywhere (the round-1 hot-path fix). Wire format identical to the
-# list-based core.bytes_dict/bytes_rle codecs.
-
-
-def _ld_factorize(lengths: np.ndarray, data: bytes):
-    arr = _ld_to_arrow(lengths, data, "binary")
-    dd = arr.dictionary_encode()
-    ind = dd.indices
-    if ind.null_count:
-        ind = ind.fill_null(-1)
-    codes = ind.to_numpy(zero_copy_only=False).astype(np.int64)
-    u_lengths, u_data = _bytes_ld(dd.dictionary)
-    return codes, u_lengths, u_data
-
-
-def _gather_ld(
-    u_lengths: np.ndarray, u_data: bytes, codes: np.ndarray
-) -> tuple[np.ndarray, bytes]:
-    """Expand dictionary codes (0 = null, 1..card) to (lengths, data)."""
-    if len(u_lengths) == 0:  # all-null chunk: empty dictionary, every code 0
-        return np.full(len(codes), -1, dtype=np.int64), b""
-    u_lengths = np.where(u_lengths >= 0, u_lengths, 0).astype(np.int64)
-    u_starts = np.zeros(len(u_lengths), dtype=np.int64)
-    if len(u_lengths) > 1:
-        np.cumsum(u_lengths[:-1], out=u_starts[1:])
-    out_lengths = np.where(
-        codes == 0, np.int64(-1), u_lengths[np.maximum(codes - 1, 0)]
-    )
-    sel = codes[codes > 0] - 1
-    lens_sel = u_lengths[sel]
-    total = int(lens_sel.sum())
-    if total == 0:
-        return out_lengths, b""
-    u_np = np.frombuffer(u_data, dtype=np.uint8)
-    cs = np.zeros(len(lens_sel), dtype=np.int64)
-    np.cumsum(lens_sel[:-1], out=cs[1:])
-    within = np.arange(total, dtype=np.int64) - np.repeat(cs, lens_sel)
-    data = u_np[np.repeat(u_starts[sel], lens_sel) + within].tobytes()
-    return out_lengths, data
-
-
-def _ld_dict_encode(lengths, data):
-    codes, u_lengths, u_data = _ld_factorize(lengths, data)
-    len_payload, len_params = core.int_delta_encode(u_lengths)
-    dict_payload = core.pack_sections(len_payload, core.zstd_compress(u_data))
-    codes_payload, codes_params = core.int_for_encode(codes + 1)  # 0 = null
-    payload = core.pack_sections(dict_payload, codes_payload)
-    return payload, {
-        "card": len(u_lengths),
-        "d_l_first": len_params["first"], "d_l_width": len_params["width"],
-        "d_data_size": len(u_data),
-        "c_ref": codes_params["ref"], "c_width": codes_params["width"],
-    }
-
-
-def _ld_dict_decode(payload, params, n):
-    dict_buf, codes_buf = core.unpack_sections(payload)
-    u_len_buf, u_data_buf = core.unpack_sections(dict_buf)
-    card = int(params["card"])
-    u_lengths = core.int_delta_decode(
-        u_len_buf, {"first": params["d_l_first"], "width": params["d_l_width"]}, card
-    )
-    u_data = core.zstd_decompress(u_data_buf, int(params["d_data_size"]))
-    codes = core.int_for_decode(
-        codes_buf, {"ref": params["c_ref"], "width": params["c_width"]}, n
-    )
-    return _gather_ld(u_lengths, u_data, codes)
-
-
-def _ld_rle_encode(lengths, data):
-    codes, u_lengths, u_data = _ld_factorize(lengths, data)
-    len_payload, len_params = core.int_delta_encode(u_lengths)
-    dict_payload = core.pack_sections(len_payload, core.zstd_compress(u_data))
-    codes_payload, codes_params = core.int_rle_encode(codes + 1)
-    payload = core.pack_sections(dict_payload, codes_payload)
-    return payload, {
-        "card": len(u_lengths),
-        "d_l_first": len_params["first"], "d_l_width": len_params["width"],
-        "d_data_size": len(u_data),
-        "r": codes_params,
-    }
-
-
-def _ld_rle_decode(payload, params, n):
-    dict_buf, codes_buf = core.unpack_sections(payload)
-    u_len_buf, u_data_buf = core.unpack_sections(dict_buf)
-    card = int(params["card"])
-    u_lengths = core.int_delta_decode(
-        u_len_buf, {"first": params["d_l_first"], "width": params["d_l_width"]}, card
-    )
-    u_data = core.zstd_decompress(u_data_buf, int(params["d_data_size"]))
-    codes = core.int_rle_decode(codes_buf, params["r"], n)
-    return _gather_ld(u_lengths, u_data, codes)
-
-
-_LD_ENCODERS = {
-    "bytes_zstd": _ld_zstd_encode,
-    "bytes_lz4": _ld_lz4_encode,
-    "bytes_fsst": _ld_fsst_encode,
-    "bytes_raw": _ld_raw_encode,
-    "bytes_dict": _ld_dict_encode,
-    "bytes_rle": _ld_rle_encode,
-}
-_LD_DECODERS = {
-    "bytes_zstd": _ld_zstd_decode,
-    "bytes_lz4": _ld_lz4_decode,
-    "bytes_fsst": _ld_fsst_decode,
-    "bytes_raw": _ld_raw_decode,
-    "bytes_dict": _ld_dict_decode,
-    "bytes_rle": _ld_rle_decode,
-}
-
-
-def _select_bytes_ld(
-    lengths: np.ndarray, data: bytes, profile: str = "ratio"
-) -> str:
-    """Min-size codec selection from a value sample, without materializing
-    the full chunk as Python objects. ``profile='throughput'`` swaps the
-    zstd bulk codec for lz4 and drops the FSST trial (see codecs/select.py)."""
-    base = "bytes_zstd" if profile == "ratio" else "bytes_lz4"
-    n = len(lengths)
-    if n == 0 or len(data) == 0:
-        return base
-    step = max(1, n // 256)
-    sizes = np.where(lengths >= 0, lengths, 0)
-    ends = np.cumsum(sizes)
-    starts = ends - sizes
-    idx = np.arange(0, n, step)
-    sample = [
-        # bytes() copies ~256 small values — required: np-view slices are
-        # unhashable, and the trial codecs hash/compare sample items
-        None if lengths[i] < 0 else bytes(data[starts[i] : ends[i]])
-        for i in idx
-    ]
-    non_null = [s for s in sample if s is not None]
-    card = len(set(non_null))
-    cands = [base]
-    if non_null and card <= max(1, len(non_null) // 2):
-        cands += ["bytes_dict", "bytes_rle"]
-    # FSST trial only when values are short-ish strings (its sweet spot);
-    # long documents go straight to zstd which dominates there.
-    elif (profile == "ratio" and non_null
-          and (len(data) / max(1, len(non_null))) < 128):
-        cands.append("bytes_fsst")
-    if len(cands) == 1:
-        return cands[0]
-    best, best_size = None, None
-    for name in cands:
-        enc = core.BYTES_CODECS[name][0]
-        size = len(enc(sample)[0])
-        if best_size is None or size < best_size:
-            best, best_size = name, size
-    return best
 
 
 # --- list<float32> (embedding vectors): offsets + flat values ---------------
@@ -692,7 +369,7 @@ def _decode_list_float(payload: bytes, params: dict, n: int, n_nulls: int) -> pa
     if valid is None:
         return nn_arr
     # re-insert nulls Arrow-natively: null slots get zero-length offsets and
-    # a validity bitmap (mirrors _ld_to_arrow for binary) — the old
+    # a validity bitmap (mirrors core.ld_to_arrow for binary) — the old
     # to_pylist() + per-row loop was the only Python-per-row path left on
     # nullable embedding decode
     full_lengths = np.zeros(n, dtype=np.int64)

@@ -131,6 +131,68 @@ def test_bytes_codec_roundtrip(codec, fixture):
     assert out == items
 
 
+#: sha256 over a chunk's payload bytes then ``json.dumps(params)``, per
+#: (codec, fixture); see the test below.
+BYTES_WIRE_SHA256 = {
+    ("bytes_dict", "low_card"):
+        "e8ab9c73be2189294beada660df0bbac165afa85497cfc8759505dd7f303062b",
+    ("bytes_dict", "prose"):
+        "6c63d4f4def884b391890aa90318138dc2c0d0dea8045ffec9c7f0b9a22ae821",
+    ("bytes_dict", "with_nulls"):
+        "41ee3c461252fff6d51829ff47611a3be8bd00e0aebab63bfbfa81affa0041b9",
+    ("bytes_fsst", "low_card"):
+        "184716e65687810c9e9159c2305c413aa3d7e0779042ea8cbf5f5d47c97ce16d",
+    ("bytes_fsst", "prose"):
+        "2467e28633b70579a7d2dbec917e858be47ad4089fda6e6952d5f51175f033ac",
+    ("bytes_fsst", "with_nulls"):
+        "d8fd610390f36ab982d98186a86706155d159682f1d4122ec93b491b213c7824",
+    ("bytes_lz4", "low_card"):
+        "0fa281d6c5be23df06cc7790e0cac33564861ad4d3a1be40393978b2587216de",
+    ("bytes_lz4", "prose"):
+        "fefdd4e4b3ba425979cd72a7f4a43d40bc5058f6329a8a07b4962354cf57f0c6",
+    ("bytes_lz4", "with_nulls"):
+        "607ef95c17cb9fb484486f251dfa9c076cdca68a3cf3a8bb00b4581fe97c185d",
+    ("bytes_raw", "low_card"):
+        "fa47f6fd67fd94559601635aea0893a073c50850e20594210ea13e6ce12ee59d",
+    ("bytes_raw", "prose"):
+        "fa796baf96594b968d0b66bfe4b981c9087c3aebbb8a74856225858bedba6be4",
+    ("bytes_raw", "with_nulls"):
+        "3c5ef1b72d79416ac6fab5fbac97b5aaaed6e82b9b3889d30df2483e1112ad31",
+    ("bytes_rle", "low_card"):
+        "250c811714a2bf70128172975cfdafbf750dacae85eeb0350968519c74d6de83",
+    ("bytes_rle", "prose"):
+        "7cb041adbb709b567b5d5b8f015bd477e4048198b7b36c66f53cbac23b4d81e3",
+    ("bytes_rle", "with_nulls"):
+        "ad847c0cdff700f98f5c3571a4bf6d54aff248307cc5a0f5bc594ca0f440f836",
+    ("bytes_zstd", "low_card"):
+        "cb85c87a8bc4aef2d4c78b349c0e6ba22b3ca4ffbfcad4bf6308fe0ba88d9cda",
+    ("bytes_zstd", "prose"):
+        "09eb72df3dc7255f196a4c55357224dd6b1f167f22c371aa51dc7c1e103070b4",
+    ("bytes_zstd", "with_nulls"):
+        "0ca94946c9bfd43220a45740d1c17fcfde48f44566c422dca728dbeca5c80ee6",
+}
+
+
+def test_bytes_wire_format_pinned():
+    """Payload and params of every byte-string codec are stored per chunk,
+    so a table written once must decode forever: the wire format may not
+    drift. The digests were recorded at commit 50f633c, before the list
+    codecs and the engine's lengths+data copy of them were folded into one
+    table, and must hold unchanged through any refactor of that table."""
+    import hashlib
+    import json
+
+    drift = []
+    for (codec, fixture), want in sorted(BYTES_WIRE_SHA256.items()):
+        payload, params = core.encode_bytes_chunk(BYTES_FIXTURES[fixture], codec)
+        got = hashlib.sha256(
+            bytes(payload) + json.dumps(params).encode()
+        ).hexdigest()
+        if got != want:
+            drift.append((codec, fixture))
+    assert not drift, f"byte-string wire format changed: {drift}"
+
+
 # --- float codecs ------------------------------------------------------------
 
 
@@ -297,7 +359,7 @@ def test_bytes_ld_null_slots_with_extents():
         [validity, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)],
         null_count=1,
     )
-    lengths, d = C._bytes_ld(arr)
+    lengths, d = core.bytes_ld(arr)
     assert list(lengths) == [3, -1, 4]
     assert bytes(d) == b"abcdefg"  # np-view data: compare by content
     codec, payload, params, n, n_nulls = C.encode_column_chunk(arr, "binary")
@@ -308,11 +370,9 @@ def test_bytes_ld_null_slots_with_extents():
 def test_bytes_ld_sliced_array():
     import pyarrow as pa
 
-    from cuda_float_compress_spark.operators import chunks as C
-
     arr = pa.array([b"aa", b"bbb", None, b"cccc", b"d"], type=pa.large_binary())
     sl = arr.slice(1, 3)
-    lengths, d = C._bytes_ld(sl)
+    lengths, d = core.bytes_ld(sl)
     assert list(lengths) == [3, -1, 4]
     assert bytes(d) == b"bbbcccc"
 

@@ -11,7 +11,10 @@ or a call of ``encode._encode_chunk_to_rows`` outside the cutter.
 Block files are read through the Snapshot's file groups alone: a Spark
 read of ``blocks/`` outside ``decode.blocks_of`` (the public Spark view
 kept for tools and probes) fails, and so does any call of
-``committed_blocks`` from the package."""
+``committed_blocks`` from the package.
+
+Byte-string codecs have one table, ``codecs/core.BYTES_CODECS``: a second
+codec table or an encoder/decoder under ``operators/`` fails."""
 from __future__ import annotations
 
 import ast
@@ -99,4 +102,29 @@ def test_no_spark_read_of_blocks():
     assert not stray, (
         "block rows read through Spark outside decode.blocks_of:\n"
         + "\n".join(stray)
+    )
+
+
+def test_one_bytes_codec_table():
+    """Byte-string codecs have one home, ``codecs/core.py``. The engine
+    once kept its own lengths+data copy of every codec beside the list
+    codecs there, so the stored format of string and binary chunks was
+    defined twice and two copies had to agree byte for byte. Fails on a
+    dict literal keyed ``"bytes_zstd"`` (a codec table) outside
+    ``codecs/core.py``, or on a function named ``*_encode``/``*_decode``
+    in a module under ``operators/``."""
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (isinstance(node, ast.Dict) and rel != "codecs/core.py"
+                    and any(isinstance(k, ast.Constant)
+                            and k.value == "bytes_zstd" for k in node.keys)):
+                stray.append(f"{rel}:{node.lineno}: bytes codec table")
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and rel.startswith("operators/")
+                    and node.name.endswith(("_encode", "_decode"))):
+                stray.append(f"{rel}:{node.lineno}: {node.name}")
+    assert not stray, (
+        "byte-string codec outside codecs/core.py:\n" + "\n".join(stray)
     )

@@ -46,8 +46,8 @@ def test_int_selector_roundtrip_and_never_worst(values):
     st.sampled_from(sorted(core.BYTES_CODECS)),
 )
 def test_bytes_codecs_roundtrip_any_bytes(items, codec):
-    payload, params = core.BYTES_CODECS[codec][0](items)
-    out = core.BYTES_CODECS[codec][1](payload, params, len(items))
+    payload, params = core.encode_bytes_chunk(items, codec)
+    out = core.decode_bytes_chunk(payload, codec, params, len(items))
     assert out == items, codec
 
 
@@ -67,15 +67,34 @@ def test_float_codecs_bit_exact_incl_nan_inf(values, codec):
     assert np.array_equal(out.view(np.uint32), v.view(np.uint32)), codec
 
 
-@settings(max_examples=40, deadline=None)
-@given(st.lists(st.one_of(st.none(), st.binary(max_size=48)), max_size=100))
-def test_arrow_binary_column_chunk_roundtrip(items):
+@settings(max_examples=60, deadline=None)
+@given(
+    st.one_of(
+        st.tuples(st.just("binary"), st.lists(
+            st.one_of(st.none(), st.binary(max_size=48)), max_size=100)),
+        st.tuples(st.just("string"), st.lists(
+            st.one_of(st.none(), st.text(max_size=24)), max_size=100)),
+    ),
+    st.sampled_from(sorted(core.BYTES_CODECS) + [None]),
+)
+def test_arrow_binary_column_chunk_roundtrip(typed_items, codec_override):
+    # every codec (None = auto selection) on the engine path, for binary and
+    # string chunks; the params without their crc decode as a legacy table
+    # does, through ld_to_arrow's validating string cast
+    import json
+
     import pyarrow as pa
 
-    arr = pa.array(items, type=pa.large_binary())
-    codec, payload, params, n, n_nulls = C.encode_column_chunk(arr, "binary")
-    out = C.decode_column_chunk(payload, codec, params, n, n_nulls, "binary")
-    assert out.to_pylist() == items, codec
+    ptype, items = typed_items
+    arr = pa.array(items, type=C.arrow_type_for(ptype))
+    codec, payload, params, n, n_nulls = C.encode_column_chunk(
+        arr, ptype, codec_override
+    )
+    legacy = json.loads(params)
+    del legacy["_crc"]
+    for pj in (params, json.dumps(legacy)):
+        out = C.decode_column_chunk(payload, codec, pj, n, n_nulls, ptype)
+        assert out.to_pylist() == items, codec
 
 
 @settings(max_examples=30, deadline=None)

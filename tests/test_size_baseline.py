@@ -27,7 +27,7 @@ def test_engine_size_le_zstd_baseline_per_column():
         # stand-in: zstd-1 on the raw column bytes (values concatenated,
         # lengths separately zstd'd — the minimal self-describing layout)
         if ptype in ("string", "binary"):
-            lengths, data = C._bytes_ld(arr)
+            lengths, data = core.bytes_ld(arr)
             baseline = len(core.zstd_compress(data)) + len(
                 core.zstd_compress(lengths.tobytes())
             )
