@@ -8,16 +8,23 @@ run_id)`` pairs and of kept chunks, refuses a ``(part_id, chunk_id,
 col)`` seen twice, null-fills columns a chunk predates and casts to the
 standard Arrow types.
 
+It is also the one row filter: it drops each chunk's tombstoned rows
+and the rows :func:`exact_mask` (Spark SQL semantics over the decoded
+Arrow arrays) rejects, so every reader returns the same rows for the
+same predicate, and no join or filter runs after the decode.
+
 The Spark transport reads block files inside the Python workers. Chunk
 pruning (:func:`prune`) runs on the driver over ``Snapshot.chunk_stats``;
 ``Snapshot.file_groups`` splits the block files into groups that share
 no chunk, and only the groups holding a kept chunk are LPT-packed into
 one task per core. Each task reads its groups with pyarrow, so block
-rows are never shuffled and decoded rows cross into the JVM once.
-Columns a read does not want are never decoded.
+rows are never shuffled and decoded rows cross into the JVM once, after
+the row filter. Columns a read does not want are never decoded.
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 import pyarrow as pa
@@ -178,24 +185,37 @@ _EXACT_STAT_PTYPES = (
 )
 
 
+# the range ops, each with its Arrow comparison
+_CMP = {"<": pc.less, "<=": pc.less_equal, ">": pc.greater,
+        ">=": pc.greater_equal}
+
+
+def _literal(op: str, value, ptype: str) -> tuple[str, list, list]:
+    """How a predicate is read, by the pruner and the row filter alike:
+    its op (``=`` is ``==``), its non-null members (one unless ``in``; a
+    null literal matches no row) and their :func:`_predicate_value`
+    keys."""
+    if op not in ("==", "=", "in", *_CMP):
+        raise ValueError(f"unsupported predicate op: {op!r}")
+    members = [m for m in (value if op == "in" else [value])
+               if m is not None]
+    return (("==" if op == "=" else op), members,
+            [_predicate_value(m, ptype) for m in members])
+
+
 def _keep_mask(rows: pa.Table, op: str, value, ptype: str,
                covered: bool) -> pa.Array:
     """Per stats row of one predicate's column: might the predicate hold
     for some row of the chunk (``covered``: provably for every row)?"""
     vmin, vmax = rows["vmin"], rows["vmax"]
-    if op == "=":
-        op = "=="
-    if op not in ("==", "<", "<=", ">", ">=", "in"):
-        raise ValueError(f"unsupported predicate op: {op}")
-    members = value if op == "in" else [value]
-    keys = [_predicate_value(m, ptype) for m in members]
+    op, members, keys = _literal(op, value, ptype)
+    if not members:
+        return pa.array([False] * rows.num_rows)
     if covered:
         # nulls fail every predicate, so a chunk holding any is never
         # covered; only exact stats can prove a bound
-        cmp = {">=": pc.greater_equal, ">": pc.greater,
-               "<=": pc.less_equal, "<": pc.less}
-        if op in cmp:
-            hit = cmp[op](vmax if op[0] == "<" else vmin, keys[0])
+        if op in _CMP:
+            hit = _CMP[op](vmax if op[0] == "<" else vmin, keys[0])
         else:
             hit = pa.array([False] * rows.num_rows)
             for k in keys:
@@ -303,41 +323,53 @@ def qualifying_parts(
         man, [pr for pr in predicates if pr[0] in known], keys=("part_id",)))
 
 
-def _exact_condition(predicates: list[tuple], ptypes: dict):
-    """AND-of-predicates as one boolean Column (the row-exact twin of the
-    zone-map prune)."""
-    import datetime as _dt
-
-    def conv(col, value):
-        """Normalize one literal + the column expression for comparison."""
-        if ptypes.get(col) in _TS_PTYPES:
-            return (F.unix_micros(F.col(col).cast("timestamp")),
-                    _predicate_value(value, ptypes[col]))
-        if ptypes.get(col) == "date32":
-            if isinstance(value, _dt.datetime):
-                value = value.date()
-            elif isinstance(value, int):  # days-since-epoch literal
-                value = _dt.date(1970, 1, 1) + _dt.timedelta(days=value)
-            return F.col(col), value
-        return F.col(col), value
-
-    cond = F.lit(True)
-    for col, op, value in predicates:
-        if op == "in":
-            pairs = [conv(col, member) for member in value]
-            c = pairs[0][0] if pairs else F.col(col)
-            cond = cond & c.isin([v for _, v in pairs])
-            continue
-        c, value = conv(col, value)
-        cond = cond & (
-            {"<": c < value, "<=": c <= value, ">": c > value,
-             ">=": c >= value, "==": c == value, "=": c == value}[op]
-        )
-    return cond
+def _row_match(arr: pa.Array, ptype: str, op: str, value) -> pa.Array:
+    """Per row of one decoded column: does ``(op, value)`` hold?"""
+    op, members, keys = _literal(op, value, ptype)
+    if not members:
+        return pa.repeat(pa.scalar(False), len(arr))
+    if ptype in ("date32",) + _TS_PTYPES:
+        arr = arr.cast(pa.int32() if ptype == "date32" else pa.int64())
+        members = keys
+    elif ptype in ("float32", "float64"):
+        # adding 0.0 folds -0.0 into 0.0 (``keys`` refused a NaN literal)
+        arr = pc.add(arr.cast(pa.float64()), 0.0)
+        members = [float(m) + 0.0 for m in members]
+    if op in _CMP:
+        hit = _CMP[op](arr, members[0])
+        if op[0] == ">" and ptype in ("float32", "float64"):
+            hit = pc.or_(hit, pc.is_nan(arr))  # NaN is above every value
+    else:
+        hit = pc.is_in(arr, value_set=pa.array(members))
+    return pc.fill_null(hit, False)
 
 
-def _exact_filter(df: DataFrame, predicates: list[tuple], ptypes: dict) -> DataFrame:
-    return df.filter(_exact_condition(predicates, ptypes))
+def exact_mask(cols: list[tuple[str, str]], arrays: list[pa.Array],
+               predicates: list[tuple] | None = None,
+               any_of: list[list[tuple]] | None = None) -> pa.Array:
+    """Per row of one decoded chunk (``arrays``, one per ``cols`` entry,
+    holding every predicate column): does it satisfy all ``predicates``
+    and one conjunction of ``any_of``? The one exact row filter;
+    :func:`assemble_chunks` calls it for every reader. It follows Spark
+    SQL, in the order the zone maps encode: nulls match nothing, ``in``
+    is ``==`` to any of its non-null members, NaN is greater than every
+    value (a NaN literal is refused), -0.0 equals 0.0, float32 compares
+    as float64, and date and timestamp literals compare as
+    :func:`_predicate_value` days and microseconds."""
+    by_name, ptypes = dict(zip((c for c, _ in cols), arrays)), dict(cols)
+    true = pa.repeat(pa.scalar(True), len(arrays[0]))
+
+    def conj(preds):
+        hit = true
+        for col, op, value in preds:
+            hit = pc.and_(hit, _row_match(by_name[col], ptypes[col], op,
+                                          value))
+        return hit
+
+    mask = conj(predicates or [])
+    if any_of:
+        mask = pc.and_(mask, functools.reduce(pc.or_, map(conj, any_of)))
+    return mask
 
 
 _BLOCK_COLS = ["part_id", "chunk_id", "col", "codec", "n", "n_nulls",
@@ -355,35 +387,64 @@ def read_group(fs, files: list[str]) -> pa.Table:
             else pa.concat_tables(tbls, promote_options="permissive"))
 
 
-def kept_groups(snap: Snapshot, keep: set | None) -> list[list[tuple]]:
-    """The ``[(path, size)]`` file lists of the groups holding a chunk of
+def kept_groups(snap: Snapshot, keep: set | None) -> list[tuple]:
+    """The ``(files, keys)`` file groups of ``snap`` holding a chunk of
     ``keep`` (every group when None)."""
-    return [files for files, keys in snap.file_groups
+    return [(files, keys) for files, keys in snap.file_groups
             if keep is None or not keys.isdisjoint(keep)]
 
 
-def group_frame(spark: SparkSession, groups: list[list[tuple]]) -> DataFrame:
-    """One ``files array<string>`` row per file group (``[(path, size)]``
-    lists), LPT-packed by bytes into one task per core: the task plan of
-    the decode transport and of the maintenance jobs that run on it."""
-    return lpt_frame(spark, [([p for p, _ in files],) for files in groups],
-                     [sum(size for _, size in files) for files in groups],
-                     "files array<string>", per_core=1)[0]
+def group_frame(spark: SparkSession, groups: list[tuple],
+                deleted: dict | None = None) -> DataFrame:
+    """One row per file group (``(files, keys)``: ``[(path, size)]`` and
+    chunk keys, as ``Snapshot.file_groups``), LPT-packed by bytes into
+    one task per core: the task plan of the decode transport and of the
+    maintenance jobs that run on it. A row carries its paths and the
+    ``deleted`` positions of its own chunks, so a task receives the
+    tombstones of its groups, never the table's whole set. Read the
+    rows back with :func:`frame_groups`."""
+    rows = [([p for p, _ in files],
+             [(*k, deleted[k].tolist()) for k in keys if k in deleted]
+             if deleted else [])
+            for files, keys in groups]
+    return lpt_frame(spark, rows,
+                     [sum(size for _, size in files) for files, _ in groups],
+                     "files array<string>, deleted array<struct<part_id: "
+                     "int, chunk_id: bigint, pos: array<bigint>>>",
+                     per_core=1)[0]
+
+
+def frame_groups(batches):
+    """``(paths, deleted)`` per :func:`group_frame` row of a task's Arrow
+    batches; ``deleted`` is the ``deleted`` argument of
+    :func:`assemble_chunks`."""
+    for batch in batches:
+        for files, dels in zip(batch.column("files").to_pylist(),
+                               batch.column("deleted").to_pylist()):
+            yield files, {(d["part_id"], d["chunk_id"]):
+                          np.array(d["pos"], dtype=np.int64) for d in dels}
 
 
 def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
                     pairs: frozenset | None = None, keep: set | None = None,
-                    deleted: dict | None = None, verify: bool = True):
+                    deleted: dict | None = None, verify: bool = True,
+                    predicates: list[tuple] | None = None,
+                    any_of: list[list[tuple]] | None = None):
     """Decode the chunks of ``blocks``, the block rows of one file group
     (or one part), in ``(part_id, chunk_id)`` order. Yields ``(part_id,
-    chunk_id, n_rows, arrays)`` with one array per ``cols`` entry.
+    chunk_id, pos, arrays)``: one array per ``cols`` entry holding the
+    chunk's kept rows, and ``pos``, each kept row's int64 position in the
+    chunk as written (the ``_pos`` address, before any delete).
 
     Rows outside the committed ``pairs`` or the ``keep`` chunk keys (None:
     no filter) are skipped. A ``(part_id, chunk_id, col)`` seen twice
     raises ``ValueError``: one of the rows would silently win. A column
     the chunk predates decodes as nulls, so a chunk holding no wanted
-    column still yields its rows. ``deleted`` maps a chunk key to row
-    positions to drop (tombstones applied in place)."""
+    column still yields its rows. ``deleted`` maps a chunk key to the
+    row positions its tombstones drop; ``predicates`` (AND) and
+    ``any_of`` (OR of conjunctions) keep only the rows
+    :func:`exact_mask` passes, so their columns must be in ``cols``. A
+    chunk with neither is yielded as decoded."""
     part, chunk, names, codecs, ns, nnulls, params, runs = (
         blocks[c].to_pylist() for c in _BLOCK_COLS[:-1])
     payloads = blocks["payload"]
@@ -414,20 +475,24 @@ def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
             if not arr.type.equals(_STD_ARROW[ptype]):
                 arr = arr.cast(_STD_ARROW[ptype])
             arrays.append(arr)
+        live = (exact_mask(cols, arrays, predicates, any_of).to_numpy(
+            zero_copy_only=False) if predicates or any_of else None)
         gone = (deleted or {}).get(key)
-        if gone:
-            mask = np.ones(n_rows, dtype=bool)
-            mask[[g for g in gone if g < n_rows]] = False
-            n_rows = int(mask.sum())
-            arrays = [a.filter(pa.array(mask)) for a in arrays]
-        yield key[0], key[1], n_rows, arrays
+        if gone is not None:
+            live = np.ones(n_rows, dtype=bool) if live is None else live
+            live[gone[gone < n_rows]] = False
+        if live is None:
+            yield key[0], key[1], np.arange(n_rows), arrays
+        else:
+            kept = pa.array(live)
+            yield (key[0], key[1], np.flatnonzero(live),
+                   [a.filter(kept) for a in arrays])
 
 
 def decode_table(
     spark: SparkSession,
     out_dir: str,
     columns: list[str] | None = None,
-    keep_part_id: bool = False,
     predicates: list[tuple] | None = None,
     as_of: float | None = None,
     parts: list[int] | None = None,
@@ -440,34 +505,31 @@ def decode_table(
     """Decode the encoded table (also importable as
     ``operators.direct.decode_table_direct``).
 
-    ``predicates``: [(col, op, literal)] with op in <, <=, ==, >=, >, in
-    (AND). Zone maps and Bloom filters prune whole chunks on the driver
+    ``predicates``: [(col, op, literal)] with op in <, <=, ==, =, >=, >,
+    in (AND). Zone maps and Bloom filters prune whole chunks on the driver
     before any payload is read (the encoded format's analog of parquet
-    predicate pushdown); the exact filter then runs on the decoded rows.
+    predicate pushdown); the exact row filter, :func:`exact_mask`, then
+    runs in the decode task on each decoded chunk.
     ``any_of``: a DISJUNCTION of conjunctions, [[...], [...]] meaning
     (conj1 OR conj2): chunk pruning keeps the UNION of each
-    conjunction's chunks and the exact row filter is the matching OR.
+    conjunction's chunks and the row filter is the matching OR.
     Composes with ``predicates`` as a further AND.
     ``as_of`` / ``since`` (epoch seconds): lineage-timestamp snapshot and
     incremental windows (see ``snapshot.Snapshot``).
     ``parts``: decode only these part ids (incremental consumers: the
-    part_id is the unit of progress). ``keep_part_id``: emit ``part_id``
-    as the first column.
+    part_id is the unit of progress).
     ``chunk_keys``: decode only these ``(part_id << 32 | chunk_id)`` keys
     (metadata_agg decodes only its BOUNDARY chunks this way).
     ``parts``, ``chunk_keys`` and predicate pruning intersect.
-    ``apply_deletes``: anti-join committed tombstones (operators/deletes),
-    on by default so merge-on-read deletes are never resurrected.
+    ``apply_deletes``: drop the rows of committed tombstones
+    (operators/deletes) in the decode task, on by default so
+    merge-on-read deletes are never resurrected.
     ``with_row_address``: emit the stable (_part_id, _chunk_id, _pos)
-    address columns last (delete_rows computes tombstones from them)."""
-    from cuda_float_compress_spark.operators.deletes import (
-        ADDRESS_COLS,
-        _tombstones,
-        anti_join_tombstones,
-    )
+    address columns last (delete_rows computes tombstones from them).
 
+    The returned DataFrame is the decode task's output as it is: no
+    join, filter or projection runs after it."""
     snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
-    all_ptypes = dict(snap.columns)
     cols = snap.columns
     if columns is not None:
         want = set(columns) | {c for c, _, _ in (predicates or [])} | {
@@ -484,57 +546,34 @@ def decode_table(
                          if k[0] in ps})
     for r in restrict:
         keep = r if keep is None else keep & r
-    tombs = _tombstones(spark, snap) if apply_deletes else None
-    address = with_row_address or tombs is not None
 
-    fields = [pa.field(c, _STD_ARROW[p]) for c, p in cols]
-    if keep_part_id:
-        fields.insert(0, pa.field("part_id", pa.int32()))
-    if address:
-        fields += [pa.field("_part_id", pa.int32()),
-                   pa.field("_chunk_id", pa.int64()),
-                   pa.field("_pos", pa.int64())]
-    arrow_schema = pa.schema(fields)
-    out_schema = ", ".join(
-        ([] if not keep_part_id else ["part_id int"])
-        + [f"`{c}` {_SPARK_TYPE[p]}" for c, p in cols]
-        + ([] if not address
-           else ["_part_id int", "_chunk_id bigint", "_pos bigint"]))
+    out = [i for i, (c, _) in enumerate(cols)
+           if columns is None or c in columns]
+    emit = [cols[i] for i in out] + (
+        [("_part_id", "int32"), ("_chunk_id", "int64"), ("_pos", "int64")]
+        if with_row_address else [])
+    arrow_schema = pa.schema([pa.field(c, _STD_ARROW[p]) for c, p in emit])
+    out_schema = ", ".join(f"`{c}` {_SPARK_TYPE[p]}" for c, p in emit)
 
     # the workers read block files directly with pyarrow, so the lineage
-    # trust filter and the kept keys ship as closure sets (metadata-scale)
-    groups_df = group_frame(spark, kept_groups(snap, keep))
+    # trust filter and the kept keys ship as closure sets
+    # (metadata-scale); each group's deleted positions ride in its row
+    groups_df = group_frame(spark, kept_groups(snap, keep),
+                            snap.deleted_positions if apply_deletes else None)
     fs, pairs = snap.fs, snap.pairs
 
     def decode_groups(batches):
-        for batch in batches:
-            for files in batch.column("files").to_pylist():
-                for part_id, chunk_id, n, arrays in assemble_chunks(
-                        read_group(fs, files), cols, pairs, keep):
-                    if keep_part_id:
-                        arrays.insert(0, pa.array(
-                            np.full(n, part_id, dtype=np.int32)))
-                    if address:
-                        arrays += [
-                            pa.array(np.full(n, part_id, dtype=np.int32)),
-                            pa.array(np.full(n, chunk_id, dtype=np.int64)),
-                            pa.array(np.arange(n, dtype=np.int64))]
-                    yield pa.RecordBatch.from_arrays(arrays,
-                                                     schema=arrow_schema)
+        for files, deleted in frame_groups(batches):
+            for part_id, chunk_id, pos, arrays in assemble_chunks(
+                    read_group(fs, files), cols, pairs, keep, deleted,
+                    predicates=predicates, any_of=any_of):
+                arrays = [arrays[i] for i in out]
+                if with_row_address:
+                    n = len(pos)
+                    arrays += [
+                        pa.array(np.full(n, part_id, dtype=np.int32)),
+                        pa.array(np.full(n, chunk_id, dtype=np.int64)),
+                        pa.array(pos)]
+                yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
-    decoded = groups_df.mapInArrow(decode_groups, schema=out_schema)
-    if tombs is not None:
-        decoded = anti_join_tombstones(decoded, tombs)
-    if predicates:
-        decoded = _exact_filter(decoded, predicates, all_ptypes)
-    if any_of:
-        disj = F.lit(False)
-        for conj in any_of:
-            disj = disj | _exact_condition(conj, all_ptypes)
-        decoded = decoded.filter(disj)
-    out = ((["part_id"] if keep_part_id else [])
-           + [c for c, _ in cols if columns is None or c in set(columns)]
-           + (list(ADDRESS_COLS) if with_row_address else []))
-    if out != decoded.columns:
-        decoded = decoded.select(*out)
-    return decoded
+    return groups_df.mapInArrow(decode_groups, schema=out_schema)

@@ -16,10 +16,12 @@ Mechanics:
   a fully distributed job: only row ADDRESSES cross the wire, never row
   data, and the Spark job-commit ``_SUCCESS`` marker makes the tombstone
   set atomic (readers ignore half-written delete dirs).
-* The Spark decode transport (``decode.decode_table``) anti-joins
-  committed tombstones on the address key; AQE broadcasts the tombstone
-  side when it is small (the common case). ``read_table_local`` drops
-  them per chunk in the chunk assembler (``Snapshot.deleted_positions``).
+* Every reader (``decode.decode_table``, ``read_table_local`` and
+  ``compact``) drops committed tombstones per chunk in the chunk
+  assembler, ``decode.assemble_chunks``, from the positions
+  ``Snapshot.deleted_positions`` reads: no join runs on a read. The
+  Spark readers ship each file group's positions in that group's task
+  row (``decode.group_frame``), so a task receives only its own.
 * :func:`~cuda_float_compress_spark.operators.maintain.compact`
   MATERIALIZES tombstones — deleted rows are physically dropped and the
   compacted table starts with an empty delete set.
@@ -54,32 +56,13 @@ def tombstones_df(spark: SparkSession, out_dir: str,
     ``as_of`` scopes deletes in time (the Iceberg sequence-number rule
     for position deletes): a snapshot read dated BEFORE a delete
     committed must still see the rows (see ``snapshot.Snapshot``)."""
-    return _tombstones(spark, Snapshot.resolve(out_dir, as_of=as_of))
-
-
-def _tombstones(spark: SparkSession, snap: Snapshot) -> DataFrame | None:
+    snap = Snapshot.resolve(out_dir, as_of=as_of)
     if not snap.tombstone_runs:
         return None
     # delete_rows and merge_rows write exactly these types; an explicit
     # schema spares the schema-merge job
     return spark.read.schema(TOMBSTONE_SCHEMA).parquet(
         *(f"{snap.out_dir}/{run}" for run in snap.tombstone_runs)
-    )
-
-
-def anti_join_tombstones(decoded: DataFrame, tombs: DataFrame) -> DataFrame:
-    """Drop tombstoned rows from a decode carrying the address columns.
-    Equi-key anti-join — AQE broadcasts the (usually tiny) tombstone
-    side; at worst it is a shuffle on the address key only."""
-    return decoded.join(
-        tombs.withColumnsRenamed(
-            {"_part_id": "__t_part", "_chunk_id": "__t_chunk",
-             "_pos": "__t_pos"}
-        ),
-        (decoded["_part_id"] == F.col("__t_part"))
-        & (decoded["_chunk_id"] == F.col("__t_chunk"))
-        & (decoded["_pos"] == F.col("__t_pos")),
-        "left_anti",
     )
 
 

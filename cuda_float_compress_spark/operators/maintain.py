@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from cuda_float_compress_spark.operators import chunks as C
 from cuda_float_compress_spark.operators.decode import (
     assemble_chunks,
+    frame_groups,
     group_frame,
     read_group,
 )
@@ -136,7 +137,7 @@ def reencode_columns(
     # a file group goes whole to one task, which writes one file, so no
     # chunk spans two output files
     manifest = commit_blocks(
-        group_frame(spark, [files for files, _ in src.file_groups])
+        group_frame(spark, src.file_groups)
         .mapInArrow(reencode, schema=BLOCKS_SCHEMA), dst_dir, run_id)
     return {"run_id": run_id,
             "raw_bytes": sum(r["raw_bytes"] for r in manifest),
@@ -254,30 +255,29 @@ def compact(
     # every column that carried one in the source
     bloom_cols = frozenset(pc.unique(
         stats.filter(pc.is_valid(stats["bloom"]))["col"]).to_pylist())
-    fs, pairs, deleted = snap.fs, snap.pairs, snap.deleted_positions
+    fs, pairs = snap.fs, snap.pairs
 
     def recompact(batches):
-        for batch in batches:
-            for files in batch.column("files").to_pylist():
-                # chunks arrive in (part_id, chunk_id) order, so one part's
-                # rows are decoded at a time
-                for part_id, part in itertools.groupby(
-                        assemble_chunks(read_group(fs, files), cols, pairs,
-                                        deleted=deleted),
-                        key=lambda chunk: chunk[0]):
-                    pieces = [arrays for *_, arrays in part]
-                    full = pa.table({
-                        c: pa.concat_arrays([a[i] for a in pieces])
-                        for i, c in enumerate(ordered)})
-                    if sort_keys:
-                        full = full.take(pc.sort_indices(full, sort_keys=[
-                            (k, "ascending") for k in sort_keys]))
-                    yield from encode_part(
-                        full.to_batches(), part_id, chunk_rows, chunk_bytes,
-                        {}, run_id=run_id, bloom_cols=bloom_cols)
+        for files, deleted in frame_groups(batches):
+            # chunks arrive in (part_id, chunk_id) order, so one part's
+            # rows are decoded at a time
+            for part_id, part in itertools.groupby(
+                    assemble_chunks(read_group(fs, files), cols, pairs,
+                                    deleted=deleted),
+                    key=lambda chunk: chunk[0]):
+                pieces = [arrays for *_, arrays in part]
+                full = pa.table({
+                    c: pa.concat_arrays([a[i] for a in pieces])
+                    for i, c in enumerate(ordered)})
+                if sort_keys:
+                    full = full.take(pc.sort_indices(full, sort_keys=[
+                        (k, "ascending") for k in sort_keys]))
+                yield from encode_part(
+                    full.to_batches(), part_id, chunk_rows, chunk_bytes,
+                    {}, run_id=run_id, bloom_cols=bloom_cols)
 
     commit_blocks(
-        group_frame(spark, [files for files, _ in snap.part_groups])
+        group_frame(spark, snap.part_groups, snap.deleted_positions)
         .mapInArrow(recompact, schema=BLOCKS_SCHEMA), dst_dir, run_id)
     return {
         "run_id": run_id,

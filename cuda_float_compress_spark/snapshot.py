@@ -65,6 +65,7 @@ from __future__ import annotations
 import functools
 import os
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
@@ -321,7 +322,8 @@ class Snapshot:
 
     def _united(self, key: list[str]) -> list[tuple[list, frozenset]]:
         # block_files united (union-find) wherever two files hold rows of
-        # one ``key`` tuple, with the key tuples each group holds
+        # one ``key`` tuple (a prefix of the chunk key), with the chunk
+        # keys each group holds
         parent = list(range(len(self.block_files)))
 
         def root(i: int) -> int:
@@ -330,15 +332,18 @@ class Snapshot:
                 i = parent[i]
             return i
 
+        places = self.chunk_stats.group_by(
+            _CHUNK_KEY + ["file"]).aggregate([])
+        places = list(zip(*(places[c].to_pylist()
+                            for c in _CHUNK_KEY + ["file"])))
         first: dict = {}
-        places = self.chunk_stats.group_by(key + ["file"]).aggregate([])
-        for *k, f in zip(*(places[c].to_pylist() for c in key + ["file"])):
-            parent[root(f)] = root(first.setdefault(tuple(k), f))
+        for p, c, f in places:
+            parent[root(f)] = root(first.setdefault((p, c)[:len(key)], f))
         groups: dict[int, tuple[list, set]] = {}
         for f, info in enumerate(self.block_files):
             groups.setdefault(root(f), ([], set()))[0].append(info)
-        for k, f in first.items():
-            groups[root(f)][1].add(k)
+        for p, c, f in places:
+            groups[root(f)][1].add((p, c))
         return [(files, frozenset(keys)) for files, keys in groups.values()]
 
     @functools.cached_property
@@ -363,12 +368,11 @@ class Snapshot:
 
     @functools.cached_property
     def part_groups(self) -> list[tuple[list[tuple[str, int]], frozenset]]:
-        """``[(files, parts)]``: :attr:`file_groups` united wherever two
-        hold rows of one part, with the part ids each group holds. A
+        """``[(files, keys)]``: :attr:`file_groups` united wherever two
+        hold rows of one part, with the chunk keys each group holds. A
         task that rewrites a part whole reads one such group."""
         self.file_groups  # the duplicate-row check
-        return [(files, frozenset(p for (p,) in parts))
-                for files, parts in self._united(["part_id"])]
+        return self._united(["part_id"])
 
     @functools.cached_property
     def tombstone_runs(self) -> list[str]:
@@ -385,17 +389,21 @@ class Snapshot:
         return [p[len(self.root) + 1:] for p in live]
 
     @functools.cached_property
-    def deleted_positions(self) -> dict[tuple, list[int]]:
-        """``{(part_id, chunk_id): [pos, ...]}`` over the live tombstone
-        runs, read with pyarrow: the ``deleted`` argument of
-        ``decode.assemble_chunks``."""
-        deleted: dict[tuple, list[int]] = {}
-        for run in self.tombstone_runs:
-            t = pq.read_table(f"{self.root}/{run}", filesystem=self.fs,
-                              columns=list(ADDRESS_COLS))
-            for p, c, pos in zip(*(t[k].to_pylist() for k in ADDRESS_COLS)):
-                deleted.setdefault((p, c), []).append(pos)
-        return deleted
+    def deleted_positions(self) -> dict[tuple, np.ndarray]:
+        """``{(part_id, chunk_id): int64 positions}`` over the live
+        tombstone runs, read and grouped with pyarrow: the ``deleted``
+        argument of ``decode.assemble_chunks``."""
+        if not self.tombstone_runs:
+            return {}
+        t = pa.concat_tables(
+            pq.read_table(f"{self.root}/{run}", filesystem=self.fs,
+                          columns=list(ADDRESS_COLS))
+            for run in self.tombstone_runs)
+        g = t.group_by(list(ADDRESS_COLS[:2])).aggregate([("_pos", "list")])
+        pos = g["_pos_list"].combine_chunks()
+        return dict(zip(zip(*(g[k].to_pylist() for k in ADDRESS_COLS[:2])),
+                        np.split(pos.values.to_numpy(),
+                                 pos.offsets.to_numpy()[1:-1])))
 
     def _applies_at(self, run: str, as_of: float) -> bool:
         # Iceberg position-delete time scoping: a snapshot dated before

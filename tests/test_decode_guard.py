@@ -14,7 +14,11 @@ kept for tools and probes) fails, and so does any call of
 ``committed_blocks`` from the package.
 
 Byte-string codecs have one table, ``codecs/core.BYTES_CODECS``: a second
-codec table or an encoder/decoder under ``operators/`` fails."""
+codec table or an encoder/decoder under ``operators/`` fails.
+
+Rows are filtered in one place, ``decode.exact_mask`` called from the
+chunk assembler: a tombstone anti-join, a pyarrow comparison in the
+local reader or a Spark filter or join in ``decode_table`` fails."""
 from __future__ import annotations
 
 import ast
@@ -127,4 +131,36 @@ def test_one_bytes_codec_table():
                 stray.append(f"{rel}:{node.lineno}: {node.name}")
     assert not stray, (
         "byte-string codec outside codecs/core.py:\n" + "\n".join(stray)
+    )
+
+
+def test_one_row_filter():
+    """The rows a read returns are decided once, in the chunk assembler.
+    The Spark reader once anti-joined tombstones and filtered with a
+    Spark Column while the local reader filtered with its own pyarrow
+    mask, and the two disagreed on NaN, -0.0, null ``in`` members and
+    date literals. Fails on a ``"left_anti"`` constant in the readers'
+    modules, a ``pc`` comparison in ``localio.py``, or a ``.filter`` or
+    ``.join`` call in ``decode.decode_table``."""
+    stray = []
+    for rel in ("operators/decode.py", "operators/deletes.py", "localio.py"):
+        tree = ast.parse((PKG / rel).read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and node.value == "left_anti":
+                stray.append(f"{rel}:{node.lineno}: left_anti join")
+        for fns, call in _calls(tree):
+            where = f"{rel}:{call.lineno} in {'.'.join(fns) or '<module>'}"
+            name = _name(call.func)
+            if (rel == "localio.py" and isinstance(call.func, ast.Attribute)
+                    and ast.unparse(call.func.value) == "pc"
+                    and (name in ("equal", "is_in")
+                         or name.startswith(("less", "greater")))):
+                stray.append(f"{where}: {ast.unparse(call)}")
+            if (rel == "operators/decode.py" and "decode_table" in fns
+                    and name in ("filter", "join")
+                    # a str.join builds the schema string
+                    and not isinstance(call.func.value, ast.Constant)):
+                stray.append(f"{where}: {ast.unparse(call)}")
+    assert not stray, (
+        "rows filtered outside decode.exact_mask:\n" + "\n".join(stray)
     )

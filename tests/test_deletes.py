@@ -115,6 +115,35 @@ def test_compact_materializes_tombstones(spark, docs_table, tmp_path):
     ]
 
 
+def test_each_task_row_carries_only_its_groups_deletes(spark, docs_table):
+    """The deleted positions reach the decode tasks through the file
+    group rows, not one closure: a row of ``group_frame`` holds the
+    positions of its own chunks only, and the rows together hold each
+    tombstone once, matching the committed tombstone rows."""
+    from cuda_float_compress_spark.operators.decode import group_frame
+    from cuda_float_compress_spark.snapshot import Snapshot
+
+    delete_rows(spark, docs_table, [("lang", "==", "de")])
+    delete_rows(spark, docs_table, [("doc_id", "<", 10)])
+    snap = Snapshot.resolve(docs_table)
+    assert len(snap.file_groups) > 1
+    keys_of = {tuple(p for p, _ in files): keys
+               for files, keys in snap.file_groups}
+    shipped = []
+    for row in group_frame(spark, snap.file_groups,
+                           snap.deleted_positions).collect():
+        keys = keys_of[tuple(row["files"])]
+        for d in row["deleted"]:
+            assert (d["part_id"], d["chunk_id"]) in keys
+            shipped += [(d["part_id"], d["chunk_id"], p) for p in d["pos"]]
+    tombs = [tuple(r) for r in tombstones_df(spark, docs_table)
+             .select("_part_id", "_chunk_id", "_pos").collect()]
+    assert sorted(shipped) == sorted(tombs)
+    assert len(tombs) == 107  # 100 "de" rows, and the 7 other ids < 10
+    assert not any(row["deleted"] for row in group_frame(
+        spark, snap.file_groups).collect())
+
+
 def test_delete_via_bloom_point_lookup(spark, tmp_path):
     """A single-row GDPR-style delete: the predicate scan prunes via the
     url Bloom filter, the tombstone hits exactly one row."""

@@ -618,12 +618,13 @@ def test_decode_parts_subset(spark, tmp_path, scratch):
     )
     assert len(all_parts) >= 3
     subset = all_parts[:2]
-    dec = decode_table(spark, scratch, parts=subset, keep_part_id=True)
-    got_parts = {r["part_id"] for r in dec.select("part_id").distinct().collect()}
+    dec = decode_table(spark, scratch, parts=subset, with_row_address=True)
+    got_parts = {r["_part_id"]
+                 for r in dec.select("_part_id").distinct().collect()}
     assert got_parts == set(subset)
     # subset rows are bit-identical to the matching source rows
     original = spark.read.parquet(src)
-    sub = dec.drop("part_id")
+    sub = dec.drop("_part_id", "_chunk_id", "_pos")
     rep = verify_roundtrip(
         original.join(sub.select("url"), "url", "left_semi"), sub, "url"
     ).collect()
