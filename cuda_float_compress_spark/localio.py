@@ -31,6 +31,7 @@ from cuda_float_compress_spark.operators.decode import (
     assemble_chunks,
     kept_groups,
     prune,
+    read_columns,
     read_group,
 )
 from cuda_float_compress_spark.snapshot import Snapshot
@@ -49,26 +50,22 @@ def read_table_local(
     """Decode an encoded table into one in-memory ``pyarrow.Table``
     without Spark. ``predicates`` uses the decode-pushdown language
     ([(col, op, literal)], AND semantics; ops ==, =, <, <=, >, >=, in)
-    and keeps the rows ``decode.decode_table`` keeps."""
+    and keeps the rows ``decode.decode_table`` keeps; ``columns`` is
+    read as there (order kept, an unknown column raises ``ValueError``)."""
     snap = Snapshot.resolve(out_dir, as_of=as_of)
-    cols = snap.columns
-    if columns is not None:
-        want_set = set(columns) | {c for c, _, _ in (predicates or [])}
-        cols = [(c, p) for c, p in cols if c in want_set]
+    cols, out = read_columns(snap.columns, columns, predicates)
     deleted = snap.deleted_positions if apply_deletes else None
 
     # the zone maps / Bloom filters prune chunks; the assembler ALSO
     # filters the decoded rows, so pruning is purely an optimization
     keep = prune(snap.chunk_stats, predicates) if predicates else None
-    schema = pa.schema([pa.field(c, _STD_ARROW[p]) for c, p in cols])
+    schema = pa.schema([pa.field(c, _STD_ARROW[p])
+                        for c, p in (cols[i] for i in out)])
     pieces = [
-        pa.Table.from_arrays(arrays, schema=schema)
+        pa.Table.from_arrays([arrays[i] for i in out], schema=schema)
         for files, _ in kept_groups(snap, keep)
         for _, _, _, arrays in assemble_chunks(
             read_group(snap.fs, [p for p, _ in files]), cols, snap.pairs,
             keep, deleted, verify, predicates=predicates)
     ]
-    full = pa.concat_tables(pieces) if pieces else schema.empty_table()
-    if columns is not None:
-        full = full.select(columns)
-    return full
+    return pa.concat_tables(pieces) if pieces else schema.empty_table()

@@ -105,8 +105,10 @@ def committed_blocks(
     blocks = blocks_of(spark, snap.out_dir)
     if snap.pairs is None:
         return blocks
-    lin = spark.createDataFrame(sorted(snap.pairs),
-                                "part_id int, run_id string")
+    pairs = sorted(snap.pairs)
+    lin = spark.createDataFrame(pa.table({
+        "part_id": pa.array([p for p, _ in pairs], pa.int32()),
+        "run_id": pa.array([r for _, r in pairs], pa.string())}))
     return blocks.join(F.broadcast(lin), ["part_id", "run_id"], "left_semi")
 
 
@@ -290,8 +292,10 @@ def qualifying_chunks(blocks: DataFrame, predicates: list[tuple]) -> DataFrame:
     stats = blocks.select(*(c for c in ("part_id", "chunk_id", "col",
                                         "ptype", "vmin", "vmax", "bloom")
                             if c in blocks.columns)).toArrow()
-    return blocks.sparkSession.createDataFrame(
-        sorted(prune(stats, predicates)), "part_id int, chunk_id bigint")
+    keys = sorted(prune(stats, predicates))
+    return blocks.sparkSession.createDataFrame(pa.table({
+        "part_id": pa.array([p for p, _ in keys], pa.int32()),
+        "chunk_id": pa.array([c for _, c in keys], pa.int64())}))
 
 
 def qualifying_parts(
@@ -394,6 +398,11 @@ def kept_groups(snap: Snapshot, keep: set | None) -> list[tuple]:
             if keep is None or not keys.isdisjoint(keep)]
 
 
+def _offsets(lists: list) -> pa.Array:
+    """Arrow list offsets of ``lists``: the running sum of their lengths."""
+    return pa.array(np.cumsum([0, *map(len, lists)]), pa.int32())
+
+
 def group_frame(spark: SparkSession, groups: list[tuple],
                 deleted: dict | None = None) -> DataFrame:
     """One row per file group (``(files, keys)``: ``[(path, size)]`` and
@@ -403,15 +412,24 @@ def group_frame(spark: SparkSession, groups: list[tuple],
     ``deleted`` positions of its own chunks, so a task receives the
     tombstones of its groups, never the table's whole set. Read the
     rows back with :func:`frame_groups`."""
-    rows = [([p for p, _ in files],
-             [(*k, deleted[k].tolist()) for k in keys if k in deleted]
-             if deleted else [])
-            for files, keys in groups]
+    deleted = deleted or {}
+    dels = [[k for k in keys if k in deleted] for _, keys in groups]
+    keys = [k for ks in dels for k in ks]
+    pos = [deleted[k] for k in keys]
+    chunk_dels = pa.StructArray.from_arrays([
+        pa.array([p for p, _ in keys], pa.int32()),
+        pa.array([c for _, c in keys], pa.int64()),
+        pa.ListArray.from_arrays(_offsets(pos), pa.array(
+            np.concatenate([np.empty(0, np.int64), *pos]))),
+    ], names=["part_id", "chunk_id", "pos"])
+    rows = pa.table({
+        "files": pa.array([[p for p, _ in files] for files, _ in groups],
+                          pa.list_(pa.string())),
+        "deleted": pa.ListArray.from_arrays(_offsets(dels), chunk_dels),
+    })
     return lpt_frame(spark, rows,
-                     [sum(size for _, size in files) for files, _ in groups],
-                     "files array<string>, deleted array<struct<part_id: "
-                     "int, chunk_id: bigint, pos: array<bigint>>>",
-                     per_core=1)[0]
+                     [sum(size for _, size in files)
+                      for files, _ in groups])[0]
 
 
 def frame_groups(batches):
@@ -420,9 +438,11 @@ def frame_groups(batches):
     :func:`assemble_chunks`."""
     for batch in batches:
         for files, dels in zip(batch.column("files").to_pylist(),
-                               batch.column("deleted").to_pylist()):
-            yield files, {(d["part_id"], d["chunk_id"]):
-                          np.array(d["pos"], dtype=np.int64) for d in dels}
+                               batch.column("deleted")):
+            d = dels.values
+            yield files, {k: p.values.to_numpy() for k, p in zip(
+                zip(d.field("part_id").to_pylist(),
+                    d.field("chunk_id").to_pylist()), d.field("pos"))}
 
 
 def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
@@ -489,6 +509,30 @@ def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
                    [a.filter(kept) for a in arrays])
 
 
+def read_columns(table_cols: list[tuple[str, str]],
+                 columns: list[str] | None,
+                 predicates: list[tuple] | None = None,
+                 any_of: list[list[tuple]] | None = None,
+                 ) -> tuple[list[tuple[str, str]], list[int]]:
+    """The ``(col, ptype)`` of ``table_cols`` a read decodes: those it
+    returns and those its predicates test. Also returns the index in
+    them of each returned column, in ``columns`` order (every column in
+    table order when None). A column the table lacks raises
+    ``ValueError``."""
+    if columns is None:
+        return table_cols, list(range(len(table_cols)))
+    names = [c for c, _ in table_cols]
+    missing = [c for c in columns if c not in names]
+    if missing:
+        raise ValueError(f"unknown column(s) {missing}; the table has "
+                         f"{names}")
+    want = set(columns) | {c for c, _, _ in (predicates or [])} | {
+        c for conj in (any_of or []) for c, _, _ in conj}
+    cols = [(c, p) for c, p in table_cols if c in want]
+    names = [c for c, _ in cols]
+    return cols, [names.index(c) for c in columns]
+
+
 def decode_table(
     spark: SparkSession,
     out_dir: str,
@@ -524,18 +568,16 @@ def decode_table(
     ``apply_deletes``: drop the rows of committed tombstones
     (operators/deletes) in the decode task, on by default so
     merge-on-read deletes are never resurrected.
+    ``columns``: the columns returned, in this order (every column in
+    table order when None); a column the table lacks raises
+    ``ValueError``.
     ``with_row_address``: emit the stable (_part_id, _chunk_id, _pos)
     address columns last (delete_rows computes tombstones from them).
 
     The returned DataFrame is the decode task's output as it is: no
     join, filter or projection runs after it."""
     snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
-    cols = snap.columns
-    if columns is not None:
-        want = set(columns) | {c for c, _, _ in (predicates or [])} | {
-            c for conj in (any_of or []) for c, _, _ in conj
-        }
-        cols = [(c, p) for c, p in cols if c in want]
+    cols, out = read_columns(snap.columns, columns, predicates, any_of)
     keep = pruned_keys(snap.chunk_stats, predicates, any_of)
     restrict = []
     if chunk_keys is not None:
@@ -547,8 +589,6 @@ def decode_table(
     for r in restrict:
         keep = r if keep is None else keep & r
 
-    out = [i for i, (c, _) in enumerate(cols)
-           if columns is None or c in columns]
     emit = [cols[i] for i in out] + (
         [("_part_id", "int32"), ("_chunk_id", "int64"), ("_pos", "int64")]
         if with_row_address else [])

@@ -42,8 +42,12 @@ from cuda_float_compress_spark.operators.encode import (
 )
 from cuda_float_compress_spark.session import lpt_frame
 
-SPLITS_SCHEMA = ("part_id int, file string, rg_start int, rg_end int, "
-                 "row_start bigint, row_end bigint, est_bytes bigint")
+SPLITS_SCHEMA = pa.schema([
+    ("part_id", pa.int32()), ("file", pa.string()),
+    ("rg_start", pa.int32()), ("rg_end", pa.int32()),
+    ("row_start", pa.int64()), ("row_end", pa.int64()),
+    ("est_bytes", pa.int64()),
+])
 
 
 def _to_us_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
@@ -200,14 +204,18 @@ def encode_table_direct(
                         chunk_bytes, overrides, acc, run_id, profile,
                     )
 
-        # LPT bin-packing into ~4x-slots tasks (lpt_frame): document-length
-        # skew puts up to ~5x byte spread across equal-row splits, and a
-        # table of many small files must not become one task per split (at
-        # 100 TB a million small files would be a million tasks).
-        # encode_split iterates every split row in its batch, and each
-        # split keeps its own part_id, so (part, chunk) keys are unaffected.
-        splits_df, n_tasks = lpt_frame(spark, todo, [s[6] for s in todo],
-                                       SPLITS_SCHEMA, per_core=4)
+        # LPT bin-packing into one task per core (lpt_frame):
+        # document-length skew puts up to ~5x byte spread across equal-row
+        # splits, and a table of many small files must not become one task
+        # per split (at 100 TB a million small files would be a million
+        # tasks). encode_split iterates every split row in its batch, and
+        # each split keeps its own part_id, so (part, chunk) keys are
+        # unaffected.
+        splits_df, n_tasks = lpt_frame(
+            spark, pa.Table.from_pylist(
+                [dict(zip(SPLITS_SCHEMA.names, s)) for s in todo],
+                schema=SPLITS_SCHEMA),
+            [s[6] for s in todo])
         blocks = splits_df.mapInArrow(encode_split, schema=BLOCKS_SCHEMA)
         commit_blocks(blocks, out_dir, run_id, metrics)
 

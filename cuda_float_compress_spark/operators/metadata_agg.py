@@ -33,7 +33,8 @@ __all__ = ["agg_int_column"]
 _INT_PTYPES = ("int64", "int32")
 
 
-_SCHEMA = "n_rows: long, n_nulls: long, sum: long, min: long, max: long"
+_SCHEMA = pa.schema([(c, pa.int64())
+                     for c in ("n_rows", "n_nulls", "sum", "min", "max")])
 
 
 def agg_int_column(
@@ -118,10 +119,9 @@ def agg_int_column(
     sums = [p[2] for p in parts if p[2] is not None]
     mins = [p[3] for p in parts if p[3] is not None]
     maxs = [p[4] for p in parts if p[4] is not None]
-    return spark.createDataFrame(
-        [(n_rows, n_nulls,
-          sum(sums) if sums else None,
-          min(mins) if mins else None,
-          max(maxs) if maxs else None)],
-        _SCHEMA,
-    )
+    return spark.createDataFrame(pa.table(
+        [[n_rows], [n_nulls],
+         [sum(sums) if sums else None],
+         [min(mins) if mins else None],
+         [max(maxs) if maxs else None]],
+        schema=_SCHEMA))

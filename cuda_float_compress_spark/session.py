@@ -10,7 +10,10 @@ from __future__ import annotations
 import heapq
 import os
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 CHUNK_ROWS = 32_768  # reference block = 32768 floats (src/cuszplus_f32.cu:21-28)
 
@@ -73,22 +76,36 @@ def get_spark(
     return spark
 
 
-def lpt_frame(spark: SparkSession, rows: list[tuple], weights: list[int],
-              schema: str, per_core: int) -> tuple[DataFrame, int]:
-    """``rows`` as a DataFrame of at most ``per_core`` x defaultParallelism
+def lpt_frame(spark: SparkSession, rows: pa.Table,
+              weights: list[int]) -> tuple[DataFrame, int]:
+    """The rows of ``rows`` as a DataFrame of at most defaultParallelism
     partitions, one task each, packed LPT: heaviest row first, each into
-    the lightest partition so far, so tasks carry about equal bytes. One
-    task per row would pay the scheduler's per-task latency (~160 ms
-    measured in local mode) once per file or split. Returns the
-    DataFrame and its partition count."""
-    slots = max(spark.sparkContext.defaultParallelism, 1)
-    n = max(1, min(len(rows), slots * per_core))
+    the lightest bin so far, so tasks carry about equal bytes. Returns
+    the DataFrame and its task count.
+
+    The bins ship as one Arrow table of one ``list<struct>`` row per bin,
+    which Spark holds as a JVM ``LocalRelation``; ``inline`` flattens
+    each bin in its own task. A frame built from a Python RDD
+    (``parallelize``) would run a Python worker pass in every task, only
+    to turn pickled rows into Spark rows, before the task's own Python
+    stage starts. A ``LocalRelation`` scans as
+    ``min(rows, defaultParallelism)`` partitions of one row each, so it
+    caps the frame at one bin per core."""
+    n = max(1, min(rows.num_rows, spark.sparkContext.defaultParallelism))
     heap = [(0, i) for i in range(n)]
-    bins: list[list] = [[] for _ in range(n)]
-    for w, row in sorted(zip(weights, rows), key=lambda wr: -wr[0]):
+    bins: list[list[int]] = [[] for _ in range(n)]
+    for w, r in sorted(zip(weights, range(rows.num_rows)),
+                       key=lambda wr: -wr[0]):
         load, i = heapq.heappop(heap)
-        bins[i].append(row)
+        bins[i].append(r)
         heapq.heappush(heap, (load + w, i))
     bins = [b for b in bins if b]
-    rdd = spark.sparkContext.parallelize(bins, max(len(bins), 1))
-    return spark.createDataFrame(rdd.flatMap(lambda b: b), schema), len(bins)
+    order = [r for b in bins for r in b]
+    packed = rows.take(pa.array(order, pa.int64()))
+    g = pa.ListArray.from_arrays(
+        pa.array(np.cumsum([0, *map(len, bins)]), pa.int32()),
+        pa.StructArray.from_arrays(
+            [c.combine_chunks() for c in packed.columns],
+            fields=list(rows.schema)))
+    frame = spark.createDataFrame(pa.table({"g": g}))
+    return frame.select(F.inline("g")), len(bins)

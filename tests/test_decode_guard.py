@@ -18,7 +18,11 @@ codec table or an encoder/decoder under ``operators/`` fails.
 
 Rows are filtered in one place, ``decode.exact_mask`` called from the
 chunk assembler: a tombstone anti-join, a pyarrow comparison in the
-local reader or a Spark filter or join in ``decode_table`` fails."""
+local reader or a Spark filter or join in ``decode_table`` fails.
+
+Engine frames start on the JVM: a ``parallelize`` call in the package,
+or a ``createDataFrame`` of a Python list in the engine's read path,
+fails."""
 from __future__ import annotations
 
 import ast
@@ -163,4 +167,36 @@ def test_one_row_filter():
                 stray.append(f"{where}: {ast.unparse(call)}")
     assert not stray, (
         "rows filtered outside decode.exact_mask:\n" + "\n".join(stray)
+    )
+
+
+# modules whose DataFrames are built from Arrow tables, never from lists
+ARROW_FRAMES = ("session.py", "operators/decode.py",
+                "operators/metadata_agg.py")
+
+
+def test_frames_start_on_the_jvm():
+    """A DataFrame made from Python rows is a Python RDD: every task of a
+    job over it first runs a Python worker pass that turns pickled rows
+    into Spark rows. ``session.lpt_frame`` built every decode, compact
+    and direct-encode frame that way; it now ships its bins as one Arrow
+    table, a JVM LocalRelation. Fails on a ``parallelize`` call anywhere
+    in the package, and on a ``createDataFrame`` whose first argument is
+    a list display, a list comprehension or a ``sorted``/``list`` call
+    in the modules of ``ARROW_FRAMES``."""
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fns, call in _calls(ast.parse(path.read_text())):
+            where = f"{rel}:{call.lineno} in {'.'.join(fns) or '<module>'}"
+            name = _name(call.func)
+            first = call.args[0] if call.args else None
+            if name == "parallelize" or (
+                    name == "createDataFrame" and rel in ARROW_FRAMES
+                    and (isinstance(first, (ast.List, ast.ListComp))
+                         or (isinstance(first, ast.Call)
+                             and _name(first.func) in ("sorted", "list")))):
+                stray.append(f"{where}: {ast.unparse(call)}")
+    assert not stray, (
+        "engine frame built from Python rows:\n" + "\n".join(stray)
     )

@@ -899,8 +899,8 @@ def test_compact_sort_keys_restores_pruning(spark, tmp_path):
 
 def test_encode_tasks_bounded_by_slots(spark, tmp_path):
     """Many small files must NOT become one task each (per-task scheduler
-    latency): splits LPT-pack into at most ~4x-slots byte-balanced bins,
-    and the packed encode still round-trips every row."""
+    latency): splits LPT-pack into at most one byte-balanced bin per
+    core, and the packed encode still round-trips every row."""
     from cuda_float_compress_spark.operators.direct import (
         decode_table_direct,
         encode_table_direct,
@@ -912,8 +912,44 @@ def test_encode_tasks_bounded_by_slots(spark, tmp_path):
     stats = encode_table_direct(spark, src, out, resume=False)
     slots = spark.sparkContext.defaultParallelism
     assert stats["n_splits"] >= 24
-    assert 1 <= stats["n_tasks"] <= min(stats["n_splits"], slots * 4)
+    assert 1 <= stats["n_tasks"] <= min(stats["n_splits"], slots)
     assert decode_table_direct(spark, out).count() == 2400
+
+
+def test_lpt_frame_is_one_jvm_task_per_bin(spark, tmp_path):
+    """``lpt_frame`` packs k weighted rows into min(k, defaultParallelism)
+    LPT bins, one partition each, and its frame is a JVM LocalRelation:
+    a frame built from a Python RDD ran a Python worker pass in every
+    decode, compact and direct-encode task before the task's own body."""
+    import pyarrow as pa
+
+    from cuda_float_compress_spark.session import lpt_frame
+
+    slots = spark.sparkContext.defaultParallelism
+    for k in (3, 20):
+        weights = [(7 * i) % 23 + i for i in range(k)]
+        frame, n = lpt_frame(
+            spark, pa.table({"i": pa.array(range(k), pa.int32())}), weights)
+        assert n == frame.rdd.getNumPartitions() == min(k, slots)
+        # reference LPT: heaviest first, into the lightest (then lowest) bin
+        loads, want = [0] * n, [set() for _ in range(n)]
+        for w, i in sorted(zip(weights, range(k)), key=lambda wi: -wi[0]):
+            b = min(range(n), key=lambda j: (loads[j], j))
+            loads[b] += w
+            want[b].add(i)
+        got: dict = {}
+        for r in frame.select("i", F.spark_partition_id().alias("p")
+                              ).collect():
+            got.setdefault(r["p"], set()).add(r["i"])
+        assert sorted(map(sorted, got.values())) == sorted(map(sorted, want))
+
+    src, out = str(tmp_path / "lf_src"), str(tmp_path / "lf_out")
+    generate_webpages_df(spark, 300, partitions=3).write.parquet(src)
+    encode_table_direct(spark, src, out, resume=False)
+    read = decode_table(spark, out)
+    plan = read._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert read.count() == 300
 
 
 def test_cli_merge_and_sorted_compact(spark, tmp_path):

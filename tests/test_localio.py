@@ -131,3 +131,17 @@ def test_every_reader_applies_deletes_by_path_form(
             else "file://" + shared_deleted_docs)
     assert read_cols_count(reader, path)[1] == 200
 
+
+
+@pytest.mark.parametrize("reader", ["decode_table", "read_table_local"])
+def test_every_reader_reads_columns_as_asked(read_cols_count, shared_docs,
+                                             reader):
+    """``columns`` comes back in the order asked, and a column the table
+    lacks raises ValueError. decode_table used to return table order,
+    and an empty frame for an unknown column, where read_table_local
+    kept the order and raised KeyError."""
+    cols, n = read_cols_count(reader, shared_docs, columns=["score",
+                                                            "doc_id"])
+    assert (cols, n) == (["score", "doc_id"], 300)
+    with pytest.raises(ValueError, match="nope"):
+        read_cols_count(reader, shared_docs, columns=["score", "nope"])
