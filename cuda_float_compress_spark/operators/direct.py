@@ -21,12 +21,11 @@ the one Spark decode transport, kept for callers that import it from here.
 
 from __future__ import annotations
 
-import glob
-import os
 import time
 import uuid
 
 import pyarrow as pa
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
@@ -41,6 +40,7 @@ from cuda_float_compress_spark.operators.encode import (
     encode_part,
 )
 from cuda_float_compress_spark.session import lpt_frame
+from cuda_float_compress_spark.snapshot import resolve_path
 
 SPLITS_SCHEMA = pa.schema([
     ("part_id", pa.int32()), ("file", pa.string()),
@@ -93,9 +93,20 @@ def plan_splits(input_dir: str, target_rows_per_split: int = 131_072,
     time; deriving the cap from the actual footer statistics removes the
     amplification entirely for uniform tables while an EXPLICIT
     ``target_bytes_per_split`` still subdivides pathological row groups
-    (>1.5x the cap) for callers that know their table has one."""
-    files = sorted(glob.glob(os.path.join(input_dir, "*.parquet")))
-    metas = [pq.ParquetFile(f).metadata for f in files]
+    (>1.5x the cap) for callers that know their table has one.
+
+    ``input_dir`` is a bare path or a URI (``resolve_path``); ``file``
+    is the path within its filesystem. Raises ``ValueError`` when it
+    holds no ``*.parquet`` file, missing dir included."""
+    fs, root = resolve_path(input_dir)
+    files = sorted(
+        f.path for f in fs.get_file_info(
+            pafs.FileSelector(root, allow_not_found=True))
+        if f.type == pafs.FileType.File and f.base_name.endswith(".parquet")
+        and not f.base_name.startswith("."))
+    if not files:
+        raise ValueError(f"no *.parquet file in {input_dir!r}")
+    metas = [pq.ParquetFile(f, filesystem=fs).metadata for f in files]
     if target_bytes_per_split is None:
         max_rg = max(
             (md.row_group(i).total_byte_size
@@ -172,11 +183,12 @@ def encode_table_direct(
 
     if todo:
         acc = metrics.acc
+        fs = resolve_path(input_dir)[0]
 
         def split_batches(row):
             # the split's rows as Arrow batches; a sub-row-group split
             # clips the streamed batches to its row range
-            pf = pq.ParquetFile(row["file"])
+            pf = pq.ParquetFile(row["file"], filesystem=fs)
             row_start, row_end = row["row_start"], row["row_end"]
             offset = 0  # rows streamed so far within the rg range
             for rb in pf.iter_batches(

@@ -1,9 +1,8 @@
 """SparkSession factory tuned for the engine.
 
 Local mode here; on a real cluster the same settings apply per-executor (AQE,
-Arrow batching, UTC). ``cores`` controls the two-parallelism-level scaling
-benchmark (local[8] vs local[32] stands in for N vs 4N executors — the only
-per-JVM knob that varies)."""
+Arrow batching, UTC, the worker daemon). ``cores`` sets ``local[cores]``,
+which defaults to ``SPARK_GRAFT_CPUS``: the one per-JVM knob that varies."""
 
 from __future__ import annotations
 
@@ -25,6 +24,17 @@ def get_spark(
     driver_memory: str = "24g",
     extra: dict | None = None,
 ) -> SparkSession:
+    """A local session with the engine's settings; ``extra`` adds or
+    overrides Spark settings.
+
+    Python workers fork from ``worker_daemon`` (``spark.python.daemon.module``),
+    which stops every task from re-reading ``pyspark.zip``'s directory
+    (~250 ms per task; see that module). The daemon is imported from the
+    package, so the package must be importable where workers import it
+    anyway to run the engine's task bodies: the driver's working directory
+    or ``PYTHONPATH``. A session not built here, such as an external
+    driver's session passed to ``entry(spark)``, runs the same code but
+    still pays the per-task cost."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -68,6 +78,8 @@ def get_spark(
         # reader (snapshot.Snapshot.file_groups), never read twice.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config("spark.python.daemon.module",
+                "cuda_float_compress_spark.worker_daemon")
     )
     for k, v in (extra or {}).items():
         b = b.config(k, v)

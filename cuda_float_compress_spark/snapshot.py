@@ -109,14 +109,21 @@ _CHUNK_KEY = ["part_id", "chunk_id"]
 ADDRESS_COLS = ("_part_id", "_chunk_id", "_pos")
 
 
-def _open(out_dir: str) -> tuple[pafs.FileSystem, str]:
-    if "://" in out_dir or out_dir.startswith("file:"):
-        fs, root = pafs.FileSystem.from_uri(out_dir)
+def resolve_path(path: str) -> tuple[pafs.FileSystem, str]:
+    """The filesystem and root of ``path``: a URI through
+    ``pyarrow.fs.FileSystem.from_uri``, a bare path as a local one."""
+    if "://" in path or path.startswith("file:"):
+        fs, root = pafs.FileSystem.from_uri(path)
     else:
-        fs, root = pafs.LocalFileSystem(), os.path.abspath(out_dir)
+        fs, root = pafs.LocalFileSystem(), os.path.abspath(path)
+    return fs, root.rstrip("/")
+
+
+def _open(out_dir: str) -> tuple[pafs.FileSystem, str]:
+    fs, root = resolve_path(out_dir)
     if isinstance(fs, pafs.LocalFileSystem):
         fs = pafs.LocalFileSystem(use_mmap=True)
-    return fs, root.rstrip("/")
+    return fs, root
 
 
 def _exists(fs: pafs.FileSystem, path: str) -> bool:

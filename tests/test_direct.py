@@ -101,6 +101,53 @@ def test_direct_encode_bit_identical(spark, tmp_path, scratch):
     assert all(r["ok"] for r in rep), rep
 
 
+def test_direct_encode_input_uri_and_empty_input(spark, tmp_path):
+    """A ``file://`` input encodes exactly like its bare path; a missing
+    dir, or one holding no ``*.parquet`` file, raises instead of
+    committing an empty table."""
+    from cuda_float_compress_spark.localio import read_table_local
+
+    src = str(tmp_path / "src")
+    generate_webpages_df(spark, 1500, partitions=3).write.parquet(src)
+    bare, uri = str(tmp_path / "bare"), str(tmp_path / "uri")
+    s_bare = encode_table_direct(spark, src, bare, resume=False,
+                                 target_rows_per_split=500)
+    s_uri = encode_table_direct(spark, "file://" + src, uri, resume=False,
+                                target_rows_per_split=500)
+    assert s_bare["rows"] == s_uri["rows"] == 1500
+    assert s_uri["n_splits"] == s_bare["n_splits"]
+    assert read_table_local(uri).equals(read_table_local(bare))
+
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_text("")
+    for d in (str(tmp_path / "missing"), str(empty), "file://" + str(empty)):
+        with pytest.raises(ValueError, match="parquet"):
+            encode_table_direct(spark, d, str(tmp_path / "never"),
+                                resume=False)
+
+
+def test_direct_encode_writes_identical_blocks(spark, tmp_path):
+    """Two direct encodes of one input write the same block rows, payload
+    bytes included: the engine's output is deterministic, so a changing
+    output size at a fixed input lies outside the block rows."""
+    import pyarrow.parquet as _pq
+
+    src = str(tmp_path / "src")
+    generate_webpages_df(spark, 3000, partitions=3).write.parquet(src)
+    key = ["part_id", "chunk_id", "col", "codec", "payload", "params"]
+    rows = []
+    for name in ("a", "b"):
+        out = str(tmp_path / name)
+        encode_table_direct(spark, src, out, chunk_rows=512, resume=False,
+                            target_rows_per_split=1000)
+        rows.append(_pq.read_table(f"{out}/blocks", columns=key).sort_by(
+            [("part_id", "ascending"), ("chunk_id", "ascending"),
+             ("col", "ascending")]))
+    assert rows[0].num_rows > 20
+    assert rows[0].equals(rows[1])
+
+
 def test_direct_resume(spark, tmp_path, scratch):
     src = str(tmp_path / "src")
     generate_webpages_df(spark, 2000, partitions=2).write.parquet(src)
