@@ -1,9 +1,11 @@
 """spark-submit entry point.
 
-Package and run (the north star's deployment shape):
+Package and run (the north star's deployment shape), with a ``job.py``
+that runs ``sys.exit(main())`` after
+``from cuda_float_compress_spark.cli import main``:
 
-    zip -r cfc_spark.zip cuda_float_compress_spark/
-    spark-submit --py-files cfc_spark.zip -m cuda_float_compress_spark.cli ...
+    python tools/package_pyfiles.py cfc_spark.zip
+    spark-submit --py-files cfc_spark.zip job.py encode --input DIR ...
 
 or locally:
 

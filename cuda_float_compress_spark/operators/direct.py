@@ -71,7 +71,8 @@ def _to_us_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(cols, schema=pa.schema(fields))
 
 
-def plan_splits(input_dir: str, target_rows_per_split: int = 131_072,
+def plan_splits(fs: pafs.FileSystem, root: str,
+                target_rows_per_split: int = 131_072,
                 target_bytes_per_split: int | None = None) -> list[tuple]:
     """(part_id, file, rg_start, rg_end) over all parquet files, grouping
     consecutive row groups up to the target. Driver-side metadata only.
@@ -95,17 +96,16 @@ def plan_splits(input_dir: str, target_rows_per_split: int = 131_072,
     ``target_bytes_per_split`` still subdivides pathological row groups
     (>1.5x the cap) for callers that know their table has one.
 
-    ``input_dir`` is a bare path or a URI (``resolve_path``); ``file``
-    is the path within its filesystem. Raises ``ValueError`` when it
-    holds no ``*.parquet`` file, missing dir included."""
-    fs, root = resolve_path(input_dir)
+    ``fs, root`` is the input dir as ``resolve_path`` gives it; ``file``
+    is the path within ``fs``. Raises ``ValueError`` when the dir holds
+    no ``*.parquet`` file, missing dir included."""
     files = sorted(
         f.path for f in fs.get_file_info(
             pafs.FileSelector(root, allow_not_found=True))
         if f.type == pafs.FileType.File and f.base_name.endswith(".parquet")
         and not f.base_name.startswith("."))
     if not files:
-        raise ValueError(f"no *.parquet file in {input_dir!r}")
+        raise ValueError(f"no *.parquet file in {root!r}")
     metas = [pq.ParquetFile(f, filesystem=fs).metadata for f in files]
     if target_bytes_per_split is None:
         max_rg = max(
@@ -175,15 +175,15 @@ def encode_table_direct(
     overrides = codec_overrides or {}
     t_start = time.time()
 
+    fs, root = resolve_path(input_dir)
     with metrics.stage("plan"):
-        splits = plan_splits(input_dir, target_rows_per_split,
+        splits = plan_splits(fs, root, target_rows_per_split,
                              target_bytes_per_split)
         done = set(completed_parts(spark, out_dir)) if resume else set()
         todo = [s for s in splits if s[0] not in done]
 
     if todo:
         acc = metrics.acc
-        fs = resolve_path(input_dir)[0]
 
         def split_batches(row):
             # the split's rows as Arrow batches; a sub-row-group split

@@ -15,6 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CHUNK_ROWS = 32_768  # reference block = 32768 floats (src/cuszplus_f32.cu:21-28)
+# the sys.path entry this package was imported from: a directory, or the
+# zip itself when it runs from a --py-files package
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -29,12 +32,13 @@ def get_spark(
 
     Python workers fork from ``worker_daemon`` (``spark.python.daemon.module``),
     which stops every task from re-reading ``pyspark.zip``'s directory
-    (~250 ms per task; see that module). The daemon is imported from the
-    package, so the package must be importable where workers import it
-    anyway to run the engine's task bodies: the driver's working directory
-    or ``PYTHONPATH``. A session not built here, such as an external
-    driver's session passed to ``entry(spark)``, runs the same code but
-    still pays the per-task cost."""
+    (~250 ms per task; see that module). The daemon starts before any task
+    can put a ``--py-files`` zip on ``sys.path``, so the directory (or zip)
+    this package was imported from is appended to the workers'
+    ``PYTHONPATH``, after any value the session already sets: the daemon
+    imports wherever the driver imported the package. A session not built
+    here, such as an external driver's session passed to ``entry(spark)``,
+    runs the same code but still pays the per-task cost."""
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -84,6 +88,12 @@ def get_spark(
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
+    # the workers' environment of every Python function the session
+    # ships (spark.executorEnv.* from any source lands here first)
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([*paths, PACKAGE_ROOT])
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

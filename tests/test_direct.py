@@ -8,13 +8,14 @@ import pytest
 from cuda_float_compress_spark.operators.decode import decode_table
 from cuda_float_compress_spark.operators.direct import encode_table_direct, plan_splits
 from cuda_float_compress_spark.operators.verify import verify_roundtrip
+from cuda_float_compress_spark.snapshot import resolve_path
 from cuda_float_compress_spark.table import generate_webpages_df
 
 
 def test_plan_splits_covers_all_rows(spark, tmp_path):
     src = str(tmp_path / "src")
     generate_webpages_df(spark, 2000, partitions=3).write.parquet(src)
-    splits = plan_splits(src, target_rows_per_split=500)
+    splits = plan_splits(*resolve_path(src), target_rows_per_split=500)
     assert len(splits) >= 3
     assert [s[0] for s in splits] == list(range(len(splits)))
 
@@ -41,7 +42,7 @@ def test_plan_splits_default_cap_keeps_uniform_row_groups_whole(spark, tmp_path)
     assert min(
         _pq.ParquetFile(f).metadata.row_group(0).total_byte_size for f in fs
     ) > (24 << 20)  # the old 1.5x-16MB subdivision threshold
-    splits = plan_splits(src)  # defaults only — what bench/encode use
+    splits = plan_splits(*resolve_path(src))  # defaults only — what bench/encode use
     assert len(splits) == rgs  # one split per row group, not 5x
     assert all(s[4] == -1 for s in splits)  # no row-range subdivision
 
@@ -65,8 +66,9 @@ def test_plan_splits_subdivides_oversized_row_group(spark, tmp_path, scratch):
     assert md.num_row_groups == 1
     rg_bytes = md.row_group(0).total_byte_size
     target = rg_bytes // 4
-    splits = plan_splits(src, target_rows_per_split=10**9,
-                         target_bytes_per_split=target)
+    splits = plan_splits(
+        *resolve_path(src), target_rows_per_split=10**9,
+        target_bytes_per_split=target)
     assert len(splits) >= 3  # subdivided despite the huge row cap
     # row ranges tile [0, 4000) exactly, in order
     assert all(s[4] >= 0 for s in splits)

@@ -1,5 +1,6 @@
-"""The session's Python worker daemon (``worker_daemon``), driven in a fresh
-session with worker reuse off, so every task runs in a newly forked worker."""
+"""The session's Python worker daemon (``worker_daemon``), driven in fresh
+sessions: one with worker reuse off, so every task runs in a newly forked
+worker, and one launched by ``spark-submit --py-files`` outside the repo."""
 
 from __future__ import annotations
 
@@ -96,3 +97,68 @@ def test_worker_daemon_without_worker_reuse(tmp_path):
     assert out["shipped"] == ["from zip/from py"]
     assert out["rows"] == out["local_rows"] == 1200
     assert out["roundtrip_ok"]
+
+
+JOB = r"""
+import json, sys
+
+import pyarrow as pa
+
+from cuda_float_compress_spark import cli
+from cuda_float_compress_spark.session import get_spark
+from cuda_float_compress_spark.table import generate_webpages_df
+
+src, enc = sys.argv[1], sys.argv[2]
+spark = get_spark(app="pyfiles", cores=2, shuffle_partitions=2,
+                  driver_memory="1g")
+
+
+def probe(it):
+    import zipimport
+
+    import cuda_float_compress_spark
+    for _ in it:
+        yield pa.RecordBatch.from_pylist([{
+            "pkg": cuda_float_compress_spark.__file__,
+            "patch": zipimport.zipimporter.invalidate_caches.__code__.co_filename,
+        }])
+
+
+rows = spark.range(2, numPartitions=2).mapInArrow(
+    probe, "pkg string, patch string").collect()
+print("WORKER " + json.dumps(sorted({(r["pkg"], r["patch"]) for r in rows})))
+generate_webpages_df(spark, 600, partitions=2).write.parquet(src)
+# the session is already active, so the cli joins it and leaves it running
+rc = (cli.main(["encode", "--input", src, "--out", enc, "--mode", "direct"])
+      or cli.main(["verify", "--input", src, "--out", enc]))
+spark.stop()
+sys.exit(rc)
+"""
+
+
+def test_pyfiles_package_runs_under_spark_submit(tmp_path):
+    """The documented deployment: ``spark-submit --py-files`` with the
+    packaged zip, from a directory outside the repo and with no
+    ``PYTHONPATH``. The workers' daemon imports from the zip, and the cli's
+    direct encode -> verify round trip passes."""
+    import pyspark
+
+    sys.path.insert(0, ROOT)
+    from tools.package_pyfiles import build
+
+    zip_path = build(str(tmp_path / "cfc_spark.zip"))
+    (tmp_path / "job.py").write_text(JOB)
+    home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    proc = subprocess.run(
+        [os.path.join(home, "bin", "spark-submit"), "--py-files", zip_path,
+         "job.py", str(tmp_path / "src"), str(tmp_path / "enc")],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("WORKER ")]
+    pkg = os.path.join(zip_path, "cuda_float_compress_spark")
+    assert json.loads(lines[-1][len("WORKER "):]) == [
+        [os.path.join(pkg, "__init__.py"), os.path.join(pkg, "worker_daemon.py")]]
+    report = json.loads(proc.stdout.splitlines()[-1])
+    assert report and all(r["ok"] for r in report)

@@ -5,9 +5,12 @@ Usage:
     python tools/package_pyfiles.py [dest.zip]
     spark-submit --py-files dist/cuda_float_compress_spark.zip your_job.py
 
-The zip contains only the package sources (no tests/bench); workers unpack
-it onto sys.path. The CLI entry points stay usable:
-    spark-submit --py-files dist/... -c 'from cuda_float_compress_spark import cli; cli.main([...])'
+The zip contains only the package sources (no tests/bench). The driver
+imports the package from it, and ``session.get_spark`` puts it on the
+Python workers' PYTHONPATH. The CLI runs from a job file that calls it:
+    spark-submit --py-files dist/... job.py encode --input DIR ...
+with job.py running ``sys.exit(main())`` after
+``from cuda_float_compress_spark.cli import main``.
 """
 
 from __future__ import annotations
