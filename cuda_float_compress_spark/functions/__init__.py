@@ -1,32 +1,11 @@
-"""Scalar helper functions (all JVM-side built-ins — SURVEY.md §2.3).
+"""SQL-facing helper functions: the codec-trials UDTF.
 
 The reference's only scalar functions are zigzag/bit ops inside the codec;
-the table-level engine adds the url/timestamp/text helpers here.
+the engine's url and timestamp expressions are Spark built-ins used in
+place (``plans.partitioning.host_expr``).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from cuda_float_compress_spark.plans.partitioning import host_expr  # noqa: F401
-
-
-def url_host(url_col: str = "url") -> Column:
-    return host_expr(url_col)
-
-
-def content_hash(col: Column) -> Column:
-    """64-bit content hash for manifests/lineage (xxhash64, JVM-side)."""
-    return F.xxhash64(col)
-
-
-def epoch_us(ts_col: Column) -> Column:
-    return F.unix_micros(ts_col)
-
-
-def ts_day(ts_col: Column) -> Column:
-    return F.date_trunc("day", ts_col)
 
 
 def codec_trials_udtf():

@@ -1,17 +1,17 @@
-"""Multimodal column plumbing: image/audio/video as opaque ``binary`` columns
+"""Multimodal column plumbing: image/audio as opaque ``binary`` columns
 with typed metadata, processed through Arrow-batched ``mapInPandas``.
 
 REAL decoders (pure numpy, no external libs): uncompressed 24-bit BMP,
-binary PPM (P6), PCM-16 WAV, 8-bit PNG (zlib + all five scanline filters),
-baseline + progressive JPEG (huffman + IDCT + chroma upsample —
-operators/jpeg.py), and lossless WebP (VP8L: prefix codes, LZ77, color
-cache, all four transforms — operators/webp.py).
-Remaining compressed formats (lossy-VP8 WebP, AVIF, OGG/WebM) would need
-codec libraries not present in this container; for those ``decode_image``
-raises NotImplementedError unless ``fake=True``, in which case a
-deterministic fake decoder stands in so the Spark-side plumbing — schema,
-partitioning, UDF signature, batch shape — stays real and tested. The
-byte-level feature extractor (histogram/entropy) is real for every format.
+binary PPM (P6), PCM-16 WAV and 8-bit PNG (zlib + all five scanline
+filters), each with an ``encode_*`` twin that tests build fixtures with.
+JPEG and WebP are read from their headers only: :func:`jpeg_dims` walks
+the markers to the first SOF segment, and :func:`webp_dims` reads the
+VP8X canvas, the lossless VP8L header or the lossy VP8 keyframe header.
+``decode_image`` refuses JPEG/WebP pixels, and any other format unless
+``fake=True``, when a deterministic fake decoder stands in so the
+Spark-side plumbing (schema, partitioning, UDF signature, batch shape)
+stays real and tested. The byte-level feature extractor
+(histogram/entropy) is real for every format.
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ import struct
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 MEDIA_META_SCHEMA = (
     "url string, media_type string, n_bytes long, magic string, "
@@ -245,7 +244,7 @@ def decode_png(payload: bytes) -> np.ndarray:
     # zlib expands up to ~1000x, so a small malicious/corrupt PNG could
     # otherwise allocate gigabytes here and OOM the executor — memory
     # exhaustion is not catchable by the row-skip try/except in
-    # image_thumbnails/media features. decompressobj(max_length) caps the
+    # extract_media_features. decompressobj(max_length) caps the
     # output buffer; one extra probe byte detects oversized streams.
     if expected > _MAX_PNG_RAW_BYTES:
         raise ValueError(
@@ -368,32 +367,143 @@ def encode_png(img: np.ndarray, filters=None) -> bytes:
     )
 
 
+_JPEG_MAGIC = b"\xff\xd8\xff"
+# more pixels than this (8.4 MP, ~350 MB of working set for a full decode)
+# is refused as a hostile header
+_MAX_JPEG_PIXELS = 1 << 23
+
+
+def jpeg_dims(payload: bytes) -> tuple[int, int]:
+    """(width, height) of a JPEG from its first SOF0/1/2 segment (baseline,
+    extended or progressive huffman), walking the markers before it and
+    reading no entropy data. Raises ValueError on a header out of that
+    profile: another coding process (lossless, arithmetic, differential),
+    precision other than 8, 0 or more than 2^23 pixels, a component count
+    other than 1 or 3, sampling factors outside 1-2, or a truncated
+    segment."""
+    if payload[:3] != _JPEG_MAGIC:
+        raise ValueError("not a JPEG payload")
+    pos, n = 2, len(payload)
+    while True:
+        if pos + 4 > n:
+            raise ValueError("truncated JPEG (no SOF)")
+        if payload[pos] != 0xFF:
+            raise ValueError("JPEG marker expected")
+        while pos + 1 < n and payload[pos + 1] == 0xFF:
+            pos += 1  # 0xFF fill bytes before a marker are legal padding
+        if pos + 3 >= n:
+            raise ValueError("truncated JPEG marker")
+        marker = payload[pos + 1]
+        pos += 2
+        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:  # SOI / bare RST
+            continue
+        if marker in (0xD9, 0xDA):  # EOI / SOS
+            raise ValueError("JPEG image data before SOF")
+        seg_len = struct.unpack_from(">H", payload, pos)[0]
+        body = payload[pos + 2:pos + seg_len]
+        if len(body) != seg_len - 2:
+            raise ValueError("truncated JPEG segment")
+        if marker in (0xC0, 0xC1, 0xC2):
+            if len(body) < 6:
+                raise ValueError("truncated SOF segment")
+            prec, h, w, ncomp = struct.unpack_from(">BHHB", body)
+            if prec != 8:
+                raise ValueError(f"unsupported JPEG precision {prec}")
+            if not 0 < h * w <= _MAX_JPEG_PIXELS:
+                raise ValueError(f"JPEG dimensions {w}x{h} out of range")
+            if ncomp not in (1, 3) or len(body) < 6 + 3 * ncomp:
+                raise ValueError(f"unsupported component count {ncomp}")
+            for hv in body[7:6 + 3 * ncomp:3]:
+                if not (1 <= hv >> 4 <= 2 and 1 <= hv & 0x0F <= 2):
+                    raise ValueError(f"unsupported sampling factors {hv:#04x}")
+            return w, h
+        if marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
+                      0xCD, 0xCE, 0xCF):
+            raise ValueError(
+                "unsupported JPEG coding process (lossless/arithmetic/"
+                "differential) — baseline and progressive huffman only"
+            )
+        pos += seg_len  # APPn / DQT / COM / others
+
+
+def _is_webp(payload: bytes) -> bool:
+    return payload[:4] == b"RIFF" and payload[8:12] == b"WEBP"
+
+
+def vp8_keyframe_dims(body: bytes) -> tuple[int, int]:
+    """Lossy VP8 ('VP8 ' chunk) keyframe dimensions from the UNCOMPRESSED
+    part of the frame header (RFC 6386 §9.1): a 3-byte little-endian frame
+    tag (bit 0 = interframe flag), the 3-byte start code 9D 01 2A, then two
+    16-bit LE fields carrying 14-bit width/height plus 2-bit upscale
+    codes. No boolean decoding required."""
+    if len(body) < 10:
+        raise ValueError("truncated VP8 chunk")
+    tag = body[0] | (body[1] << 8) | (body[2] << 16)
+    if tag & 1:
+        raise NotImplementedError(
+            "VP8 interframe — only keyframe headers are parsed"
+        )
+    if body[3:6] != b"\x9d\x01\x2a":
+        raise ValueError("bad VP8 keyframe start code")
+    wv = body[6] | (body[7] << 8)
+    hv = body[8] | (body[9] << 8)
+    return wv & 0x3FFF, hv & 0x3FFF
+
+
+def webp_dims(payload: bytes) -> tuple[int, int]:
+    """(width, height) of a WebP payload from headers only: the VP8X
+    canvas of an extended file, else the lossless (VP8L) header, else the
+    lossy VP8 keyframe header — whichever chunk comes first."""
+    if len(payload) < 20 or not _is_webp(payload):
+        raise ValueError("not a WebP payload")
+    pos = 12
+    while pos + 8 <= len(payload):
+        tag = payload[pos:pos + 4]
+        size = struct.unpack_from("<I", payload, pos + 4)[0]
+        body = payload[pos + 8:pos + 8 + size]
+        if len(body) != size:
+            raise ValueError("truncated WebP chunk")
+        if tag == b"VP8X":
+            if size < 10:
+                raise ValueError("truncated VP8X chunk")
+            w = 1 + (body[4] | (body[5] << 8) | (body[6] << 16))
+            h = 1 + (body[7] | (body[8] << 8) | (body[9] << 16))
+            return w, h
+        if tag == b"VP8L":
+            # signature byte 0x2F, then 14-bit width-1 and height-1, LSB
+            # first
+            if size < 5 or body[0] != 0x2F:
+                raise ValueError("bad VP8L header")
+            bits = int.from_bytes(body[1:5], "little")
+            return (bits & 0x3FFF) + 1, ((bits >> 14) & 0x3FFF) + 1
+        if tag == b"VP8 ":
+            return vp8_keyframe_dims(body)
+        pos += 8 + size + (size & 1)
+    raise ValueError("no image chunk in WebP payload")
+
+
 def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     """Decode an image payload to an HxWx3 array. REAL for BMP 24-bit,
-    PPM P6, PNG (8-bit, pure numpy+zlib — see decode_png), baseline +
-    progressive JPEG (pure numpy huffman+IDCT — see operators/jpeg.py),
-    and lossless WebP (VP8L, pure numpy — see operators/webp.py); lossy
-    WebP (VP8) would need the VP8 intra decoder — pass fake=True for the
-    deterministic stand-in (plumbing tests)."""
+    PPM P6 and PNG (8-bit, pure numpy+zlib — see decode_png). JPEG and
+    WebP pixels are out of scope whether ``fake`` is set or not (their
+    dimensions come from headers: :func:`jpeg_dims`, :func:`webp_dims`);
+    any other payload needs ``fake=True`` for the deterministic stand-in
+    (plumbing tests)."""
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     if payload[:2] == b"P6":
         return decode_ppm(payload)
     if payload[:8] == _PNG_MAGIC:
         return decode_png(payload)
-    if payload[:3] == b"\xff\xd8\xff":
-        from cuda_float_compress_spark.operators.jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from cuda_float_compress_spark.operators.webp import decode_webp
-
-        return decode_webp(payload)
+    if payload[:3] == _JPEG_MAGIC or _is_webp(payload):
+        raise NotImplementedError(
+            "JPEG/WebP pixel decode is out of scope; read their dimensions "
+            "with jpeg_dims/webp_dims"
+        )
     if not fake:
         raise NotImplementedError(
-            "unrecognized image format (lossy-WebP/AVIF/... would need "
-            "codec libraries not present in this container); use "
-            "BMP/PPM/PNG/JPEG/lossless-WebP payloads or fake=True"
+            "unrecognized image format; use BMP/PPM/PNG payloads or "
+            "fake=True"
         )
     # deterministic fake: dimensions + pixels derived from the byte content
     h = 4 + (len(payload) % 13)
@@ -401,16 +511,6 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     seed = int.from_bytes(payload[:8].ljust(8, b"\0"), "little") & 0x7FFFFFFF
     rng = np.random.default_rng(seed)
     return rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-
-
-def resize_image(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Nearest-neighbor resize (pure numpy index gather) — the real resize
-    step of an image-preprocessing pipeline (bilinear would change pixel
-    values; nearest keeps them exact and deterministic)."""
-    h, w = img.shape[:2]
-    rows = (np.arange(out_h) * h // out_h).astype(np.int64)
-    cols = (np.arange(out_w) * w // out_w).astype(np.int64)
-    return img[rows[:, None], cols[None, :]]
 
 
 def audio_features(payload: bytes) -> dict:
@@ -426,89 +526,6 @@ def audio_features(payload: bytes) -> dict:
         "rms": round(float(np.sqrt((x * x).mean())) if x.size else 0.0, 6),
         "peak": round(float(np.abs(x).max()) if x.size else 0.0, 6),
     }
-
-
-IMAGE_THUMB_SCHEMA = (
-    "url string, width int, height int, thumb_w int, thumb_h int, "
-    "mean_r double, mean_g double, mean_b double"
-)
-
-
-def image_thumbnails(
-    df: DataFrame, url_col: str = "url", bin_col: str = "payload",
-    thumb: int = 8,
-) -> DataFrame:
-    """mapInPandas image pipeline: REAL decode (BMP/PPM/PNG/baseline JPEG)
-    -> nearest-neighbor resize -> per-channel means. Non-image payloads are
-    skipped (a training pipeline routes by sniffed type first)."""
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf[url_col], pdf[bin_col]):
-                b = b if b is not None else b""
-                if (b[:2] not in (b"BM", b"P6") and b[:8] != _PNG_MAGIC
-                        and bytes(b[:3]) != b"\xff\xd8\xff"):
-                    continue
-                try:
-                    img = decode_image(bytes(b))
-                except (ValueError, NotImplementedError, struct.error):
-                    # malformed header bytes skip the row — one corrupt
-                    # payload must not kill the Spark task
-                    continue
-                th = resize_image(img, thumb, thumb)
-                m = th.reshape(-1, 3).mean(axis=0)
-                rows.append((u, img.shape[1], img.shape[0], thumb, thumb,
-                             round(float(m[0]), 4), round(float(m[1]), 4),
-                             round(float(m[2]), 4)))
-            yield pd.DataFrame(
-                rows, columns=["url", "width", "height", "thumb_w", "thumb_h",
-                               "mean_r", "mean_g", "mean_b"],
-            )
-
-    return df.select(url_col, bin_col).mapInPandas(work, schema=IMAGE_THUMB_SCHEMA)
-
-
-VP8_QUALITY_SCHEMA = (
-    "url string, width int, height int, y_ac_qi int, filter_level int, "
-    "sharpness int, n_token_partitions int, segmentation boolean"
-)
-
-
-def vp8_quality_table(
-    df: DataFrame, url_col: str = "url", bin_col: str = "payload"
-) -> DataFrame:
-    """mapInPandas over lossy-WebP payloads: parse the VP8 keyframe header
-    (operators/webp.py parse_vp8_frame_header, RFC 6386 9.2-9.7) into a
-    quality/decode-cost table — quantizer index is the compression-quality
-    proxy a crawl pipeline filters on (high qi = heavily compressed, low
-    visual quality), token-partition count bounds decode parallelism.
-    Non-WebP / lossless / interframe / malformed rows are skipped."""
-
-    def work(batches):
-        from cuda_float_compress_spark.operators.webp import vp8_header_info
-
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf[url_col], pdf[bin_col]):
-                b = bytes(b) if b is not None else b""
-                if b[:4] != b"RIFF" or b[8:12] != b"WEBP":
-                    continue
-                try:
-                    h = vp8_header_info(b)
-                except (ValueError, NotImplementedError, struct.error):
-                    continue
-                rows.append((u, h["width"], h["height"], h["y_ac_qi"],
-                             h["filter_level"], h["sharpness_level"],
-                             h["n_token_partitions"],
-                             bool(h["segmentation_enabled"])))
-            yield pd.DataFrame(
-                rows, columns=["url", "width", "height", "y_ac_qi",
-                               "filter_level", "sharpness",
-                               "n_token_partitions", "segmentation"],
-            )
-
-    return df.select(url_col, bin_col).mapInPandas(work, schema=VP8_QUALITY_SCHEMA)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -548,9 +565,12 @@ def audio_feature_table(
 def extract_media_features(
     df: DataFrame, url_col: str = "url", bin_col: str = "html", fake_decode: bool = True
 ) -> DataFrame:
-    """mapInPandas over binary payloads: magic sniff, byte-entropy, fake
-    decode dims. Arrow-batched; one numpy pass per batch, no per-row Python
-    beyond the payload loop (payloads are opaque blobs)."""
+    """mapInPandas over binary payloads: magic sniff, byte-entropy and
+    image dims (JPEG/WebP from headers, BMP/PPM/PNG decoded, anything else
+    from the fake decoder unless ``fake_decode=False``); a payload whose
+    dims cannot be read reports 0x0. Arrow-batched; one numpy pass per
+    batch, no per-row Python beyond the payload loop (payloads are opaque
+    blobs)."""
 
     def feats(batches):
         for pdf in batches:
@@ -567,25 +587,17 @@ def extract_media_features(
                     entropy = float(-(p * np.log2(p)).sum())
                 else:
                     entropy = 0.0
-                dims = None
+                dims = (0, 0)
                 try:
-                    img = decode_image(b, fake=fake_decode) if len(b) else None
-                    if img is not None:
+                    if b[:3] == _JPEG_MAGIC:
+                        dims = jpeg_dims(b)
+                    elif _is_webp(b):
+                        dims = webp_dims(b)
+                    elif len(b):
+                        img = decode_image(b, fake=fake_decode)
                         dims = (img.shape[1], img.shape[0])
                 except (ValueError, NotImplementedError, struct.error):
-                    img = None  # magic-like prefix on non-image bytes
-                    # lossy WebP: pixels are out of decode scope, but the
-                    # keyframe header carries real dimensions (RFC 6386
-                    # uncompressed part) — report those instead of 0x0
-                    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-                        from cuda_float_compress_spark.operators.webp import (
-                            webp_dims,
-                        )
-
-                        try:
-                            dims = webp_dims(b)
-                        except (ValueError, NotImplementedError):
-                            dims = None
+                    pass  # magic-like prefix on non-image bytes: 0x0
                 rows.append(
                     (
                         u,
@@ -593,8 +605,8 @@ def extract_media_features(
                         len(b),
                         b[:4].hex(),
                         round(entropy, 6),
-                        dims[0] if dims is not None else 0,
-                        dims[1] if dims is not None else 0,
+                        dims[0],
+                        dims[1],
                     )
                 )
             yield pd.DataFrame(
@@ -606,147 +618,3 @@ def extract_media_features(
             )
 
     return df.select(url_col, bin_col).mapInPandas(feats, schema=MEDIA_META_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, url_col: str = "url", bin_col: str = "html",
-                      every_n: int = 10) -> DataFrame:
-    """Video frame-sampling PLAN: emits (url, frame_idx) rows for a stubbed
-    downstream decoder — demonstrates the explode/partition shape without the
-    codec. Frame count is faked deterministically from payload size."""
-    n_frames = (F.octet_length(F.col(bin_col)) / 1024 + 1).cast("int")
-    return df.select(
-        F.col(url_col),
-        F.explode(F.sequence(F.lit(0), n_frames - 1)).alias("frame_idx"),
-    ).filter(F.col("frame_idx") % every_n == 0)
-
-
-# ---------------------------------------------------------------------------
-# Video: MJPEG-in-AVI — REAL container walk + frame decode (no codec libs:
-# each frame is a baseline/progressive JPEG our own decoder handles)
-# ---------------------------------------------------------------------------
-
-VIDEO_FRAME_SCHEMA = (
-    "url string, frame_idx int, height int, width int, "
-    "mean_luma double"
-)
-
-
-def iter_avi_frames(payload: bytes):
-    """Yield (frame_idx, jpeg_bytes) for every video frame chunk ('##dc' /
-    '##db') in an AVI 'movi' list — WITHOUT decoding, so samplers skip
-    unwanted frames for free (the chunk walk is header arithmetic only).
-    Malformed containers raise ValueError (row-skip contract)."""
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not an AVI payload")
-
-    def walk(start: int, end: int):
-        pos = start
-        while pos + 8 <= end:
-            cid = payload[pos:pos + 4]
-            size = struct.unpack_from("<I", payload, pos + 4)[0]
-            body_start = pos + 8
-            if body_start + size > end:
-                raise ValueError("truncated AVI chunk")
-            yield cid, body_start, size
-            pos = body_start + size + (size & 1)  # word alignment
-
-    frame_idx = 0
-    found_movi = False
-    for cid, off, size in walk(12, len(payload)):
-        if cid == b"LIST" and payload[off:off + 4] == b"movi":
-            found_movi = True
-            for scid, soff, ssize in walk(off + 4, off + size):
-                if scid[2:4] in (b"dc", b"db"):
-                    yield frame_idx, payload[soff:soff + ssize]
-                    frame_idx += 1
-    if not found_movi:
-        raise ValueError("AVI payload has no movi list")
-
-
-def decode_video_frames(payload: bytes, every_n: int = 1,
-                        max_frames: int | None = None):
-    """[(frame_idx, HxWx3 uint8)] for every ``every_n``-th MJPEG frame.
-    Unsampled frames are never decoded (the sampling IS the scale story:
-    at every_n=30 a pipeline touches ~3% of the decode work)."""
-    from cuda_float_compress_spark.operators.jpeg import decode_jpeg
-
-    out = []
-    for idx, jpg in iter_avi_frames(payload):
-        if idx % every_n:
-            continue
-        out.append((idx, decode_jpeg(jpg)))
-        if max_frames is not None and len(out) >= max_frames:
-            break
-    return out
-
-
-def sample_video_frames(df: DataFrame, url_col: str = "url",
-                        bin_col: str = "payload",
-                        every_n: int = 10) -> DataFrame:
-    """REAL video frame sampling over an opaque binary column: decode every
-    ``every_n``-th MJPEG frame of each AVI payload (pure-numpy JPEG
-    decoder) and emit one feature row per sampled frame. Malformed or
-    out-of-profile payloads are row-skips, never task failures — the same
-    contract as extract_media_features."""
-    import pandas as pd
-
-    def sample(batches):
-        for pdf in batches:
-            rows = []
-            for url, payload in zip(pdf[url_col], pdf[bin_col]):
-                if payload is None:
-                    continue
-                try:
-                    frames = decode_video_frames(bytes(payload), every_n)
-                except (ValueError, NotImplementedError):
-                    continue  # skip bad payloads, keep the task alive
-                for idx, img in frames:
-                    # ITU-R BT.601 luma — one float per sampled frame
-                    luma = (0.299 * img[:, :, 0].astype(np.float64)
-                            + 0.587 * img[:, :, 1]
-                            + 0.114 * img[:, :, 2]).mean()
-                    rows.append((url, idx, img.shape[0], img.shape[1],
-                                 float(luma)))
-            yield pd.DataFrame(
-                rows, columns=["url", "frame_idx", "height", "width",
-                               "mean_luma"],
-            )
-
-    return df.select(url_col, bin_col).mapInPandas(
-        sample, schema=VIDEO_FRAME_SCHEMA
-    )
-
-
-def encode_avi_mjpeg(frames, fps: int = 10, quality: int = 90) -> bytes:
-    """Test/fixture twin: HxWx3 uint8 frames -> a real MJPEG AVI container
-    (RIFF hdrl/avih + strl/strh/strf + movi with '00dc' JPEG chunks)."""
-    from cuda_float_compress_spark.operators.jpeg import encode_jpeg
-
-    if not frames:
-        raise ValueError("need at least one frame")
-    h, w = frames[0].shape[:2]
-    jpgs = [encode_jpeg(f, quality=quality) for f in frames]
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        out = cid + struct.pack("<I", len(body)) + body
-        if len(body) & 1:
-            out += b"\x00"
-        return out
-
-    def lst(four_cc: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", four_cc + body)
-
-    avih = struct.pack(
-        "<14I", 1_000_000 // fps, 0, 0, 0x10, len(jpgs), 0, 1, 0,
-        w, h, 0, 0, 0, 0,
-    )
-    strh = (b"vids" + b"MJPG" + struct.pack(
-        "<IHHIIIIIIIII", 0, 0, 0, 0, 1, fps, 0, len(jpgs), 0, 0, 0, 0,
-    ))
-    strf = struct.pack("<IiiHH4sIiiII", 40, w, h, 1, 24, b"MJPG",
-                       w * h * 3, 0, 0, 0, 0)
-    hdrl = lst(b"hdrl", chunk(b"avih", avih)
-               + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)))
-    movi = lst(b"movi", b"".join(chunk(b"00dc", j) for j in jpgs))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body

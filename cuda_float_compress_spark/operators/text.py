@@ -332,11 +332,6 @@ def html_to_text_col(html: Column) -> Column:
     return F.trim(F.regexp_replace(t, "[ \\t\\n\\r\\f]+", " "))
 
 
-def with_extracted_text(df: DataFrame, html_col: str = "html",
-                        out: str = "extracted_text") -> DataFrame:
-    return df.withColumn(out, html_to_text_col(F.col(html_col)))
-
-
 # PII patterns: only constructs Java regex and RE2 interpret IDENTICALLY
 # (no backrefs/lookaround, and an explicit whitespace class instead of \s —
 # Java's \s includes \x0B, RE2's does not), so the SQL oracle replays the

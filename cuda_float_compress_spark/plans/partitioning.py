@@ -37,7 +37,6 @@ def skewed_hosts(
     url_col: str = "url",
     n_parts: int = 32,
     skew_factor: float = 0.5,
-    target_rows_per_part: int | None = None,
     sample_fraction: float | None = None,
 ) -> dict[str, int]:
     """Hosts owning more than ``skew_factor``/n_parts of rows, mapped to the

@@ -21,7 +21,7 @@ the spec's sequence-number scoping (see ``read_iceberg_dir``). The
 path-only view (``data_files``) refuses tables carrying deletes rather
 than resurrect deleted rows.
 
-``write_iceberg_fixture`` is the test twin (the encode_png/encode_jpeg
+``write_iceberg_fixture`` is the test twin (the encode_png/encode_wav
 playbook): it writes a real two-snapshot Iceberg v2 table — parquet data
 files, deflate-compressed Avro manifests + manifest lists, metadata JSON,
 version-hint. Written tables carry every v2-spec-REQUIRED field (schemas
@@ -501,7 +501,7 @@ def export_iceberg_metadata(
     (overwrite semantics — the engine's lineage commits decide what is
     current; this export just republishes it for Iceberg readers).
 
-    This is the production shape of ``write_blocks_sink``'s Iceberg path:
+    ``sources.publish_blocks_iceberg`` publishes an encoded table this way:
     the encoded blocks dir stays where it is, and any Iceberg-capable
     engine (or :func:`read_iceberg_dir`) reads it with time travel across
     exports. Data paths are recorded absolute, so the table reads in place;

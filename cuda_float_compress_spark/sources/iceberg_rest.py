@@ -23,7 +23,7 @@ local filesystem (an object-store FileIO would slot into _resolve). The
 sandbox has no external Iceberg service, so conformance is tested against
 an in-process mock server implementing the spec's documented JSON shapes
 (tests/test_iceberg.py) — the same fixture-twin strategy as
-encode_png/encode_jpeg/write_iceberg_fixture.
+encode_png/encode_wav/write_iceberg_fixture.
 """
 
 from __future__ import annotations

@@ -22,7 +22,10 @@ local reader or a Spark filter or join in ``decode_table`` fails.
 
 Engine frames start on the JVM: a ``parallelize`` call in the package,
 or a ``createDataFrame`` of a Python list in the engine's read path,
-fails."""
+fails.
+
+Block rows are written in one place, ``encode.commit_blocks``: a Spark
+write whose target names ``blocks`` anywhere else fails."""
 from __future__ import annotations
 
 import ast
@@ -199,4 +202,39 @@ def test_frames_start_on_the_jvm():
                 stray.append(f"{where}: {ast.unparse(call)}")
     assert not stray, (
         "engine frame built from Python rows:\n" + "\n".join(stray)
+    )
+
+
+def test_one_block_writer():
+    """Rows appended to ``blocks/`` count only once lineage commits their
+    run, and ``encode.commit_blocks`` is the one writer that does both. A
+    sink that appended block rows with Spark outside it wrote rows no
+    read would ever return. Fails on a call in a Spark writer chain
+    (``.write``/``.writeTo``) whose arguments name ``blocks``, outside
+    ``encode.commit_blocks``."""
+    def chain(func: ast.expr) -> list[str]:
+        names = []
+        while isinstance(func, (ast.Attribute, ast.Call)):
+            if isinstance(func, ast.Attribute):
+                names.append(func.attr)
+                func = func.value
+            else:
+                func = func.func
+        return names
+
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fns, call in _calls(ast.parse(path.read_text())):
+            args = call.args + [k.value for k in call.keywords]
+            if ({"write", "writeTo"} & set(chain(call.func))
+                    and any("blocks" in ast.unparse(a) for a in args)
+                    and not (rel == "operators/encode.py"
+                             and "commit_blocks" in fns)):
+                stray.append(f"{rel}:{call.lineno} in "
+                             f"{'.'.join(fns) or '<module>'}: "
+                             f"{ast.unparse(call)}")
+    assert not stray, (
+        "block rows written outside encode.commit_blocks:\n"
+        + "\n".join(stray)
     )

@@ -215,94 +215,3 @@ def test_avro_container_roundtrip_generated(data):
         assert read_avro(f.name) == records
 
 
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=40),   # height
-    st.integers(min_value=1, max_value=40),   # width
-    st.integers(min_value=0, max_value=2**31 - 1),  # seed
-    st.sampled_from(["444", "420"]),
-    st.integers(min_value=0, max_value=3),    # restart interval (0 = none)
-    st.integers(min_value=60, max_value=100),
-)
-def test_jpeg_roundtrip_generated(h, w, seed, subsample, rst, quality):
-    """decode_jpeg(encode_jpeg(img)) yields exact dims and error bounded by
-    the quantization model for random smooth images, across subsampling,
-    restart intervals, qualities, and non-multiple-of-8 dims."""
-    from cuda_float_compress_spark.operators import jpeg as J
-
-    rng = np.random.default_rng(seed)
-    # smooth image: random low-frequency gradient + mild noise (JPEG's
-    # design domain; pure noise has unbounded chroma-subsample error)
-    yy, xx = np.mgrid[0:h, 0:w]
-    base = np.stack(
-        [
-            (yy * int(rng.integers(0, 6)) + xx * int(rng.integers(0, 6))) % 256
-            for _ in range(3)
-        ],
-        axis=2,
-    ).astype(np.float64)
-    img = np.clip(
-        base + rng.normal(0, 4, (h, w, 3)), 0, 255
-    ).astype(np.uint8)
-    enc = J.encode_jpeg(
-        img, quality=quality, subsample=subsample, restart_interval=rst
-    )
-    out = J.decode_jpeg(enc)
-    assert out.shape == (h, w, 3)
-    err = np.abs(out.astype(int) - img.astype(int)).mean()
-    assert err < (25.0 if quality < 80 else 15.0), (h, w, subsample, quality, err)
-
-
-@settings(max_examples=20, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=40),   # height
-    st.integers(min_value=1, max_value=40),   # width
-    st.integers(min_value=0, max_value=2**31 - 1),  # seed
-    st.sampled_from(["444", "420"]),
-    st.integers(min_value=60, max_value=100),
-    st.booleans(),                            # grayscale
-)
-def test_jpeg_progressive_equals_baseline_generated(h, w, seed, subsample,
-                                                    quality, gray):
-    """Progressive (SOF2) decode of the progressive encoder twin is
-    pixel-identical to baseline decode of the baseline encoder at the same
-    (quality, subsample) — both paths see the same quantized coefficients,
-    so the multi-scan DC/AC first/refinement machinery must be lossless."""
-    from cuda_float_compress_spark.operators import jpeg as J
-
-    rng = np.random.default_rng(seed)
-    shape = (h, w) if gray else (h, w, 3)
-    img = rng.integers(0, 256, shape, dtype=np.uint8)
-    base = J.decode_jpeg(J.encode_jpeg(img, quality=quality,
-                                       subsample=subsample))
-    prog = J.decode_jpeg(J.encode_jpeg_progressive(img, quality=quality,
-                                                   subsample=subsample))
-    assert np.array_equal(base, prog), (h, w, subsample, quality, gray)
-
-
-@settings(max_examples=25, deadline=None)
-@given(
-    st.integers(min_value=1, max_value=24),   # height
-    st.integers(min_value=1, max_value=24),   # width
-    st.integers(min_value=0, max_value=2**31 - 1),  # seed
-    st.sampled_from([None, "subtract_green", "predictor", "color",
-                     "palette"]),
-    st.integers(min_value=0, max_value=8),    # cache bits (0 = off)
-    st.booleans(),                            # lz77
-    st.integers(min_value=1, max_value=256),  # distinct colors to draw from
-)
-def test_webp_lossless_roundtrip_generated(h, w, seed, transform,
-                                           cache_bits, lz77, ncolors):
-    """decode_webp(encode_webp_lossless(img)) is the identity for random
-    images across transforms, color-cache sizes, and LZ77 settings —
-    bit-exact, since VP8L is lossless."""
-    from cuda_float_compress_spark.operators import webp as W
-
-    rng = np.random.default_rng(seed)
-    palette = rng.integers(0, 256, (ncolors, 3), dtype=np.uint8)
-    img = palette[rng.integers(0, ncolors, (h, w))]
-    enc = W.encode_webp_lossless(
-        img, transform=transform, cache_bits=cache_bits, use_lz77=lz77
-    )
-    assert np.array_equal(W.decode_webp(enc), img), (
-        h, w, transform, cache_bits, lz77, ncolors)

@@ -218,6 +218,7 @@ def test_publish_blocks_iceberg_over_encoded_table(spark, tmp_path):
     (no copy); repeated publishes append snapshots with time travel, and
     the Iceberg view equals the parquet view byte-for-byte."""
     from cuda_float_compress_spark.operators.direct import encode_table_direct
+    from cuda_float_compress_spark.operators.encode import encode_table
     from cuda_float_compress_spark.sources import publish_blocks_iceberg
     from cuda_float_compress_spark.table import generate_webpages_df
 
@@ -236,10 +237,8 @@ def test_publish_blocks_iceberg_over_encoded_table(spark, tmp_path):
 
     # second encode run (disjoint parts) + republish -> new snapshot; old
     # snapshot still reads the old file set
-    src2 = str(tmp_path / "pub_src2")
-    generate_webpages_df(spark, 200, partitions=1).write.parquet(src2)
-    encode_table_direct(spark, src2, out, resume=False,
-                        target_rows_per_split=200)
+    encode_table(spark, generate_webpages_df(spark, 200, partitions=1), out,
+                 n_parts=1, detect_skew=False, part_offset=100)
     r2 = publish_blocks_iceberg(out, timestamp_ms=1_700_000_060_000)
     assert r2["snapshot_id"] > r1["snapshot_id"]
     assert read_iceberg(spark, out).count() == spark.read.parquet(
@@ -249,6 +248,24 @@ def test_publish_blocks_iceberg_over_encoded_table(spark, tmp_path):
     assert old.count() == via_pq.count()  # time travel to the first publish
     snaps = snapshots(out)
     assert len(snaps) == 2 and snaps[-1]["is_current"]
+
+    # an orphan block file (its run never committed: a crashed writer's
+    # leftover) is not published; the lineage commits decide what is current
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    committed = data_files(out)
+    blk = pq.read_table(sorted(glob.glob(f"{out}/blocks/*.parquet"))[0])
+    orphan = f"{out}/blocks/part-orphan.parquet"
+    pq.write_table(blk.set_column(
+        blk.schema.get_field_index("run_id"), "run_id",
+        pa.array(["never-committed"] * blk.num_rows)), orphan)
+    publish_blocks_iceberg(out, timestamp_ms=1_700_000_120_000)
+    assert sorted(data_files(out)) == sorted(committed)
+    assert read_iceberg(spark, out).count() == read_iceberg(
+        spark, out, snapshot_id=r2["snapshot_id"]).count()
 
 
 def test_iceberg_deleted_entries_and_missing(spark, tmp_path):

@@ -715,6 +715,27 @@ def test_media_features_lossy_webp_dims(spark):
     assert (row["fake_width"], row["fake_height"]) == (320, 200)
 
 
+def test_media_features_jpeg_header_dims(spark):
+    """JPEG dims come from the SOF header through the Spark extractor, so
+    a payload whose entropy data is garbage still reports them; a JPEG
+    magic followed by text (the media_features oracle's rows) is 0x0."""
+    import struct as _struct
+
+    sof = _struct.pack(">BHHB", 8, 24, 12, 1) + bytes([1, 0x11, 0])
+    payload = (b"\xff\xd8\xff\xc0" + _struct.pack(">H", 2 + len(sof)) + sof
+               + b"\xff\xda" + b"\x13\x37" * 10)
+    df = spark.createDataFrame(
+        [("j", bytearray(payload)),
+         ("t", bytearray(bytes.fromhex("FFD8FFE0") + b"document text"))],
+        "url string, html binary",
+    )
+    rows = {r["url"]: r for r in
+            multimodal.extract_media_features(df, "url", "html").collect()}
+    assert {r["media_type"] for r in rows.values()} == {"image/jpeg"}
+    assert (rows["j"]["fake_width"], rows["j"]["fake_height"]) == (12, 24)
+    assert (rows["t"]["fake_width"], rows["t"]["fake_height"]) == (0, 0)
+
+
 def test_media_features_plumbing(spark):
     from cuda_float_compress_spark.table import generate_webpages_df
 
@@ -733,13 +754,6 @@ def test_decode_image_stub_raises():
         multimodal.decode_image(b"\x89PNG1234", fake=False)
     img = multimodal.decode_image(b"\x89PNG1234", fake=True)
     assert img.ndim == 3 and img.shape[2] == 3
-
-
-def test_frame_sample_plan(spark):
-    df = spark.createDataFrame([("u1", b"x" * 5000)], ["url", "html"])
-    out = multimodal.frame_sample_plan(df, every_n=2).collect()
-    idxs = [r["frame_idx"] for r in out]
-    assert idxs == [0, 2, 4]
 
 
 # --- streaming --------------------------------------------------------------------
@@ -871,152 +885,21 @@ def test_png_roundtrip_all_filters_and_color_types():
     )
 
 
-def test_jpeg_roundtrip_modes():
-    """Baseline JPEG (pure numpy huffman+IDCT) round-trips within the
-    codec's own quantization error: constant blocks near-exact, smooth
-    gradients tight, 4:2:0 + restart markers and grayscale supported,
-    odd (non-multiple-of-8) dims crop exactly."""
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import jpeg as J
-
-    img = np.full((16, 24, 3), [200, 64, 30], dtype=np.uint8)
-    out = J.decode_jpeg(J.encode_jpeg(img, quality=90))
-    assert out.shape == img.shape
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
-
-    yy, xx = np.mgrid[0:37, 0:29]
-    grad = np.stack(
-        [(yy * 3) % 256, (xx * 5) % 256, ((yy + xx) * 2) % 256], axis=2
-    ).astype(np.uint8)
-    out = J.decode_jpeg(J.encode_jpeg(grad, quality=95))
-    assert out.shape == grad.shape
-    assert np.abs(out.astype(int) - grad.astype(int)).mean() < 3.0
-
-    smooth = np.stack(
-        [(yy * 2) % 256, (xx * 3) % 256, np.full_like(yy, 128)], axis=2
-    ).astype(np.uint8)
-    enc = J.encode_jpeg(smooth, quality=90, subsample="420", restart_interval=2)
-    assert b"\xff\xdd" in enc and b"\xff\xd0" in enc  # DRI + RST0 present
-    out = J.decode_jpeg(enc)
-    assert out.shape == smooth.shape
-    assert np.abs(out.astype(int) - smooth.astype(int)).mean() < 5.0
-
-    rng = np.random.default_rng(11)
-    gray = rng.integers(0, 256, (21, 17), dtype=np.uint8)
-    outg = J.decode_jpeg(J.encode_jpeg(gray, quality=90))
-    assert outg.shape == (21, 17, 3)
-    assert np.array_equal(outg[:, :, 0], outg[:, :, 1])
-
-    # adversarial noise at quality 100 stays within the coarse bound and
-    # exercises the magnitude clamp
-    noise = rng.integers(0, 256, (16, 16, 3), dtype=np.uint8)
-    outn = J.decode_jpeg(J.encode_jpeg(noise, quality=100))
-    assert np.abs(outn.astype(int) - noise.astype(int)).mean() < 12.0
-
-    # decode_image dispatches on the JPEG magic
-    assert multimodal.decode_image(J.encode_jpeg(img)).shape == img.shape
-
-
-def test_jpeg_progressive_equals_baseline():
-    """Progressive decode (SOF2: DC first/refine + banded AC first/refine,
-    EOB runs, ZRL-in-refinement) reproduces the baseline decode EXACTLY —
-    the progressive encoder twin emits identical quantized coefficients, so
-    any pixel difference is a scan-decoder bug."""
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import jpeg as J
-
-    rng = np.random.default_rng(7)
-    yy, xx = np.mgrid[0:33, 0:26]
-    cases = [
-        # flat + gradient: EOB-run-heavy AC scans
-        (np.stack([(yy * 2) % 256, np.full_like(yy, 77), (xx * 3) % 256],
-                  axis=2).astype(np.uint8), "444", 85),
-        # noise: dense AC coefficients, ZRL + refinement corrections
-        (rng.integers(0, 256, (24, 17, 3), dtype=np.uint8), "420", 90),
-        # grayscale single-component frame
-        (rng.integers(0, 256, (21, 13), dtype=np.uint8), "444", 75),
-        # tiny image (single MCU, partial blocks)
-        (rng.integers(0, 256, (5, 6, 3), dtype=np.uint8), "420", 95),
-    ]
-    for img, sub, q in cases:
-        base = J.decode_jpeg(J.encode_jpeg(img, quality=q, subsample=sub))
-        prog_bytes = J.encode_jpeg_progressive(img, quality=q, subsample=sub)
-        assert b"\xff\xc2" in prog_bytes  # really SOF2
-        prog = J.decode_jpeg(prog_bytes)
-        assert np.array_equal(base, prog), (img.shape, sub, q)
-        # multimodal dispatch handles progressive payloads too
-        assert multimodal.decode_image(prog_bytes).shape == base.shape
-
-    # truncated inside headers fails cleanly (ValueError contract)
-    full = J.encode_jpeg_progressive(cases[0][0], quality=85)
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(full[:40])
-    # mid-stream truncation: progressive is DESIGNED for partial render —
-    # a cut at a scan boundary decodes the scans received (correct dims);
-    # a cut inside entropy data still raises the contract type
-    h0, w0 = cases[0][0].shape[:2]
-    for cut in range(len(full) // 3, len(full), 97):
-        try:
-            partial = J.decode_jpeg(full[:cut])
-            assert partial.shape == (h0, w0, 3)
-        except ValueError:
-            pass
-
-
-def test_webp_lossless_roundtrip_all_paths():
-    """VP8L decode recovers pixels EXACTLY across every feature the encoder
-    twin can emit: all four transforms (predictor/color/subtract-green/
-    palette incl. sub-byte packing), color cache, LZ77 backrefs (both
-    neighborhood plane codes and absolute distances), simple and normal
-    prefix codes."""
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import webp as W
-
-    rng = np.random.default_rng(5)
-    noise = rng.integers(0, 256, (16, 13, 3), dtype=np.uint8)
-    gray = rng.integers(0, 256, (20, 20), dtype=np.uint8)
-    tiny = rng.integers(0, 256, (1, 1, 3), dtype=np.uint8)
-    for img in (noise, gray, tiny):
-        want = img if img.ndim == 3 else np.repeat(img[:, :, None], 3, 2)
-        for tr in (None, "subtract_green", "predictor", "color"):
-            for cache in (0, 6):
-                enc = W.encode_webp_lossless(
-                    img, transform=tr, cache_bits=cache, use_lz77=True
-                )
-                assert np.array_equal(W.decode_webp(enc), want), (
-                    img.shape, tr, cache)
-    # palette at each packing width (2 -> 8px/byte, 4 -> 4, 13 -> 2, 200 -> 1)
-    for ncolors, shape in [(2, (9, 9)), (4, (5, 17)), (13, (8, 30)),
-                           (200, (30, 30))]:
-        vals = rng.integers(0, 256, (ncolors, 3), dtype=np.uint8)
-        img = vals[rng.integers(0, ncolors, shape)]
-        enc = W.encode_webp_lossless(img, transform="palette")
-        assert np.array_equal(W.decode_webp(enc), img), (ncolors, shape)
-    # LZ77-heavy flat image exercises vertical (dist=width) and horizontal
-    # (dist=1) plane codes + cache hits together
-    flat = np.tile(rng.integers(0, 256, (1, 10, 3), dtype=np.uint8),
-                   (12, 1, 1))
-    enc = W.encode_webp_lossless(flat, cache_bits=4, use_lz77=True)
-    assert np.array_equal(W.decode_webp(enc), flat)
-    # decode_image dispatches on the RIFF/WEBP magic
-    assert np.array_equal(multimodal.decode_image(enc), flat)
-
-
 def test_vp8_lossy_keyframe_dims_probe():
     """Lossy-WebP (VP8) dimensions come from the UNCOMPRESSED keyframe
     header (RFC 6386 9.1) — no probability tables needed. Pixel decode
-    stays a typed refusal (tables not reproducible), but type + dims are
-    real; interframes and corrupt start codes keep the error contract."""
+    stays a typed refusal, but type + dims are real; interframes and
+    corrupt start codes keep the error contract. Lossless (VP8L) and
+    extended (VP8X) files give their header dims too."""
     import struct as _struct
 
-    import numpy as np
     import pytest as _pytest
 
-    from cuda_float_compress_spark.operators import multimodal, webp as W
+    def riff(*chunks):
+        body = b"WEBP" + b"".join(
+            tag + _struct.pack("<I", len(c)) + c + b"\x00" * (len(c) & 1)
+            for tag, c in chunks)
+        return b"RIFF" + _struct.pack("<I", len(body)) + body
 
     def vp8_file(w, h, interframe=False, bad_code=False):
         part_size = 32
@@ -1025,446 +908,118 @@ def test_vp8_lossy_keyframe_dims_probe():
         body += b"\x9d\x01\x2b" if bad_code else b"\x9d\x01\x2a"
         body += _struct.pack("<HH", w | (0 << 14), h | (1 << 14))  # scale bits
         body += b"\x00" * part_size
-        riff = b"WEBP" + b"VP8 " + _struct.pack("<I", len(body)) + body
-        return b"RIFF" + _struct.pack("<I", len(riff)) + riff
+        return riff((b"VP8 ", body))
 
-    assert W.webp_dims(vp8_file(640, 480)) == (640, 480)
-    assert W.vp8_keyframe_dims(vp8_file(1, 16383)[20:]) == (1, 16383)
+    assert multimodal.webp_dims(vp8_file(640, 480)) == (640, 480)
+    assert multimodal.vp8_keyframe_dims(vp8_file(1, 16383)[20:]) == (1, 16383)
     with _pytest.raises(NotImplementedError, match="interframe"):
-        W.webp_dims(vp8_file(640, 480, interframe=True))
+        multimodal.webp_dims(vp8_file(640, 480, interframe=True))
     with _pytest.raises(ValueError, match="start code"):
-        W.webp_dims(vp8_file(640, 480, bad_code=True))
-    # lossless files agree between header probe and full decode
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (7, 12, 3), dtype=np.uint8)
-    enc = W.encode_webp_lossless(img)
-    assert W.webp_dims(enc) == (12, 7)
-    # pixel decode still refuses lossy VP8 with the documented reason
-    with _pytest.raises(NotImplementedError, match="VP8"):
-        W.decode_webp(vp8_file(8, 8))
+        multimodal.webp_dims(vp8_file(640, 480, bad_code=True))
+    # lossless: signature 0x2F, then 14-bit width-1 and height-1 LSB-first
+    bits = (12 - 1) | ((7 - 1) << 14)
+    vp8l = b"\x2f" + bits.to_bytes(4, "little") + b"\x00" * 4
+    assert multimodal.webp_dims(riff((b"VP8L", vp8l))) == (12, 7)
+    assert multimodal.webp_dims(
+        riff((b"VP8L", b"\x2f" + ((1 << 28) - 1).to_bytes(4, "little")))
+    ) == (16384, 16384)
+    with _pytest.raises(ValueError):
+        multimodal.webp_dims(riff((b"VP8L", vp8l[:4])))
+    with _pytest.raises(ValueError):
+        multimodal.webp_dims(riff((b"VP8L", b"\x2e" + vp8l[1:])))
+    # extended: the VP8X canvas (24-bit width-1, height-1) comes first
+    canvas = _struct.pack("<I", 0x10) + (300 - 1).to_bytes(3, "little") \
+        + (150 - 1).to_bytes(3, "little")
+    assert multimodal.webp_dims(
+        riff((b"VP8X", canvas), (b"VP8L", vp8l))) == (300, 150)
+    with _pytest.raises(ValueError, match="VP8X"):
+        multimodal.webp_dims(riff((b"VP8X", canvas[:9]), (b"VP8L", vp8l)))
+    # pixel decode refuses lossy and lossless WebP alike, fake or not
+    for fake in (False, True):
+        with _pytest.raises(NotImplementedError, match="WebP"):
+            multimodal.decode_image(vp8_file(8, 8), fake=fake)
+        with _pytest.raises(NotImplementedError, match="WebP"):
+            multimodal.decode_image(riff((b"VP8L", vp8l)), fake=fake)
     # and the media extractor surfaces the real header dims for lossy files
     assert multimodal.sniff_media_type(vp8_file(320, 200)) == "image/webp"
+    # the RIFF family dispatches on its subtype
+    assert multimodal.sniff_media_type(
+        b"RIFF" + _struct.pack("<I", 4) + b"AVI ") == "video/x-msvideo"
 
 
-def test_vp8_bool_coder_roundtrip():
-    """The RFC 6386 boolean coder pair: random (bit, prob) sequences
-    encode -> decode bit-exact. The decoder is the spec's pseudo-code;
-    the encoder is carry-free big-int, so this round trip IS its
-    correctness proof (see _BoolEncoder docstring)."""
-    import numpy as np
-
-    from cuda_float_compress_spark.operators.webp import (
-        _BoolDecoder,
-        _BoolEncoder,
-    )
-
-    rng = np.random.default_rng(7)
-    for trial in range(50):
-        n = int(rng.integers(1, 400))
-        bits = rng.integers(0, 2, n).tolist()
-        probs = rng.integers(1, 255, n).tolist()
-        be = _BoolEncoder()
-        for b, p in zip(bits, probs):
-            be.write_bool(int(b), int(p))
-        data = be.finish()
-        bd = _BoolDecoder(data)
-        got = [bd.read_bool(int(p)) for p in probs]
-        assert got == [int(b) for b in bits], f"trial {trial}"
-    # literals and signed values too (the header's actual alphabet)
-    be = _BoolEncoder()
-    be.write_literal(0x5A, 7)
-    be.write_signed(-13, 6)
-    be.write_signed(13, 6)
-    be.write_literal(3, 2)
-    bd = _BoolDecoder(be.finish())
-    assert bd.read_literal(7) == 0x5A
-    assert bd.read_signed(6) == -13
-    assert bd.read_signed(6) == 13
-    assert bd.read_literal(2) == 3
-
-
-def test_vp8_frame_header_parse():
-    """Full keyframe header parse (RFC 6386 9.2-9.7) against the
-    build_vp8_keyframe twin: quantizers, segmentation, loop-filter
-    deltas, token partitions — every prob-128 field before the
-    coefficient-probability boundary."""
+def test_jpeg_dims_from_headers():
+    """jpeg_dims reads (width, height) from the first SOF0/1/2 segment
+    without touching entropy data, and raises ValueError, never another
+    type, on every header a JPEG decoder rejects before its pixels."""
     import struct as _struct
 
     import pytest as _pytest
-
-    from cuda_float_compress_spark.operators import webp as W
-
-    def wrap(body):
-        riff = b"WEBP" + b"VP8 " + _struct.pack("<I", len(body)) + body
-        return b"RIFF" + _struct.pack("<I", len(riff)) + riff
-
-    # minimal header: defaults everywhere
-    h = W.parse_vp8_frame_header(W.build_vp8_keyframe(640, 480, y_ac_qi=44))
-    assert (h["width"], h["height"]) == (640, 480)
-    assert h["y_ac_qi"] == 44
-    assert h["segmentation_enabled"] == 0
-    assert h["n_token_partitions"] == 1
-    assert h["filter_level"] == 0
-    assert h["refresh_entropy_probs"] == 1
-
-    # everything on: segmentation quant/lf deltas, tree probs, filter
-    # config, lf adjustments, 8 token partitions, all 5 quantizer deltas
-    body = W.build_vp8_keyframe(
-        320, 200, color_space=0, clamping_type=1,
-        segment_quant_deltas=[10, -25, 0, 63],
-        segment_lf_deltas=[-5, 0, 7, 0], segment_abs_values=1,
-        segment_tree_probs=[200, 255, 17],
-        filter_type=1, filter_level=33, sharpness_level=5,
-        ref_lf_deltas=[2, -3, 0, 1], mode_lf_deltas=[0, 0, -6, 4],
-        n_token_partitions=8, y_ac_qi=91, y_dc_delta=7,
-        y2_dc_delta=-8, y2_ac_delta=3, uv_dc_delta=-1, uv_ac_delta=15,
-        refresh_entropy_probs=0, version=2,
-    )
-    h = W.vp8_header_info(wrap(body))
-    assert (h["width"], h["height"]) == (320, 200)
-    assert h["version"] == 2 and h["clamping_type"] == 1
-    assert h["segment_quant_deltas"] == [10, -25, 0, 63]
-    assert h["segment_lf_deltas"] == [-5, 0, 7, 0]
-    assert h["segment_abs_values"] == 1
-    assert h["segment_tree_probs"] == [200, 255, 17]
-    assert h["filter_type"] == 1 and h["filter_level"] == 33
-    assert h["sharpness_level"] == 5
-    assert h["ref_lf_deltas"] == [2, -3, 0, 1]
-    assert h["mode_lf_deltas"] == [0, 0, -6, 4]
-    assert h["n_token_partitions"] == 8
-    assert h["y_ac_qi"] == 91
-    assert (h["y_dc_delta"], h["y2_dc_delta"], h["y2_ac_delta"],
-            h["uv_dc_delta"], h["uv_ac_delta"]) == (7, -8, 3, -1, 15)
-    assert h["refresh_entropy_probs"] == 0
-
-    # error contract: truncated partition, lossless mismatch
-    short = W.build_vp8_keyframe(8, 8)[:12]
-    with _pytest.raises(ValueError, match="truncated"):
-        W.parse_vp8_frame_header(short)
-    import numpy as np
-    enc = W.encode_webp_lossless(
-        np.zeros((2, 2, 3), np.uint8))
-    with _pytest.raises(ValueError, match="no VP8 frame header|lossless"):
-        W.vp8_header_info(enc)
-
-
-def test_vp8_quality_table_spark(spark):
-    """Spark surface: lossy-WebP quality metadata via mapInPandas —
-    non-WebP, lossless, and malformed rows are skipped, never fatal."""
-    import struct as _struct
-
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import multimodal, webp as W
-
-    def wrap(body):
-        riff = b"WEBP" + b"VP8 " + _struct.pack("<I", len(body)) + body
-        return b"RIFF" + _struct.pack("<I", len(riff)) + riff
-
-    rows = [
-        ("u1", wrap(W.build_vp8_keyframe(64, 48, y_ac_qi=100,
-                                         filter_level=20,
-                                         n_token_partitions=4))),
-        ("u2", wrap(W.build_vp8_keyframe(8, 8, y_ac_qi=5))),
-        ("u3", W.encode_webp_lossless(np.zeros((2, 2, 3), np.uint8))),
-        ("u4", b"not webp at all"),
-        ("u5", wrap(b"\x00\x01")),  # truncated VP8 chunk
-        ("u6", None),
-    ]
-    df = spark.createDataFrame(rows, "url string, payload binary")
-    out = {r["url"]: r for r in
-           multimodal.vp8_quality_table(df).collect()}
-    assert set(out) == {"u1", "u2"}
-    assert (out["u1"]["width"], out["u1"]["height"]) == (64, 48)
-    assert out["u1"]["y_ac_qi"] == 100
-    assert out["u1"]["filter_level"] == 20
-    assert out["u1"]["n_token_partitions"] == 4
-    assert out["u2"]["y_ac_qi"] == 5 and not out["u2"]["segmentation"]
-
-
-def test_webp_color_transform_element_byte_layout():
-    """Pins the SPEC layout of ColorTransformElement independent of the
-    encoder twin (which once mirrored a channel swap, hiding it from the
-    round-trip tests): green_to_red lives in the element's BLUE byte,
-    green_to_blue in GREEN, red_to_blue in RED (spec 4.2.3)."""
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import webp as W
-
-    g2r = 64  # blue byte only: delta must land on the RED channel
-    tiles = np.array([0xFF000000 | g2r], np.uint32).reshape(1, 1)
-    px = np.array([0xFF0A4014], np.uint32)  # a=FF r=10 g=64 b=20
-    out = W._inv_color_transform(px, tiles, 9, 1, 1)
-    # ct_delta(64, g=64) = (64*64)>>5 = 128 -> r = 10+128 = 138; b unchanged
-    assert out[0] == 0xFF8A4014, hex(out[0])
-    # and a RED-byte element must shift BLUE (red_to_blue), via final red
-    r2b = 32
-    tiles = np.array([0xFF000000 | (r2b << 16)], np.uint32).reshape(1, 1)
-    out = W._inv_color_transform(px, tiles, 9, 1, 1)
-    # delta(32, r=10) = (32*10)>>5 = 10 -> b = 20+10 = 30; r untouched
-    assert out[0] == 0xFF0A401E, hex(out[0])
-    # forward twin inverts exactly under the fixed layout
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-    enc = W.encode_webp_lossless(img, transform="color")
-    assert np.array_equal(W.decode_webp(enc), img)
-
-
-def test_webp_predictor_tr_edge_uses_current_row_leftmost():
-    """Rightmost-column TR (predictor modes 3/5/9/10) is the CURRENT row's
-    leftmost pixel — libwebp's contiguous top_row[width] — not the row
-    above's. Crafted residuals, mode 3 (pure TR): the bottom-right pixel
-    must reconstruct equal to the bottom-left one."""
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import webp as W
-
-    tiles = np.array([0xFF000000 | (3 << 8)], np.uint32).reshape(1, 1)
-    res = np.array([
-        0x000A141E,  # (0,0): +black pred -> FF 0A 14 1E
-        0x00010101,  # (0,1): +left
-        0x00050505,  # (1,0): +top
-        0x00000000,  # (1,1): +TR -> must equal out[1,0], not out[0,0]
-    ], np.uint32)
-    out = W._inv_predictor(res, tiles, 9, 2, 2).reshape(2, 2)
-    assert out[1, 0] == 0xFF0F1923
-    assert out[1, 1] == out[1, 0], [hex(v) for v in out.ravel()]
-    # forward twin inverts exactly for every TR-using mode at the edge
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, 5 * 7, dtype=np.uint32) | 0xFF000000
-    for mode in (3, 5, 9, 10):
-        fwd = W._forward_predictor(img, mode, 7, 5)
-        back = W._inv_predictor(
-            fwd, np.array([0xFF000000 | (mode << 8)], np.uint32).reshape(1, 1),
-            9, 7, 5,
-        )
-        assert np.array_equal(back, img), mode
-
-
-def test_webp_meta_prefix_codes():
-    """Hand-built VP8L stream with META prefix codes: a 2-tile entropy
-    image routes the left/right halves to different code groups; the
-    decoder must pick the group per tile (the encoder twin never emits
-    meta codes, so this path needs a crafted stream)."""
-    import struct as _struct
-
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import webp as W
-
-    h, w = 4, 8
-    rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-    argb = (np.full((h, w), 0xFF000000, np.uint32)
-            | (img[:, :, 0].astype(np.uint32) << 16)
-            | (img[:, :, 1].astype(np.uint32) << 8)
-            | img[:, :, 2].astype(np.uint32)).reshape(-1)
-
-    bw = W._LsbWriter()
-    bw.write(0x2F, 8)
-    bw.write(w - 1, 14)
-    bw.write(h - 1, 14)
-    bw.write(0, 4)   # alpha hint + version
-    bw.write(0, 1)   # no transforms
-    bw.write(0, 1)   # no color cache
-    bw.write(1, 1)   # META prefix codes present
-    meta_bits = 2    # 4-pixel tiles -> 2x1 tile grid
-    bw.write(meta_bits - 2, 3)
-    # meta image: 2 pixels whose (red<<8|green) are group ids 0 and 1
-    meta_px = np.array([0xFF000000, 0xFF000100], np.uint32)
-    W._encode_image(bw, meta_px, 2, top_level=False)
-    # two code groups, each trained on its half's pixels
-    halves = [argb.reshape(h, w)[:, :4].reshape(-1),
-              argb.reshape(h, w)[:, 4:].reshape(-1)]
-    writers = []
-    for half in halves:
-        freqs = [dict() for _ in range(4)]
-        for px in half:
-            for fi, sh in ((0, 8), (1, 16), (2, 0), (3, 24)):
-                v = (int(px) >> sh) & 0xFF
-                freqs[fi][v] = freqs[fi].get(v, 0) + 1
-        cws = [
-            W._CodeWriter(freqs[0], 256 + 24),
-            W._CodeWriter(freqs[1], 256),
-            W._CodeWriter(freqs[2], 256),
-            W._CodeWriter(freqs[3], 256),
-            W._CodeWriter({0: 1}, 40),
-        ]
-        writers.append(cws)
-        for cw in cws:
-            cw.write_header(bw)
-    for pos, px in enumerate(argb):
-        x = pos % w
-        cws = writers[x // 4]
-        px = int(px)
-        cws[0].write_symbol(bw, (px >> 8) & 0xFF)
-        cws[1].write_symbol(bw, (px >> 16) & 0xFF)
-        cws[2].write_symbol(bw, px & 0xFF)
-        cws[3].write_symbol(bw, (px >> 24) & 0xFF)
-    bw.flush()
-    data = bytes(bw.out)
-    chunk = b"VP8L" + _struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        chunk += b"\x00"
-    riff = b"WEBP" + chunk
-    payload = b"RIFF" + _struct.pack("<I", len(riff)) + riff
-    assert np.array_equal(W.decode_webp(payload), img)
-
-
-def test_webp_rejects_corrupt_and_out_of_profile():
-    import struct as _struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cuda_float_compress_spark.operators import webp as W
-
-    good = W.encode_webp_lossless(np.zeros((4, 4, 3), dtype=np.uint8))
-    with _pytest.raises(ValueError):
-        W.decode_webp(b"not even riff")
-    with _pytest.raises(ValueError):
-        W.decode_webp(good[:16])  # truncated container
-    with _pytest.raises(ValueError):
-        W.decode_webp(good[:-3])  # truncated bitstream
-    # lossy VP8 refuses with the honest exception type
-    lossy = (b"RIFF" + _struct.pack("<I", 16) + b"WEBP"
-             + b"VP8 " + _struct.pack("<I", 4) + b"\x00" * 4)
-    with _pytest.raises(NotImplementedError, match="VP8"):
-        W.decode_webp(lossy)
-    # hostile dims rejected before allocation (14-bit fields maxed)
-    bw = W._LsbWriter()
-    bw.write(0x2F, 8)
-    bw.write((1 << 14) - 1, 14)
-    bw.write((1 << 14) - 1, 14)
-    bw.write(0, 4)
-    bw.flush()
-    data = bytes(bw.out) + b"\x00" * 8
-    hostile = (b"RIFF" + _struct.pack("<I", 12 + len(data)) + b"WEBP"
-               + b"VP8L" + _struct.pack("<I", len(data)) + data)
-    with _pytest.raises(ValueError, match="out of range"):
-        W.decode_webp(hostile)
-
-
-def test_jpeg_rejects_corrupt_and_out_of_profile():
-    import struct as _struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cuda_float_compress_spark.operators import jpeg as J
-
-    good = J.encode_jpeg(np.zeros((8, 8, 3), dtype=np.uint8))
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(b"junk bytes")
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(good[:30])  # truncated mid-segment
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(good[:-20])  # truncated entropy stream
-    # progressive (SOF2) is now SUPPORTED; a truncated progressive stream
-    # (SOF with no scans) still fails cleanly
-    sof2 = _struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0])
-    prog = (b"\xff\xd8\xff\xc2" + _struct.pack(">H", 2 + len(sof2)) + sof2)
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(prog)
-    # arithmetic coding (SOF9) remains an honest out-of-profile rejection
-    arith = (b"\xff\xd8\xff\xc9" + _struct.pack(">H", 2 + len(sof2)) + sof2)
-    with _pytest.raises(ValueError, match="arithmetic"):
-        J.decode_jpeg(arith)
-    # hostile SOF dimensions rejected before any allocation
-    huge = _struct.pack(">BHHB", 8, 65535, 65535, 1) + bytes([1, 0x11, 0])
-    hostile = (b"\xff\xd8\xff\xc0" + _struct.pack(">H", 2 + len(huge)) + huge)
-    with _pytest.raises(ValueError, match="out of range"):
-        J.decode_jpeg(hostile)
-
-
-def test_jpeg_hostile_payloads_raise_valueerror_only():
-    """The row-skip contract: EVERY malformed/hostile payload raises
-    ValueError (or NotImplementedError), never ZeroDivisionError /
-    IndexError / OverflowError — those would escape the mapInPandas
-    row-skip handlers and kill the Spark task. Scenarios from the round-4
-    adversarial review, each previously a different uncaught type."""
-    import struct as _struct
-
-    import numpy as np
-    import pytest as _pytest
-
-    from cuda_float_compress_spark.operators import jpeg as J
 
     def seg(marker, body):
         return marker + _struct.pack(">H", 2 + len(body)) + body
 
-    # (1) component with 0x0 sampling factors -> was ZeroDivisionError
-    sof = _struct.pack(">BHHB", 8, 8, 8, 3)
-    sof += bytes([1, 0x00, 0]) + bytes([2, 0x11, 1]) + bytes([3, 0x11, 1])
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(b"\xff\xd8" + seg(b"\xff\xc0", sof))
+    def sof(h, w, comps=((1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1)),
+            prec=8):
+        return _struct.pack(">BHHB", prec, h, w, len(comps)) + b"".join(
+            bytes(c) for c in comps)
 
-    # (2a) trailing fill bytes to EOF -> was IndexError
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(b"\xff\xd8\xff\xff\xff\xff")
+    app0 = seg(b"\xff\xe0", b"JFIF\x00\x01\x01\x00" + bytes(7))
+    dqt = seg(b"\xff\xdb", b"\x00" + bytes([1] * 64))
+    dht = seg(b"\xff\xc4", b"\x00" + bytes([1] + [0] * 15) + b"\x00")
+    sos = seg(b"\xff\xda", bytes([1, 1, 0x00, 0, 63, 0])) + b"\x00" * 8
+    # baseline 4:2:0 (SOF0) with a header before and data after the SOF
+    base = (b"\xff\xd8" + app0 + dqt + seg(b"\xff\xc0", sof(37, 29)) + dht
+            + seg(b"\xff\xdd", _struct.pack(">H", 2)) + sos + b"\xff\xd9")
+    assert multimodal.jpeg_dims(base) == (29, 37)
+    # progressive (SOF2), grayscale, behind fill bytes and a COM segment;
+    # the entropy data after it is garbage and never read
+    prog = (b"\xff\xd8" + seg(b"\xff\xfe", b"comment") + b"\xff\xff"
+            + seg(b"\xff\xc2", sof(480, 640, comps=((1, 0x11, 0),)))
+            + b"\xde\xad" * 20)
+    assert multimodal.jpeg_dims(prog) == (640, 480)
+    assert multimodal.jpeg_dims(
+        b"\xff\xd8" + seg(b"\xff\xc1", sof(1, 1))) == (1, 1)
+    # every cut before the SOF segment ends is a truncation
+    sof_end = base.index(b"\xff\xc0") + 2 + 2 + len(sof(37, 29))
+    for cut in range(sof_end):
+        with _pytest.raises(ValueError):
+            multimodal.jpeg_dims(base[:cut])
 
-    # (2b) empty SOS body -> was IndexError
-    good = J.encode_jpeg(np.zeros((8, 8, 3), dtype=np.uint8))
-    sof_i = good.index(b"\xff\xc0")
-    head = good[: good.index(b"\xff\xda")]
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(head + seg(b"\xff\xda", b""))
-
-    # (3) hostile DHT: DC symbol 64 -> was OverflowError on blk[0] store
-    dqt = b"\x00" + bytes([1] * 64)
-    bits = [0] * 16
-    bits[0] = 1  # one 1-bit code
-    dht_dc = bytes([0x00]) + bytes(bits) + bytes([64])  # symbol = size 64
-    dht_ac = bytes([0x10]) + bytes(bits) + bytes([0x00])  # EOB
-    sof1 = _struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0])
-    sos = bytes([1, 1, 0x00, 0, 63, 0])
-    hostile = (
-        b"\xff\xd8" + seg(b"\xff\xdb", dqt) + seg(b"\xff\xc4", dht_dc)
-        + seg(b"\xff\xc4", dht_ac) + seg(b"\xff\xc0", sof1)
-        + seg(b"\xff\xda", sos) + b"\x00" * 16 + b"\xff\xd9"
-    )
-    with _pytest.raises(ValueError):
-        J.decode_jpeg(hostile)
-
-    # working-set cap: a tiny VALID payload declaring huge dims is refused
-    big = _struct.pack(">BHHB", 8, 16384, 16384, 1) + bytes([1, 0x11, 0])
-    with _pytest.raises(ValueError, match="out of range"):
-        J.decode_jpeg(b"\xff\xd8" + seg(b"\xff\xc0", big))
-
-    # fill bytes BEFORE an RSTn inside entropy data are legal (T.81
-    # B.1.1.2) and must decode, not truncate the scan
-    img = np.arange(32 * 16 * 3, dtype=np.uint8).reshape(32, 16, 3)
-    enc = J.encode_jpeg(img, restart_interval=1)
-    rst0 = enc.index(b"\xff\xd0")
-    padded = enc[:rst0] + b"\xff\xff" + enc[rst0:]
-    out = J.decode_jpeg(padded)
-    assert out.shape == img.shape
-
-
-def test_image_thumbnails_over_jpeg(spark):
-    """The thumbnail pipeline decodes real baseline JPEG payloads; junk
-    with a JPEG magic is a row-skip, not a task failure."""
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import jpeg as J
-
-    yy, xx = np.mgrid[0:24, 0:12]
-    img = np.stack(
-        [(yy * 7) % 256, (xx * 11) % 256, np.full_like(yy, 77)], axis=2
-    ).astype(np.uint8)
-    enc = J.encode_jpeg(img, quality=92, subsample="420")
-    df = spark.createDataFrame(
-        [("j1", bytearray(enc)), ("junk", b"\xff\xd8\xff\xe0 not a jpeg")],
-        "url string, payload binary",
-    )
-    rows = {r["url"]: r for r in multimodal.image_thumbnails(df).collect()}
-    assert set(rows) == {"j1"}
-    r = rows["j1"]
-    assert (r["width"], r["height"]) == (12, 24)
-    src_means = img.reshape(-1, 3).mean(axis=0)
-    assert abs(r["mean_r"] - src_means[0]) < 12
-    assert abs(r["mean_g"] - src_means[1]) < 12
-    assert abs(r["mean_b"] - src_means[2]) < 12
+    hostile = [
+        # arithmetic coding (SOF9) and lossless (SOF3) are out of profile
+        b"\xff\xd8" + seg(b"\xff\xc9", sof(8, 8)),
+        b"\xff\xd8" + seg(b"\xff\xc3", sof(8, 8)),
+        # dims: 65535x65535, past the 2^23-pixel cap, and zero
+        b"\xff\xd8" + seg(b"\xff\xc0", sof(65535, 65535)),
+        b"\xff\xd8" + seg(b"\xff\xc0", sof(16384, 16384)),
+        b"\xff\xd8" + seg(b"\xff\xc0", sof(0, 8)),
+        # 0x0 sampling factors on one component
+        b"\xff\xd8" + seg(b"\xff\xc0", sof(
+            8, 8, comps=((1, 0x00, 0), (2, 0x11, 1), (3, 0x11, 1)))),
+        b"\xff\xd8" + seg(b"\xff\xc0", sof(
+            8, 8, comps=((1, 0x31, 0),))),
+        # two components; a component list cut short; 12-bit precision
+        b"\xff\xd8" + seg(b"\xff\xc0", sof(
+            8, 8, comps=((1, 0x11, 0), (2, 0x11, 0)))),
+        b"\xff\xd8" + seg(b"\xff\xc0", sof(8, 8)[:-3]),
+        b"\xff\xd8" + seg(b"\xff\xc0", sof(8, 8, prec=12)),
+        # image data or the end before any SOF
+        b"\xff\xd8" + sos + b"\xff\xd9",
+        b"\xff\xd8" + app0 + b"\xff\xd9" + bytes(8),
+        # trailing fill bytes to EOF, junk, a bad marker byte
+        b"\xff\xd8\xff\xff\xff\xff",
+        b"junk bytes",
+        b"\xff\xd8" + app0 + b"\x00" + base[2:],
+        # the media_features oracle's JPEG magic followed by text
+        bytes.fromhex("FFD8FFE0") + "Some document text é".encode(),
+    ]
+    for payload in hostile:
+        with _pytest.raises(ValueError):
+            multimodal.jpeg_dims(payload)
+    # pixel decode refuses JPEG, fake or not
+    for fake in (False, True):
+        with _pytest.raises(NotImplementedError, match="JPEG"):
+            multimodal.decode_image(base, fake=fake)
 
 
 def test_png_paeth_filter_pinned():
@@ -1516,8 +1071,8 @@ def test_png_zlib_bomb_bounded():
     """A PNG whose IDAT inflates far beyond its IHDR dimensions must fail
     with ValueError BEFORE allocating the inflated stream (zlib expands up
     to ~1000x: an unbounded decompress would OOM the executor, which the
-    row-skip try/except in image_thumbnails cannot catch), and hostile IHDR
-    dimensions must be rejected before any decompression."""
+    row-skip try/except in extract_media_features cannot catch), and
+    hostile IHDR dimensions must be rejected before any decompression."""
     import struct as _struct
     import zlib as _zlib
 
@@ -1556,38 +1111,6 @@ def test_png_zlib_bomb_bounded():
     # a legitimate image still round-trips through the bounded decompress
     img = np.arange(2 * 2 * 3, dtype=np.uint8).reshape(2, 2, 3)
     assert np.array_equal(multimodal.decode_png(multimodal.encode_png(img)), img)
-
-
-def test_image_thumbnails_over_png(spark):
-    """The thumbnail pipeline decodes real PNG payloads: dims and channel
-    means pinned against the source array."""
-    import numpy as np
-
-    rng = np.random.default_rng(31)
-    img = rng.integers(0, 256, (24, 12, 3), dtype=np.uint8)
-    png = multimodal.encode_png(img, filters=[y % 5 for y in range(24)])
-    df = spark.createDataFrame(
-        [("p1", bytearray(png)), ("junk", b"not-an-image")],
-        "url string, payload binary",
-    )
-    import struct as _st
-    import zlib as _zl
-
-    bad_ihdr = (  # PNG magic + IHDR declaring 10 bytes (spec wants 13)
-        b"\x89PNG\r\n\x1a\n"
-        + _st.pack(">I", 10) + b"IHDR" + b"\x00" * 10
-        + _st.pack(">I", _zl.crc32(b"IHDR" + b"\x00" * 10))
-    )
-    df = df.union(
-        spark.createDataFrame([("bad", bytearray(bad_ihdr))], df.schema)
-    )
-    rows = {r["url"]: r for r in multimodal.image_thumbnails(df).collect()}
-    assert set(rows) == {"p1"}  # malformed-IHDR row skipped, task alive
-    t = rows["p1"]
-    assert (t["width"], t["height"]) == (12, 24)
-    exp = multimodal.resize_image(img, 8, 8).reshape(-1, 3).mean(axis=0)
-    assert abs(t["mean_r"] - exp[0]) < 1e-3
-    assert abs(t["mean_b"] - exp[2]) < 1e-3
 
 
 def test_audio_feature_table_skips_malformed_riff(spark):
@@ -2010,9 +1533,9 @@ def test_rolling_fingerprint_matches_python(spark):
         assert got[i] == h, (i, t)
 
 
-def test_image_thumbnails_and_audio_features(spark):
-    """Real image resize + audio feature pipelines over genuine BMP/WAV
-    bytes, through the Spark mapInPandas surface."""
+def test_audio_feature_table(spark):
+    """Real audio feature pipeline over genuine WAV bytes, through the
+    Spark mapInPandas surface; non-WAV rows are skipped."""
     import numpy as np
 
     rng = np.random.default_rng(21)
@@ -2024,30 +1547,12 @@ def test_image_thumbnails_and_audio_features(spark):
         [("img1", bytearray(bmp)), ("aud1", bytearray(wav)), ("junk", b"zz")],
         "url string, payload binary",
     )
-    thumbs = {r["url"]: r for r in multimodal.image_thumbnails(df).collect()}
-    assert set(thumbs) == {"img1"}
-    t = thumbs["img1"]
-    assert (t["width"], t["height"], t["thumb_w"]) == (16, 32, 8)
-    exp = multimodal.resize_image(img, 8, 8).reshape(-1, 3).mean(axis=0)
-    assert abs(t["mean_r"] - exp[0]) < 1e-3
-
     auds = {r["url"]: r for r in multimodal.audio_feature_table(df).collect()}
     assert set(auds) == {"aud1"}
     a = auds["aud1"]
     assert a["sample_rate"] == 8000 and a["n_samples"] == 8000
     assert a["duration_sec"] == 1.0
     assert 0.3 < a["rms"] < 0.8 and a["peak"] <= 0.5
-
-
-def test_resize_image_exact_nearest():
-    import numpy as np
-
-    img = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    up = multimodal.resize_image(img, 8, 8)
-    assert up.shape == (8, 8, 3)
-    assert np.array_equal(up[::2, ::2], img)  # exact pixel preservation
-    down = multimodal.resize_image(img, 2, 2)
-    assert np.array_equal(down, img[::2, ::2])
 
 
 def test_connected_components_and_keep_list(spark):
@@ -2221,52 +1726,3 @@ def test_kmv_ignores_nulls(spark):
     assert r["distinct_estimate"] == 9.0 and r["n_kept"] == 9
 
 
-def test_mjpeg_avi_video_frames(spark):
-    """REAL video path: MJPEG-in-AVI container walk + per-frame JPEG decode.
-    Sampling skips unsampled frames WITHOUT decoding them (chunk-header
-    arithmetic only); the Spark operator emits one feature row per sampled
-    frame and row-skips malformed payloads."""
-    import numpy as np
-
-    from cuda_float_compress_spark.operators import multimodal as M
-
-    rng = np.random.default_rng(9)
-    yy, xx = np.mgrid[0:24, 0:32]
-    frames = [
-        np.stack([(yy * 3 + t * 11) % 256, (xx * 5) % 256,
-                  np.full_like(yy, 40 + t)], axis=2).astype(np.uint8)
-        for t in range(7)
-    ]
-    avi = M.encode_avi_mjpeg(frames, fps=5)
-    assert M.sniff_media_type(avi) == "video/x-msvideo"
-    # full decode: frame indices and dims round-trip; pixels match the
-    # JPEG codec's own decode of the same frame (lossy but deterministic)
-    got = M.decode_video_frames(avi, every_n=1)
-    assert [i for i, _ in got] == list(range(7))
-    assert all(img.shape == (24, 32, 3) for _, img in got)
-    from cuda_float_compress_spark.operators.jpeg import (
-        decode_jpeg,
-        encode_jpeg,
-    )
-
-    assert np.array_equal(got[3][1], decode_jpeg(encode_jpeg(frames[3],
-                                                             quality=90)))
-    # sampling decodes ONLY every 3rd frame
-    sampled = M.decode_video_frames(avi, every_n=3)
-    assert [i for i, _ in sampled] == [0, 3, 6]
-    # the Spark operator: one row per sampled frame, bad payloads skipped
-    df = spark.createDataFrame(
-        [("v://ok", bytearray(avi)), ("v://bad", bytearray(b"RIFFxxxxAVI ")),
-         ("v://not", bytearray(b"plain bytes"))],
-        "url string, payload binary",
-    )
-    rows = M.sample_video_frames(df, every_n=3).collect()
-    assert sorted((r["url"], r["frame_idx"]) for r in rows) == [
-        ("v://ok", 0), ("v://ok", 3), ("v://ok", 6)]
-    assert all(r["height"] == 24 and r["width"] == 32 for r in rows)
-    assert all(0.0 <= r["mean_luma"] <= 255.0 for r in rows)
-    # WebP sniffing still works through the shared RIFF family dispatch
-    from cuda_float_compress_spark.operators.webp import encode_webp_lossless
-
-    wp = encode_webp_lossless(frames[0])
-    assert M.sniff_media_type(wp) == "image/webp"
