@@ -947,29 +947,45 @@ def test_vp8_lossy_keyframe_dims_probe():
         b"RIFF" + _struct.pack("<I", 4) + b"AVI ") == "video/x-msvideo"
 
 
-def test_jpeg_dims_from_headers():
-    """jpeg_dims reads (width, height) from the first SOF0/1/2 segment
-    without touching entropy data, and raises ValueError, never another
-    type, on every header a JPEG decoder rejects before its pixels."""
+def _jpeg_seg(marker, body):
     import struct as _struct
 
+    return marker + _struct.pack(">H", 2 + len(body)) + body
+
+
+def _jpeg_sof(h, w, comps=((1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1)),
+              prec=8):
+    import struct as _struct
+
+    return _struct.pack(">BHHB", prec, h, w, len(comps)) + b"".join(
+        bytes(c) for c in comps)
+
+
+_JPEG_APP0 = _jpeg_seg(b"\xff\xe0", b"JFIF\x00\x01\x01\x00" + bytes(7))
+_JPEG_SOS = (_jpeg_seg(b"\xff\xda", bytes([1, 1, 0x00, 0, 63, 0]))
+             + b"\x00" * 8)
+
+
+def _jpeg_baseline():
+    """A baseline 4:2:0 (SOF0) 29x37 header stream: APP0, DQT before the
+    SOF and DHT, DRI and a scan after it."""
+    import struct as _struct
+
+    dqt = _jpeg_seg(b"\xff\xdb", b"\x00" + bytes([1] * 64))
+    dht = _jpeg_seg(b"\xff\xc4", b"\x00" + bytes([1] + [0] * 15) + b"\x00")
+    return (b"\xff\xd8" + _JPEG_APP0 + dqt
+            + _jpeg_seg(b"\xff\xc0", _jpeg_sof(37, 29)) + dht
+            + _jpeg_seg(b"\xff\xdd", _struct.pack(">H", 2)) + _JPEG_SOS
+            + b"\xff\xd9")
+
+
+def test_jpeg_dims_from_headers():
+    """jpeg_dims reads (width, height) from the first SOF0/1/2 segment
+    without touching entropy data; pixel decode refuses JPEG."""
     import pytest as _pytest
 
-    def seg(marker, body):
-        return marker + _struct.pack(">H", 2 + len(body)) + body
-
-    def sof(h, w, comps=((1, 0x22, 0), (2, 0x11, 1), (3, 0x11, 1)),
-            prec=8):
-        return _struct.pack(">BHHB", prec, h, w, len(comps)) + b"".join(
-            bytes(c) for c in comps)
-
-    app0 = seg(b"\xff\xe0", b"JFIF\x00\x01\x01\x00" + bytes(7))
-    dqt = seg(b"\xff\xdb", b"\x00" + bytes([1] * 64))
-    dht = seg(b"\xff\xc4", b"\x00" + bytes([1] + [0] * 15) + b"\x00")
-    sos = seg(b"\xff\xda", bytes([1, 1, 0x00, 0, 63, 0])) + b"\x00" * 8
-    # baseline 4:2:0 (SOF0) with a header before and data after the SOF
-    base = (b"\xff\xd8" + app0 + dqt + seg(b"\xff\xc0", sof(37, 29)) + dht
-            + seg(b"\xff\xdd", _struct.pack(">H", 2)) + sos + b"\xff\xd9")
+    seg, sof = _jpeg_seg, _jpeg_sof
+    base = _jpeg_baseline()
     assert multimodal.jpeg_dims(base) == (29, 37)
     # progressive (SOF2), grayscale, behind fill bytes and a COM segment;
     # the entropy data after it is garbage and never read
@@ -979,18 +995,44 @@ def test_jpeg_dims_from_headers():
     assert multimodal.jpeg_dims(prog) == (640, 480)
     assert multimodal.jpeg_dims(
         b"\xff\xd8" + seg(b"\xff\xc1", sof(1, 1))) == (1, 1)
+    # pixel decode refuses JPEG, fake or not
+    for fake in (False, True):
+        with _pytest.raises(NotImplementedError, match="JPEG"):
+            multimodal.decode_image(base, fake=fake)
+
+
+def test_jpeg_rejects_corrupt_and_out_of_profile():
+    """Junk, every truncation before the SOF ends, the lossless and
+    arithmetic coding processes and 65535x65535 dims are ValueErrors."""
+    import pytest as _pytest
+
+    seg, sof = _jpeg_seg, _jpeg_sof
+    base = _jpeg_baseline()
+    with _pytest.raises(ValueError, match="not a JPEG"):
+        multimodal.jpeg_dims(b"junk bytes")
     # every cut before the SOF segment ends is a truncation
     sof_end = base.index(b"\xff\xc0") + 2 + 2 + len(sof(37, 29))
     for cut in range(sof_end):
         with _pytest.raises(ValueError):
             multimodal.jpeg_dims(base[:cut])
+    # arithmetic coding (SOF9) and lossless (SOF3) are out of profile
+    for marker in (b"\xff\xc9", b"\xff\xc3"):
+        with _pytest.raises(ValueError, match="arithmetic"):
+            multimodal.jpeg_dims(b"\xff\xd8" + seg(marker, sof(8, 8)))
+    with _pytest.raises(ValueError, match="out of range"):
+        multimodal.jpeg_dims(b"\xff\xd8" + seg(b"\xff\xc0", sof(65535, 65535)))
 
+
+def test_jpeg_hostile_payloads_raise_valueerror_only():
+    """The row-skip contract: every malformed or hostile header raises
+    ValueError, never another type that would escape the mapInPandas
+    row-skip handlers and kill the Spark task."""
+    import pytest as _pytest
+
+    seg, sof = _jpeg_seg, _jpeg_sof
+    base = _jpeg_baseline()
     hostile = [
-        # arithmetic coding (SOF9) and lossless (SOF3) are out of profile
-        b"\xff\xd8" + seg(b"\xff\xc9", sof(8, 8)),
-        b"\xff\xd8" + seg(b"\xff\xc3", sof(8, 8)),
-        # dims: 65535x65535, past the 2^23-pixel cap, and zero
-        b"\xff\xd8" + seg(b"\xff\xc0", sof(65535, 65535)),
+        # dims past the 2^23-pixel cap, and zero
         b"\xff\xd8" + seg(b"\xff\xc0", sof(16384, 16384)),
         b"\xff\xd8" + seg(b"\xff\xc0", sof(0, 8)),
         # 0x0 sampling factors on one component
@@ -1004,22 +1046,20 @@ def test_jpeg_dims_from_headers():
         b"\xff\xd8" + seg(b"\xff\xc0", sof(8, 8)[:-3]),
         b"\xff\xd8" + seg(b"\xff\xc0", sof(8, 8, prec=12)),
         # image data or the end before any SOF
-        b"\xff\xd8" + sos + b"\xff\xd9",
-        b"\xff\xd8" + app0 + b"\xff\xd9" + bytes(8),
-        # trailing fill bytes to EOF, junk, a bad marker byte
+        b"\xff\xd8" + _JPEG_SOS + b"\xff\xd9",
+        b"\xff\xd8" + _JPEG_APP0 + b"\xff\xd9" + bytes(8),
+        # trailing fill bytes to EOF, a bad marker byte
         b"\xff\xd8\xff\xff\xff\xff",
-        b"junk bytes",
-        b"\xff\xd8" + app0 + b"\x00" + base[2:],
+        b"\xff\xd8" + _JPEG_APP0 + b"\x00" + base[2:],
         # the media_features oracle's JPEG magic followed by text
         bytes.fromhex("FFD8FFE0") + "Some document text é".encode(),
     ]
     for payload in hostile:
         with _pytest.raises(ValueError):
             multimodal.jpeg_dims(payload)
-    # pixel decode refuses JPEG, fake or not
-    for fake in (False, True):
-        with _pytest.raises(NotImplementedError, match="JPEG"):
-            multimodal.decode_image(base, fake=fake)
+    # the working-set cap names itself
+    with _pytest.raises(ValueError, match="out of range"):
+        multimodal.jpeg_dims(b"\xff\xd8" + seg(b"\xff\xc0", sof(16384, 16384)))
 
 
 def test_png_paeth_filter_pinned():
