@@ -2,7 +2,7 @@
 
 A 100 TB corpus store needs takedown/PII deletes without rewriting the
 table. The engine's stable row address is ``(part_id, chunk_id, pos)`` —
-``committed_blocks`` guarantees at most one committed run per part, and
+``encode.commit_blocks`` commits at most one run per part, and
 chunk payloads are immutable once committed — so a delete is a TOMBSTONE
 row carrying that address, the same shape as an Iceberg v2 position
 delete (sources/iceberg.py read_scan_plan applies those for foreign
@@ -11,11 +11,11 @@ tables; this module is the native twin for the engine's block format).
 Mechanics:
 
 * :func:`delete_rows` runs one decode pass restricted to the predicate
-  columns (zone maps / Bloom filters prune chunks first) and writes the
-  matching addresses as parquet under ``<table>/deletes/run-<id>/`` —
-  a fully distributed job: only row ADDRESSES cross the wire, never row
-  data, and the Spark job-commit ``_SUCCESS`` marker makes the tombstone
-  set atomic (readers ignore half-written delete dirs).
+  columns (zone maps / Bloom filters prune chunks first) and collects
+  the matching ADDRESSES, never row data, to the driver, which holds
+  all live tombstones on every read anyway. :func:`commit_tombstones`
+  writes them as ``deletes/run-<id>/part-0.parquet``, then an empty
+  ``_SUCCESS``: readers trust only marked runs, and nothing is renamed.
 * Every reader (``decode.decode_table``, ``read_table_local`` and
   ``compact``) drops committed tombstones per chunk in the chunk
   assembler, ``decode.assemble_chunks``, from the positions
@@ -33,37 +33,22 @@ added merge-on-read to immutable data files.
 
 from __future__ import annotations
 
+import time
 import uuid
 
-import pyarrow.dataset as ds
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from cuda_float_compress_spark.snapshot import ADDRESS_COLS, Snapshot
+from cuda_float_compress_spark.snapshot import (
+    ADDRESS_COLS,
+    ADDRESS_SCHEMA,
+    Snapshot,
+    _exists,
+)
 
-__all__ = ["delete_rows", "delete_rows_by_keys", "tombstones_df",
-           "ADDRESS_COLS"]
-
-TOMBSTONE_SCHEMA = "_part_id int, _chunk_id bigint, _pos bigint"
-
-
-def tombstones_df(spark: SparkSession, out_dir: str,
-                  as_of: float | None = None) -> DataFrame | None:
-    """Committed tombstones of an encoded table, or None when there are
-    none. Only delete runs whose Spark job committed (``_SUCCESS``) are
-    trusted — a crashed delete_rows leaves an inert partial dir.
-
-    ``as_of`` scopes deletes in time (the Iceberg sequence-number rule
-    for position deletes): a snapshot read dated BEFORE a delete
-    committed must still see the rows (see ``snapshot.Snapshot``)."""
-    snap = Snapshot.resolve(out_dir, as_of=as_of)
-    if not snap.tombstone_runs:
-        return None
-    # delete_rows and merge_rows write exactly these types; an explicit
-    # schema spares the schema-merge job
-    return spark.read.schema(TOMBSTONE_SCHEMA).parquet(
-        *(f"{snap.out_dir}/{run}" for run in snap.tombstone_runs)
-    )
+__all__ = ["delete_rows", "delete_rows_by_keys", "commit_tombstones",
+           "key_addresses", "ADDRESS_COLS"]
 
 
 def delete_rows(
@@ -87,8 +72,9 @@ def delete_rows(
     addr = decode_table(
         spark, out_dir, columns=pred_cols, predicates=predicates,
         with_row_address=True,
-    ).select(*ADDRESS_COLS)
-    return _commit_tombstones(spark, out_dir, addr, run_id)
+    ).select(*ADDRESS_COLS).toArrow()
+    return {"run_id": run_id, "tombstones": commit_tombstones(
+        out_dir, run_id, addr, time.time())}
 
 
 def delete_rows_by_keys(
@@ -101,34 +87,52 @@ def delete_rows_by_keys(
     """Tombstone every row whose ``key_col`` appears in ``keys`` (a
     DataFrame with that one column) — the takedown-list shape: the list
     can be millions of rows, beyond what an IN-list predicate can carry.
-    One decode pass over the key column semi-joins the list (AQE
-    broadcasts it when small; otherwise a shuffle on the key only — row
-    payloads never move). Rows already deleted are not re-tombstoned."""
+    Rows already deleted are not re-tombstoned."""
+    run_id = run_id or uuid.uuid4().hex[:12]
+    addr = key_addresses(spark, out_dir, key_col,
+                         keys.select(key_col).distinct())
+    return {"run_id": run_id, "tombstones": commit_tombstones(
+        out_dir, run_id, addr, time.time())}
+
+
+def key_addresses(spark: SparkSession, out_dir: str, key_col: str,
+                  keys: DataFrame) -> pa.Table:
+    """The addresses of the live rows whose ``key_col`` appears in
+    ``keys`` (distinct values of that one column), collected to the
+    driver. One decode pass over the key column semi-joins the keys (AQE
+    broadcasts them when small; otherwise a shuffle on the key only —
+    row payloads never move)."""
     from cuda_float_compress_spark.operators.decode import decode_table
 
-    run_id = run_id or uuid.uuid4().hex[:12]
-    addr = (
+    return (
         decode_table(spark, out_dir, columns=[key_col],
                      with_row_address=True)
-        .join(keys.select(key_col).distinct(), key_col, "left_semi")
+        .join(keys, key_col, "left_semi")
         .select(*ADDRESS_COLS)
+        .toArrow()
     )
-    return _commit_tombstones(spark, out_dir, addr, run_id)
 
 
-def _commit_tombstones(spark, out_dir: str, addr: DataFrame,
-                       run_id: str) -> dict:
-    import time
-
-    rel = f"deletes/run-{run_id}"
-    addr.withColumn("committed_at", F.lit(time.time())).write.parquet(
-        f"{out_dir}/{rel}")
-    return {"run_id": run_id, "tombstones": footer_rows(out_dir, rel)}
-
-
-def footer_rows(out_dir: str, rel: str) -> int:
-    """Rows of the parquet dir ``rel`` (relative to the table root), from
-    the file footers alone: no Spark job, no data read."""
+def commit_tombstones(out_dir: str, run_id: str, addr: pa.Table,
+                      committed_at: float) -> int:
+    """Commit ``addr`` (``_part_id, _chunk_id, _pos`` rows) as the delete
+    run ``deletes/run-<run_id>``, stamped ``committed_at`` (the ``as_of``
+    time scope); return its row count. The one writer of tombstones: one
+    parquet file, then the empty ``_SUCCESS`` marker, its commit point.
+    An empty ``addr`` still commits an (empty) run."""
     snap = Snapshot.resolve(out_dir)
-    return ds.dataset(f"{snap.root}/{rel}", filesystem=snap.fs,
-                      format="parquet").count_rows()
+    fs, run = snap.fs, f"{snap.root}/deletes/run-{run_id}"
+    if _exists(fs, run):
+        raise ValueError(f"{out_dir} already holds delete run {run_id!r}")
+    fs.create_dir(run)
+    n = addr.num_rows
+    pq.write_table(addr.cast(ADDRESS_SCHEMA).append_column(
+        "committed_at", pa.repeat(pa.scalar(committed_at, pa.float64()), n)),
+        f"{run}/part-0.parquet", filesystem=fs)
+    _mark_committed(fs, run)
+    return n
+
+
+def _mark_committed(fs, run: str) -> None:
+    # written last: readers trust a run only once this marker exists
+    fs.open_output_stream(f"{run}/_SUCCESS").close()

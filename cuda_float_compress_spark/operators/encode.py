@@ -339,7 +339,9 @@ def commit_blocks(blocks: DataFrame, out_dir: str, run_id: str,
     pyarrow: the rows are metadata-scale (parts x cols), and a Spark job
     costs ~0.5 s of fixed driver latency in local mode. The lineage
     append lands LAST: it is the run's commit point (readers trust only
-    lineage-committed parts)."""
+    lineage-committed parts). Parts another run committed are refused
+    before either append (two runs of one part make the table
+    unreadable); ``maintain.vacuum`` reclaims the refused block files."""
     stage = (metrics.stage if metrics is not None
              else lambda _: contextlib.nullcontext())
     with stage("encode_write"):
@@ -352,6 +354,13 @@ def commit_blocks(blocks: DataFrame, out_dir: str, run_id: str,
         snap = Snapshot.resolve(out_dir)
         added = [p for p, _ in snap.all_block_files if p not in before]
         man_rows = _manifest_rows(snap.fs, added, run_id) if added else []
+        done = snap.committed_rows
+        others = set() if done is None else set(done.filter(pc.not_equal(
+            done["run_id"], run_id))["part_id"].to_pylist())
+        taken = sorted(others & {r["part_id"] for r in man_rows})
+        if taken:
+            raise ValueError(f"parts {taken} of {out_dir} are already "
+                             "committed by another run; use part_offset")
         _atomic_parquet_append(
             snap.fs, f"{snap.root}/manifest",
             pa.Table.from_pylist(man_rows, schema=_MANIFEST_ARROW),

@@ -30,11 +30,11 @@ lineage, on the driver.
 from __future__ import annotations
 
 import itertools
+import time
 import uuid
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -46,6 +46,7 @@ from cuda_float_compress_spark.operators.decode import (
     group_frame,
     read_group,
 )
+from cuda_float_compress_spark.operators.deletes import commit_tombstones
 from cuda_float_compress_spark.operators.encode import (
     _BLOCKS_ARROW,
     BLOCKS_SCHEMA,
@@ -91,11 +92,11 @@ def reencode_columns(
 ) -> dict:
     """Re-encode only ``codec_overrides`` columns; copy every other
     committed block row unchanged into the new table ``dst_dir``. The
-    source's live tombstones are copied first (every ``(part, chunk,
-    pos)`` address is kept, so they delete the same rows); the blocks are
-    written and committed after them, so a crash in between leaves
-    nothing committed. Returns the run id and the committed raw/encoded
-    byte totals."""
+    source's live tombstones are committed first, as one delete run
+    (every ``(part, chunk, pos)`` address is kept, so they delete the
+    same rows); the blocks are written and committed after them, so a
+    crash in between leaves nothing committed. Returns the run id and
+    the committed raw/encoded byte totals."""
     run_id = run_id or uuid.uuid4().hex[:12]
     src, dst = Snapshot.resolve(src_dir), _new_table(dst_dir)
     fs, pairs = src.fs, src.pairs
@@ -129,11 +130,8 @@ def reencode_columns(
                 if out:
                     yield pa.RecordBatch.from_pylist(out, schema=_BLOCKS_ARROW)
 
-    for run in src.tombstone_runs:
-        dst.fs.create_dir(f"{dst.root}/{run}")
-        pafs.copy_files(f"{src.root}/{run}", f"{dst.root}/{run}",
-                        source_filesystem=src.fs,
-                        destination_filesystem=dst.fs)
+    if src.tombstones.num_rows:
+        commit_tombstones(dst_dir, run_id, src.tombstones, time.time())
     # a file group goes whole to one task, which writes one file, so no
     # chunk spans two output files
     manifest = commit_blocks(
@@ -162,24 +160,25 @@ def _finish_legacy_swap(fs, root: str) -> None:
 
 
 def vacuum(spark: SparkSession, out_dir: str) -> dict:
-    """Garbage-collect block files: crashed or retried runs append block
-    files whose ``(part_id, run_id)`` never commits to lineage. Every
-    reader already ignores them, but they occupy storage forever. Vacuum
-    deletes the files that hold no committed pair (``Snapshot.
-    all_block_files`` minus ``Snapshot.block_files``) and never rewrites
-    a live file, so live chunks stay where they are and no Spark job
-    runs. On entry it finishes or rolls back the interrupted directory
-    swap of an older vacuum (:func:`_finish_legacy_swap`).
+    """Garbage-collect what no reader trusts: block files whose
+    ``(part_id, run_id)`` never committed to lineage (crashed or retried
+    runs: ``Snapshot.all_block_files`` minus ``Snapshot.block_files``),
+    and the uncommitted ``Snapshot.delete_dirs`` (delete runs that
+    crashed before their ``_SUCCESS``, legacy ``_staging-*`` dirs).
+    Vacuum never rewrites a live file, so live chunks stay where they
+    are and no Spark job runs. On entry it finishes or rolls back the
+    interrupted directory swap of an older vacuum
+    (:func:`_finish_legacy_swap`).
 
     Returns ``rows_before`` and ``rows_after`` (block rows, from the
-    parquet footers), ``bytes_reclaimed`` (the deleted files' sizes) and
-    ``stale_rows``: uncommitted rows left in files that also hold
-    committed ones. Only a table rewritten by an older vacuum has such a
-    file; ``compact`` drops those rows.
+    parquet footers), ``bytes_reclaimed`` (the deleted block files'
+    sizes) and ``stale_rows``: uncommitted rows left in files that also
+    hold committed ones. Only a table rewritten by an older vacuum has
+    such a file; ``compact`` drops those rows.
 
     Do not run it concurrently with a writer of the same table: a run
-    whose blocks are written but whose lineage is not yet committed
-    looks exactly like a crashed one, and its files would be deleted."""
+    whose blocks or tombstones are written but not yet committed looks
+    exactly like a crashed one, and its files would be deleted."""
     fs, root = _open(out_dir)
     _finish_legacy_swap(fs, root)
     snap = Snapshot.resolve(out_dir)
@@ -193,6 +192,9 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
         else:
             snap.fs.delete_file(path)
             reclaimed += size
+    for path, committed in snap.delete_dirs:
+        if not committed:
+            snap.fs.delete_dir(path)
     return {"rows_before": rows_before, "rows_after": rows_after,
             "bytes_reclaimed": reclaimed,
             "stale_rows": rows_after - snap.chunk_stats.num_rows}

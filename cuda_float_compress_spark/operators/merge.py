@@ -13,20 +13,20 @@ semantics by composing the two primitives the table already has:
 
 Crash/visibility contract (single writer, no transaction log):
 
-1. The old-version addresses are scanned FIRST (before the append, so
-   the new run's own rows can never be tombstoned) and materialized to
-   ``deletes/_staging-<id>`` — an UNCOMMITTED location that readers
-   ignore (tombstones_df only trusts ``run-*`` dirs).
+1. The old-version addresses are collected to the driver FIRST, before
+   the append, so the new run's own rows can never be tombstoned.
 2. The update rows are appended and their lineage committed. From here
    a concurrent reader sees at worst BOTH versions of an updated row
    (transient duplicates), never a missing row.
-3. The staging dir is renamed to ``deletes/run-<id>`` — the atomic
-   publish that retires the old versions.
+3. ``deletes.commit_tombstones`` commits the addresses as one delete
+   run stamped with the new run's lineage ``finished_at``: the old
+   versions retire.
 
-A crash between 2 and 3 leaves duplicates, not data loss, and re-running
-the same merge heals: the re-run's address scan sees BOTH stale copies
-(the original and the orphaned append) and tombstones both before
-appending again. Stale ``_staging-*`` dirs are inert and swept here.
+A crash before step 3's ``_SUCCESS`` marker leaves duplicates, not data
+loss, and an inert run dir that ``maintain.vacuum`` reclaims. Re-running
+the same merge heals: its address scan sees BOTH stale copies (the
+original and the orphaned append) and tombstones both before appending
+again.
 
 The reference (catid/cuda_float_compress) is compress/decompress only —
 no row identity, no updates (src/cuda_float_compress.cpp:88-91 is the
@@ -39,14 +39,11 @@ from __future__ import annotations
 import uuid
 
 import pyarrow.compute as pc
-import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.operators.deletes import (
-    ADDRESS_COLS,
-    TOMBSTONE_SCHEMA,
-    footer_rows,
+    commit_tombstones,
+    key_addresses,
 )
 from cuda_float_compress_spark.snapshot import Snapshot
 
@@ -67,51 +64,28 @@ def merge_rows(
     ``key_col`` already exists are replaced (old version tombstoned, new
     version appended); unseen keys are plain inserts. ``updates`` must be
     key-unique — two versions of the same key in one call would both
-    survive, so that is refused up front (one count/distinct aggregate).
+    survive, so that is refused up front, on the keys collected to the
+    driver (one Spark job; the address scan semi-joins the same keys).
 
     Returns {'run_id', 'appended', 'tombstones', 'part_offset'}.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    from cuda_float_compress_spark.operators.decode import decode_table
     from cuda_float_compress_spark.operators.encode import encode_table
 
-    counts = updates.agg(
-        F.count("*").alias("n"),
-        F.count_distinct(F.col(key_col)).alias("nd"),
-    ).collect()[0]
-    if counts["n"] != counts["nd"]:
+    keys = updates.select(key_col).toArrow()
+    dups = keys.num_rows - pc.count_distinct(keys[key_col]).as_py()
+    if dups:
         raise ValueError(
-            f"updates carry {counts['n'] - counts['nd']} duplicate "
-            f"{key_col!r} keys; merge_rows needs one version per key"
+            f"updates carry {dups} duplicate {key_col!r} keys; "
+            "merge_rows needs one version per key"
         )
 
-    # sweep staging dirs abandoned by crashed merges (inert to readers)
-    snap = Snapshot.resolve(out_dir)
-    fs, deletes = snap.fs, f"{snap.root}/deletes"
-    for stale in fs.get_file_info(pafs.FileSelector(
-            deletes, allow_not_found=True)):
-        if stale.base_name.startswith("_staging-"):
-            fs.delete_dir(stale.path)
-
-    # 1. old-version addresses, BEFORE the append — materialized so the
-    #    lazy plan can never be re-evaluated against the post-append table
-    staging = f"deletes/_staging-{run_id}"
-    addr = (
-        decode_table(spark, out_dir, columns=[key_col],
-                     with_row_address=True)
-        .join(updates.select(key_col).distinct(), key_col, "left_semi")
-        .select(*ADDRESS_COLS)
-        # committed_at (the as_of time-scope) is deliberately NOT stamped
-        # here: a staging-time stamp would predate the new run's lineage
-        # commit, and any as_of inside [stamp, encode finished_at) would
-        # apply the tombstones without seeing the replacement rows —
-        # updated keys would vanish from that snapshot. Stamped in step 3.
-    )
-    addr.write.parquet(f"{out_dir}/{staging}")
-    n_tomb = footer_rows(out_dir, staging)
+    # 1. old-version addresses, collected BEFORE the append
+    addr = key_addresses(spark, out_dir, key_col,
+                         spark.createDataFrame(keys))
 
     # 2. append the new versions as their own run on a disjoint part range
-    committed = snap.committed_rows
+    committed = Snapshot.resolve(out_dir).committed_rows
     max_part = (pc.max(committed["part_id"]).as_py()
                 if committed is not None else None)
     part_offset = int(max_part) + 1 if max_part is not None else 0
@@ -121,26 +95,17 @@ def merge_rows(
         part_offset=part_offset, run_id=run_id,
     )
 
-    # 3. stamp committed_at with the new run's lineage finished_at, so the
-    #    tombstones and the replacement rows appear at the same as_of
-    #    instant (no snapshot shows both versions, or neither), then
-    #    atomic tombstone publish: old versions retire in one rename
+    # 3. stamp the tombstones with the new run's lineage finished_at, so
+    #    they and the replacement rows appear at the same as_of instant
+    #    (no snapshot shows both versions, or neither)
     lin = Snapshot.resolve(out_dir).committed_rows
     finished_at = pc.max(
         lin.filter(pc.equal(lin["run_id"], run_id))["finished_at"]
     ).as_py()
-    stamped = f"{staging}-stamp"
-    (
-        spark.read.schema(TOMBSTONE_SCHEMA).parquet(f"{out_dir}/{staging}")
-        .withColumn("committed_at", F.lit(finished_at).cast("double"))
-        .write.parquet(f"{out_dir}/{stamped}")
-    )
-    fs.move(f"{snap.root}/{stamped}", f"{deletes}/run-{run_id}")
-    fs.delete_dir(f"{snap.root}/{staging}")
     return {
         "run_id": run_id,
-        "appended": int(counts["n"]),
-        "tombstones": int(n_tomb),
+        "appended": keys.num_rows,
+        "tombstones": commit_tombstones(out_dir, run_id, addr, finished_at),
         "part_offset": part_offset,
         "encode": enc,
     }

@@ -22,10 +22,12 @@ from here, so they cannot disagree:
   table returns the same columns; chunks that predate a column decode
   it as nulls. A ``timestamp_us``/``timestamp_ntz`` mix coalesces to
   ``timestamp_us``; any other re-typed column is refused.
-* **Tombstones.** ``deletes/run-*`` dirs carrying the job-commit
-  ``_SUCCESS`` marker. Each run's rows carry one ``committed_at`` stamp;
-  under ``as_of`` a run applies when that stamp is at or before it.
-  Runs written before the stamp existed always apply.
+* **Tombstones.** ``deletes/run-*`` dirs carrying the ``_SUCCESS``
+  marker, written last by ``deletes.commit_tombstones`` (or by Spark's
+  job commit, in older tables). Each run's rows carry one
+  ``committed_at`` stamp; under ``as_of`` a run applies when that stamp
+  is at or before it. Runs written before the stamp existed always
+  apply. Other dirs there are inert; ``maintain.vacuum`` reclaims them.
 * **Block files.** The ``blocks/*.parquet`` files holding at least one
   row of a committed pair in the window, with their sizes.
 * **Chunk stats.** Those files' block rows of the in-window pairs,
@@ -72,7 +74,7 @@ import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 
-__all__ = ["Snapshot", "LINEAGE_SCHEMA", "ADDRESS_COLS"]
+__all__ = ["Snapshot", "LINEAGE_SCHEMA", "ADDRESS_COLS", "ADDRESS_SCHEMA"]
 
 LINEAGE_SCHEMA = pa.schema([
     ("part_id", pa.int32()),
@@ -106,7 +108,9 @@ _STATS_COLS = ["part_id", "chunk_id", "col", "ptype", "n", "n_nulls",
                "vmin", "vmax", "vsum", "bloom"]
 _CHUNK_KEY = ["part_id", "chunk_id"]
 #: a row's stable address, the columns of a tombstone row
-ADDRESS_COLS = ("_part_id", "_chunk_id", "_pos")
+ADDRESS_SCHEMA = pa.schema([("_part_id", pa.int32()),
+                            ("_chunk_id", pa.int64()), ("_pos", pa.int64())])
+ADDRESS_COLS = tuple(ADDRESS_SCHEMA.names)
 
 
 def resolve_path(path: str) -> tuple[pafs.FileSystem, str]:
@@ -382,31 +386,44 @@ class Snapshot:
         return self._united(["part_id"])
 
     @functools.cached_property
+    def delete_dirs(self) -> list[tuple[str, bool]]:
+        """``[(path, committed)]`` for each dir under ``deletes/``:
+        committed when it is a ``run-*`` dir holding ``_SUCCESS``. The
+        rest (runs that crashed before their marker, legacy
+        ``_staging-*`` dirs) are inert; ``maintain.vacuum`` deletes
+        them."""
+        dirs = [i for i in _listdir(self.fs, f"{self.root}/deletes")
+                if i.type == pafs.FileType.Directory]
+        marks = self.fs.get_file_info([f"{i.path}/_SUCCESS" for i in dirs])
+        return sorted((i.path, i.base_name.startswith("run-")
+                       and m.type != pafs.FileType.NotFound)
+                      for i, m in zip(dirs, marks))
+
+    @functools.cached_property
     def tombstone_runs(self) -> list[str]:
         """Live delete runs as paths relative to the table root
         (``deletes/run-<id>``)."""
-        runs = [i for i in _listdir(self.fs, f"{self.root}/deletes")
-                if i.type == pafs.FileType.Directory
-                and i.base_name.startswith("run-")]
-        marks = self.fs.get_file_info([f"{i.path}/_SUCCESS" for i in runs])
-        live = sorted(i.path for i, m in zip(runs, marks)
-                      if m.type != pafs.FileType.NotFound)
+        live = [p for p, committed in self.delete_dirs if committed]
         if self.as_of is not None:
             live = [p for p in live if self._applies_at(p, self.as_of)]
         return [p[len(self.root) + 1:] for p in live]
 
     @functools.cached_property
+    def tombstones(self) -> pa.Table:
+        """The rows of the live tombstone runs, in ``ADDRESS_SCHEMA``."""
+        return pa.concat_tables(
+            [pq.read_table(f"{self.root}/{run}", filesystem=self.fs,
+                           columns=list(ADDRESS_COLS)).cast(ADDRESS_SCHEMA)
+             for run in self.tombstone_runs]
+            or [ADDRESS_SCHEMA.empty_table()])
+
+    @functools.cached_property
     def deleted_positions(self) -> dict[tuple, np.ndarray]:
-        """``{(part_id, chunk_id): int64 positions}`` over the live
-        tombstone runs, read and grouped with pyarrow: the ``deleted``
+        """``{(part_id, chunk_id): int64 positions}`` over
+        :attr:`tombstones`, grouped with pyarrow: the ``deleted``
         argument of ``decode.assemble_chunks``."""
-        if not self.tombstone_runs:
-            return {}
-        t = pa.concat_tables(
-            pq.read_table(f"{self.root}/{run}", filesystem=self.fs,
-                          columns=list(ADDRESS_COLS))
-            for run in self.tombstone_runs)
-        g = t.group_by(list(ADDRESS_COLS[:2])).aggregate([("_pos", "list")])
+        g = self.tombstones.group_by(list(ADDRESS_COLS[:2])).aggregate(
+            [("_pos", "list")])
         pos = g["_pos_list"].combine_chunks()
         return dict(zip(zip(*(g[k].to_pylist() for k in ADDRESS_COLS[:2])),
                         np.split(pos.values.to_numpy(),

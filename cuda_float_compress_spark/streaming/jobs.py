@@ -445,8 +445,10 @@ def merge_stream(
     re-scans and tombstones BOTH the original rows and any copies an
     interrupted attempt appended before appending again, so the table
     state is per-key idempotent under epoch replays (exactly one, the
-    latest, version per key). Replays do append extra runs; ``compact``
-    reclaims the storage."""
+    latest, version per key). An attempt that died before its tombstone
+    run's ``_SUCCESS`` marker leaves that run inert. Replays do append
+    extra runs; ``compact`` reclaims their storage, and ``vacuum`` the
+    inert tombstone runs."""
     import uuid as _uuid
 
     from pyspark.sql import Window as _W

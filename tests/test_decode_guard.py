@@ -25,11 +25,15 @@ or a ``createDataFrame`` of a Python list in the engine's read path,
 fails.
 
 Block rows are written in one place, ``encode.commit_blocks``: a Spark
-write whose target names ``blocks`` anywhere else fails."""
+write whose target names ``blocks`` anywhere else fails. Tombstones are
+written in one place, ``deletes.commit_tombstones``: a Spark write, a
+``pq.write_table`` or a ``copy_files`` in any other function that deals
+with deletes or tombstones fails."""
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 
 import cuda_float_compress_spark
 
@@ -205,6 +209,19 @@ def test_frames_start_on_the_jvm():
     )
 
 
+def _spark_write(call: ast.Call) -> bool:
+    """Whether ``call`` is part of a Spark writer chain (``.write`` or
+    ``.writeTo``)."""
+    func, names = call.func, set()
+    while isinstance(func, (ast.Attribute, ast.Call)):
+        if isinstance(func, ast.Attribute):
+            names.add(func.attr)
+            func = func.value
+        else:
+            func = func.func
+    return bool({"write", "writeTo"} & names)
+
+
 def test_one_block_writer():
     """Rows appended to ``blocks/`` count only once lineage commits their
     run, and ``encode.commit_blocks`` is the one writer that does both. A
@@ -212,22 +229,12 @@ def test_one_block_writer():
     read would ever return. Fails on a call in a Spark writer chain
     (``.write``/``.writeTo``) whose arguments name ``blocks``, outside
     ``encode.commit_blocks``."""
-    def chain(func: ast.expr) -> list[str]:
-        names = []
-        while isinstance(func, (ast.Attribute, ast.Call)):
-            if isinstance(func, ast.Attribute):
-                names.append(func.attr)
-                func = func.value
-            else:
-                func = func.func
-        return names
-
     stray = []
     for path in sorted(PKG.rglob("*.py")):
         rel = path.relative_to(PKG).as_posix()
         for fns, call in _calls(ast.parse(path.read_text())):
             args = call.args + [k.value for k in call.keywords]
-            if ({"write", "writeTo"} & set(chain(call.func))
+            if (_spark_write(call)
                     and any("blocks" in ast.unparse(a) for a in args)
                     and not (rel == "operators/encode.py"
                              and "commit_blocks" in fns)):
@@ -237,4 +244,72 @@ def test_one_block_writer():
     assert not stray, (
         "block rows written outside encode.commit_blocks:\n"
         + "\n".join(stray)
+    )
+
+
+def _bindings(fn: ast.AST) -> dict[str, list[str]]:
+    """Each local name of ``fn`` -> the source of what it is assigned or
+    iterated over."""
+    out: dict[str, list[str]] = {}
+    for n in ast.walk(fn):
+        pairs = ([(t, n.value) for t in n.targets]
+                 if isinstance(n, ast.Assign)
+                 else [(n.target, n.iter)]
+                 if isinstance(n, (ast.For, ast.comprehension)) else [])
+        for target, value in pairs:
+            for name in ast.walk(target):
+                if isinstance(name, ast.Name):
+                    out.setdefault(name.id, []).append(ast.unparse(value))
+    return out
+
+
+def _resolved(text: str, bindings: dict[str, list[str]]) -> str:
+    """``text`` followed by the sources of the names it uses, and of the
+    names those use, transitively."""
+    out, todo, seen = [], [text], set()
+    while todo:
+        t = todo.pop()
+        out.append(t)
+        for name in set(re.findall(r"[A-Za-z_]\w*", t)) - seen:
+            seen.add(name)
+            todo += bindings.get(name, [])
+    return "\n".join(out)
+
+
+_TOMBSTONE_TARGET = re.compile(r"\bdeletes/|tombstone")
+
+
+def test_one_tombstone_writer():
+    """A delete run counts once its ``_SUCCESS`` marker exists, and
+    ``deletes.commit_tombstones`` is the one writer that lays down a
+    run's rows and then that marker. Delete, merge and re-encode each
+    wrote tombstones their own way (a Spark job commit, a staged Spark
+    write read back, restamped and renamed, a per-run file copy). Fails
+    on a Spark writer chain, a ``write_table`` or a ``copy_files`` call
+    whose arguments, with the local names they use resolved to what the
+    function assigns them, name a ``deletes/`` dir or a tombstone,
+    outside ``deletes.commit_tombstones``."""
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if (not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    or (rel, fn.name) == ("operators/deletes.py",
+                                          "commit_tombstones")):
+                continue
+            bindings = _bindings(fn)
+            for call in ast.walk(fn):
+                if not (isinstance(call, ast.Call) and (
+                        _spark_write(call)
+                        or _name(call.func) in ("write_table",
+                                                "copy_files"))):
+                    continue
+                args = " ".join(ast.unparse(a) for a in call.args + [
+                    k.value for k in call.keywords])
+                if _TOMBSTONE_TARGET.search(_resolved(args, bindings)):
+                    stray.append(f"{rel}:{call.lineno} in {fn.name}: "
+                                 f"{ast.unparse(call)}")
+    assert not stray, (
+        "tombstones written outside deletes.commit_tombstones:\n"
+        + "\n".join(sorted(set(stray)))
     )

@@ -1,10 +1,11 @@
-"""Merge-on-read deletes on the engine's own encoded tables: tombstone
-writes are atomic and distributed, both decode paths apply them, appends
+"""Merge-on-read deletes on the engine's own encoded tables: a tombstone
+run counts only once committed, both decode paths apply them, appends
 after a delete are unaffected, and compaction materializes them. Native
 twin of the Iceberg v2 position-delete semantics the foreign-table reader
 applies (sources/iceberg.py)."""
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
@@ -12,12 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.operators.decode import decode_table
-from cuda_float_compress_spark.operators.deletes import (
-    delete_rows,
-    tombstones_df,
-)
+from cuda_float_compress_spark.operators.deletes import delete_rows
 from cuda_float_compress_spark.operators.direct import decode_table_direct
 from cuda_float_compress_spark.operators.encode import encode_table
+from cuda_float_compress_spark.snapshot import Snapshot
 
 
 @pytest.fixture()
@@ -66,6 +65,18 @@ def test_delete_is_idempotent_and_incremental(spark, docs_table):
     ]
 
 
+def test_delete_refuses_a_committed_run_id(spark, docs_table):
+    """A delete run is never rewritten in place: a second delete under
+    the run id of a committed one is refused and leaves that run as it
+    was."""
+    delete_rows(spark, docs_table, [("lang", "==", "de")], run_id="once")
+    with pytest.raises(Exception, match="once"):
+        delete_rows(spark, docs_table, [("lang", "==", "fr")],
+                    run_id="once")
+    assert _ids(decode_table_direct(spark, docs_table)) == [
+        i for i in range(300) if i % 3 != 1]
+
+
 def test_appends_after_delete_unaffected(spark, docs_table):
     delete_rows(spark, docs_table, [("lang", "==", "de")])
     new = spark.createDataFrame(
@@ -85,7 +96,7 @@ def test_partial_delete_run_is_inert(spark, docs_table, tmp_path):
     # simulate a crashed delete job: dir without _SUCCESS must be ignored
     bogus = os.path.join(docs_table, "deletes", "run-crashed")
     os.makedirs(bogus)
-    good = tombstones_df(spark, docs_table)
+    good = Snapshot.resolve(docs_table).tombstones
     src = [d for d in os.listdir(os.path.join(docs_table, "deletes"))
            if d != "run-crashed"][0]
     shutil.copy(
@@ -96,8 +107,39 @@ def test_partial_delete_run_is_inert(spark, docs_table, tmp_path):
         ),
         os.path.join(bogus, "part-00000.parquet"),
     )
-    assert tombstones_df(spark, docs_table).count() == good.count()
+    assert Snapshot.resolve(docs_table).tombstones.num_rows == good.num_rows
     assert len(_ids(decode_table_direct(spark, docs_table))) == 200
+
+
+def _uncommitted_deletes(table: str) -> list[str]:
+    return [e for e in glob.glob(os.path.join(table, "deletes", "*"))
+            if not os.path.exists(os.path.join(e, "_SUCCESS"))]
+
+
+def test_delete_crash_before_marker_is_inert(spark, docs_table,
+                                             monkeypatch):
+    """A delete that dies after writing its rows but before the
+    ``_SUCCESS`` marker changes no read; vacuum reclaims its dir."""
+    from cuda_float_compress_spark.localio import read_table_local
+    from cuda_float_compress_spark.operators import deletes
+    from cuda_float_compress_spark.operators.maintain import vacuum
+
+    before = _ids(decode_table_direct(spark, docs_table))
+
+    def crash(*a, **kw):
+        raise OSError("crash before the marker")
+
+    monkeypatch.setattr(deletes, "_mark_committed", crash)
+    with pytest.raises(OSError, match="crash"):
+        delete_rows(spark, docs_table, [("lang", "==", "de")])
+    monkeypatch.undo()
+    assert len(_uncommitted_deletes(docs_table)) == 1
+    assert _ids(decode_table_direct(spark, docs_table)) == before
+    assert _ids(decode_table(spark, docs_table)) == before
+    assert sorted(read_table_local(docs_table)["doc_id"].to_pylist()) == before
+    vacuum(spark, docs_table)
+    assert _uncommitted_deletes(docs_table) == []
+    assert _ids(decode_table_direct(spark, docs_table)) == before
 
 
 def test_compact_materializes_tombstones(spark, docs_table, tmp_path):
@@ -121,7 +163,6 @@ def test_each_task_row_carries_only_its_groups_deletes(spark, docs_table):
     positions of its own chunks only, and the rows together hold each
     tombstone once, matching the committed tombstone rows."""
     from cuda_float_compress_spark.operators.decode import group_frame
-    from cuda_float_compress_spark.snapshot import Snapshot
 
     delete_rows(spark, docs_table, [("lang", "==", "de")])
     delete_rows(spark, docs_table, [("doc_id", "<", 10)])
@@ -136,8 +177,8 @@ def test_each_task_row_carries_only_its_groups_deletes(spark, docs_table):
         for d in row["deleted"]:
             assert (d["part_id"], d["chunk_id"]) in keys
             shipped += [(d["part_id"], d["chunk_id"], p) for p in d["pos"]]
-    tombs = [tuple(r) for r in tombstones_df(spark, docs_table)
-             .select("_part_id", "_chunk_id", "_pos").collect()]
+    tombs = list(zip(*(snap.tombstones[c].to_pylist()
+                       for c in ("_part_id", "_chunk_id", "_pos"))))
     assert sorted(shipped) == sorted(tombs)
     assert len(tombs) == 107  # 100 "de" rows, and the 7 other ids < 10
     assert not any(row["deleted"] for row in group_frame(

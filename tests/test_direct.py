@@ -1134,13 +1134,21 @@ def test_uncommitted_run_adds_no_column(spark, tmp_path, read_cols_count,
 def test_doubly_committed_parts_refused(spark, tmp_path, read_cols_count,
                                         reader):
     """Two runs committing the same parts make the table ambiguous: every
-    reader refuses it. read_table_local used to return both copies."""
+    reader refuses it. read_table_local used to return both copies.
+    ``commit_blocks`` now refuses the second commit, so the fixture lays
+    a second table's run files into the first, as older writers did."""
+    import glob
+    import shutil
+
     from cuda_float_compress_spark.operators.encode import encode_table
 
-    out = str(tmp_path / "twice")
-    for _ in range(2):
-        encode_table(spark, _small_docs(spark, 200), out, n_parts=2,
+    out, other = str(tmp_path / "twice"), str(tmp_path / "other")
+    for path in (out, other):
+        encode_table(spark, _small_docs(spark, 200), path, n_parts=2,
                      resume=False, sort_keys=["doc_id"])
+    for sub in ("blocks", "manifest", "lineage"):
+        for f in glob.glob(f"{other}/{sub}/*.parquet"):
+            shutil.copy(f, f"{out}/{sub}/")
     with pytest.raises(ValueError, match="committed by 2 different runs"):
         read_cols_count(reader, out)
 
@@ -1183,10 +1191,13 @@ def test_chunk_split_across_vacuumed_files(spark, tmp_path, reader):
     saved = {k: spark.conf.get(k, None) for k in confs}
     try:
         spark.conf.set("parquet.block.size", confs["parquet.block.size"])
-        for run in ("done", "crashed"):
+        encode_table_direct(spark, src, out, chunk_rows=32,
+                            resume=False, run_id="done")
+        # a crashed run of the same parts: its blocks land, its commit
+        # is refused
+        with pytest.raises(ValueError, match="already committed"):
             encode_table_direct(spark, src, out, chunk_rows=32,
-                                resume=False, run_id=run)
-        os.remove(f"{out}/lineage/part-direct-crashed.parquet")
+                                resume=False, run_id="crashed")
         spark.conf.unset("parquet.block.size")
         for k in ("spark.sql.files.maxPartitionBytes",
                   "spark.sql.files.openCostInBytes"):

@@ -30,17 +30,17 @@ def _block_files(out: str) -> set[str]:
 @pytest.fixture()
 def crashed(spark, tmp_path):
     """A 600-row table, a crashed run of the same parts (blocks appended,
-    lineage file removed) and a committed delete run. Returns the table
-    dir, the rows a reader must see (sorted by url) and the crashed run's
-    block files."""
+    no lineage: the commit refuses parts another run committed) and a
+    committed delete run. Returns the table dir, the rows a reader must
+    see (sorted by url) and the crashed run's block files."""
     src, out = str(tmp_path / "src"), str(tmp_path / "table")
     generate_webpages_df(spark, 600, partitions=2).write.parquet(src)
     encode_table_direct(spark, src, out, resume=False, run_id="done",
                         target_rows_per_split=300, chunk_rows=128)
     before = _block_files(out)
-    encode_table_direct(spark, src, out, resume=False, run_id="crashed",
-                        target_rows_per_split=300, chunk_rows=128)
-    os.remove(f"{out}/lineage/part-direct-crashed.parquet")
+    with pytest.raises(ValueError, match="already committed"):
+        encode_table_direct(spark, src, out, resume=False, run_id="crashed",
+                            target_rows_per_split=300, chunk_rows=128)
     assert delete_rows(spark, out, [("lang", "==", "en")])["tombstones"] > 0
     want = pq.read_table(src)
     want = want.filter(pc.invert(pc.fill_null(

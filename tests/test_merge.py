@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from cuda_float_compress_spark.operators.decode import decode_table
 from cuda_float_compress_spark.operators.direct import decode_table_direct
 from cuda_float_compress_spark.operators.encode import encode_table
+from cuda_float_compress_spark.operators.maintain import vacuum
 from cuda_float_compress_spark.operators.merge import merge_rows
 
 
@@ -76,7 +77,8 @@ def test_merge_updates_and_inserts(spark, docs_table):
 def test_merge_takes_every_path_form(spark, docs_table, form):
     """On a file:// table the publish rename failed after the append had
     committed, leaving both versions of every updated key, and the sweep
-    of stale staging dirs never matched."""
+    of stale staging dirs never matched. A legacy staging dir is now
+    reclaimed by vacuum on the same path form."""
     stale = os.path.join(docs_table, "deletes", "_staging-crashed")
     os.makedirs(stale)
     path = docs_table if form == "bare" else "file://" + docs_table
@@ -85,6 +87,7 @@ def test_merge_takes_every_path_form(spark, docs_table, form):
     assert stats["tombstones"] == 3
     assert _rows(decode_table_direct(spark, path)) == _expected_after_merge(
         [5, 17, 100], [1000])
+    vacuum(spark, path)
     assert not glob.glob(os.path.join(docs_table, "deletes", "_staging-*"))
 
 
@@ -128,8 +131,45 @@ def test_merge_rerun_after_crash_heals(spark, docs_table):
     merge_rows(spark, docs_table, upd, key_col="url")            # heal
     expect = _expected_after_merge([5, 17], [])
     assert _rows(decode_table_direct(spark, docs_table)) == expect
-    # the crash's staging dir was swept
+    # the crash's staging dir is reclaimed by vacuum
+    vacuum(spark, docs_table)
     assert not glob.glob(os.path.join(docs_table, "deletes", "_staging-*"))
+    assert _rows(decode_table_direct(spark, docs_table)) == expect
+
+
+def _uncommitted_deletes(table: str) -> list[str]:
+    return [e for e in glob.glob(os.path.join(table, "deletes", "*"))
+            if not os.path.exists(os.path.join(e, "_SUCCESS"))]
+
+
+def test_merge_crash_before_marker_heals_on_rerun(spark, docs_table,
+                                                  monkeypatch):
+    """A merge that dies after the append but before its tombstone run's
+    ``_SUCCESS`` marker shows both versions of each updated key, never
+    neither; re-running it heals the table, and vacuum reclaims the
+    crashed run's dir."""
+    from cuda_float_compress_spark.operators import deletes
+
+    upd = _updates_df(spark, [5, 17], [1000])
+
+    def crash(*a, **kw):
+        raise OSError("crash before the marker")
+
+    monkeypatch.setattr(deletes, "_mark_committed", crash)
+    with pytest.raises(OSError, match="crash"):
+        merge_rows(spark, docs_table, upd, key_col="url")
+    monkeypatch.undo()
+    assert len(_uncommitted_deletes(docs_table)) == 1
+    ids = [r["doc_id"] for r in
+           decode_table_direct(spark, docs_table).select("doc_id").collect()]
+    assert ids.count(5) == 2 and ids.count(17) == 2 and ids.count(1000) == 1
+    assert len(ids) == 303
+    merge_rows(spark, docs_table, upd, key_col="url")            # heal
+    expect = _expected_after_merge([5, 17], [1000])
+    assert _rows(decode_table_direct(spark, docs_table)) == expect
+    vacuum(spark, docs_table)
+    assert _uncommitted_deletes(docs_table) == []
+    assert _rows(decode_table(spark, docs_table)) == expect
 
 
 def test_merge_visible_to_incremental_readers(spark, docs_table):

@@ -349,11 +349,19 @@ def test_all_supported_types_roundtrip(spark, scratch):
 
 def test_double_commit_refused(spark, webpages, scratch):
     """Two committed encodes appended to one dir make the table ambiguous
-    (rows would silently double) — decode must refuse, not guess."""
-    encode_table(spark, webpages, scratch, n_parts=4, resume=False,
-                 detect_skew=False)
-    encode_table(spark, webpages, scratch, n_parts=4, resume=False,
-                 detect_skew=False)
+    (rows would silently double) — decode must refuse, not guess.
+    ``commit_blocks`` now refuses the second commit, so the fixture lays
+    a second table's run files into the first, as older writers did."""
+    import glob
+    import shutil
+
+    other = f"{scratch}-other"
+    for path in (scratch, other):
+        encode_table(spark, webpages, path, n_parts=4, resume=False,
+                     detect_skew=False)
+    for sub in ("blocks", "manifest", "lineage"):
+        for f in glob.glob(f"{other}/{sub}/*.parquet"):
+            shutil.copy(f, f"{scratch}/{sub}/")
     with pytest.raises(Exception, match="ambiguous"):
         decode_table(spark, scratch).count()
 

@@ -20,8 +20,7 @@ PKG = pathlib.Path(cuda_float_compress_spark.__file__).parent
 # (module, function) that name lineage/ or deletes/ only to WRITE them
 WRITERS = {
     ("operators/encode.py", "commit_blocks"),
-    ("operators/merge.py", "merge_rows"),
-    ("operators/deletes.py", "_commit_tombstones"),
+    ("operators/deletes.py", "commit_tombstones"),
 }
 
 _META_DIR = re.compile(r"(^|/)(lineage|deletes)(/|$)|blocks/\*")

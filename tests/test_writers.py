@@ -5,13 +5,15 @@ while each had its own copy."""
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 
 import pyarrow as pa
 import pytest
 
 from cuda_float_compress_spark.localio import read_table_local
-from cuda_float_compress_spark.operators import maintain
+from cuda_float_compress_spark.operators import deletes, maintain
 from cuda_float_compress_spark.operators.encode import encode_part
 from cuda_float_compress_spark.snapshot import Snapshot
 from cuda_float_compress_spark.table import generate_webpages_df
@@ -100,8 +102,38 @@ def test_reencode_crash_before_tombstone_copy_commits_nothing(
     def crash(*a, **kw):
         raise OSError("crash during the tombstone copy")
 
-    monkeypatch.setattr(maintain.pafs, "copy_files", crash)
+    monkeypatch.setattr(deletes, "_mark_committed", crash)
     with pytest.raises(OSError, match="crash"):
         maintain.reencode_columns(spark, deleted, dst, {"lang": "bytes_rle"})
     rows = Snapshot.resolve(dst).committed_rows
     assert rows is None or rows.num_rows == 0
+    assert glob.glob(f"{dst}/deletes/*")
+    maintain.vacuum(spark, dst)
+    assert [e for e in glob.glob(f"{dst}/deletes/*")
+            if not os.path.exists(f"{e}/_SUCCESS")] == []
+
+
+@pytest.mark.parametrize("writer", ["encode_table_direct", "encode_table"])
+def test_second_run_cannot_commit_committed_parts(spark, tmp_path, writer):
+    """A ``resume=False`` encode into a committed table numbered its parts
+    from 0 again and committed them, and from then on every reader raised
+    ``committed by 2 different runs``. The second run is now refused
+    before its commit, and the table still reads as the first run."""
+    from cuda_float_compress_spark.operators.direct import encode_table_direct
+    from cuda_float_compress_spark.operators.encode import encode_table
+
+    src, out = str(tmp_path / "src"), str(tmp_path / "table")
+    generate_webpages_df(spark, 600, partitions=2).write.parquet(src)
+
+    def encode():
+        if writer == "encode_table_direct":
+            encode_table_direct(spark, src, out, resume=False)
+        else:
+            encode_table(spark, spark.read.parquet(src), out, n_parts=2,
+                         resume=False)
+
+    encode()
+    want = _rows(read_table_local(out))
+    with pytest.raises(ValueError, match="already committed"):
+        encode()
+    assert _rows(read_table_local(out)).equals(want)
