@@ -98,13 +98,11 @@ def committed_blocks(
 ) -> DataFrame:
     """Block rows, as a Spark DataFrame, whose ``(part_id, run_id)`` is
     committed in the ``as_of``/``since`` window of ``snapshot.Snapshot``
-    (a broadcast semi-join on its pairs; a dir without lineage is trusted
-    as-is). A public view for tools and probes: the engine's readers and
-    writers read block files through the Snapshot's file groups."""
+    (a broadcast semi-join on its pairs). A public view for tools and
+    probes: the engine's readers and writers read block files through the
+    Snapshot's file groups."""
     snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
     blocks = blocks_of(spark, snap.out_dir)
-    if snap.pairs is None:
-        return blocks
     pairs = sorted(snap.pairs)
     lin = spark.createDataFrame(pa.table({
         "part_id": pa.array([p for p, _ in pairs], pa.int32()),
@@ -446,7 +444,7 @@ def frame_groups(batches):
 
 
 def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
-                    pairs: frozenset | None = None, keep: set | None = None,
+                    pairs: frozenset, keep: set | None = None,
                     deleted: dict | None = None, verify: bool = True,
                     predicates: list[tuple] | None = None,
                     any_of: list[list[tuple]] | None = None):
@@ -457,7 +455,7 @@ def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
     chunk as written (the ``_pos`` address, before any delete).
 
     Rows outside the committed ``pairs`` or the ``keep`` chunk keys (None:
-    no filter) are skipped. A ``(part_id, chunk_id, col)`` seen twice
+    every chunk) are skipped. A ``(part_id, chunk_id, col)`` seen twice
     raises ``ValueError``: one of the rows would silently win. A column
     the chunk predates decodes as nulls, so a chunk holding no wanted
     column still yields its rows. ``deleted`` maps a chunk key to the
@@ -470,7 +468,7 @@ def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
     payloads = blocks["payload"]
     rows: dict[tuple, dict] = {}
     for i, key in enumerate(zip(part, chunk)):
-        if ((pairs is not None and (key[0], runs[i]) not in pairs)
+        if ((key[0], runs[i]) not in pairs
                 or (keep is not None and key not in keep)):
             continue
         colmap = rows.setdefault(key, {})

@@ -2,9 +2,11 @@
 
 Dataflow (SURVEY.md §3.4):
 
-    read -> plan_partitions (explicit shuffle #1, hash+salt or range)
+    read -> skewed_hosts (hash mode: one action over the key column)
+         -> plan_partitions (the one shuffle: hash+salt part ids, placed
+            whole, part p in task p mod min(n_parts, cores); or range)
          -> sortWithinPartitions(part_id, sort_keys)   (no extra shuffle)
-         -> mapInArrow(encode_part per part)            (shuffle-free)
+         -> mapInArrow(encode_part per part, parts back to back)
          -> commit_blocks: append blocks parquet, then manifest and
             lineage written on the driver with pyarrow  (no Spark job)
 
@@ -355,7 +357,7 @@ def commit_blocks(blocks: DataFrame, out_dir: str, run_id: str,
         added = [p for p, _ in snap.all_block_files if p not in before]
         man_rows = _manifest_rows(snap.fs, added, run_id) if added else []
         done = snap.committed_rows
-        others = set() if done is None else set(done.filter(pc.not_equal(
+        others = set(done.filter(pc.not_equal(
             done["run_id"], run_id))["part_id"].to_pylist())
         taken = sorted(others & {r["part_id"] for r in man_rows})
         if taken:
@@ -400,8 +402,6 @@ def completed_parts(
     collecting EVERY epoch's ids would grow the driver list and the isin()
     predicate without bound over the stream's lifetime."""
     rows = Snapshot.resolve(out_dir).committed_rows
-    if rows is None:
-        return []
     return sorted(
         p for p in set(rows["part_id"].to_pylist())
         if (lo is None or p >= lo) and (hi is None or p < hi)
@@ -415,7 +415,7 @@ def salts_from_lineage(spark: SparkSession, out_dir: str) -> dict | None:
     periodic re-encodes and streaming epochs where the host distribution
     drifts slowly."""
     rows = Snapshot.resolve(out_dir).committed_rows
-    if rows is None or rows.num_rows == 0:
+    if rows.num_rows == 0:
         return None
     latest = rows.sort_by([("finished_at", "descending")])["salts_json"][0]
     return None if latest.as_py() is None else json.loads(latest.as_py())
@@ -474,9 +474,9 @@ def encode_table(
     with metrics.stage("plan"):
         # skew plan, cheapest-available source first: an explicit ``salts``
         # map (e.g. reused from a prior run's lineage via salts_from_lineage
-        # — zero input scans) > a fresh scan (optionally sampled via
-        # ``skew_sample_fraction``: one job over a ~0.1-1% sample instead of
-        # two exact passes — the right default at 100 TB)
+        # — zero input scans) > a fresh scan, one action over the key
+        # column (optionally sampled via ``skew_sample_fraction``: the same
+        # plan over a ~0.1-1% sample — the right default at 100 TB)
         if pre_partitioned:
             if "part_id" not in df.columns:
                 raise ValueError(

@@ -106,10 +106,9 @@ def reencode_columns(
         for batch in batches:
             for files in batch.column("files").to_pylist():
                 rows = _block_rows(fs, files)
-                if pairs is not None:
-                    rows = rows.filter(pa.array([k in pairs for k in zip(
-                        rows["part_id"].to_pylist(),
-                        rows["run_id"].to_pylist())]))
+                rows = rows.filter(pa.array([k in pairs for k in zip(
+                    rows["part_id"].to_pylist(),
+                    rows["run_id"].to_pylist())]))
                 # stamp the rewrite's run_id on every row (copied AND
                 # re-encoded): dst's lineage commits exactly these blocks
                 rows = rows.set_column(

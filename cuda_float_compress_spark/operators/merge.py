@@ -86,8 +86,7 @@ def merge_rows(
 
     # 2. append the new versions as their own run on a disjoint part range
     committed = Snapshot.resolve(out_dir).committed_rows
-    max_part = (pc.max(committed["part_id"]).as_py()
-                if committed is not None else None)
+    max_part = pc.max(committed["part_id"]).as_py()
     part_offset = int(max_part) + 1 if max_part is not None else 0
     enc = encode_table(
         spark, updates, out_dir, url_col=url_col, n_parts=n_parts,

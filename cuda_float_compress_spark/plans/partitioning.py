@@ -8,15 +8,17 @@ skewed, so partition assignment must (a) be an explicit, DETERMINISTIC
 function of the row — checkpoint resume re-derives it — and (b) split hot
 hosts across several partitions (salting).
 
-Scale notes (100 TB): the skew scan is one groupBy(host).count() over the
-key column only (column-pruned parquet scan) and the hot-host list it
-broadcasts is tiny (hosts above 1/n_parts of the data — bounded by n_parts
-entries). Everything downstream is a single hash repartition on part_id.
+Scale notes (100 TB): the skew plan is one action, a groupBy(host).count()
+over the key column only (column-pruned parquet scan) with the total as a
+window over those counts, and the hot-host list it broadcasts is tiny
+(hosts above 1/n_parts of the data — bounded by n_parts entries).
+Everything downstream is a single exchange that places whole parts
+directly: part p runs in task p mod k, k = min(n_parts, cores).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -45,13 +47,14 @@ def skewed_hosts(
     Returns {host: n_salts}. The result is small (≤ n_parts/skew_factor
     entries) so it broadcasts for free.
 
-    ``sample_fraction`` turns the scan into ONE job over a Bernoulli sample
-    of the key column (seeded — deterministic for a fixed input layout):
-    total and per-host counts both come from the same sampled groupBy,
-    scaled by 1/fraction. Exact counting needs two full passes over the key
-    column; at 100 TB a 0.1% sample misses only hosts too small to matter
-    (a host must own ~1/(2*n_parts) of ALL rows to need salting — ~10^8
-    sampled rows at that scale, far beyond sampling noise).
+    ``sample_fraction`` scans a Bernoulli sample of the key column instead
+    (seeded — deterministic for a fixed input layout): total and per-host
+    counts both come from the same sampled groupBy, scaled by 1/fraction.
+    Either way the plan is ONE action (3 Spark jobs: the scan, the
+    histogram exchange, the total's single-partition window); at 100 TB a
+    0.1% sample misses only hosts too small to matter (a host must own
+    ~1/(2*n_parts) of ALL rows to need salting — ~10^8 sampled rows at
+    that scale, far beyond sampling noise).
     """
     frac = sample_fraction
     keys = df.select(host_expr(url_col).alias("__host"))
@@ -60,25 +63,22 @@ def skewed_hosts(
         scale = 1.0 / frac
     else:
         scale = 1.0
-    # ONE scan of the key column builds the per-host histogram; the total and
-    # the hot-host filter both read the cached histogram (never the input
-    # again). Only hosts above threshold reach the driver — collecting every
-    # host's count would be a driver OOM at web scale.
-    grouped = keys.groupBy("__host").count().persist()
-    try:
-        total_row = grouped.agg(F.sum("count").alias("t")).collect()[0]
-        total = int((total_row["t"] or 0) * scale)
-        if total == 0:
-            return {}
-        per_part = max(1, total // max(1, n_parts))
-        threshold = max(1, int(per_part * skew_factor))
-        hot = grouped.filter(F.col("count") * scale > threshold).collect()
-    finally:
-        grouped.unpersist()
+    # ONE scan of the key column builds the per-host histogram; the total
+    # is a window over it and the hot-host filter runs in the same plan.
+    # Only hosts above threshold reach the driver — collecting every
+    # host's count would be a driver OOM at web scale. (Spark warns that
+    # the window moves all rows to one partition: one row per host.)
+    total = (F.sum("count").over(Window.partitionBy()) * scale).cast("long")
+    per_part = F.greatest(F.lit(1), F.expr(f"__total div {max(1, n_parts)}"))
+    threshold = F.greatest(F.lit(1), (F.col("per_part") * skew_factor)
+                           .cast("long"))
+    hot = (keys.groupBy("__host").count().withColumn("__total", total)
+           .withColumn("per_part", per_part)
+           .filter(F.col("count") * scale > threshold).collect())
     out = {}
     for r in hot:
         est = int(r["count"] * scale)
-        n_salts = max(1, int(-(-est // per_part)))  # ceil
+        n_salts = max(1, int(-(-est // r["per_part"])))  # ceil
         if n_salts > 1:
             out[r["__host"]] = n_salts
     return out
@@ -95,7 +95,10 @@ def plan_partitions(
 
     mode='hash': part_id = pmod(xxhash64(host, salt), n_parts) where salt
     splits hot hosts (salt = pmod(xxhash64(url), n_salts), a pure function of
-    the row — resume re-derives identical assignments).
+    the row — resume re-derives identical assignments). Part p goes whole
+    to task p mod k, k = min(n_parts, defaultParallelism): one task per
+    core encodes its parts back to back (a hash of the part ids would
+    leave some tasks empty and stack several parts on others).
 
     mode='range': range partition on (host, url) — keeps each host's pages
     contiguous and sorted, maximizing RLE/dict/delta locality, at the cost of
@@ -116,12 +119,10 @@ def plan_partitions(
         salt_map = F.create_map(
             *[F.lit(x) for kv in items for x in (kv[0], str(kv[1]))]
         )
-        n_salts = F.coalesce(
-            salt_map.getItem(host).cast("int"), F.lit(1)
-        )
+        n_salts = F.coalesce(salt_map[host].cast("int"), F.lit(1))
         salt = F.pmod(F.xxhash64(F.col(url_col)), n_salts)
     else:
         salt = F.lit(0)
     part_id = F.pmod(F.xxhash64(host, salt), F.lit(n_parts)).cast("int")
-    out = df.withColumn("part_id", part_id)
-    return out.repartition(n_parts, "part_id")
+    k = min(n_parts, df.sparkSession.sparkContext.defaultParallelism)
+    return df.withColumn("part_id", part_id).repartitionById(k, "part_id")

@@ -12,10 +12,10 @@ from here, so they cannot disagree:
 * **Committed pairs.** ``(part_id, run_id)`` is committed when lineage
   holds a ``status == 'done'`` row for it. ``as_of`` keeps runs finished
   at or before that instant (time travel); ``since`` keeps runs finished
-  strictly after it (incremental reads). A dir without ``lineage/``
-  (externally assembled blocks) is trusted as-is: ``pairs is None``. A
-  part committed by two runs would decode twice, so any read of such a
-  table raises ``ValueError``.
+  strictly after it (incremental reads). A dir without ``lineage/`` has
+  committed nothing (its first encode crashed before the lineage append)
+  and reads as an empty table. A part committed by two runs would decode
+  twice, so any read of such a table raises ``ValueError``.
 * **Schema.** The union of ``(col, ptype)`` over the block rows of ALL
   committed runs, in first-seen column order. It ignores ``as_of``,
   ``since`` and any part or column restriction, so every reader of one
@@ -196,11 +196,11 @@ class Snapshot:
                 "on it to finish or roll back the swap"
             )
         lin = f"{self.root}/lineage"
-        #: every lineage row as written (None: the dir has no lineage)
-        self.lineage: pa.Table | None = (
+        #: every lineage row as written (none when the dir has no lineage)
+        self.lineage: pa.Table = (
             ds.dataset(lin, schema=LINEAGE_SCHEMA, filesystem=self.fs,
                        format="parquet").to_table()
-            if _exists(self.fs, lin) else None
+            if _exists(self.fs, lin) else LINEAGE_SCHEMA.empty_table()
         )
 
     @classmethod
@@ -209,17 +209,13 @@ class Snapshot:
         return cls(str(out_dir), as_of, since)
 
     @functools.cached_property
-    def committed_rows(self) -> pa.Table | None:
+    def committed_rows(self) -> pa.Table:
         """The lineage rows of committed (``status == 'done'``) parts."""
-        if self.lineage is None:
-            return None
         return self.lineage.filter(pc.equal(self.lineage["status"], "done"))
 
     @functools.cached_property
-    def _all_pairs(self) -> frozenset | None:
+    def _all_pairs(self) -> frozenset:
         rows = self.committed_rows
-        if rows is None:
-            return None
         pairs = frozenset(zip(rows["part_id"].to_pylist(),
                               rows["run_id"].to_pylist()))
         per_part: dict = {}
@@ -233,11 +229,11 @@ class Snapshot:
         return pairs
 
     @functools.cached_property
-    def pairs(self) -> frozenset | None:
+    def pairs(self) -> frozenset:
         """Committed ``(part_id, run_id)`` pairs inside the ``as_of`` /
-        ``since`` window; None when the dir has no lineage."""
+        ``since`` window."""
         everything = self._all_pairs
-        if everything is None or (self.as_of is None and self.since is None):
+        if self.as_of is None and self.since is None:
             return everything
         rows = self.committed_rows  # null finished_at fails both windows
         if self.as_of is not None:
@@ -291,9 +287,9 @@ class Snapshot:
             for p, r, idx, col, ptype in zip(
                     *(distinct[c].to_pylist() for c in _SCHEMA_COLS)):
                 seen.add((p, r))
-                if all_pairs is None or (p, r) in all_pairs:
+                if (p, r) in all_pairs:
                     trips.add((idx, col, ptype))
-                if pairs is None or (p, r) in pairs:
+                if (p, r) in pairs:
                     win.add((p, r))
             if not win:
                 continue

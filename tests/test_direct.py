@@ -1130,6 +1130,41 @@ def test_uncommitted_run_adds_no_column(spark, tmp_path, read_cols_count,
         ["doc_id", "url", "lang"], 300)
 
 
+@pytest.mark.parametrize("writer", ["encode_table_direct", "encode_table"])
+@pytest.mark.parametrize("reader", _READERS)
+def test_crashed_first_encode_reads_empty(spark, tmp_path, monkeypatch,
+                                          read_cols_count, writer, reader):
+    """A fresh dir whose first encode crashed after the blocks append and
+    before the lineage append holds blocks/ but no lineage/: nothing is
+    committed, so every reader sees an empty table. Readers used to trust
+    every block file of a dir without lineage/ and return the crashed
+    run's rows."""
+    import os
+
+    from cuda_float_compress_spark.operators import encode as E
+
+    append = E._atomic_parquet_append
+
+    def crash_at_lineage(fs, dir_path, tbl, name):
+        if dir_path.endswith("/lineage"):
+            raise OSError("crash before the lineage append")
+        append(fs, dir_path, tbl, name)
+
+    monkeypatch.setattr(E, "_atomic_parquet_append", crash_at_lineage)
+    out = str(tmp_path / "crashed")
+    with pytest.raises(OSError, match="lineage append"):
+        if writer == "encode_table":
+            E.encode_table(spark, _small_docs(spark, 300), out, n_parts=2,
+                           resume=False, sort_keys=["doc_id"])
+        else:
+            src = str(tmp_path / "crashed_src")
+            _small_docs(spark, 300).write.parquet(src)
+            encode_table_direct(spark, src, out, resume=False)
+    assert os.listdir(f"{out}/blocks") and not os.path.exists(
+        f"{out}/lineage")
+    assert read_cols_count(reader, out) == ([], 0)
+
+
 @pytest.mark.parametrize("reader", _READERS)
 def test_doubly_committed_parts_refused(spark, tmp_path, read_cols_count,
                                         reader):

@@ -112,9 +112,9 @@ def test_skew_salting_splits_hot_hosts(spark, webpages):
 
 
 def test_skew_sampled_detection_and_lineage_reuse(spark, webpages, scratch):
-    """Sampled skew detection (one job over a key sample) still finds the
-    hot zipf hosts, and a prior run's salt map is recoverable from lineage
-    for metadata-only planning on the next run."""
+    """Sampled skew detection (the same one-action plan over a key sample)
+    still finds the hot zipf hosts, and a prior run's salt map is
+    recoverable from lineage for metadata-only planning on the next run."""
     from cuda_float_compress_spark.operators.encode import salts_from_lineage
 
     exact = skewed_hosts(webpages, "url", n_parts=8)
@@ -135,6 +135,96 @@ def test_skew_sampled_detection_and_lineage_reuse(spark, webpages, scratch):
     decoded = decode_table(spark, f"{scratch}_reuse")
     rep = verify_roundtrip(webpages, decoded, "url").collect()
     assert all(r["ok"] for r in rep)
+
+
+_GOLDEN_URLS = [
+    "https://hot.example.com/a", "https://hot.example.com/b",
+    "https://hot.example.com/c?q=1", "http://hot.example.com/d#x",
+    "https://hot.example.com/", "https://hot.example.com/e/f/g",
+    "https://warm.example.org/1", "https://warm.example.org/2",
+    "https://warm.example.org/3", "https://warm.example.org/4",
+    "https://cold-a.net/x", "https://cold-b.net/y", "http://cold-c.io/z",
+    "https://sub.cold-d.co.uk/p?x=1", "ftp://files.cold-e.org/f.txt",
+    "not a url", "http://", "://missing-scheme.com", "", None,
+]
+_GOLDEN_SALTS = {"hot.example.com": 4, "warm.example.org": 3}
+
+
+@pytest.mark.parametrize("salts, expected", [
+    (_GOLDEN_SALTS, [7, 11, 7, 7, 7, 6, 11, 7, 7, 7,
+                     7, 2, 13, 13, 10, 14, 14, 14, 14, 14]),
+    (None, [13, 13, 13, 13, 13, 13, 7, 7, 7, 7,
+            10, 1, 10, 13, 3, 8, 8, 8, 8, 8]),
+])
+def test_part_ids_are_pinned_and_placed_whole(spark, salts, expected):
+    """Resume re-derives part ids, so the part-id function is pinned to
+    literal values (hot, cold, malformed and null urls). Each part runs
+    whole in task part_id mod k, k = min(n_parts, cores): a part split
+    across two tasks would emit duplicate (part_id, chunk_id) blocks."""
+    df = spark.createDataFrame(list(enumerate(_GOLDEN_URLS)),
+                               "i int, url string")
+    planned = plan_partitions(df, "url", 16, salts=salts).select(
+        "i", "part_id", F.spark_partition_id().alias("task"))
+    rows = sorted(planned.collect())
+    assert [r["part_id"] for r in rows] == expected
+    k = min(16, spark.sparkContext.defaultParallelism)
+    assert planned.rdd.getNumPartitions() == k
+    assert all(r["task"] == r["part_id"] % k for r in rows)
+    tasks = {}
+    for r in rows:
+        tasks.setdefault(r["part_id"], set()).add(r["task"])
+    assert all(len(t) == 1 for t in tasks.values())
+
+
+def _skew_reference(hosts, n_parts: int, scale: float,
+                    skew_factor: float = 0.5) -> dict:
+    """skewed_hosts computed on the driver from a pyarrow histogram."""
+    import pyarrow.compute as pc
+
+    counts = pc.value_counts(hosts).to_pylist()
+    total = int(sum(c["counts"] for c in counts) * scale)
+    if total == 0:
+        return {}
+    per_part = max(1, total // n_parts)
+    threshold = max(1, int(per_part * skew_factor))
+    out = {}
+    for c in counts:
+        if c["counts"] * scale > threshold:
+            n_salts = -(-int(c["counts"] * scale) // per_part)
+            if n_salts > 1:
+                out[c["values"]] = n_salts
+    return out
+
+
+@pytest.mark.parametrize("fraction", [None, 0.5])
+def test_skewed_hosts_matches_driver_reference(spark, webpages, fraction):
+    """The one-action skew plan returns exactly the driver-side histogram's
+    answer (exact and sampled, several fan-outs) in at most 3 Spark
+    jobs."""
+    from cuda_float_compress_spark.plans import host_expr
+
+    keys = webpages.select(host_expr("url").alias("__host"))
+    scale = 1.0
+    if fraction is not None:
+        keys = keys.sample(fraction=fraction, seed=20240806)
+        scale = 1.0 / fraction
+    hosts = keys.toArrow()["__host"]
+    sc = spark.sparkContext
+    found = set()
+    for n_parts in (4, 8, 16, 32):
+        want = _skew_reference(hosts, n_parts, scale)
+        found |= set(want.values())
+        group = f"skew-ref-{fraction}-{n_parts}"
+        sc.setJobGroup(group, "skewed_hosts")
+        try:
+            got = skewed_hosts(webpages, "url", n_parts=n_parts,
+                               sample_fraction=fraction)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert got == want, (n_parts, got, want)
+        assert len(jobs) <= 3, (n_parts, jobs)
+    assert len(found) > 1, found  # the fan-outs differ across n_parts
 
 
 def test_malformed_urls_partition_without_throwing(spark, scratch):
