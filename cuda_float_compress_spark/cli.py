@@ -67,8 +67,8 @@ def main(argv: list[str] | None = None) -> int:
 
     st = sub.add_parser(
         "stats",
-        help="per-column size/codec statistics from the manifest "
-             "(metadata only — no payload reads)",
+        help="per-column size/codec statistics from the manifest rows of "
+             "committed runs (metadata only — no payload reads)",
     )
     st.add_argument("--out", required=True, help="encoded dir")
     st.add_argument("--cores", type=int, default=None)
@@ -169,41 +169,9 @@ def main(argv: list[str] | None = None) -> int:
                            if args.sort_keys else None),
             )))
         elif args.cmd == "stats":
-            from pyspark.sql import functions as F
+            from cuda_float_compress_spark.operators.maintain import table_stats
 
-            man = spark.read.parquet(f"{args.out}/manifest")
-            per_col = (
-                man.groupBy("col", "ptype")
-                .agg(
-                    F.sum("n_values").alias("n_values"),
-                    F.sum("n_nulls").alias("n_nulls"),
-                    F.sum("raw_bytes").alias("raw_bytes"),
-                    F.sum("enc_bytes").alias("enc_bytes"),
-                    F.array_sort(
-                        F.array_distinct(F.flatten(F.collect_list("codecs")))
-                    ).alias("codecs"),
-                )
-                .orderBy("col")
-                .collect()
-            )
-            report = {
-                "columns": [
-                    {
-                        **{k: r[k] for k in ("col", "ptype", "n_values",
-                                             "n_nulls", "raw_bytes",
-                                             "enc_bytes")},
-                        "ratio": round(r["raw_bytes"] / max(r["enc_bytes"], 1), 4),
-                        "codecs": list(r["codecs"]),
-                    }
-                    for r in per_col
-                ],
-                "total_raw_bytes": sum(r["raw_bytes"] for r in per_col),
-                "total_enc_bytes": sum(r["enc_bytes"] for r in per_col),
-            }
-            report["ratio"] = round(
-                report["total_raw_bytes"] / max(report["total_enc_bytes"], 1), 4
-            )
-            print(json.dumps(report))
+            print(json.dumps(table_stats(args.out)))
         elif args.cmd == "merge":
             from cuda_float_compress_spark.operators.merge import merge_rows
 

@@ -570,10 +570,13 @@ def decode_table(
     table order when None); a column the table lacks raises
     ``ValueError``.
     ``with_row_address``: emit the stable (_part_id, _chunk_id, _pos)
-    address columns last (delete_rows computes tombstones from them).
+    address columns last (delete_rows computes tombstones from them);
+    ``_pos`` is the row's position as stored in its chunk.
 
     The returned DataFrame is the decode task's output as it is: no
-    join, filter or projection runs after it."""
+    join, filter or projection runs after it. Each chunk's rows come in
+    stored order, which is not the source order: ``encode.encode_part``
+    clusters a chunk's rows before encoding them."""
     snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
     cols, out = read_columns(snap.columns, columns, predicates, any_of)
     keep = pruned_keys(snap.chunk_stats, predicates, any_of)

@@ -6,7 +6,9 @@ Dataflow (SURVEY.md §3.4):
          -> plan_partitions (the one shuffle: hash+salt part ids, placed
             whole, part p in task p mod min(n_parts, cores); or range)
          -> sortWithinPartitions(part_id, sort_keys)   (no extra shuffle)
-         -> mapInArrow(encode_part per part, parts back to back)
+         -> mapInArrow(encode_part per part, parts back to back; each
+            chunk's rows stably sorted by its low-cardinality string
+            columns, then each column encoded)
          -> commit_blocks: append blocks parquet, then manifest and
             lineage written on the driver with pyarrow  (no Spark job)
 
@@ -16,6 +18,10 @@ and :func:`commit_blocks` appends the block rows and commits them. The
 encoders here and in ``operators/direct.py``, ``maintain.compact`` and
 ``maintain.reencode_columns`` (which keeps its chunks and only commits
 here) call them; no writer has a chunk loop or a manifest of its own.
+So every writer but ``reencode_columns`` (which re-encodes single
+columns of kept chunks, and must not reorder one column alone) stores
+each chunk's rows clustered by its low-cardinality string columns
+(``_cluster_rows``; see :func:`encode_part` for what stays unchanged).
 
 Scale notes (100 TB, 1000 executors): every stage is embarrassingly parallel
 after the single planned shuffle; block rows are ~chunk-sized (MBs), so the
@@ -44,7 +50,11 @@ from pyspark.sql import types as T
 from cuda_float_compress_spark.metrics import EngineMetrics
 from cuda_float_compress_spark.operators import chunks as C
 from cuda_float_compress_spark.plans import plan_partitions, skewed_hosts
-from cuda_float_compress_spark.snapshot import LINEAGE_SCHEMA, Snapshot
+from cuda_float_compress_spark.snapshot import (
+    LINEAGE_SCHEMA,
+    MANIFEST_SCHEMA,
+    Snapshot,
+)
 
 BLOCKS_SCHEMA = T.StructType(
     [
@@ -209,6 +219,39 @@ def _encode_chunk_to_rows(tbl: pa.Table, part_id: int, chunk_id: int,
     return pa.RecordBatch.from_pydict(cols, schema=_BLOCKS_ARROW)
 
 
+# A clustering key is a string/binary column with at most one distinct
+# value per 16 in a strided sample of at most 256: few enough groups that
+# each run is long, sampled as select_bytes_codec samples, because a full
+# count_distinct hashes every html/text value (~45x the sample's cost).
+_KEY_SAMPLE = 256
+_KEY_FRACTION = 16
+
+
+def _cluster_rows(tbl: pa.Table) -> pa.Table:
+    """``tbl``'s rows stably sorted by its clustering keys, fewest sampled
+    distinct values first (ties in column order); ``tbl`` itself when it
+    has none. The row-level analog of the reference bit-transposing each
+    quant group before its zstd frame (src/cuszplus_f32.cu:18): rows of
+    one ``lang`` side by side give zstd longer matches in every other
+    column. Stable, so the caller's order survives in each key group."""
+    n = tbl.num_rows
+    at = pa.array(np.arange(0, n, max(1, -(-n // _KEY_SAMPLE))))
+    keys = []
+    for i, name in enumerate(tbl.column_names):
+        col = tbl.column(name)
+        if name == "part_id" or C.ptype_of(col.type) not in (
+                "string", "binary"):
+            continue
+        sample = col.take(at)
+        distinct = pc.count_distinct(sample, mode="all").as_py()
+        if distinct <= len(sample) // _KEY_FRACTION:
+            keys.append((distinct, i, name))
+    if not keys:
+        return tbl
+    return tbl.take(pc.sort_indices(
+        tbl, sort_keys=[(name, "ascending") for _, _, name in sorted(keys)]))
+
+
 def encode_part(batches, part_id: int, chunk_rows: int, chunk_bytes: int,
                 overrides: dict, acc=None, run_id: str = "",
                 profile: str = "ratio", bloom_cols: frozenset = frozenset()):
@@ -219,14 +262,24 @@ def encode_part(batches, part_id: int, chunk_rows: int, chunk_bytes: int,
     because web-page rows are variable-width. A batch bigger than the
     chunk's remaining budget is sliced, by rows exactly and by bytes at
     the batch's mean row width, so the caps hold however the caller
-    batches its rows. The one chunk cutter of every table writer."""
+    batches its rows. The one chunk cutter of every table writer.
+
+    Each chunk's rows are permuted by :func:`_cluster_rows` before they
+    are encoded: stably sorted by the string/binary columns (never
+    ``part_id``) whose strided sample has few distinct values. Rows never
+    move between chunks, so chunk membership, ``chunk_id``, ``n``,
+    ``n_nulls``, ``vmin``/``vmax``/``vsum`` and the Bloom filters are
+    what the unpermuted chunk would give, and pruning is unchanged. Only
+    the payloads, ``enc_bytes``, the codec choice and the stored row
+    order inside a chunk differ; a row's ``_pos`` is its stored
+    position."""
     buf: list[pa.RecordBatch] = []
     buf_rows, buf_bytes, chunk_id = 0, 0.0, 0
 
     def cut() -> pa.RecordBatch:
         return _encode_chunk_to_rows(
-            pa.Table.from_batches(buf), part_id, chunk_id, overrides, acc,
-            run_id, profile, bloom_cols,
+            _cluster_rows(pa.Table.from_batches(buf)), part_id, chunk_id,
+            overrides, acc, run_id, profile, bloom_cols,
         )
 
     for batch in batches:
@@ -250,23 +303,6 @@ def encode_part(batches, part_id: int, chunk_rows: int, chunk_bytes: int,
     if buf:
         yield cut()
 
-
-_MANIFEST_ARROW = pa.schema([
-    ("part_id", pa.int32()),
-    ("col", pa.string()),
-    ("col_idx", pa.int32()),
-    ("ptype", pa.string()),
-    ("n_chunks", pa.int64()),
-    ("n_values", pa.int64()),
-    ("n_nulls", pa.int64()),
-    ("raw_bytes", pa.int64()),
-    ("enc_bytes", pa.int64()),
-    # element name + non-null mirror Spark's array<string> parquet layout
-    ("codecs", pa.list_(pa.field("element", pa.string(), nullable=False))),
-    ("vmin", pa.int64()),
-    ("vmax", pa.int64()),
-    ("run_id", pa.string()),
-])
 
 _MANIFEST_META_COLS = ["part_id", "col", "col_idx", "ptype", "n", "n_nulls",
                        "raw_bytes", "enc_bytes", "codec", "vmin", "vmax"]
@@ -365,7 +401,7 @@ def commit_blocks(blocks: DataFrame, out_dir: str, run_id: str,
                              "committed by another run; use part_offset")
         _atomic_parquet_append(
             snap.fs, f"{snap.root}/manifest",
-            pa.Table.from_pylist(man_rows, schema=_MANIFEST_ARROW),
+            pa.Table.from_pylist(man_rows, schema=MANIFEST_SCHEMA),
             f"part-direct-{run_id}.parquet",
         )
         per_part: dict[int, dict] = {}

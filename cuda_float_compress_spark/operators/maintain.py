@@ -37,7 +37,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from cuda_float_compress_spark.operators import chunks as C
 from cuda_float_compress_spark.operators.decode import (
@@ -199,16 +198,30 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
             "stale_rows": rows_after - snap.chunk_stats.num_rows}
 
 
-def codec_histogram(spark: SparkSession, out_dir: str):
-    """Per-column codec usage — the manifest query an operator runs before
-    deciding a re-encode."""
-    m = spark.read.parquet(f"{out_dir}/manifest")
-    return (
-        m.select("col", F.explode("codecs").alias("codec"))
-        .groupBy("col", "codec")
-        .count()
-        .orderBy("col", "codec")
-    )
+def table_stats(out_dir: str) -> dict:
+    """Per-column value, null and byte counts, ratio and codec set of the
+    committed table, summed on the driver over ``Snapshot.manifest`` (the
+    manifest rows of committed runs only; no Spark job): the report
+    ``cli stats`` prints, and what an operator reads before deciding a
+    re-encode."""
+    sums = ("n_values", "n_nulls", "raw_bytes", "enc_bytes")
+    per: dict[tuple, dict] = {}
+    for r in Snapshot.resolve(out_dir).manifest.to_pylist():
+        a = per.setdefault((r["col"], r["ptype"]),
+                           {**dict.fromkeys(sums, 0), "codecs": set()})
+        for k in sums:
+            a[k] += r[k]
+        a["codecs"].update(r["codecs"])
+    columns = [
+        {"col": col, "ptype": ptype, **{k: a[k] for k in sums},
+         "ratio": round(a["raw_bytes"] / max(a["enc_bytes"], 1), 4),
+         "codecs": sorted(a["codecs"])}
+        for (col, ptype), a in sorted(per.items())
+    ]
+    raw = sum(c["raw_bytes"] for c in columns)
+    enc = sum(c["enc_bytes"] for c in columns)
+    return {"columns": columns, "total_raw_bytes": raw,
+            "total_enc_bytes": enc, "ratio": round(raw / max(enc, 1), 4)}
 
 
 def compact(

@@ -513,55 +513,6 @@ def decode_image(payload: bytes, fake: bool = False) -> np.ndarray:
     return rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
 
 
-def audio_features(payload: bytes) -> dict:
-    """PCM-16 WAV features: duration, RMS, peak — the cheap quality signals
-    an audio-corpus pipeline filters on."""
-    samples, rate = decode_wav(payload)
-    x = samples.astype(np.float64) / 32768.0
-    return {
-        "sample_rate": int(rate),
-        "n_samples": int(samples.shape[0]),
-        "channels": int(samples.shape[1]),
-        "duration_sec": round(samples.shape[0] / rate, 6),
-        "rms": round(float(np.sqrt((x * x).mean())) if x.size else 0.0, 6),
-        "peak": round(float(np.abs(x).max()) if x.size else 0.0, 6),
-    }
-
-
-AUDIO_FEATURES_SCHEMA = (
-    "url string, sample_rate int, n_samples int, channels int, "
-    "duration_sec double, rms double, peak double"
-)
-
-
-def audio_feature_table(
-    df: DataFrame, url_col: str = "url", bin_col: str = "payload"
-) -> DataFrame:
-    """mapInPandas audio pipeline over WAV payloads (real PCM-16 decode)."""
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for u, b in zip(pdf[url_col], pdf[bin_col]):
-                b = bytes(b) if b is not None else b""
-                if b[:4] != b"RIFF":
-                    continue
-                try:
-                    f = audio_features(b)
-                except (ValueError, struct.error):
-                    # malformed RIFF (truncated header/fmt, bad sizes) skips
-                    # the row — one bad payload must not kill the Spark task
-                    continue
-                rows.append((u, f["sample_rate"], f["n_samples"], f["channels"],
-                             f["duration_sec"], f["rms"], f["peak"]))
-            yield pd.DataFrame(
-                rows, columns=["url", "sample_rate", "n_samples", "channels",
-                               "duration_sec", "rms", "peak"],
-            )
-
-    return df.select(url_col, bin_col).mapInPandas(work, schema=AUDIO_FEATURES_SCHEMA)
-
-
 def extract_media_features(
     df: DataFrame, url_col: str = "url", bin_col: str = "html", fake_decode: bool = True
 ) -> DataFrame:

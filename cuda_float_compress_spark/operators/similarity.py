@@ -338,31 +338,3 @@ def ivf_topk(
         .orderBy(F.col("cosine").desc(), F.col(id_col))
         .limit(k)
     )
-
-
-def pairwise_cosine_topk_per_query(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Top-k corpus neighbors for EVERY query row (small query side →
-    broadcast; window top-k per query)."""
-    from pyspark.sql import Window as W
-
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    )
-    c = corpus.select(F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec"))
-    joined = c.crossJoin(F.broadcast(q)).filter(F.col("q_id") != F.col("c_id"))
-    sim = cosine_sim_cols(
-        F.col("c_vec").cast("array<double>"), F.col("q_vec").cast("array<double>")
-    )
-    scored = joined.select("q_id", "c_id", F.round(sim, 6).alias("cosine"))
-    w = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "c_id", "cosine", "rank")
-    )

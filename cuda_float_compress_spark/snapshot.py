@@ -43,6 +43,10 @@ from here, so they cannot disagree:
   ``blocks/`` an older vacuum rewrote through a plain Spark read, may
   hold a chunk split over two. A block row present twice (a block file
   copied by a task retry) raises ``ValueError``.
+* **Manifest.** The ``manifest/`` rows (one per part and column of a
+  run) of the committed pairs in the window, read with pyarrow: the
+  per-column sizes and codecs ``maintain.table_stats`` reports. A
+  crashed run's manifest rows are not read, as its blocks are not.
 * **Deleted positions.** The live tombstones as ``(part_id, chunk_id)``
   -> row positions, read with pyarrow: the form the chunk assembler
   drops them in.
@@ -74,7 +78,8 @@ import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 
-__all__ = ["Snapshot", "LINEAGE_SCHEMA", "ADDRESS_COLS", "ADDRESS_SCHEMA"]
+__all__ = ["Snapshot", "LINEAGE_SCHEMA", "MANIFEST_SCHEMA", "ADDRESS_COLS",
+           "ADDRESS_SCHEMA"]
 
 LINEAGE_SCHEMA = pa.schema([
     ("part_id", pa.int32()),
@@ -86,6 +91,24 @@ LINEAGE_SCHEMA = pa.schema([
     ("status", pa.string()),
     ("finished_at", pa.float64()),
     ("salts_json", pa.string()),
+])
+
+#: one row per part and column of a run, aggregated from its block rows
+MANIFEST_SCHEMA = pa.schema([
+    ("part_id", pa.int32()),
+    ("col", pa.string()),
+    ("col_idx", pa.int32()),
+    ("ptype", pa.string()),
+    ("n_chunks", pa.int64()),
+    ("n_values", pa.int64()),
+    ("n_nulls", pa.int64()),
+    ("raw_bytes", pa.int64()),
+    ("enc_bytes", pa.int64()),
+    # element name + non-null mirror Spark's array<string> parquet layout
+    ("codecs", pa.list_(pa.field("element", pa.string(), nullable=False))),
+    ("vmin", pa.int64()),
+    ("vmax", pa.int64()),
+    ("run_id", pa.string()),
 ])
 
 _SCHEMA_COLS = ["part_id", "run_id", "col_idx", "col", "ptype"]
@@ -139,9 +162,9 @@ def _listdir(fs: pafs.FileSystem, path: str) -> list[pafs.FileInfo]:
 
 
 def conform(got: pa.Table, schema: pa.Schema) -> pa.Table:
-    """``got``, block rows as some engine version wrote them, in
-    ``schema``: columns cast, and those an older layout lacks (vsum,
-    bloom) read as null."""
+    """``got``, block or manifest rows as some engine version wrote
+    them, in ``schema``: columns cast, and those an older layout lacks
+    (vsum, bloom, the manifest's vmin/vmax) read as null."""
     have = got.column_names
     return pa.table({
         fld.name: (got[fld.name].cast(fld.type) if fld.name in have
@@ -380,6 +403,25 @@ class Snapshot:
         task that rewrites a part whole reads one such group."""
         self.file_groups  # the duplicate-row check
         return self._united(["part_id"])
+
+    @functools.cached_property
+    def manifest(self) -> pa.Table:
+        """The ``manifest/`` rows of the committed pairs in the window, in
+        :data:`MANIFEST_SCHEMA` (columns an older layout lacks read as
+        null). A run that crashed before its lineage append left manifest
+        rows that, like its blocks, are not read."""
+        try:
+            files = ds.dataset(f"{self.root}/manifest", filesystem=self.fs,
+                               format="parquet").files
+        except FileNotFoundError:
+            files = []
+        man = pa.concat_tables(
+            [conform(pq.read_table(f, filesystem=self.fs), MANIFEST_SCHEMA)
+             for f in files] or [MANIFEST_SCHEMA.empty_table()])
+        return man.filter(pa.array(
+            [k in self.pairs for k in zip(man["part_id"].to_pylist(),
+                                          man["run_id"].to_pylist())],
+            pa.bool_()))
 
     @functools.cached_property
     def delete_dirs(self) -> list[tuple[str, bool]]:

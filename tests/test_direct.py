@@ -332,8 +332,8 @@ def test_direct_decode_with_predicates(spark, tmp_path, scratch):
 
 def test_reencode_single_column(spark, tmp_path):
     from cuda_float_compress_spark.operators.maintain import (
-        codec_histogram,
         reencode_columns,
+        table_stats,
     )
 
     src = str(tmp_path / "re_src")
@@ -343,8 +343,8 @@ def test_reencode_single_column(spark, tmp_path):
     df.write.parquet(src)
     encode_table_direct(spark, src, enc1, resume=False, target_rows_per_split=600)
     stats = reencode_columns(spark, enc1, enc2, {"lang": "bytes_rle"})
-    hist = {(r["col"], r["codec"]) for r in codec_histogram(spark, enc2).collect()}
-    assert ("lang", "bytes_rle") in hist
+    codecs = {c["col"]: c["codecs"] for c in table_stats(enc2)["columns"]}
+    assert "bytes_rle" in codecs["lang"]
     # untouched columns kept their payloads bit-identical
     import pyspark.sql.functions as F
     a = spark.read.parquet(f"{enc1}/blocks").filter(F.col("col") != "lang") \
@@ -1095,6 +1095,45 @@ def test_cli_stats(spark, tmp_path, capsys):
     assert rep["ratio"] > 2.0
     assert cols["lang"]["codecs"]  # every column reports its codec set
     assert cols["text"]["n_values"] == 400
+
+
+def test_cli_stats_counts_committed_runs_only(spark, tmp_path, monkeypatch,
+                                             capsys):
+    """A run that crashed before its lineage append left manifest rows;
+    stats must not count them, as no reader returns its rows. It used to
+    read every manifest file with Spark and report 5,000 values of a
+    2,000-row table."""
+    import json as _json
+
+    from cuda_float_compress_spark import cli
+    from cuda_float_compress_spark.localio import read_table_local
+    from cuda_float_compress_spark.operators import encode as E
+
+    out = str(tmp_path / "st_crash")
+    E.encode_table(spark, generate_webpages_df(spark, 2000, partitions=2),
+                   out, n_parts=2, resume=False)
+    append = E._atomic_parquet_append
+
+    def crash_at_lineage(fs, dir_path, tbl, name):
+        if dir_path.endswith("/lineage"):
+            raise OSError("crash before the lineage append")
+        append(fs, dir_path, tbl, name)
+
+    monkeypatch.setattr(E, "_atomic_parquet_append", crash_at_lineage)
+    with pytest.raises(OSError, match="lineage append"):
+        E.encode_table(spark, generate_webpages_df(spark, 3000, partitions=2),
+                       out, n_parts=2, resume=False, part_offset=10)
+    monkeypatch.undo()
+    assert read_table_local(out).num_rows == 2000
+    capsys.readouterr()
+    assert cli.main(["stats", "--out", out, "--cores", "4"]) == 0
+    lines = [ln for ln in capsys.readouterr().out.splitlines()
+             if ln.startswith("{")]
+    rep = _json.loads(lines[-1])
+    assert {c["col"]: c["n_values"] for c in rep["columns"]} == dict.fromkeys(
+        ["html", "lang", "text", "url", "warc_ts"], 2000)
+    assert rep["total_enc_bytes"] == sum(
+        c["enc_bytes"] for c in rep["columns"])
 
 
 def _small_docs(spark, n: int, extra: bool = False):

@@ -679,18 +679,6 @@ def test_ann_lsh_contains_self(spark, emb):
     assert out and out[0]["vec_id"] == 0
 
 
-def test_pairwise_topk_per_query(spark, emb):
-    queries = emb.limit(3)
-    out = similarity.pairwise_cosine_topk_per_query(queries, emb, k=4).collect()
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["q_id"], []).append(r)
-    assert len(by_q) == 3
-    for q, rows in by_q.items():
-        assert len(rows) == 4
-        assert [r["rank"] for r in sorted(rows, key=lambda x: x["rank"])] == [1, 2, 3, 4]
-
-
 # --- multimodal -------------------------------------------------------------------
 
 
@@ -1153,32 +1141,6 @@ def test_png_zlib_bomb_bounded():
     assert np.array_equal(multimodal.decode_png(multimodal.encode_png(img)), img)
 
 
-def test_audio_feature_table_skips_malformed_riff(spark):
-    """One malformed RIFF payload must skip its row, not kill the task."""
-    import numpy as np
-
-    tone = (np.sin(np.arange(800) / 8) * 16000).astype(np.int16)
-    good = multimodal.encode_wav(tone, rate=8000)
-    import struct as _struct
-
-    trunc_fmt = (
-        b"RIFF\x10\x00\x00\x00WAVE" + b"fmt " + b"\x04\x00\x00\x00" + b"\x01\x00\x02\x00"
-    )
-    zero_ch = (
-        b"RIFF\x30\x00\x00\x00WAVE"
-        + b"fmt " + _struct.pack("<I", 16)
-        + _struct.pack("<HHIIHH", 1, 0, 8000, 0, 0, 16)
-        + b"data" + _struct.pack("<I", 4) + b"\x00\x00\x00\x00"
-    )
-    df = spark.createDataFrame(
-        [("good", bytearray(good)), ("t", bytearray(trunc_fmt)),
-         ("z", bytearray(zero_ch))],
-        "url string, payload binary",
-    )
-    out = {r["url"] for r in multimodal.audio_feature_table(df).collect()}
-    assert out == {"good"}
-
-
 def test_minhash_components_are_distinct_permutations(spark):
     """Regression: a two-parameter transform lambda shadows the xor constant
     with the element INDEX, collapsing all n_hashes components to one value
@@ -1529,20 +1491,6 @@ def test_session_windows(spark):
     assert batch.exceptAll(stream_out).count() == 0
 
 
-def test_codec_trials_udtf(spark):
-    """Python UDTF surface: one row per byte-codec with its trial size."""
-    from cuda_float_compress_spark.functions import codec_trials_udtf
-
-    spark.udtf.register("codec_trials", codec_trials_udtf())
-    rows = spark.sql(
-        "SELECT * FROM codec_trials('the quick brown fox jumps over the dog')"
-    ).collect()
-    names = {r["codec"] for r in rows}
-    assert {"bytes_raw", "bytes_zstd", "bytes_fsst", "bytes_dict",
-            "bytes_rle"} <= names
-    assert all(r["enc_bytes"] > 0 and r["raw_bytes"] == 38 for r in rows)
-
-
 def test_bpe_token_count_matches_python_re(spark):
     """The BPE-ish regex counter equals Python's regex module applied to the
     same pattern (incl CJK, contractions, empty, punctuation runs)."""
@@ -1571,28 +1519,6 @@ def test_rolling_fingerprint_matches_python(spark):
         for ch in t:
             h = (h * 31 + ord(ch)) % 1_000_000_007
         assert got[i] == h, (i, t)
-
-
-def test_audio_feature_table(spark):
-    """Real audio feature pipeline over genuine WAV bytes, through the
-    Spark mapInPandas surface; non-WAV rows are skipped."""
-    import numpy as np
-
-    rng = np.random.default_rng(21)
-    img = rng.integers(0, 256, (32, 16, 3), dtype=np.uint8)
-    bmp = multimodal.encode_bmp(img)
-    tone = (np.sin(np.arange(8000) / 8) * 16000).astype(np.int16)
-    wav = multimodal.encode_wav(tone, rate=8000)
-    df = spark.createDataFrame(
-        [("img1", bytearray(bmp)), ("aud1", bytearray(wav)), ("junk", b"zz")],
-        "url string, payload binary",
-    )
-    auds = {r["url"]: r for r in multimodal.audio_feature_table(df).collect()}
-    assert set(auds) == {"aud1"}
-    a = auds["aud1"]
-    assert a["sample_rate"] == 8000 and a["n_samples"] == 8000
-    assert a["duration_sec"] == 1.0
-    assert 0.3 < a["rms"] < 0.8 and a["peak"] <= 0.5
 
 
 def test_connected_components_and_keep_list(spark):
