@@ -1,18 +1,21 @@
 """Direct-layout encode: distribute parquet row-group splits; each task reads
-its split with pyarrow INSIDE the Python worker and emits compressed blocks.
+its split with pyarrow INSIDE the Python worker and writes its compressed
+blocks itself.
 
 Why this exists (the 100 TB argument): the shuffle-path encode
 (operators/encode.py) re-clusters rows by url-host — correct when you want
 host locality, but it ships the entire table twice (shuffle + JVM→Python
 Arrow). For bulk encode of a table as laid out, the scale-aware plan is to
-encode row groups IN PLACE: no shuffle, no JVM transfer of raw payloads —
-only the ~5-6x smaller compressed blocks cross Arrow back to the JVM. This is
-the same locality argument as Iceberg/Spark storage-partitioned execution.
+encode row groups IN PLACE: no shuffle and no JVM transfer of raw payloads
+or of compressed blocks — only each block row's ~100 B of chunk stats
+cross Arrow back to the JVM, for the commit. This is the same locality
+argument as Iceberg/Spark storage-partitioned execution.
 
 part_id = split index over the (deterministically sorted) file list, so
 checkpoint-resume re-derives identical assignments from the same input.
 Each split's batches go through ``encode.encode_part``, the chunk cutter
-of every table writer, and the run commits through
+of every table writer; each task writes its block file through
+``encode.block_writer`` and the run commits through
 ``encode.commit_blocks``, like the shuffle-path encode.
 
 ``decode_table_direct`` is another name for ``operators.decode.decode_table``,
@@ -34,7 +37,8 @@ from cuda_float_compress_spark.operators.decode import (  # noqa: F401
     decode_table as decode_table_direct,
 )
 from cuda_float_compress_spark.operators.encode import (
-    BLOCKS_SCHEMA,
+    STATS_SCHEMA,
+    block_writer,
     commit_blocks,
     completed_parts,
     encode_part,
@@ -228,8 +232,9 @@ def encode_table_direct(
                 [dict(zip(SPLITS_SCHEMA.names, s)) for s in todo],
                 schema=SPLITS_SCHEMA),
             [s[6] for s in todo])
-        blocks = splits_df.mapInArrow(encode_split, schema=BLOCKS_SCHEMA)
-        commit_blocks(blocks, out_dir, run_id, metrics)
+        commit_blocks(splits_df.mapInArrow(
+            block_writer(encode_split, out_dir, run_id), schema=STATS_SCHEMA),
+            out_dir, run_id, metrics)
 
     snap = metrics.snapshot()
     snap["run_id"] = run_id

@@ -6,27 +6,33 @@ Dataflow (SURVEY.md §3.4):
          -> plan_partitions (the one shuffle: hash+salt part ids, placed
             whole, part p in task p mod min(n_parts, cores); or range)
          -> sortWithinPartitions(part_id, sort_keys)   (no extra shuffle)
-         -> mapInArrow(encode_part per part, parts back to back; each
-            chunk's rows stably sorted by its low-cardinality string
-            columns, then each column encoded)
-         -> commit_blocks: append blocks parquet, then manifest and
-            lineage written on the driver with pyarrow  (no Spark job)
+         -> mapInArrow(block_writer: encode_part per part, parts back
+            to back; each chunk's rows stably sorted by its
+            low-cardinality string columns, then each column encoded;
+            write_blocks writes the task's block file with pyarrow and
+            returns only the block rows' metadata columns)
+         -> commit_blocks: one action (toArrow) collects those stats;
+            manifest and lineage built from them and written on the
+            driver with pyarrow  (no listing or read of blocks/)
 
-Every writer of an encoded table shares the two halves of this module:
+Every writer of an encoded table shares the three parts of this module:
 :func:`encode_part` cuts one part's rows into chunks and encodes them,
-and :func:`commit_blocks` appends the block rows and commits them. The
-encoders here and in ``operators/direct.py``, ``maintain.compact`` and
-``maintain.reencode_columns`` (which keeps its chunks and only commits
-here) call them; no writer has a chunk loop or a manifest of its own.
-So every writer but ``reencode_columns`` (which re-encodes single
-columns of kept chunks, and must not reorder one column alone) stores
-each chunk's rows clustered by its low-cardinality string columns
-(``_cluster_rows``; see :func:`encode_part` for what stays unchanged).
+:func:`block_writer` makes each task write its block rows to its own
+file (:func:`write_blocks`), and :func:`commit_blocks` runs that job and
+commits what it wrote. The encoders here and in ``operators/direct.py``,
+``maintain.compact`` and ``maintain.reencode_columns`` (which keeps its
+chunks and only writes and commits here) call them; no writer has a
+chunk loop, a block write or a manifest of its own. So every writer but
+``reencode_columns`` (which re-encodes single columns of kept chunks,
+and must not reorder one column alone) stores each chunk's rows
+clustered by its low-cardinality string columns (``_cluster_rows``; see
+:func:`encode_part` for what stays unchanged).
 
 Scale notes (100 TB, 1000 executors): every stage is embarrassingly parallel
-after the single planned shuffle; block rows are ~chunk-sized (MBs), so the
-blocks write streams without driver involvement; the commit reads only the
-new block files' metadata columns and writes one row per (part, column).
+after the single planned shuffle; block rows are ~chunk-sized (MBs) and
+each task writes its own, so payloads never reach the JVM or the driver;
+the commit collects ~100 B of metadata per block row and writes one row
+per (part, column).
 """
 
 from __future__ import annotations
@@ -41,11 +47,11 @@ import uuid
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as ds
 import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from cuda_float_compress_spark.metrics import EngineMetrics
 from cuda_float_compress_spark.operators import chunks as C
@@ -54,45 +60,11 @@ from cuda_float_compress_spark.snapshot import (
     LINEAGE_SCHEMA,
     MANIFEST_SCHEMA,
     Snapshot,
+    _open,
 )
 
-BLOCKS_SCHEMA = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("chunk_id", T.LongType(), False),
-        T.StructField("col", T.StringType(), False),
-        T.StructField("col_idx", T.IntegerType(), False),
-        T.StructField("ptype", T.StringType(), False),
-        T.StructField("codec", T.StringType(), False),
-        T.StructField("n", T.LongType(), False),
-        T.StructField("n_nulls", T.LongType(), False),
-        T.StructField("raw_bytes", T.LongType(), False),
-        T.StructField("enc_bytes", T.LongType(), False),
-        T.StructField("params", T.StringType(), False),
-        # zone-map stats (numeric/timestamp columns; null otherwise): enable
-        # chunk pruning on the ENCODED table without touching payloads
-        T.StructField("vmin", T.LongType(), True),
-        T.StructField("vmax", T.LongType(), True),
-        # exact per-chunk value sum for int32/int64 columns (null when the
-        # sum leaves the int64 domain, for other ptypes, or in pre-r6
-        # layouts): lets count/sum/min/max aggregate from METADATA alone
-        # (operators/metadata_agg) — at 100 TB that is MBs instead of the
-        # full decode
-        T.StructField("vsum", T.LongType(), True),
-        # provenance: which run wrote this block. decode/manifest only trust
-        # blocks whose (part_id, run_id) is committed in lineage — a crash
-        # between the blocks append and the lineage write leaves stale
-        # partials that must never double-count or corrupt decode
-        T.StructField("run_id", T.StringType(), False),
-        # optional per-(chunk, column) Bloom filter over distinct values
-        # (operators/bloom.py): prunes equality/IN probes on columns whose
-        # zone maps can't (high-cardinality, unsorted — e.g. url). Null
-        # unless the encode opted the column in via ``bloom_cols``.
-        T.StructField("bloom", T.BinaryType(), True),
-        T.StructField("payload", T.BinaryType(), False),
-    ]
-)
-
+#: one row per chunk x column: the payload beside its stats, as the task
+#: writer (:func:`write_blocks`) stores it in ``blocks/``
 _BLOCKS_ARROW = pa.schema(
     [
         ("part_id", pa.int32()),
@@ -106,14 +78,46 @@ _BLOCKS_ARROW = pa.schema(
         ("raw_bytes", pa.int64()),
         ("enc_bytes", pa.int64()),
         ("params", pa.string()),
+        # zone-map stats (numeric/timestamp columns; null otherwise): enable
+        # chunk pruning on the ENCODED table without touching payloads
         ("vmin", pa.int64()),
         ("vmax", pa.int64()),
+        # exact per-chunk value sum for int32/int64 columns (null when the
+        # sum leaves the int64 domain, for other ptypes, or in pre-r6
+        # layouts): lets count/sum/min/max aggregate from METADATA alone
+        # (operators/metadata_agg) — at 100 TB that is MBs instead of the
+        # full decode
         ("vsum", pa.int64()),
+        # provenance: which run wrote this block. decode/manifest only trust
+        # blocks whose (part_id, run_id) is committed in lineage — a crash
+        # between the blocks write and the lineage write leaves stale
+        # partials that must never double-count or corrupt decode
         ("run_id", pa.string()),
+        # optional per-(chunk, column) Bloom filter over distinct values
+        # (operators/bloom.py): prunes equality/IN probes on columns whose
+        # zone maps can't (high-cardinality, unsorted — e.g. url). Null
+        # unless the encode opted the column in via ``bloom_cols``.
         ("bloom", pa.large_binary()),
         ("payload", pa.large_binary()),
     ]
 )
+
+#: what a writer's task returns for each block row it wrote: the metadata
+#: columns the manifest aggregates (:func:`_manifest_rows`), never the
+#: payload
+_STATS_ARROW = pa.schema([_BLOCKS_ARROW.field(c) for c in (
+    "part_id", "col", "col_idx", "ptype", "n", "n_nulls", "raw_bytes",
+    "enc_bytes", "codec", "vmin", "vmax")])
+STATS_SCHEMA = from_arrow_schema(_STATS_ARROW)
+
+#: the task writer closes a row group at this many bytes of buffered block
+#: rows: parquet-mr's ``parquet.block.size``, the row groups Spark's
+#: parquet writer made of the same rows
+_ROW_GROUP_BYTES = 128 << 20
+# the payloads are unique and entropy-coded: a dictionary of them is a
+# wasted hashing pass
+_DICTIONARY_COLS = [f.name for f in _BLOCKS_ARROW
+                    if not pa.types.is_large_binary(f.type)]
 
 
 def _encode_chunk_to_rows(tbl: pa.Table, part_id: int, chunk_id: int,
@@ -304,10 +308,6 @@ def encode_part(batches, part_id: int, chunk_rows: int, chunk_bytes: int,
         yield cut()
 
 
-_MANIFEST_META_COLS = ["part_id", "col", "col_idx", "ptype", "n", "n_nulls",
-                       "raw_bytes", "enc_bytes", "codec", "vmin", "vmax"]
-
-
 def _atomic_parquet_append(fs, dir_path: str, tbl: pa.Table,
                            name: str) -> None:
     """Append one parquet file to a dataset dir with atomic visibility:
@@ -319,111 +319,153 @@ def _atomic_parquet_append(fs, dir_path: str, tbl: pa.Table,
     fs.move(tmp, f"{dir_path}/{name}")
 
 
-def _manifest_rows(fs, blk_files: list[str], run_id: str) -> list[dict]:
-    """One manifest row per (part, col) of run ``run_id``, aggregated from
-    the block files' METADATA columns (payloads are never read): chunk
-    count, value/null/byte sums, the sorted codec set, and the part-level
-    zone-map rollups (null-skipping min vmin / max vmax) that
-    ``decode.qualifying_parts`` prunes whole parts by."""
-    tbl = ds.dataset(blk_files, format="parquet", filesystem=fs).to_table(
-        columns=_MANIFEST_META_COLS,
-        filter=ds.field("run_id") == run_id,
-    )
-    cols = {c: tbl.column(c).to_pylist() for c in _MANIFEST_META_COLS}
-    agg: dict[tuple, dict] = {}
-    for i in range(tbl.num_rows):
-        key = (cols["part_id"][i], cols["col"][i],
-               cols["col_idx"][i], cols["ptype"][i])
-        a = agg.get(key)
-        if a is None:
-            a = agg[key] = {
-                "part_id": key[0], "col": key[1], "col_idx": key[2],
-                "ptype": key[3], "n_chunks": 0, "n_values": 0,
-                "n_nulls": 0, "raw_bytes": 0, "enc_bytes": 0,
-                "codecs": set(), "vmin": None, "vmax": None,
-                "run_id": run_id,
-            }
-        a["n_chunks"] += 1
-        a["n_values"] += cols["n"][i]
-        a["n_nulls"] += cols["n_nulls"][i]
-        a["raw_bytes"] += cols["raw_bytes"][i]
-        a["enc_bytes"] += cols["enc_bytes"][i]
-        a["codecs"].add(cols["codec"][i])
-        vmin, vmax = cols["vmin"][i], cols["vmax"][i]
-        if vmin is not None and (a["vmin"] is None or vmin < a["vmin"]):
-            a["vmin"] = vmin
-        if vmax is not None and (a["vmax"] is None or vmax > a["vmax"]):
-            a["vmax"] = vmax
-    out = []
-    for a in agg.values():
-        a["codecs"] = sorted(a["codecs"])
-        out.append(a)
-    return out
+def _row_groups(blocks):
+    """The non-empty batches of ``blocks`` gathered into tables of at
+    least ``_ROW_GROUP_BYTES`` (the last one: what is left)."""
+    buf, size = [], 0
+    for batch in blocks:
+        if batch.num_rows:
+            buf.append(batch)
+            size += batch.nbytes
+            if size >= _ROW_GROUP_BYTES:
+                yield pa.Table.from_batches(buf, _BLOCKS_ARROW)
+                buf, size = [], 0
+    if buf:
+        yield pa.Table.from_batches(buf, _BLOCKS_ARROW)
 
 
-def commit_blocks(blocks: DataFrame, out_dir: str, run_id: str,
+def write_blocks(blocks, fs, root: str, run_id: str, partition: int):
+    """Write one task's block rows (``blocks``: Arrow batches in
+    ``_BLOCKS_ARROW``) to ``blocks/part-<run_id>-<partition>.parquet``
+    under ``root`` on ``fs``, then yield their metadata columns
+    (``STATS_SCHEMA``). The one writer of block files.
+
+    The file is written under a dot-prefixed temp name, which every
+    reader ignores, and renamed into place once complete, as
+    :func:`_atomic_parquet_append` does. Its name depends only on the run
+    and the task's partition, so a retried attempt replaces its
+    predecessor's file instead of leaving a second copy of its rows. A
+    row group closes at ``_ROW_GROUP_BYTES`` of buffered rows, so a task
+    holds what Spark's parquet writer held. The file is uncompressed (the
+    payloads are entropy-coded already) and carries no column statistics:
+    readers prune by the block rows' own zone maps. A task without rows
+    writes no file."""
+    name = f"part-{run_id}-{partition:05d}.parquet"
+    tmp = f"{root}/blocks/.inprogress-{name}"
+    stats, writer = [], None
+    try:
+        for group in _row_groups(blocks):
+            if writer is None:
+                fs.create_dir(f"{root}/blocks", recursive=True)
+                writer = pq.ParquetWriter(
+                    tmp, _BLOCKS_ARROW, filesystem=fs, compression="none",
+                    use_dictionary=_DICTIONARY_COLS, write_statistics=False,
+                    store_schema=False)
+            writer.write_table(group, row_group_size=group.num_rows)
+            stats += group.select(_STATS_ARROW.names).to_batches()
+    finally:
+        if writer is not None:
+            writer.close()
+    if writer is not None:
+        fs.move(tmp, f"{root}/blocks/{name}")
+    yield from stats
+
+
+def block_writer(rows_of, out_dir: str, run_id: str):
+    """The ``mapInArrow`` function (output schema ``STATS_SCHEMA``) of a
+    table writer whose tasks make their block rows with ``rows_of`` (a
+    task's input batches -> block-row batches): each task writes its rows
+    with :func:`write_blocks` and returns their metadata columns, the
+    stats frame :func:`commit_blocks` commits. ``out_dir`` is resolved
+    here, on the driver, so a scheme pyarrow cannot open raises before
+    any Spark job runs."""
+    fs, root = _open(out_dir)
+
+    def write(batches):
+        return write_blocks(rows_of(batches), fs, root, run_id,
+                            TaskContext.get().partitionId())
+
+    return write
+
+
+def _manifest_rows(stats: pa.Table, run_id: str) -> pa.Table:
+    """One manifest row per (part, col) of ``stats``, the metadata columns
+    of run ``run_id``'s block rows: chunk count, value/null/byte sums,
+    the sorted codec set, and the part-level zone-map rollups
+    (null-skipping min vmin / max vmax) that ``decode.qualifying_parts``
+    prunes whole parts by."""
+    keys = ["part_id", "col", "col_idx", "ptype"]
+    g = stats.group_by(keys).aggregate([
+        ("n", "count"), ("n", "sum"), ("n_nulls", "sum"),
+        ("raw_bytes", "sum"), ("enc_bytes", "sum"), ("codec", "distinct"),
+        ("vmin", "min"), ("vmax", "max")])
+    return pa.table({
+        **{k: g[k] for k in keys},
+        "n_chunks": g["n_count"], "n_values": g["n_sum"],
+        "n_nulls": g["n_nulls_sum"], "raw_bytes": g["raw_bytes_sum"],
+        "enc_bytes": g["enc_bytes_sum"],
+        "codecs": pa.array([sorted(c) for c in g["codec_distinct"].to_pylist()],
+                           MANIFEST_SCHEMA.field("codecs").type),
+        "vmin": g["vmin_min"], "vmax": g["vmax_max"],
+        "run_id": pa.repeat(pa.scalar(run_id), g.num_rows),
+    }).cast(MANIFEST_SCHEMA)
+
+
+def commit_blocks(stats: DataFrame, out_dir: str, run_id: str,
                   metrics: EngineMetrics | None = None,
-                  salts: dict | None = None) -> list[dict]:
-    """Append ``blocks`` to ``out_dir/blocks`` and commit them as run
-    ``run_id``; return the manifest rows written. The one write-and-commit
-    of every table writer.
+                  salts: dict | None = None) -> pa.Table:
+    """Run ``stats``, a frame of :func:`block_writer` tasks, and commit the
+    block files they write as run ``run_id``; return the manifest rows
+    written. The one commit of every table writer.
 
-    Blocks are written ``uncompressed``: the payloads are already
-    entropy-coded, so parquet-level snappy would be a wasted pass on the
-    write and on every read (the metadata columns are ~100 B). The
-    manifest aggregates only the block files this append added (every
-    file not listed before it), so stale partials of a crashed earlier
-    run never count. Manifest and lineage are appended on the driver with
-    pyarrow: the rows are metadata-scale (parts x cols), and a Spark job
-    costs ~0.5 s of fixed driver latency in local mode. The lineage
-    append lands LAST: it is the run's commit point (readers trust only
-    lineage-committed parts). Parts another run committed are refused
-    before either append (two runs of one part make the table
-    unreadable); ``maintain.vacuum`` reclaims the refused block files."""
+    The job is one action, ``toArrow``: each task writes its own block
+    file and returns only the metadata columns of its block rows, so no
+    payload crosses back into the JVM. The manifest is aggregated on the
+    driver from those rows: ``blocks/`` is neither listed nor read, and
+    stale files of a crashed earlier run never count. Manifest and
+    lineage are appended on the driver with pyarrow: the rows are
+    metadata-scale (parts x cols), and a Spark job costs ~0.5 s of fixed
+    driver latency in local mode. The lineage append lands LAST: it is
+    the run's commit point (readers trust only lineage-committed parts).
+    Parts another run committed are refused before either append (two
+    runs of one part make the table unreadable); ``maintain.vacuum``
+    reclaims the refused block files."""
     stage = (metrics.stage if metrics is not None
              else lambda _: contextlib.nullcontext())
     with stage("encode_write"):
-        before = {p for p, _ in Snapshot.resolve(out_dir).all_block_files}
-        blocks.write.mode("append").option(
-            "compression", "uncompressed"
-        ).parquet(f"{out_dir}/blocks")
+        written = stats.toArrow()
 
     with stage("manifest"):
         snap = Snapshot.resolve(out_dir)
-        added = [p for p, _ in snap.all_block_files if p not in before]
-        man_rows = _manifest_rows(snap.fs, added, run_id) if added else []
+        man = _manifest_rows(written, run_id)
         done = snap.committed_rows
         others = set(done.filter(pc.not_equal(
             done["run_id"], run_id))["part_id"].to_pylist())
-        taken = sorted(others & {r["part_id"] for r in man_rows})
+        taken = sorted(others & set(man["part_id"].to_pylist()))
         if taken:
             raise ValueError(f"parts {taken} of {out_dir} are already "
                              "committed by another run; use part_offset")
-        _atomic_parquet_append(
-            snap.fs, f"{snap.root}/manifest",
-            pa.Table.from_pylist(man_rows, schema=MANIFEST_SCHEMA),
-            f"part-direct-{run_id}.parquet",
-        )
-        per_part: dict[int, dict] = {}
-        for r in man_rows:
-            p = per_part.setdefault(r["part_id"], {
-                "part_id": r["part_id"], "n_chunks": 0, "n_rows": 0,
-                "raw_bytes": 0, "enc_bytes": 0, "run_id": run_id,
-                "status": "done", "salts_json": json.dumps(salts or {}),
-            })
-            p["n_chunks"] = max(p["n_chunks"], r["n_chunks"])
-            p["n_rows"] = max(p["n_rows"], r["n_values"])
-            p["raw_bytes"] += r["raw_bytes"]
-            p["enc_bytes"] += r["enc_bytes"]
-        now = time.time()
+        _atomic_parquet_append(snap.fs, f"{snap.root}/manifest", man,
+                               f"part-direct-{run_id}.parquet")
+        per = man.group_by("part_id").aggregate([
+            ("n_chunks", "max"), ("n_values", "max"), ("raw_bytes", "sum"),
+            ("enc_bytes", "sum")])
+        n = per.num_rows
         _atomic_parquet_append(
             snap.fs, f"{snap.root}/lineage",
-            pa.Table.from_pylist([dict(p, finished_at=now)
-                                  for p in per_part.values()],
-                                 schema=LINEAGE_SCHEMA),
+            pa.table({
+                "part_id": per["part_id"], "n_chunks": per["n_chunks_max"],
+                "n_rows": per["n_values_max"],
+                "raw_bytes": per["raw_bytes_sum"],
+                "enc_bytes": per["enc_bytes_sum"],
+                "run_id": pa.repeat(pa.scalar(run_id), n),
+                "status": pa.repeat(pa.scalar("done"), n),
+                "finished_at": pa.repeat(pa.scalar(time.time()), n),
+                "salts_json": pa.repeat(pa.scalar(json.dumps(salts or {})), n),
+            }).cast(LINEAGE_SCHEMA),
             f"part-direct-{run_id}.parquet",
         )
-    return man_rows
+    return man
 
 
 def completed_parts(
@@ -506,6 +548,30 @@ def encode_table(
     metrics = metrics or EngineMetrics(spark)
     overrides = codec_overrides or {}
     t_start = time.time()
+    acc, blooms = metrics.acc, frozenset(bloom_cols or ())
+
+    def encode_partition(batches):
+        # parts arrive contiguous (sorted): split the stream at part_id
+        # boundaries and cut each part's pieces into chunks
+        def pieces():
+            for batch in batches:
+                if not batch.num_rows:
+                    continue
+                parts = batch.column("part_id").to_numpy(zero_copy_only=False)
+                bounds = [0, *(np.flatnonzero(parts[1:] != parts[:-1]) + 1),
+                          len(parts)]
+                for lo, hi in zip(bounds, bounds[1:]):
+                    yield int(parts[lo]), batch.slice(lo, hi - lo)
+
+        for part_id, group in itertools.groupby(pieces(), key=lambda p: p[0]):
+            yield from encode_part(
+                (piece for _, piece in group), part_id, chunk_rows,
+                chunk_bytes, overrides, acc, run_id, profile, blooms,
+            )
+
+    # built first: it resolves out_dir, so a scheme pyarrow cannot open
+    # raises before the skew scan's Spark job
+    write = block_writer(encode_partition, out_dir, run_id)
 
     with metrics.stage("plan"):
         # skew plan, cheapest-available source first: an explicit ``salts``
@@ -551,29 +617,8 @@ def encode_table(
     sort_cols = ["part_id"] + (sort_keys or [url_col])
     planned = planned.sortWithinPartitions(*sort_cols)
 
-    acc, blooms = metrics.acc, frozenset(bloom_cols or ())
-
-    def encode_partition(batches):
-        # parts arrive contiguous (sorted): split the stream at part_id
-        # boundaries and cut each part's pieces into chunks
-        def pieces():
-            for batch in batches:
-                if not batch.num_rows:
-                    continue
-                parts = batch.column("part_id").to_numpy(zero_copy_only=False)
-                bounds = [0, *(np.flatnonzero(parts[1:] != parts[:-1]) + 1),
-                          len(parts)]
-                for lo, hi in zip(bounds, bounds[1:]):
-                    yield int(parts[lo]), batch.slice(lo, hi - lo)
-
-        for part_id, group in itertools.groupby(pieces(), key=lambda p: p[0]):
-            yield from encode_part(
-                (piece for _, piece in group), part_id, chunk_rows,
-                chunk_bytes, overrides, acc, run_id, profile, blooms,
-            )
-
-    blocks = planned.mapInArrow(encode_partition, schema=BLOCKS_SCHEMA)
-    commit_blocks(blocks, out_dir, run_id, metrics, salts=salts)
+    commit_blocks(planned.mapInArrow(write, schema=STATS_SCHEMA), out_dir,
+                  run_id, metrics, salts=salts)
 
     snap = metrics.snapshot()
     snap["run_id"] = run_id

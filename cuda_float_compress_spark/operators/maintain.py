@@ -22,9 +22,9 @@ are never shuffled.
 Both write a NEW table: they raise ``ValueError`` when ``dst_dir``
 already holds ``blocks/``, ``manifest/``, ``lineage/`` or ``deletes/``
 (an old table's tombstones would delete rows of the new one). Both
-commit through ``encode.commit_blocks``, the write-and-commit of every
-table writer: blocks in uncompressed parquet, then manifest, then
-lineage, on the driver.
+write and commit as every table writer does: each task writes its block
+file (``encode.block_writer``), then ``encode.commit_blocks`` writes
+manifest, then lineage, on the driver.
 """
 
 from __future__ import annotations
@@ -48,7 +48,8 @@ from cuda_float_compress_spark.operators.decode import (
 from cuda_float_compress_spark.operators.deletes import commit_tombstones
 from cuda_float_compress_spark.operators.encode import (
     _BLOCKS_ARROW,
-    BLOCKS_SCHEMA,
+    STATS_SCHEMA,
+    block_writer,
     commit_blocks,
     encode_part,
 )
@@ -133,11 +134,12 @@ def reencode_columns(
     # a file group goes whole to one task, which writes one file, so no
     # chunk spans two output files
     manifest = commit_blocks(
-        group_frame(spark, src.file_groups)
-        .mapInArrow(reencode, schema=BLOCKS_SCHEMA), dst_dir, run_id)
+        group_frame(spark, src.file_groups).mapInArrow(
+            block_writer(reencode, dst_dir, run_id), schema=STATS_SCHEMA),
+        dst_dir, run_id)
     return {"run_id": run_id,
-            "raw_bytes": sum(r["raw_bytes"] for r in manifest),
-            "enc_bytes": sum(r["enc_bytes"] for r in manifest)}
+            "raw_bytes": sum(manifest["raw_bytes"].to_pylist()),
+            "enc_bytes": sum(manifest["enc_bytes"].to_pylist())}
 
 
 def _finish_legacy_swap(fs, root: str) -> None:
@@ -241,8 +243,8 @@ def compact(
     Snapshot's ``part_groups`` (file groups united so that each part is
     re-chunked by one task) are LPT-packed into one task per core, each
     task reads its groups with pyarrow and rebuilds their chunks with
-    ``decode.assemble_chunks``. Block rows are never shuffled, and the
-    block write is the only Spark job.
+    ``decode.assemble_chunks``, and writes its block file. Block rows are
+    never shuffled, and that write is the only Spark job.
 
     Merge-on-read tombstones (operators/deletes) are MATERIALIZED: the
     assembler drops the ``Snapshot.deleted_positions`` of each chunk, so
@@ -292,7 +294,8 @@ def compact(
 
     commit_blocks(
         group_frame(spark, snap.part_groups, snap.deleted_positions)
-        .mapInArrow(recompact, schema=BLOCKS_SCHEMA), dst_dir, run_id)
+        .mapInArrow(block_writer(recompact, dst_dir, run_id),
+                    schema=STATS_SCHEMA), dst_dir, run_id)
     return {
         "run_id": run_id,
         "chunks_before": _n_chunks(stats),

@@ -70,17 +70,6 @@ def get_spark(
         # and stable. The encode UDF re-buffers batches up to its chunk size.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(4 * 1024 * 1024))
-        # payload blocks are already codec-compressed; parquet recompression
-        # of binary blobs wastes CPU at 100 TB scale
-        .config("spark.sql.parquet.compression.codec", "snappy")
-        # committer v2: task outputs rename directly into place instead of
-        # a second driver-serial rename pass at job commit. Safe for this
-        # engine's dirs by design: decode trusts only lineage-committed
-        # (part, run) pairs, so files from a failed/partial job are inert
-        # (same argument as task retries), and vacuum reclaims them. A
-        # retry that leaves a committed file twice is refused by every
-        # reader (snapshot.Snapshot.file_groups), never read twice.
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.python.daemon.module",
                 "cuda_float_compress_spark.worker_daemon")

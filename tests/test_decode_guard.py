@@ -24,8 +24,9 @@ Engine frames start on the JVM: a ``parallelize`` call in the package,
 or a ``createDataFrame`` of a Python list in the engine's read path,
 fails.
 
-Block rows are written in one place, ``encode.commit_blocks``: a Spark
-write whose target names ``blocks`` anywhere else fails. Tombstones are
+Block files are written in one place, ``encode.write_blocks``, the task
+writer: a Spark write naming ``blocks`` fails anywhere, and a pyarrow
+write or rename naming it fails outside that writer. Tombstones are
 written in one place, ``deletes.commit_tombstones``: a Spark write, a
 ``pq.write_table`` or a ``copy_files`` in any other function that deals
 with deletes or tombstones fails."""
@@ -222,27 +223,71 @@ def _spark_write(call: ast.Call) -> bool:
     return bool({"write", "writeTo"} & names)
 
 
+# (module, function) that may write or rename under ``blocks/`` with
+# pyarrow: the task writer, and the repair of an older vacuum's
+# interrupted directory swap, which renames whole dirs and writes no row
+BLOCK_FILE_WRITERS = {
+    ("operators/encode.py", "write_blocks"),
+    ("operators/maintain.py", "_finish_legacy_swap"),
+}
+_FILE_WRITES = ("write_table", "write_dataset", "ParquetWriter", "move",
+                "copy_files", "_atomic_parquet_append")
+
+
+def _block_writes(rel: str, tree: ast.AST) -> list[str]:
+    """The calls in the functions of ``tree``, module ``rel``, that write
+    ``blocks/`` outside the task writer: a Spark writer chain, anywhere,
+    or a pyarrow file write or rename outside ``BLOCK_FILE_WRITERS``,
+    whose arguments, with the local names they use resolved to what the
+    function assigns them, name ``blocks``."""
+    stray = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        bindings = _bindings(fn)
+        for call in ast.walk(fn):
+            if not (isinstance(call, ast.Call) and (
+                    _spark_write(call)
+                    or (_name(call.func) in _FILE_WRITES
+                        and (rel, fn.name) not in BLOCK_FILE_WRITERS))):
+                continue
+            args = " ".join(ast.unparse(a) for a in call.args + [
+                k.value for k in call.keywords])
+            if re.search(r"\bblocks\b", _resolved(args, bindings)):
+                stray.append(f"{rel}:{call.lineno} in {fn.name}: "
+                             f"{ast.unparse(call)}")
+    return sorted(set(stray))
+
+
 def test_one_block_writer():
-    """Rows appended to ``blocks/`` count only once lineage commits their
-    run, and ``encode.commit_blocks`` is the one writer that does both. A
-    sink that appended block rows with Spark outside it wrote rows no
-    read would ever return. Fails on a call in a Spark writer chain
-    (``.write``/``.writeTo``) whose arguments name ``blocks``, outside
-    ``encode.commit_blocks``."""
+    """Rows in ``blocks/`` count only once lineage commits their run, and
+    a retried task must replace its file, not add a second copy of its
+    rows. ``encode.write_blocks`` writes each task's block file under a
+    temp name, renames it into place under a name fixed by run and
+    partition, and returns the rows' stats to ``encode.commit_blocks``.
+    A sink that appended block rows with Spark wrote rows no read would
+    ever return; Spark's job commit also made every encode list
+    ``blocks/`` to find its files. Fails on a Spark writer chain naming
+    ``blocks`` anywhere, and on a ``write_table``, ``write_dataset``,
+    ``ParquetWriter``, ``move``, ``copy_files`` or
+    ``_atomic_parquet_append`` naming it outside ``BLOCK_FILE_WRITERS``.
+    The guard itself must flag both kinds in a made-up module."""
+    made_up = ast.parse(
+        "def commit_blocks(df, out_dir):\n"
+        "    df.write.mode('append').parquet(f'{out_dir}/blocks')\n"
+        "def sink(fs, root, tbl):\n"
+        "    path = f'{root}/blocks/part-0.parquet'\n"
+        "    pq.write_table(tbl, path, filesystem=fs)\n")
+    assert [s.split(": ")[0] for s in _block_writes(
+        "operators/encode.py", made_up)] == [
+        "operators/encode.py:2 in commit_blocks",
+        "operators/encode.py:5 in sink"]
     stray = []
     for path in sorted(PKG.rglob("*.py")):
-        rel = path.relative_to(PKG).as_posix()
-        for fns, call in _calls(ast.parse(path.read_text())):
-            args = call.args + [k.value for k in call.keywords]
-            if (_spark_write(call)
-                    and any("blocks" in ast.unparse(a) for a in args)
-                    and not (rel == "operators/encode.py"
-                             and "commit_blocks" in fns)):
-                stray.append(f"{rel}:{call.lineno} in "
-                             f"{'.'.join(fns) or '<module>'}: "
-                             f"{ast.unparse(call)}")
+        stray += _block_writes(path.relative_to(PKG).as_posix(),
+                               ast.parse(path.read_text()))
     assert not stray, (
-        "block rows written outside encode.commit_blocks:\n"
+        "block files written outside encode.write_blocks:\n"
         + "\n".join(stray)
     )
 

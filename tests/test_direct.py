@@ -538,6 +538,9 @@ def test_vacuum_crash_window_repair(spark, tmp_path, scratch):
         f"{scratch}/blocks", f"{scratch}/blocks_vacuum_tmp",
         f"{scratch}/blocks_vacuum_old",
     )
+    # the older engine wrote blocks/ with Spark, whose job commit left a
+    # _SUCCESS marker there; its vacuum swap relied on it
+    open(f"{blocks}/_SUCCESS", "w").close()
     original = spark.read.parquet(src)
 
     def readers_refuse():
@@ -1259,12 +1262,10 @@ def test_chunk_split_across_vacuumed_files(spark, tmp_path, reader):
     src, out = str(tmp_path / "span_src"), str(tmp_path / "span")
     generate_webpages_df(spark, 2000, partitions=1).select(
         "url", "warc_ts", "html").write.parquet(src)
-    confs = {"parquet.block.size": "65536",
-             "spark.sql.files.maxPartitionBytes": "262144",
+    confs = {"spark.sql.files.maxPartitionBytes": "262144",
              "spark.sql.files.openCostInBytes": "0"}
     saved = {k: spark.conf.get(k, None) for k in confs}
     try:
-        spark.conf.set("parquet.block.size", confs["parquet.block.size"])
         encode_table_direct(spark, src, out, chunk_rows=32,
                             resume=False, run_id="done")
         # a crashed run of the same parts: its blocks land, its commit
@@ -1272,10 +1273,14 @@ def test_chunk_split_across_vacuumed_files(spark, tmp_path, reader):
         with pytest.raises(ValueError, match="already committed"):
             encode_table_direct(spark, src, out, chunk_rows=32,
                                 resume=False, run_id="crashed")
-        spark.conf.unset("parquet.block.size")
-        for k in ("spark.sql.files.maxPartitionBytes",
-                  "spark.sql.files.openCostInBytes"):
-            spark.conf.set(k, confs[k])
+        # the older engine's block files, as Spark's parquet writer made
+        # them under parquet.block.size=64 KB: a row group closed at its
+        # first size check, after 100 rows
+        for f in os.listdir(f"{out}/blocks"):
+            path = f"{out}/blocks/{f}"
+            pq.write_table(pq.read_table(path), path, row_group_size=100)
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         # the older vacuum's rewrite: committed rows read and written back
         # by Spark, then swapped in for blocks/
         committed_blocks(spark, out).write.parquet(f"{out}/blocks_vacuum_tmp")

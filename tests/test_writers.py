@@ -1,7 +1,9 @@
-"""The table writers share one chunk cutter (``encode.encode_part``) and
-one write-and-commit (``encode.commit_blocks``). Regression tests for
-the ways ``compact`` and ``reencode_columns`` drifted from the encoders
-while each had its own copy."""
+"""The table writers share one chunk cutter (``encode.encode_part``), one
+task writer of block files (``encode.write_blocks``) and one commit
+(``encode.commit_blocks``). Regression tests for the ways ``compact`` and
+``reencode_columns`` drifted from the encoders while each had its own
+copy, and for what the task writer must keep: a retried task leaves one
+file, and a ``file://`` out dir writes what its bare path does."""
 
 from __future__ import annotations
 
@@ -137,3 +139,89 @@ def test_second_run_cannot_commit_committed_parts(spark, tmp_path, writer):
     with pytest.raises(ValueError, match="already committed"):
         encode()
     assert _rows(read_table_local(out)).equals(want)
+
+
+def test_retried_task_replaces_its_block_file(spark, tmp_path):
+    """A retried task writes the file its failed attempt already renamed
+    into place under the same name, so the retry replaces it: one file,
+    every row once. With Spark's job commit a retry could leave its
+    predecessor's file beside its own, and every reader then refused the
+    table. The attempts run the task writer itself, without Spark."""
+    from cuda_float_compress_spark.operators.decode import decode_table
+    from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.operators.encode import (
+        commit_blocks,
+        write_blocks,
+    )
+    from cuda_float_compress_spark.snapshot import resolve_path
+
+    rows = pa.table({"url": [f"doc://d/{i}" for i in range(500)],
+                     "v": pa.array(range(500), pa.int64())})
+    out = str(tmp_path / "retried")
+    fs, root = resolve_path(out)
+
+    def attempt():
+        return list(write_blocks(
+            encode_part(rows.to_batches(max_chunksize=100), 0, 128, 1 << 24,
+                        {}, run_id="r1"), fs, root, "r1", 0))
+
+    attempt()  # failed after its rename: its stats never reach the commit
+    stats = attempt()
+    assert os.listdir(f"{out}/blocks") == ["part-r1-00000.parquet"]
+    commit_blocks(spark.createDataFrame(pa.Table.from_batches(stats)), out,
+                  "r1")
+    want = sorted(zip(rows["url"].to_pylist(), rows["v"].to_pylist()))
+    for got in (decode_table(spark, out).toArrow(),
+                decode_table_direct(spark, out).toArrow(),
+                read_table_local(out)):
+        assert sorted(zip(got["url"].to_pylist(),
+                          got["v"].to_pylist())) == want
+
+
+@pytest.mark.parametrize("writer", ["encode_table_direct", "encode_table"])
+def test_file_uri_out_dir_writes_the_bare_dirs_blocks(spark, tmp_path,
+                                                      writer):
+    """A ``file://`` out dir gets the block rows the bare path gets, and
+    an out dir whose scheme pyarrow cannot open raises before any Spark
+    job runs, leaving nothing behind: a ``://`` table reads exactly like
+    its bare path or raises."""
+    import pyarrow.parquet as pq
+
+    from cuda_float_compress_spark.operators.direct import encode_table_direct
+    from cuda_float_compress_spark.operators.encode import encode_table
+
+    src = str(tmp_path / "src")
+    generate_webpages_df(spark, 600, partitions=2).write.parquet(src)
+    df = spark.read.parquet(src)
+
+    def encode(out):
+        if writer == "encode_table_direct":
+            encode_table_direct(spark, src, out, resume=False,
+                                target_rows_per_split=300)
+        else:
+            encode_table(spark, df, out, n_parts=2, resume=False)
+
+    def blocks(path):
+        cols = ["part_id", "chunk_id", "col", "codec", "payload"]
+        return pa.concat_tables(
+            pq.read_table(f, columns=cols)
+            for f in glob.glob(f"{path}/blocks/*.parquet")).sort_by(
+            [(c, "ascending") for c in cols[:3]])
+
+    bare, uri = tmp_path / "bare", tmp_path / "uri"
+    encode(str(bare))
+    encode(f"file://{uri}")
+    assert blocks(uri).num_rows and blocks(uri).equals(blocks(bare))
+
+    sc = spark.sparkContext
+    sc.setJobGroup("s3a-out", "s3a-out")
+    before = sorted(os.listdir(tmp_path))
+    try:
+        with pytest.raises(ValueError, match="s3a"):
+            encode("s3a://bucket/table")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup("s3a-out")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(os.listdir(tmp_path)) == before
+    assert not os.path.exists("s3a:")
