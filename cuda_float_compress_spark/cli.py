@@ -28,7 +28,7 @@ def main(argv: list[str] | None = None) -> int:
 
     enc = sub.add_parser("encode")
     enc.add_argument("--input", required=True, help="input parquet dir")
-    enc.add_argument("--out", required=True, help="output dir (blocks/manifest/lineage)")
+    enc.add_argument("--out", required=True, help="output table dir")
     enc.add_argument("--mode", default="hash", choices=["hash", "range", "direct"])
     enc.add_argument("--n-parts", type=int, default=64)
     enc.add_argument("--url-col", default="url")

@@ -10,7 +10,7 @@ or downstream service can pull a small extract without paying a JVM.
 The table's metadata comes from ``snapshot.Snapshot``, the same object
 the Spark decode transport reads: the committed ``(part_id, run_id)``
 pairs under ``as_of``, the union schema, the deleted row positions, the
-block file groups and the filesystem (bare paths and ``file://``
+block files and the filesystem (bare paths and ``file://``
 alike). Chunks are pruned by ``decode.prune`` over
 ``Snapshot.chunk_stats`` and rebuilt by ``decode.assemble_chunks``, the
 pruner and the chunk assembler the Spark transport runs. The assembler
@@ -63,9 +63,9 @@ def read_table_local(
                         for c, p in (cols[i] for i in out)])
     pieces = [
         pa.Table.from_arrays([arrays[i] for i in out], schema=schema)
-        for files, _ in kept_groups(snap, keep)
+        for path, *_ in kept_groups(snap, keep)
         for _, _, _, arrays in assemble_chunks(
-            read_group(snap.fs, [p for p, _ in files]), cols, snap.pairs,
+            read_group(snap.fs, path), cols, snap.pairs,
             keep, deleted, verify, predicates=predicates)
     ]
     return pa.concat_tables(pieces) if pieces else schema.empty_table()

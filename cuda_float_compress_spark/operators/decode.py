@@ -15,11 +15,11 @@ same predicate, and no join or filter runs after the decode.
 
 The Spark transport reads block files inside the Python workers. Chunk
 pruning (:func:`prune`) runs on the driver over ``Snapshot.chunk_stats``;
-``Snapshot.file_groups`` splits the block files into groups that share
-no chunk, and only the groups holding a kept chunk are LPT-packed into
-one task per core. Each task reads its groups with pyarrow, so block
-rows are never shuffled and decoded rows cross into the JVM once, after
-the row filter. Columns a read does not want are never decoded.
+only the block files holding a kept chunk (``Snapshot.file_groups``,
+one entry per file) are LPT-packed into one task per core. Each task
+reads its files with pyarrow, one at a time, so block rows are never
+shuffled and decoded rows cross into the JVM once, after the row
+filter. Columns a read does not want are never decoded.
 """
 
 from __future__ import annotations
@@ -29,7 +29,6 @@ import functools
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,15 +65,6 @@ _STD_ARROW = {
 }
 
 
-def blocks_of(spark: SparkSession, out_dir: str) -> DataFrame:
-    # mergeSchema: appends across engine versions mix block layouts in one
-    # dir (bloom + vsum columns added r6); the default single-footer schema
-    # sample could silently drop — or fail on — the newer columns
-    return spark.read.option("mergeSchema", "true").parquet(
-        f"{out_dir}/blocks"
-    )
-
-
 def snapshots(spark: SparkSession, out_dir: str) -> DataFrame:
     """Commit history of an encoded dir (Iceberg-style snapshot listing):
     one row per committed run with its finish time, parts, and sizes."""
@@ -102,7 +92,7 @@ def committed_blocks(
     probes: the engine's readers and writers read block files through the
     Snapshot's file groups."""
     snap = Snapshot.resolve(out_dir, as_of=as_of, since=since)
-    blocks = blocks_of(spark, snap.out_dir)
+    blocks = spark.read.parquet(f"{snap.out_dir}/blocks")
     pairs = sorted(snap.pairs)
     lin = spark.createDataFrame(pa.table({
         "part_id": pa.array([p for p, _ in pairs], pa.int32()),
@@ -251,8 +241,8 @@ def prune(stats: pa.Table, predicates: list[tuple], covered: bool = False,
     zone maps and Bloom filters MIGHT satisfy all ``predicates``; with
     ``covered``, those where every row provably does. The one chunk
     pruner: every reader calls it on the driver over
-    ``Snapshot.chunk_stats`` (``qualifying_parts`` over the manifest's
-    per-part rollups).
+    ``Snapshot.chunk_stats`` (:func:`qualifying_parts` over the
+    manifest's per-part rollups).
 
     ``stats`` holds ``col, ptype, vmin, vmax`` and optionally ``n_nulls``
     and ``bloom`` per key and column. Null stats keep a key. A key with
@@ -298,28 +288,14 @@ def qualifying_chunks(blocks: DataFrame, predicates: list[tuple]) -> DataFrame:
 
 def qualifying_parts(
     spark: SparkSession, out_dir: str, predicates: list[tuple]
-) -> list[int] | None:
+) -> list[int]:
     """Part ids whose MANIFEST rollup stats (per-part min vmin / max vmax,
     written by encode.commit_blocks) might satisfy all predicates:
-    :func:`prune` over the rollups, read with pyarrow. Returns None when
-    the manifest predates the rollup columns. Conservative by construction: null
-    stats keep the part, a column the manifest does not know keeps every
-    part, stale extra manifest rows only WIDEN ranges, and Bloom filters
-    don't roll up."""
-    snap = Snapshot.resolve(out_dir)
-    try:
-        files = ds.dataset(f"{snap.root}/manifest", filesystem=snap.fs,
-                           format="parquet").files
-    except FileNotFoundError:
-        return None
-    # runs of different engine versions mix manifest layouts
-    schema = pa.unify_schemas(
-        [pq.read_schema(f, filesystem=snap.fs) for f in files])
-    if "vmin" not in schema.names:
-        return None
-    man = ds.dataset(files, schema=schema, filesystem=snap.fs,
-                     format="parquet").to_table(
-        columns=["part_id", "col", "ptype", "vmin", "vmax"])
+    :func:`prune` over ``Snapshot.manifest``, the rollups of committed
+    runs. Conservative by construction: null stats keep the part, a
+    column the manifest does not know keeps every part, and Bloom
+    filters don't roll up."""
+    man = Snapshot.resolve(out_dir).manifest
     known = set(man["col"].to_pylist())
     return sorted(p for (p,) in prune(
         man, [pr for pr in predicates if pr[0] in known], keys=("part_id",)))
@@ -378,21 +354,18 @@ _BLOCK_COLS = ["part_id", "chunk_id", "col", "codec", "n", "n_nulls",
                "params", "run_id", "payload"]
 
 
-def read_group(fs, files: list[str]) -> pa.Table:
-    """The block rows of one file group (``Snapshot.file_groups``), read
-    from all of its files together (mmap, single-threaded: decode tasks
-    already fill the cores)."""
-    tbls = [pq.ParquetFile(f, filesystem=fs).read(columns=_BLOCK_COLS,
-                                                  use_threads=False)
-            for f in files]
-    return (tbls[0] if len(tbls) == 1
-            else pa.concat_tables(tbls, promote_options="permissive"))
+def read_group(fs, path: str) -> pa.Table:
+    """The block rows of one block file (a ``Snapshot.file_groups``
+    entry; mmap, single-threaded: decode tasks already fill the
+    cores)."""
+    return pq.ParquetFile(path, filesystem=fs).read(columns=_BLOCK_COLS,
+                                                    use_threads=False)
 
 
 def kept_groups(snap: Snapshot, keep: set | None) -> list[tuple]:
-    """The ``(files, keys)`` file groups of ``snap`` holding a chunk of
-    ``keep`` (every group when None)."""
-    return [(files, keys) for files, keys in snap.file_groups
+    """The ``(path, size, keys)`` file groups of ``snap`` holding a chunk
+    of ``keep`` (every group when None)."""
+    return [(path, size, keys) for path, size, keys in snap.file_groups
             if keep is None or not keys.isdisjoint(keep)]
 
 
@@ -403,15 +376,15 @@ def _offsets(lists: list) -> pa.Array:
 
 def group_frame(spark: SparkSession, groups: list[tuple],
                 deleted: dict | None = None) -> DataFrame:
-    """One row per file group (``(files, keys)``: ``[(path, size)]`` and
-    chunk keys, as ``Snapshot.file_groups``), LPT-packed by bytes into
-    one task per core: the task plan of the decode transport and of the
-    maintenance jobs that run on it. A row carries its paths and the
-    ``deleted`` positions of its own chunks, so a task receives the
-    tombstones of its groups, never the table's whole set. Read the
-    rows back with :func:`frame_groups`."""
+    """One row per file group (``(path, size, keys)``, as
+    ``Snapshot.file_groups``), LPT-packed by bytes into one task per
+    core: the task plan of the decode transport and of the maintenance
+    jobs that run on it. A row carries its path and the ``deleted``
+    positions of its own chunks, so a task receives the tombstones of
+    its files, never the table's whole set. Read the rows back with
+    :func:`frame_groups`."""
     deleted = deleted or {}
-    dels = [[k for k in keys if k in deleted] for _, keys in groups]
+    dels = [[k for k in keys if k in deleted] for *_, keys in groups]
     keys = [k for ks in dels for k in ks]
     pos = [deleted[k] for k in keys]
     chunk_dels = pa.StructArray.from_arrays([
@@ -421,24 +394,21 @@ def group_frame(spark: SparkSession, groups: list[tuple],
             np.concatenate([np.empty(0, np.int64), *pos]))),
     ], names=["part_id", "chunk_id", "pos"])
     rows = pa.table({
-        "files": pa.array([[p for p, _ in files] for files, _ in groups],
-                          pa.list_(pa.string())),
+        "file": pa.array([path for path, *_ in groups], pa.string()),
         "deleted": pa.ListArray.from_arrays(_offsets(dels), chunk_dels),
     })
-    return lpt_frame(spark, rows,
-                     [sum(size for _, size in files)
-                      for files, _ in groups])[0]
+    return lpt_frame(spark, rows, [size for _, size, _ in groups])[0]
 
 
 def frame_groups(batches):
-    """``(paths, deleted)`` per :func:`group_frame` row of a task's Arrow
+    """``(path, deleted)`` per :func:`group_frame` row of a task's Arrow
     batches; ``deleted`` is the ``deleted`` argument of
     :func:`assemble_chunks`."""
     for batch in batches:
-        for files, dels in zip(batch.column("files").to_pylist(),
-                               batch.column("deleted")):
+        for path, dels in zip(batch.column("file").to_pylist(),
+                              batch.column("deleted")):
             d = dels.values
-            yield files, {k: p.values.to_numpy() for k, p in zip(
+            yield path, {k: p.values.to_numpy() for k, p in zip(
                 zip(d.field("part_id").to_pylist(),
                     d.field("chunk_id").to_pylist()), d.field("pos"))}
 
@@ -448,8 +418,8 @@ def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
                     deleted: dict | None = None, verify: bool = True,
                     predicates: list[tuple] | None = None,
                     any_of: list[list[tuple]] | None = None):
-    """Decode the chunks of ``blocks``, the block rows of one file group
-    (or one part), in ``(part_id, chunk_id)`` order. Yields ``(part_id,
+    """Decode the chunks of ``blocks``, the block rows of one block file,
+    in ``(part_id, chunk_id)`` order. Yields ``(part_id,
     chunk_id, pos, arrays)``: one array per ``cols`` entry holding the
     chunk's kept rows, and ``pos``, each kept row's int64 position in the
     chunk as written (the ``_pos`` address, before any delete).
@@ -475,7 +445,7 @@ def assemble_chunks(blocks: pa.Table, cols: list[tuple[str, str]],
         if names[i] in colmap:
             raise ValueError(
                 f"duplicate block for part={key[0]} chunk={key[1]} "
-                f"col={names[i]}: conflicting rows in one file group"
+                f"col={names[i]}: conflicting rows in one block file"
             )
         colmap[names[i]] = i
     for key in sorted(rows):
@@ -585,7 +555,7 @@ def decode_table(
         restrict.append({(k >> 32, k & 0xFFFFFFFF) for k in chunk_keys})
     if parts is not None:
         ps = {int(p) for p in parts}
-        restrict.append({k for _, keys in snap.file_groups for k in keys
+        restrict.append({k for *_, keys in snap.file_groups for k in keys
                          if k[0] in ps})
     for r in restrict:
         keep = r if keep is None else keep & r
@@ -604,9 +574,9 @@ def decode_table(
     fs, pairs = snap.fs, snap.pairs
 
     def decode_groups(batches):
-        for files, deleted in frame_groups(batches):
+        for path, deleted in frame_groups(batches):
             for part_id, chunk_id, pos, arrays in assemble_chunks(
-                    read_group(fs, files), cols, pairs, keep, deleted,
+                    read_group(fs, path), cols, pairs, keep, deleted,
                     predicates=predicates, any_of=any_of):
                 arrays = [arrays[i] for i in out]
                 if with_row_address:

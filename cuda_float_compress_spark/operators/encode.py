@@ -83,8 +83,8 @@ _BLOCKS_ARROW = pa.schema(
         ("vmin", pa.int64()),
         ("vmax", pa.int64()),
         # exact per-chunk value sum for int32/int64 columns (null when the
-        # sum leaves the int64 domain, for other ptypes, or in pre-r6
-        # layouts): lets count/sum/min/max aggregate from METADATA alone
+        # sum leaves the int64 domain, and for other ptypes): lets
+        # count/sum/min/max aggregate from METADATA alone
         # (operators/metadata_agg) — at 100 TB that is MBs instead of the
         # full decode
         ("vsum", pa.int64()),

@@ -4,11 +4,10 @@ none reads ``blocks/`` through Spark.
 
 ``vacuum`` is file-level garbage collection: it deletes the block files
 that hold no committed ``(part_id, run_id)`` pair (the leftovers of
-crashed or retried runs) and never rewrites a live file, so it runs no
-Spark job and can never split or duplicate a chunk. A file mixing
-committed and stale rows (only a table rewritten by an older vacuum
-holds one) is kept and its stale rows reported; ``compact`` reclaims
-them.
+crashed or retried runs) and the temp files of writers that failed
+mid-write, and never rewrites a live file, so it runs no Spark job and
+can never split or duplicate a chunk. Every writer gives a block file
+the rows of one run, so no file mixes committed and stale rows.
 
 ``reencode_columns`` changes the codec of chosen columns WITHOUT touching any
 other column's payloads — block rows of untouched columns are copied
@@ -16,8 +15,8 @@ verbatim (at 100 TB, re-encoding one column must not cost a full decode of
 five). ``compact`` rewrites an encoded dir with a new chunk size (merging
 the small tail chunks accumulated by streaming ingest). Both read the
 Snapshot's file groups on the decode transport (``decode.group_frame`` ->
-``mapInArrow``, each task reading its groups with pyarrow), so block rows
-are never shuffled.
+``mapInArrow``, each task reading its block files with pyarrow), so
+block rows are never shuffled.
 
 Both write a NEW table: they raise ``ValueError`` when ``dst_dir``
 already holds ``blocks/``, ``manifest/``, ``lineage/`` or ``deletes/``
@@ -53,12 +52,7 @@ from cuda_float_compress_spark.operators.encode import (
     commit_blocks,
     encode_part,
 )
-from cuda_float_compress_spark.snapshot import (
-    Snapshot,
-    _exists,
-    _open,
-    conform,
-)
+from cuda_float_compress_spark.snapshot import Snapshot, conform
 
 
 def _new_table(dst_dir: str) -> Snapshot:
@@ -76,11 +70,10 @@ def _n_chunks(stats: pa.Table) -> int:
     return stats.group_by(["part_id", "chunk_id"]).aggregate([]).num_rows
 
 
-def _block_rows(fs, files: list[str]) -> pa.Table:
-    """Every column of a file group's block rows, in the writers' layout."""
-    return pa.concat_tables([
-        conform(pq.ParquetFile(f, filesystem=fs).read(use_threads=False),
-                _BLOCKS_ARROW) for f in files])
+def _block_rows(fs, path: str) -> pa.Table:
+    """Every column of a block file's rows, in the writers' layout."""
+    return conform(pq.ParquetFile(path, filesystem=fs).read(
+        use_threads=False), _BLOCKS_ARROW)
 
 
 def reencode_columns(
@@ -103,36 +96,34 @@ def reencode_columns(
     touched = pa.array(list(codec_overrides), pa.string())
 
     def reencode(batches):
-        for batch in batches:
-            for files in batch.column("files").to_pylist():
-                rows = _block_rows(fs, files)
-                rows = rows.filter(pa.array([k in pairs for k in zip(
-                    rows["part_id"].to_pylist(),
-                    rows["run_id"].to_pylist())]))
-                # stamp the rewrite's run_id on every row (copied AND
-                # re-encoded): dst's lineage commits exactly these blocks
-                rows = rows.set_column(
-                    rows.schema.get_field_index("run_id"), "run_id",
-                    pa.repeat(pa.scalar(run_id), rows.num_rows))
-                hit = pc.is_in(rows["col"], value_set=touched)
-                yield from rows.filter(pc.invert(hit)).to_batches()
-                out = rows.filter(hit).to_pylist()
-                for r in out:
-                    arr = C.decode_column_chunk(
-                        r["payload"], r["codec"], r["params"], r["n"],
-                        r["n_nulls"], r["ptype"],
-                    )
-                    codec, payload, params, _, _ = C.encode_column_chunk(
-                        arr, r["ptype"], codec_overrides[r["col"]])
-                    r.update(codec=codec, params=params, payload=payload,
-                             enc_bytes=len(payload))
-                if out:
-                    yield pa.RecordBatch.from_pylist(out, schema=_BLOCKS_ARROW)
+        for path, _ in frame_groups(batches):
+            rows = _block_rows(fs, path)
+            rows = rows.filter(pa.array([k in pairs for k in zip(
+                rows["part_id"].to_pylist(), rows["run_id"].to_pylist())]))
+            # stamp the rewrite's run_id on every row (copied AND
+            # re-encoded): dst's lineage commits exactly these blocks
+            rows = rows.set_column(
+                rows.schema.get_field_index("run_id"), "run_id",
+                pa.repeat(pa.scalar(run_id), rows.num_rows))
+            hit = pc.is_in(rows["col"], value_set=touched)
+            yield from rows.filter(pc.invert(hit)).to_batches()
+            out = rows.filter(hit).to_pylist()
+            for r in out:
+                arr = C.decode_column_chunk(
+                    r["payload"], r["codec"], r["params"], r["n"],
+                    r["n_nulls"], r["ptype"],
+                )
+                codec, payload, params, _, _ = C.encode_column_chunk(
+                    arr, r["ptype"], codec_overrides[r["col"]])
+                r.update(codec=codec, params=params, payload=payload,
+                         enc_bytes=len(payload))
+            if out:
+                yield pa.RecordBatch.from_pylist(out, schema=_BLOCKS_ARROW)
 
     if src.tombstones.num_rows:
         commit_tombstones(dst_dir, run_id, src.tombstones, time.time())
-    # a file group goes whole to one task, which writes one file, so no
-    # chunk spans two output files
+    # a block file goes whole to one task, which writes one file, so
+    # each part stays in one file
     manifest = commit_blocks(
         group_frame(spark, src.file_groups).mapInArrow(
             block_writer(reencode, dst_dir, run_id), schema=STATS_SCHEMA),
@@ -142,45 +133,23 @@ def reencode_columns(
             "enc_bytes": sum(manifest["enc_bytes"].to_pylist())}
 
 
-def _finish_legacy_swap(fs, root: str) -> None:
-    """Finish or roll back the directory swap of an older vacuum, which
-    rewrote ``blocks/`` into ``blocks_vacuum_tmp`` and swapped the two
-    with two non-atomic renames. A crash left ``blocks_vacuum_old``:
-
-    - ``blocks`` present again  -> the swap finished; drop the old copy.
-    - ``blocks`` missing, tmp rewrite complete (_SUCCESS) -> finish the swap.
-    - ``blocks`` missing, tmp incomplete -> roll the old copy back."""
-    blocks, tmp, old = (f"{root}/{d}" for d in (
-        "blocks", "blocks_vacuum_tmp", "blocks_vacuum_old"))
-    if not _exists(fs, blocks) and _exists(fs, old):
-        fs.move(tmp if _exists(fs, f"{tmp}/_SUCCESS") else old, blocks)
-    for leftover in (old, tmp):
-        if _exists(fs, leftover):
-            fs.delete_dir(leftover)
-
-
 def vacuum(spark: SparkSession, out_dir: str) -> dict:
     """Garbage-collect what no reader trusts: block files whose
     ``(part_id, run_id)`` never committed to lineage (crashed or retried
     runs: ``Snapshot.all_block_files`` minus ``Snapshot.block_files``),
-    and the uncommitted ``Snapshot.delete_dirs`` (delete runs that
-    crashed before their ``_SUCCESS``, legacy ``_staging-*`` dirs).
-    Vacuum never rewrites a live file, so live chunks stay where they
-    are and no Spark job runs. On entry it finishes or rolls back the
-    interrupted directory swap of an older vacuum
-    (:func:`_finish_legacy_swap`).
+    the ``.inprogress-*`` files of block, manifest and lineage writers
+    that failed mid-write (``Snapshot.leftover_files``), and the
+    uncommitted ``Snapshot.delete_dirs`` (delete runs that crashed
+    before their ``_SUCCESS``). Vacuum never rewrites a live file, so
+    live chunks stay where they are and no Spark job runs.
 
     Returns ``rows_before`` and ``rows_after`` (block rows, from the
-    parquet footers), ``bytes_reclaimed`` (the deleted block files'
-    sizes) and ``stale_rows``: uncommitted rows left in files that also
-    hold committed ones. Only a table rewritten by an older vacuum has
-    such a file; ``compact`` drops those rows.
+    parquet footers) and ``bytes_reclaimed`` (the deleted files'
+    sizes).
 
     Do not run it concurrently with a writer of the same table: a run
-    whose blocks or tombstones are written but not yet committed looks
-    exactly like a crashed one, and its files would be deleted."""
-    fs, root = _open(out_dir)
-    _finish_legacy_swap(fs, root)
+    whose files are written but not yet committed looks exactly like a
+    crashed one, and its files would be deleted."""
     snap = Snapshot.resolve(out_dir)
     live = {path for path, _ in snap.block_files}
     rows_before = rows_after = reclaimed = 0
@@ -192,12 +161,14 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
         else:
             snap.fs.delete_file(path)
             reclaimed += size
+    for path, size in snap.leftover_files:
+        snap.fs.delete_file(path)
+        reclaimed += size
     for path, committed in snap.delete_dirs:
         if not committed:
             snap.fs.delete_dir(path)
     return {"rows_before": rows_before, "rows_after": rows_after,
-            "bytes_reclaimed": reclaimed,
-            "stale_rows": rows_after - snap.chunk_stats.num_rows}
+            "bytes_reclaimed": reclaimed}
 
 
 def table_stats(out_dir: str) -> dict:
@@ -240,10 +211,11 @@ def compact(
     compaction decodes per part and re-encodes with ``encode.encode_part``,
     closing chunks at ``chunk_rows`` rows or ``chunk_bytes`` bytes,
     whichever comes first. It runs on the decode transport: the
-    Snapshot's ``part_groups`` (file groups united so that each part is
-    re-chunked by one task) are LPT-packed into one task per core, each
-    task reads its groups with pyarrow and rebuilds their chunks with
-    ``decode.assemble_chunks``, and writes its block file. Block rows are
+    Snapshot's file groups (one per block file, which holds its parts
+    whole, so one task re-chunks each part) are LPT-packed into one task
+    per core, each task reads its block files with pyarrow and rebuilds
+    their chunks with ``decode.assemble_chunks``, and writes its block
+    file. Block rows are
     never shuffled, and that write is the only Spark job.
 
     Merge-on-read tombstones (operators/deletes) are MATERIALIZED: the
@@ -274,11 +246,11 @@ def compact(
     fs, pairs = snap.fs, snap.pairs
 
     def recompact(batches):
-        for files, deleted in frame_groups(batches):
+        for path, deleted in frame_groups(batches):
             # chunks arrive in (part_id, chunk_id) order, so one part's
             # rows are decoded at a time
             for part_id, part in itertools.groupby(
-                    assemble_chunks(read_group(fs, files), cols, pairs,
+                    assemble_chunks(read_group(fs, path), cols, pairs,
                                     deleted=deleted),
                     key=lambda chunk: chunk[0]):
                 pieces = [arrays for *_, arrays in part]
@@ -293,7 +265,7 @@ def compact(
                     {}, run_id=run_id, bloom_cols=bloom_cols)
 
     commit_blocks(
-        group_frame(spark, snap.part_groups, snap.deleted_positions)
+        group_frame(spark, snap.file_groups, snap.deleted_positions)
         .mapInArrow(block_writer(recompact, dst_dir, run_id),
                     schema=STATS_SCHEMA), dst_dir, run_id)
     return {

@@ -2,7 +2,7 @@
 
 Every chunk already carries exact per-column statistics in the blocks
 metadata — ``n``, ``n_nulls``, ``vmin``/``vmax`` (exact VALUES for
-int-family columns), and (round 6) ``vsum`` for int32/int64. A full-table
+int-family columns) and ``vsum`` for int32/int64. A full-table
 ``count / sum / min / max`` therefore needs only the metadata rows, which
 the driver already holds (``Snapshot.chunk_stats``): at 100 TB that is
 MBs of stats instead of decoding every payload — the same
@@ -12,8 +12,8 @@ Correctness gates (fall back to a real decode when any is violated):
 
 * merge-on-read tombstones exist (deleted rows are inside the chunk
   stats but must not be inside the answer);
-* any chunk of the column lacks ``vsum`` when a sum is requested
-  (pre-r6 layout, or a chunk whose sum left the int64 domain);
+* any chunk of the column holding values has a null ``vsum`` (its sum
+  left the int64 domain);
 * the column's ptype is outside the int family (string/float zone maps
   are prefixes/total-order keys — not exact values).
 
@@ -102,7 +102,7 @@ def agg_int_column(
             k in covered for k in zip(rows["part_id"].to_pylist(),
                                       rows["chunk_id"].to_pylist())]))
 
-    # a chunk with values but no sum overflowed int64 or predates vsum
+    # a chunk with values but no sum overflowed int64
     if pc.sum(pc.and_(pc.is_null(rows["vsum"]),
                       pc.greater(rows["n"], rows["n_nulls"]))).as_py():
         return _decode_agg()

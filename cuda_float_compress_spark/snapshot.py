@@ -23,11 +23,10 @@ from here, so they cannot disagree:
   it as nulls. A ``timestamp_us``/``timestamp_ntz`` mix coalesces to
   ``timestamp_us``; any other re-typed column is refused.
 * **Tombstones.** ``deletes/run-*`` dirs carrying the ``_SUCCESS``
-  marker, written last by ``deletes.commit_tombstones`` (or by Spark's
-  job commit, in older tables). Each run's rows carry one
-  ``committed_at`` stamp; under ``as_of`` a run applies when that stamp
-  is at or before it. Runs written before the stamp existed always
-  apply. Other dirs there are inert; ``maintain.vacuum`` reclaims them.
+  marker, written last by ``deletes.commit_tombstones``. Each run's rows
+  carry one ``committed_at`` stamp; under ``as_of`` a run applies when
+  that stamp is at or before it. Other dirs there are inert;
+  ``maintain.vacuum`` reclaims them.
 * **Block files.** The ``blocks/*.parquet`` files holding at least one
   row of a committed pair in the window, with their sizes.
 * **Chunk stats.** Those files' block rows of the in-window pairs,
@@ -35,14 +34,8 @@ from here, so they cannot disagree:
   chunk pruning and metadata aggregation read on the driver. They come
   from the same pass over the block files as the schema, and hold
   O(chunks x columns) rows, each tagged with the block file it came from.
-* **File groups.** The block files split into groups that share no
-  chunk, so a reader that decodes one group at a time sees every block
-  row of its chunks; :attr:`Snapshot.part_groups` unites them further
-  so that no part spans two (the unit ``compact`` re-chunks). The
-  engine's writers give each chunk one file. Only a legacy table, whose
-  ``blocks/`` an older vacuum rewrote through a plain Spark read, may
-  hold a chunk split over two. A block row present twice (a block file
-  copied by a task retry) raises ``ValueError``.
+* **File groups.** One entry per block file, with the chunk keys it
+  holds: the unit a reader decodes and ``compact`` re-chunks.
 * **Manifest.** The ``manifest/`` rows (one per part and column of a
   run) of the committed pairs in the window, read with pyarrow: the
   per-column sizes and codecs ``maintain.table_stats`` reports. A
@@ -53,6 +46,9 @@ from here, so they cannot disagree:
 * **Table dirs.** Which of ``blocks/``, ``manifest/``, ``lineage/`` and
   ``deletes/`` exist; the writers of a new table (``compact``,
   ``reencode_columns``) refuse a dir holding any of them.
+* **Leftover files.** The ``.inprogress-*`` files a writer that failed
+  mid-write left in ``blocks/``, ``manifest/`` or ``lineage/``. No
+  reader opens them; ``maintain.vacuum`` deletes them.
 
 Paths go through ``pyarrow.fs.FileSystem.from_uri``; a bare path is
 local. ``file://`` and bare paths therefore take the same code, and a
@@ -61,9 +57,17 @@ raises here instead of reading as an empty table.
 
 Only ``lineage/`` is read eagerly; everything else is derived on first
 use, so resume and merge, which need only the commit log, never touch
-the block files. The Snapshot never writes: a table left without
-``blocks/`` by a crash inside an older vacuum's directory swap raises
-``ValueError`` until ``maintain.vacuum`` finishes or rolls back the swap.
+the block files. The Snapshot never writes.
+
+**One layout.** Every writer puts each part whole into one block file,
+with one block row per ``(part_id, chunk_id, col)``, and commits it in
+one run. The Snapshot reads that layout and refuses, with
+``ValueError``, any table that breaks it, rather than guess at what
+another layout meant: a block row present twice (a block file copied
+by a task retry), a committed part whose rows are in two files, and a
+committed part with no block rows at all (a lost block file, which
+would otherwise read as a table without that part's rows). A block or
+manifest file lacking one of the layout's columns fails to read.
 """
 
 from __future__ import annotations
@@ -162,15 +166,10 @@ def _listdir(fs: pafs.FileSystem, path: str) -> list[pafs.FileInfo]:
 
 
 def conform(got: pa.Table, schema: pa.Schema) -> pa.Table:
-    """``got``, block or manifest rows as some engine version wrote
-    them, in ``schema``: columns cast, and those an older layout lacks
-    (vsum, bloom, the manifest's vmin/vmax) read as null."""
-    have = got.column_names
-    return pa.table({
-        fld.name: (got[fld.name].cast(fld.type) if fld.name in have
-                   else pa.nulls(got.num_rows, fld.type))
-        for fld in schema
-    })
+    """``got``, block or manifest rows as read back, in ``schema``:
+    pyarrow reads the block writer's ``large_binary`` columns back as
+    ``binary``. A column ``got`` lacks raises ``KeyError``."""
+    return got.select(schema.names).cast(schema)
 
 
 def _union_schema(rows) -> list[tuple[str, str]]:
@@ -209,15 +208,6 @@ class Snapshot:
         self.as_of = as_of
         self.since = since
         self.fs, self.root = _open(out_dir)
-        if not _exists(self.fs, f"{self.root}/blocks") and _exists(
-            self.fs, f"{self.root}/blocks_vacuum_old"
-        ):
-            # reading it as an empty table would be a silent wrong answer
-            raise ValueError(
-                f"{out_dir} has no blocks/ but a blocks_vacuum_old/: an "
-                "interrupted vacuum of an older engine version; run vacuum "
-                "on it to finish or roll back the swap"
-            )
         lin = f"{self.root}/lineage"
         #: every lineage row as written (none when the dir has no lineage)
         self.lineage: pa.Table = (
@@ -289,6 +279,18 @@ class Snapshot:
         )
 
     @functools.cached_property
+    def leftover_files(self) -> list[tuple[str, int]]:
+        """``[(path, size)]`` of the ``.inprogress-*`` temp files in
+        ``blocks/``, ``manifest/`` and ``lineage/``: what a writer that
+        failed before its rename left behind."""
+        return sorted(
+            (i.path, i.size) for d in ("blocks", "manifest", "lineage")
+            for i in _listdir(self.fs, f"{self.root}/{d}")
+            if i.type == pafs.FileType.File
+            and i.base_name.startswith(".inprogress-")
+        )
+
+    @functools.cached_property
     def _block_scan(self) -> tuple[list, list, pa.Table]:
         # one pass over the block files' metadata columns (payloads are
         # never read): distinct (part, run, col) rows per file give both
@@ -299,11 +301,8 @@ class Snapshot:
         live: list[tuple[str, int]] = []
         stats: list[pa.Table] = []
         for path, size in self.all_block_files:
-            f = pq.ParquetFile(path, filesystem=self.fs)
-            have = f.schema_arrow.names
-            got = f.read(columns=[c for c in _SCAN.names if c in have],
-                         use_threads=False)
-            meta = conform(got, _SCAN)
+            meta = conform(pq.ParquetFile(path, filesystem=self.fs).read(
+                columns=_SCAN.names, use_threads=False), _SCAN)
             distinct = meta.select(_SCHEMA_COLS).group_by(
                 _SCHEMA_COLS).aggregate([])
             seen, win = set(), set()
@@ -327,6 +326,7 @@ class Snapshot:
         chunk_stats = (pa.concat_tables(stats) if stats else
                        _SCAN.empty_table().select(_STATS_COLS).append_column(
                            "file", pa.array([], pa.int32())))
+        self._check_layout(chunk_stats)
         return (_union_schema((c, p) for _, c, p in sorted(trips)), live,
                 chunk_stats)
 
@@ -350,40 +350,10 @@ class Snapshot:
         (``operators.decode.prune``)."""
         return self._block_scan[2]
 
-    def _united(self, key: list[str]) -> list[tuple[list, frozenset]]:
-        # block_files united (union-find) wherever two files hold rows of
-        # one ``key`` tuple (a prefix of the chunk key), with the chunk
-        # keys each group holds
-        parent = list(range(len(self.block_files)))
-
-        def root(i: int) -> int:
-            while parent[i] != i:
-                parent[i] = parent[parent[i]]
-                i = parent[i]
-            return i
-
-        places = self.chunk_stats.group_by(
-            _CHUNK_KEY + ["file"]).aggregate([])
-        places = list(zip(*(places[c].to_pylist()
-                            for c in _CHUNK_KEY + ["file"])))
-        first: dict = {}
-        for p, c, f in places:
-            parent[root(f)] = root(first.setdefault((p, c)[:len(key)], f))
-        groups: dict[int, tuple[list, set]] = {}
-        for f, info in enumerate(self.block_files):
-            groups.setdefault(root(f), ([], set()))[0].append(info)
-        for p, c, f in places:
-            groups[root(f)][1].add((p, c))
-        return [(files, frozenset(keys)) for files, keys in groups.values()]
-
-    @functools.cached_property
-    def file_groups(self) -> list[tuple[list[tuple[str, int]], frozenset]]:
-        """``[(files, keys)]``: :attr:`block_files` united wherever two
-        files hold rows of one ``(part_id, chunk_id)``, with the chunk
-        keys each group holds. Raises ``ValueError`` when a ``(part_id,
-        chunk_id, col)`` has two committed rows: the table no longer says
-        which one holds the column."""
-        stats = self.chunk_stats
+    def _check_layout(self, stats: pa.Table) -> None:
+        # the one layout (module docstring), checked over the chunk stats
+        # of the in-window pairs; the duplicate check comes first, as a
+        # copied block file also puts its parts in two files
         rows = stats.group_by(_CHUNK_KEY + ["col"]).aggregate(
             [("n", "count")])
         dup = rows.filter(pc.greater(rows["n_count"], 1))
@@ -394,22 +364,45 @@ class Snapshot:
                 f"committed rows in {self.out_dir}/blocks (a block file "
                 "copied by a task retry?); remove the copy or rebuild"
             )
-        return self._united(_CHUNK_KEY)
+        files = stats.group_by("part_id").aggregate(
+            [("file", "count_distinct")])
+        split = files.filter(pc.greater(files["file_count_distinct"], 1))
+        if split.num_rows:
+            raise ValueError(
+                f"part {split['part_id'][0].as_py()} of {self.out_dir} has "
+                f"block rows in {split['file_count_distinct'][0].as_py()} "
+                "files, but every writer puts a part whole into one file; "
+                "rebuild the table"
+            )
+        lost = sorted({p for p, _ in self.pairs}
+                      - set(files["part_id"].to_pylist()))
+        if lost:
+            raise ValueError(
+                f"committed part {lost[0]} of {self.out_dir} has no block "
+                f"rows ({len(lost)} parts lack them): a block file is "
+                "missing; restore it or rebuild the table"
+            )
 
     @functools.cached_property
-    def part_groups(self) -> list[tuple[list[tuple[str, int]], frozenset]]:
-        """``[(files, keys)]``: :attr:`file_groups` united wherever two
-        hold rows of one part, with the chunk keys each group holds. A
-        task that rewrites a part whole reads one such group."""
-        self.file_groups  # the duplicate-row check
-        return self._united(["part_id"])
+    def file_groups(self) -> list[tuple[str, int, frozenset]]:
+        """``[(path, size, keys)]``: each of :attr:`block_files` with the
+        ``(part_id, chunk_id)`` keys of the chunks it holds, the unit a
+        reader decodes and ``compact`` re-chunks (each part's chunks are
+        in one file)."""
+        places = self.chunk_stats.group_by(
+            _CHUNK_KEY + ["file"]).aggregate([])
+        keys: list[set] = [set() for _ in self.block_files]
+        for p, c, f in zip(*(places[k].to_pylist()
+                             for k in _CHUNK_KEY + ["file"])):
+            keys[f].add((p, c))
+        return [(path, size, frozenset(k))
+                for (path, size), k in zip(self.block_files, keys)]
 
     @functools.cached_property
     def manifest(self) -> pa.Table:
         """The ``manifest/`` rows of the committed pairs in the window, in
-        :data:`MANIFEST_SCHEMA` (columns an older layout lacks read as
-        null). A run that crashed before its lineage append left manifest
-        rows that, like its blocks, are not read."""
+        :data:`MANIFEST_SCHEMA`. A run that crashed before its lineage
+        append left manifest rows that, like its blocks, are not read."""
         try:
             files = ds.dataset(f"{self.root}/manifest", filesystem=self.fs,
                                format="parquet").files
@@ -427,9 +420,8 @@ class Snapshot:
     def delete_dirs(self) -> list[tuple[str, bool]]:
         """``[(path, committed)]`` for each dir under ``deletes/``:
         committed when it is a ``run-*`` dir holding ``_SUCCESS``. The
-        rest (runs that crashed before their marker, legacy
-        ``_staging-*`` dirs) are inert; ``maintain.vacuum`` deletes
-        them."""
+        rest (runs that crashed before their marker) are inert;
+        ``maintain.vacuum`` deletes them."""
         dirs = [i for i in _listdir(self.fs, f"{self.root}/deletes")
                 if i.type == pafs.FileType.Directory]
         marks = self.fs.get_file_info([f"{i.path}/_SUCCESS" for i in dirs])
@@ -470,9 +462,9 @@ class Snapshot:
     def _applies_at(self, run: str, as_of: float) -> bool:
         # Iceberg position-delete time scoping: a snapshot dated before
         # the delete committed still sees the rows
-        d = ds.dataset(run, filesystem=self.fs, format="parquet")
-        if "committed_at" not in d.schema.names:
-            return True
-        stamp = pc.min(d.to_table(columns=["committed_at"])["committed_at"])
-        return stamp.as_py() is None or stamp.as_py() <= float(as_of)
+        stamps = pq.read_table(run, filesystem=self.fs,
+                               columns=["committed_at"])["committed_at"]
+        # every row carries the run's one stamp; an empty run deletes
+        # nothing either way
+        return not stamps or stamps[0].as_py() <= float(as_of)
 

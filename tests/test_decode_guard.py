@@ -9,8 +9,8 @@ listed functions, a ``groupBy("part_id", "chunk_id")`` over block rows,
 or a call of ``encode._encode_chunk_to_rows`` outside the cutter.
 
 Block files are read through the Snapshot's file groups alone: a Spark
-read of ``blocks/`` outside ``decode.blocks_of`` (the public Spark view
-kept for tools and probes) fails, and so does any call of
+read of ``blocks/`` outside ``decode.committed_blocks`` (the public
+Spark view kept for tools and probes) fails, and so does any call of
 ``committed_blocks`` from the package.
 
 Byte-string codecs have one table, ``codecs/core.BYTES_CODECS``: a second
@@ -111,12 +111,12 @@ def test_no_spark_read_of_blocks():
             if (name == "parquet" and ".read" in ast.unparse(call.func)
                     and "blocks" in text
                     and not (rel == "operators/decode.py"
-                             and fns[-1:] == ("blocks_of",))):
+                             and fns[-1:] == ("committed_blocks",))):
                 stray.append(f"{where}: {text}")
             if name in ("committed_blocks", "_committed_blocks"):
                 stray.append(f"{where}: {text}")
     assert not stray, (
-        "block rows read through Spark outside decode.blocks_of:\n"
+        "block rows read through Spark outside decode.committed_blocks:\n"
         + "\n".join(stray)
     )
 
@@ -224,11 +224,9 @@ def _spark_write(call: ast.Call) -> bool:
 
 
 # (module, function) that may write or rename under ``blocks/`` with
-# pyarrow: the task writer, and the repair of an older vacuum's
-# interrupted directory swap, which renames whole dirs and writes no row
+# pyarrow: the task writer
 BLOCK_FILE_WRITERS = {
     ("operators/encode.py", "write_blocks"),
-    ("operators/maintain.py", "_finish_legacy_swap"),
 }
 _FILE_WRITES = ("write_table", "write_dataset", "ParquetWriter", "move",
                 "copy_files", "_atomic_parquet_append")

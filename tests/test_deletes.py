@@ -168,12 +168,11 @@ def test_each_task_row_carries_only_its_groups_deletes(spark, docs_table):
     delete_rows(spark, docs_table, [("doc_id", "<", 10)])
     snap = Snapshot.resolve(docs_table)
     assert len(snap.file_groups) > 1
-    keys_of = {tuple(p for p, _ in files): keys
-               for files, keys in snap.file_groups}
+    keys_of = {path: keys for path, _, keys in snap.file_groups}
     shipped = []
     for row in group_frame(spark, snap.file_groups,
                            snap.deleted_positions).collect():
-        keys = keys_of[tuple(row["files"])]
+        keys = keys_of[row["file"]]
         for d in row["deleted"]:
             assert (d["part_id"], d["chunk_id"]) in keys
             shipped += [(d["part_id"], d["chunk_id"], p) for p in d["pos"]]

@@ -519,70 +519,6 @@ def test_migrate_ref_dir_parallel_bit_identical(spark, tmp_path):
     assert all(rep3[f"w{i}.bin"]["ok"] for i in range(6))  # good ones fine
 
 
-def test_vacuum_crash_window_repair(spark, tmp_path, scratch):
-    """A crash between an older vacuum's two renames leaves the table with
-    no blocks dir. Readers refuse such a table (reading it as empty would
-    be a silent wrong answer) and never rename anything; vacuum finishes
-    or rolls back the swap in every crash window."""
-    import os
-    import shutil
-
-    from cuda_float_compress_spark.localio import read_table_local
-    from cuda_float_compress_spark.operators.maintain import vacuum
-
-    src = str(tmp_path / "vcw_src")
-    generate_webpages_df(spark, 400, partitions=2).write.parquet(src)
-    encode_table_direct(spark, src, scratch, resume=False,
-                        target_rows_per_split=200)
-    blocks, tmp, old = (
-        f"{scratch}/blocks", f"{scratch}/blocks_vacuum_tmp",
-        f"{scratch}/blocks_vacuum_old",
-    )
-    # the older engine wrote blocks/ with Spark, whose job commit left a
-    # _SUCCESS marker there; its vacuum swap relied on it
-    open(f"{blocks}/_SUCCESS", "w").close()
-    original = spark.read.parquet(src)
-
-    def readers_refuse():
-        for read in (lambda: decode_table(spark, scratch),
-                     lambda: read_table_local(scratch)):
-            with pytest.raises(ValueError, match="interrupted vacuum"):
-                read()
-        assert os.path.exists(old) and not os.path.exists(blocks)
-
-    # window 1: crash between rename(blocks->old) and rename(tmp->blocks),
-    # tmp rewrite complete -> vacuum finishes the swap
-    shutil.copytree(blocks, tmp)
-    os.rename(blocks, old)
-    readers_refuse()
-    vacuum(spark, scratch)
-    assert os.path.exists(blocks)
-    assert not os.path.exists(old) and not os.path.exists(tmp)
-    rep = verify_roundtrip(original, decode_table(spark, scratch), "url").collect()
-    assert all(r["ok"] for r in rep)
-
-    # window 2: same crash but tmp has no _SUCCESS -> vacuum rolls back to
-    # the old copy (the one holding _SUCCESS)
-    shutil.copytree(blocks, tmp)
-    os.remove(f"{tmp}/_SUCCESS")
-    os.rename(blocks, old)
-    readers_refuse()
-    vacuum(spark, scratch)
-    assert os.path.exists(f"{blocks}/_SUCCESS")
-    assert not os.path.exists(old) and not os.path.exists(tmp)
-    rep = verify_roundtrip(original, decode_table(spark, scratch), "url").collect()
-    assert all(r["ok"] for r in rep)
-
-    # window 3: crash after the swap, old copy left behind -> readers read
-    # blocks/ and leave the copy; vacuum drops it
-    shutil.copytree(blocks, old)
-    assert decode_table(spark, scratch).count() == 400
-    assert os.path.exists(old)
-    vacuum(spark, scratch)
-    assert not os.path.exists(old)
-    assert decode_table(spark, scratch).count() == 400
-
-
 def test_string_zone_map_pruning(spark, tmp_path, scratch):
     """String columns carry 7-byte-prefix zone maps: a lang equality
     predicate on a lang-sorted encoded table PRUNES chunks before any
@@ -1230,82 +1166,58 @@ def test_doubly_committed_parts_refused(spark, tmp_path, read_cols_count,
         read_cols_count(reader, out)
 
 
-def _read_sorted(spark, reader: str, path: str):
-    """A full read through ``reader`` as a pyarrow table sorted by url."""
-    from cuda_float_compress_spark.localio import read_table_local
-    from cuda_float_compress_spark.operators.direct import decode_table_direct
-
-    if reader == "read_table_local":
-        tbl = read_table_local(path)
-    else:
-        fn = decode_table if reader == "decode_table" else decode_table_direct
-        tbl = fn(spark, path).toArrow()
-    return tbl.sort_by("url")
+def _two_file_table(spark, tmp_path, name: str) -> str:
+    """A 600-row direct encode into two block files of one part each."""
+    src, out = str(tmp_path / f"{name}_src"), str(tmp_path / name)
+    generate_webpages_df(spark, 600, partitions=2).write.parquet(src)
+    encode_table_direct(spark, src, out, resume=False, chunk_rows=64,
+                        target_rows_per_split=300)
+    return out
 
 
+@pytest.mark.parametrize("lost", ["one_file", "blocks_dir"])
 @pytest.mark.parametrize("reader", _READERS)
-def test_chunk_split_across_vacuumed_files(spark, tmp_path, reader):
-    """An older vacuum rewrote blocks/ through a plain Spark read, which
-    splits a block file larger than maxPartitionBytes at row-group
-    boundaries; one can fall inside a chunk, so the chunk's column rows
-    land in two files. The fixture makes that rewrite itself. Every
-    reader must still decode such a legacy table's split chunk as one
-    chunk. decode_table_direct and read_table_local used to decode each
-    half on its own: 2032 rows of 2000, 32 of them with a null url."""
+def test_lost_block_file_refused(spark, tmp_path, read_cols_count, reader,
+                                 lost):
+    """A committed part with no block rows left (a block file deleted,
+    or the whole blocks/ dir) makes every reader raise, naming the part.
+    Readers used to return the other file's 300 rows of 600, or an empty
+    table."""
+    import glob
     import os
     import shutil
 
+    out = _two_file_table(spark, tmp_path, "lost")
+    if lost == "one_file":
+        os.remove(sorted(glob.glob(f"{out}/blocks/*.parquet"))[0])
+    else:
+        shutil.rmtree(f"{out}/blocks")
+    with pytest.raises(ValueError, match=r"part \d+ .* has no block rows"):
+        read_cols_count(reader, out)
+
+
+@pytest.mark.parametrize("reader", _READERS)
+def test_part_split_across_files_refused(spark, tmp_path, read_cols_count,
+                                         reader):
+    """Every writer puts a part whole into one block file. A block file
+    rewritten as two, each holding whole chunks of its one part, breaks
+    that layout: every reader raises, naming the part."""
+    import glob
+    import os
+
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from cuda_float_compress_spark.operators.decode import committed_blocks
-
-    src, out = str(tmp_path / "span_src"), str(tmp_path / "span")
-    generate_webpages_df(spark, 2000, partitions=1).select(
-        "url", "warc_ts", "html").write.parquet(src)
-    confs = {"spark.sql.files.maxPartitionBytes": "262144",
-             "spark.sql.files.openCostInBytes": "0"}
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        encode_table_direct(spark, src, out, chunk_rows=32,
-                            resume=False, run_id="done")
-        # a crashed run of the same parts: its blocks land, its commit
-        # is refused
-        with pytest.raises(ValueError, match="already committed"):
-            encode_table_direct(spark, src, out, chunk_rows=32,
-                                resume=False, run_id="crashed")
-        # the older engine's block files, as Spark's parquet writer made
-        # them under parquet.block.size=64 KB: a row group closed at its
-        # first size check, after 100 rows
-        for f in os.listdir(f"{out}/blocks"):
-            path = f"{out}/blocks/{f}"
-            pq.write_table(pq.read_table(path), path, row_group_size=100)
-        for k, v in confs.items():
-            spark.conf.set(k, v)
-        # the older vacuum's rewrite: committed rows read and written back
-        # by Spark, then swapped in for blocks/
-        committed_blocks(spark, out).write.parquet(f"{out}/blocks_vacuum_tmp")
-        shutil.rmtree(f"{out}/blocks")
-        os.rename(f"{out}/blocks_vacuum_tmp", f"{out}/blocks")
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-    files: dict = {}
-    for name in os.listdir(f"{out}/blocks"):
-        if name.endswith(".parquet"):
-            t = pq.read_table(f"{out}/blocks/{name}",
-                              columns=["part_id", "chunk_id"])
-            for key in zip(t["part_id"].to_pylist(),
-                           t["chunk_id"].to_pylist()):
-                files.setdefault(key, set()).add(name)
-    assert any(len(f) > 1 for f in files.values()), "no chunk was split"
-    want = pq.read_table(src).sort_by("url")
-    got = _read_sorted(spark, reader, out)
-    assert got.num_rows == 2000
-    for c in want.column_names:
-        assert got[c].equals(want[c].cast(got[c].type)), c
+    out = _two_file_table(spark, tmp_path, "split")
+    path = sorted(glob.glob(f"{out}/blocks/*.parquet"))[0]
+    rows = pq.read_table(path)
+    assert len(set(rows["part_id"].to_pylist())) == 1
+    cut = pc.less(rows["chunk_id"], 2)
+    pq.write_table(rows.filter(cut), path[:-8] + "-a.parquet")
+    pq.write_table(rows.filter(pc.invert(cut)), path[:-8] + "-b.parquet")
+    os.remove(path)
+    with pytest.raises(ValueError, match=r"part \d+ .* in 2 files"):
+        read_cols_count(reader, out)
 
 
 @pytest.mark.parametrize("reader", _READERS)

@@ -9,7 +9,6 @@ from __future__ import annotations
 import glob
 import os
 
-import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
@@ -79,10 +78,10 @@ def test_vacuum_deletes_dead_files_without_a_spark_job(spark, crashed):
         assert (now.st_ino, now.st_mtime_ns) == (st.st_ino, st.st_mtime_ns)
     assert stats == {"rows_before": 2 * stats["rows_after"],
                      "rows_after": stats["rows_after"],
-                     "bytes_reclaimed": dead_bytes, "stale_rows": 0}
-    # vacuum never splits a chunk: each file group is still one file
+                     "bytes_reclaimed": dead_bytes}
+    # the file groups are the live files, untouched
     groups = Snapshot.resolve(out).file_groups
-    assert all(len(files) == 1 for files, _ in groups)
+    assert sorted(path for path, _, _ in groups) == sorted(live)
     _assert_rows(read_table_local(out), want)
     _assert_rows(decode_table(spark, out).toArrow(), want)
     assert vacuum(spark, out)["bytes_reclaimed"] == 0
@@ -99,25 +98,33 @@ def test_compact_runs_only_the_block_write(spark, crashed, tmp_path):
     _assert_rows(read_table_local(dst), want)
 
 
-def test_vacuum_keeps_a_mixed_file_and_compact_drops_its_stale_rows(
-        spark, crashed, tmp_path):
-    """A file holding committed and uncommitted rows (what an older
-    vacuum's Spark rewrite could leave) is never rewritten by vacuum: its
-    stale rows are reported, and compact drops them."""
-    out, want, dead = crashed
-    stale, committed = sorted(dead)[0], sorted(_block_files(out) - dead)[0]
-    stale_rows = pq.read_metadata(stale).num_rows
-    mixed = f"{out}/blocks/part-mixed.parquet"
-    pq.write_table(pa.concat_tables(
-        [pq.read_table(committed), pq.read_table(stale)]), mixed)
-    os.remove(stale)
-    os.remove(committed)
-    stats = vacuum(spark, out)
-    assert stats["stale_rows"] == stale_rows
-    assert mixed in _block_files(out)
-    _assert_rows(read_table_local(out), want)
-    dst = str(tmp_path / "packed")
-    compact(spark, out, dst, chunk_rows=256)
-    assert vacuum(spark, dst)["stale_rows"] == 0
-    _assert_rows(read_table_local(dst), want)
+def test_vacuum_reclaims_inprogress_leftovers(spark, crashed, monkeypatch):
+    """A writer that fails mid-write leaves its ``.inprogress-*`` temp
+    file: a block-writer task that raised after its first row group, and
+    the manifest and lineage appends of a crashed commit. No reader opens
+    them, and vacuum deletes them."""
+    from cuda_float_compress_spark.operators import encode as E
+    from cuda_float_compress_spark.snapshot import resolve_path
 
+    out, want, dead = crashed
+    monkeypatch.setattr(E, "_ROW_GROUP_BYTES", 1)
+    rows = pq.read_table(sorted(_block_files(out))[0]).cast(E._BLOCKS_ARROW)
+
+    def failing_task():
+        yield from rows.to_batches(max_chunksize=1)[:3]
+        raise RuntimeError("task failed mid-write")
+
+    fs, root = resolve_path(out)
+    with pytest.raises(RuntimeError, match="mid-write"):
+        list(E.write_blocks(failing_task(), fs, root, "failed", 0))
+    for sub in ("manifest", "lineage"):
+        with open(f"{out}/{sub}/.inprogress-part-direct-failed.parquet",
+                  "wb") as f:
+            f.write(b"PAR1 cut short")
+    left = glob.glob(f"{out}/*/.inprogress-*")
+    assert len(left) == 3
+    dead_bytes = sum(os.path.getsize(p) for p in left + sorted(dead))
+    _assert_rows(read_table_local(out), want)
+    assert vacuum(spark, out)["bytes_reclaimed"] == dead_bytes
+    assert glob.glob(f"{out}/*/.inprogress-*") == []
+    _assert_rows(read_table_local(out), want)

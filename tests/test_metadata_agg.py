@@ -1,7 +1,7 @@
 """Metadata-only aggregation (operators/metadata_agg): count/sum/min/max
 from chunk statistics alone — no payload decode — with transparent decode
-fallback when deletes, legacy layouts, or overflowed chunk sums make the
-metadata unsafe."""
+fallback when deletes or overflowed chunk sums make the metadata
+unsafe."""
 from __future__ import annotations
 
 import glob
@@ -24,14 +24,6 @@ def enc_docs(spark, tmp_path):
     encode_table(spark, df, out, n_parts=4, resume=False,
                  sort_keys=["doc_id"], chunk_rows=128)
     return out, rows
-
-
-def _drop_crc_sidecars(out: str) -> None:
-    """The tests rewrite parquet files in place to simulate a pre-r6
-    layout; Hadoop's local FS keeps .crc sidecars that would then reject
-    the (legitimately different) bytes."""
-    for crc in glob.glob(os.path.join(out, "blocks", ".*.crc")):
-        os.remove(crc)
 
 
 def _expected(rows):
@@ -63,32 +55,31 @@ def test_metadata_agg_falls_back_after_delete(spark, enc_docs):
             got["max"]) == _expected(kept)
 
 
-def test_metadata_agg_legacy_layout_falls_back(spark, enc_docs):
-    """Strip vsum/bloom from every blocks file (pre-r6 layout): the
-    mergeSchema read plus the missing-column check must route to the
-    decode fallback and still answer correctly."""
-    out, rows = enc_docs
-    for f in glob.glob(os.path.join(out, "blocks", "*.parquet")):
-        tbl = pq.read_table(f)
-        tbl = tbl.drop_columns(["vsum", "bloom"])
-        pq.write_table(tbl, f)
-    _drop_crc_sidecars(out)
-    got = agg_int_column(spark, out, "v").collect()[0]
-    assert (got["n_rows"], got["n_nulls"], got["sum"], got["min"],
-            got["max"]) == _expected(rows)
-
-
-def test_mixed_layout_append_keeps_new_columns(spark, enc_docs):
-    """One legacy file among new ones: mergeSchema keeps vsum visible and
-    the sum-safety check (a real-values chunk without vsum) falls back."""
+def test_null_chunk_sum_falls_back_to_decode(spark, enc_docs, monkeypatch):
+    """A chunk holding values whose ``vsum`` is null (its sum left the
+    int64 domain) cannot give a sum from metadata. With ``vsum`` nulled
+    in one block file, the column kept, the operator decodes once and
+    still answers exactly."""
     out, rows = enc_docs
     f = sorted(glob.glob(os.path.join(out, "blocks", "*.parquet")))[0]
     tbl = pq.read_table(f)
-    pq.write_table(tbl.drop_columns(["vsum", "bloom"]), f)
-    _drop_crc_sidecars(out)
+    pq.write_table(tbl.set_column(
+        tbl.schema.get_field_index("vsum"), "vsum",
+        pa.nulls(tbl.num_rows, pa.int64())), f)
+    import cuda_float_compress_spark.operators.decode as decode_mod
+
+    calls = []
+    real = decode_mod.decode_table
+
+    def spy(*a, **k):
+        calls.append(k)
+        return real(*a, **k)
+
+    monkeypatch.setattr(decode_mod, "decode_table", spy)
     got = agg_int_column(spark, out, "v").collect()[0]
     assert (got["n_rows"], got["n_nulls"], got["sum"], got["min"],
             got["max"]) == _expected(rows)
+    assert len(calls) == 1
 
 
 def test_overflowing_chunk_sum_stores_null():

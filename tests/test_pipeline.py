@@ -283,10 +283,8 @@ def test_testdata_embeddings_roundtrip(spark, scratch):
 def test_zone_map_predicate_pruning(spark, webpages, scratch):
     from datetime import datetime
 
-    from cuda_float_compress_spark.operators.decode import (
-        blocks_of,
-        qualifying_chunks,
-    )
+    from cuda_float_compress_spark.operators.decode import prune
+    from cuda_float_compress_spark.snapshot import Snapshot
 
     encode_table(spark, webpages, scratch, n_parts=4, chunk_rows=256,
                  resume=False, sort_keys=["warc_ts"])
@@ -298,9 +296,10 @@ def test_zone_map_predicate_pruning(spark, webpages, scratch):
     assert all(r["ok"] for r in rep)
     # pruning actually skipped chunks (sorted by ts within parts -> tight
     # zone maps)
-    blocks = blocks_of(spark, scratch)
-    total = blocks.select("part_id", "chunk_id").distinct().count()
-    kept = qualifying_chunks(blocks, [("warc_ts", ">=", cutoff)]).count()
+    stats = Snapshot.resolve(scratch).chunk_stats
+    total = len(set(zip(stats["part_id"].to_pylist(),
+                        stats["chunk_id"].to_pylist())))
+    kept = len(prune(stats, [("warc_ts", ">=", cutoff)]))
     assert kept < total, (kept, total)
 
 

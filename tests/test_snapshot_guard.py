@@ -1,6 +1,6 @@
 """One reader of table metadata: ``snapshot.Snapshot`` is the only module
-that reads an encoded table's ``lineage/`` or ``deletes/`` dirs or lists
-its ``blocks/`` files. Separate readers of those facts drifted apart and
+that reads an encoded table's ``lineage/``, ``manifest/`` or ``deletes/``
+dirs or lists its ``blocks/`` files. Separate readers of those facts drifted apart and
 gave silent wrong answers, so this test scans the package source and
 fails on any new one. Writers of those dirs are listed by function.
 
@@ -17,13 +17,14 @@ import cuda_float_compress_spark
 
 PKG = pathlib.Path(cuda_float_compress_spark.__file__).parent
 
-# (module, function) that name lineage/ or deletes/ only to WRITE them
+# (module, function) that name lineage/, manifest/ or deletes/ only to
+# WRITE them
 WRITERS = {
     ("operators/encode.py", "commit_blocks"),
     ("operators/deletes.py", "commit_tombstones"),
 }
 
-_META_DIR = re.compile(r"(^|/)(lineage|deletes)(/|$)|blocks/\*")
+_META_DIR = re.compile(r"(^|/)(lineage|deletes|manifest)(/|$)|blocks/\*")
 _LISTERS = ("glob", "listdir", "scandir", "walk", "FileSelector")
 
 

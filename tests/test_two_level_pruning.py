@@ -1,12 +1,7 @@
 """Two-level pruning: manifest part-level zone-map rollups drop whole
-parts before the chunk-metadata scan; legacy manifests (no rollup
-columns) skip level 1 gracefully."""
+parts before the chunk-metadata scan."""
 from __future__ import annotations
 
-import glob
-import os
-
-import pyarrow.parquet as pq
 import pytest
 
 from cuda_float_compress_spark.operators.decode import (
@@ -54,32 +49,6 @@ def test_part_level_pruning_drops_whole_parts(spark, two_range_table):
         ).collect()
     )
     assert got_d == got_s == list(range(1500, 2000))
-
-
-def test_legacy_manifest_without_rollups(spark, two_range_table):
-    """Strip the rollup columns from the manifest (pre-r6 layout): level 1
-    returns None and decode answers from chunk-level pruning alone."""
-    out = two_range_table
-    # rewrite under NEW file names: Spark caches parquet footers by path,
-    # so an in-place rewrite would keep serving the old schema (test-only
-    # concern — production never rewrites manifests in place)
-    for f in glob.glob(os.path.join(out, "manifest", "*.parquet")):
-        tbl = pq.read_table(f).drop_columns(["vmin", "vmax"])
-        # drop_columns keeps the footer's embedded Spark row-metadata JSON
-        # (which still lists vmin/vmax) and Spark trusts IT over the
-        # physical columns — strip it so the file reads as truly legacy
-        tbl = tbl.replace_schema_metadata(None)
-        pq.write_table(tbl, f[:-8] + "-legacy.parquet")
-        os.remove(f)
-    for crc in glob.glob(os.path.join(out, "manifest", ".*.crc")):
-        os.remove(crc)
-    assert qualifying_parts(spark, out, [("v", ">=", 1500)]) is None
-    got = sorted(
-        r["v"] for r in decode_table_direct(
-            spark, out, columns=["v"], predicates=[("v", ">=", 1500)]
-        ).collect()
-    )
-    assert got == list(range(1500, 2000))
 
 
 def test_equality_and_in_part_pruning(spark, two_range_table):
