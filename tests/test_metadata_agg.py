@@ -82,6 +82,18 @@ def test_null_chunk_sum_falls_back_to_decode(spark, enc_docs, monkeypatch):
     assert len(calls) == 1
 
 
+def test_block_file_without_vsum_refused(spark, enc_docs):
+    """One block file without the ``vsum``/``bloom`` columns among
+    complete ones breaks the table layout: the read raises ``KeyError``
+    instead of answering from stats that lack the sums."""
+    out, _ = enc_docs
+    f = sorted(glob.glob(os.path.join(out, "blocks", "*.parquet")))[0]
+    tbl = pq.read_table(f)
+    pq.write_table(tbl.drop_columns(["vsum", "bloom"]), f)
+    with pytest.raises(KeyError, match="vsum"):
+        agg_int_column(spark, out, "v").collect()
+
+
 def test_overflowing_chunk_sum_stores_null():
     from cuda_float_compress_spark.operators.encode import (
         _encode_chunk_to_rows,
