@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-SCRATCH = "/root/repo/.scratch"
+SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
 
 
 def _minhash_perm_sql() -> str:

@@ -28,7 +28,7 @@ import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SCRATCH = "/root/repo/.scratch"
+SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
 # transient encode outputs go to tmpfs when available: the measured job then
 # never waits on disk writeback (outputs are deleted right after timing)
 SHM = "/dev/shm/cfc_bench" if os.path.isdir("/dev/shm") else SCRATCH

@@ -102,9 +102,7 @@ def select_bytes_codec(
 ) -> str:
     """Min-size byte-string codec for the (lengths, data) of one chunk,
     trialed on a lengths+data slice of up to 256 evenly strided values.
-    Low-cardinality samples add dict/rle to the bulk codec; otherwise the
-    ratio profile adds FSST when values are short (its sweet spot; long
-    documents go straight to zstd, which dominates there)."""
+    Low-cardinality samples add dict/rle to the bulk codec."""
     base = "bytes_zstd" if profile == "ratio" else "bytes_lz4"
     n = len(lengths)
     if n == 0 or len(data) == 0:
@@ -118,11 +116,6 @@ def select_bytes_codec(
     cands = [base]
     if non_null and card <= max(1, non_null // 2):
         cands += ["bytes_dict", "bytes_rle"]
-    # "short" is the CHUNK's bytes over the SAMPLE's values: above 256
-    # values this overstates the mean length by the stride, so FSST is
-    # trialed on long chunks only when their values are very short
-    elif profile == "ratio" and non_null and len(data) / non_null < 128:
-        cands.append("bytes_fsst")
     if len(cands) == 1:
         return base
     return min(cands, key=lambda name: len(

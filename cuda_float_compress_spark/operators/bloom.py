@@ -19,10 +19,11 @@ with :func:`bloom_build`; the driver-side pruner
 (``operators/decode.py`` ``prune``) probes them with
 :func:`bloom_contains`.
 
-Scale: filters ride the existing blocks parquet (metadata-scale) and
-reach the driver in ``Snapshot.chunk_stats``, which the table read
-already loads; probing is a few hashes per chunk with a filter on the
-predicate's column, never a payload read.
+Scale: filters are metadata-scale. Each is stored in its block row and
+in the run's manifest row, so it reaches the driver in
+``Snapshot.chunk_stats``, which the table read already loads, without
+a block file being opened; probing is a few hashes per chunk with a
+filter on the predicate's column, never a payload read.
 
 Parity note: the reference (catid/cuda_float_compress) has no predicate
 machinery at all — this extends the engine's pushdown layer

@@ -241,8 +241,7 @@ def prune(stats: pa.Table, predicates: list[tuple], covered: bool = False,
     zone maps and Bloom filters MIGHT satisfy all ``predicates``; with
     ``covered``, those where every row provably does. The one chunk
     pruner: every reader calls it on the driver over
-    ``Snapshot.chunk_stats`` (:func:`qualifying_parts` over the
-    manifest's per-part rollups).
+    ``Snapshot.chunk_stats`` (:func:`qualifying_parts` keyed by part).
 
     ``stats`` holds ``col, ptype, vmin, vmax`` and optionally ``n_nulls``
     and ``bloom`` per key and column. Null stats keep a key. A key with
@@ -289,16 +288,15 @@ def qualifying_chunks(blocks: DataFrame, predicates: list[tuple]) -> DataFrame:
 def qualifying_parts(
     spark: SparkSession, out_dir: str, predicates: list[tuple]
 ) -> list[int]:
-    """Part ids whose MANIFEST rollup stats (per-part min vmin / max vmax,
-    written by encode.commit_blocks) might satisfy all predicates:
-    :func:`prune` over ``Snapshot.manifest``, the rollups of committed
-    runs. Conservative by construction: null stats keep the part, a
-    column the manifest does not know keeps every part, and Bloom
-    filters don't roll up."""
-    man = Snapshot.resolve(out_dir).manifest
-    known = set(man["col"].to_pylist())
+    """Part ids that, for each of ``predicates``, hold a chunk whose stats
+    might satisfy it: :func:`prune` over ``Snapshot.chunk_stats`` keyed
+    by part. Conservative by construction: null stats keep the part, and a
+    column no committed run knows keeps every part."""
+    stats = Snapshot.resolve(out_dir).chunk_stats
+    known = set(stats["col"].to_pylist())
     return sorted(p for (p,) in prune(
-        man, [pr for pr in predicates if pr[0] in known], keys=("part_id",)))
+        stats, [pr for pr in predicates if pr[0] in known],
+        keys=("part_id",)))
 
 
 def _row_match(arr: pa.Array, ptype: str, op: str, value) -> pa.Array:

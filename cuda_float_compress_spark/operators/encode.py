@@ -11,9 +11,10 @@ Dataflow (SURVEY.md §3.4):
             low-cardinality string columns, then each column encoded;
             write_blocks writes the task's block file with pyarrow and
             returns only the block rows' metadata columns)
-         -> commit_blocks: one action (toArrow) collects those stats;
-            manifest and lineage built from them and written on the
-            driver with pyarrow  (no listing or read of blocks/)
+         -> commit_blocks: one action (toArrow) collects those stats,
+            checks their layout and writes them on the driver with
+            pyarrow as the run's manifest, then its lineage rows
+            (no listing or read of blocks/)
 
 Every writer of an encoded table shares the three parts of this module:
 :func:`encode_part` cuts one part's rows into chunks and encodes them,
@@ -31,8 +32,9 @@ clustered by its low-cardinality string columns (``_cluster_rows``; see
 Scale notes (100 TB, 1000 executors): every stage is embarrassingly parallel
 after the single planned shuffle; block rows are ~chunk-sized (MBs) and
 each task writes its own, so payloads never reach the JVM or the driver;
-the commit collects ~100 B of metadata per block row and writes one row
-per (part, column).
+the commit collects ~100 B of metadata per block row (plus its Bloom
+filter, when the column has one) and writes it as the run's manifest,
+one row per block row, which every later read plans from.
 """
 
 from __future__ import annotations
@@ -61,6 +63,8 @@ from cuda_float_compress_spark.snapshot import (
     MANIFEST_SCHEMA,
     Snapshot,
     _open,
+    check_layout,
+    conform,
 )
 
 #: one row per chunk x column: the payload beside its stats, as the task
@@ -102,13 +106,9 @@ _BLOCKS_ARROW = pa.schema(
     ]
 )
 
-#: what a writer's task returns for each block row it wrote: the metadata
-#: columns the manifest aggregates (:func:`_manifest_rows`), never the
-#: payload
-_STATS_ARROW = pa.schema([_BLOCKS_ARROW.field(c) for c in (
-    "part_id", "col", "col_idx", "ptype", "n", "n_nulls", "raw_bytes",
-    "enc_bytes", "codec", "vmin", "vmax")])
-STATS_SCHEMA = from_arrow_schema(_STATS_ARROW)
+#: what a writer's task returns for each block row it wrote, the row's
+#: manifest row (``MANIFEST_SCHEMA``): never the payload
+STATS_SCHEMA = from_arrow_schema(MANIFEST_SCHEMA)
 
 #: the task writer closes a row group at this many bytes of buffered block
 #: rows: parquet-mr's ``parquet.block.size``, the row groups Spark's
@@ -337,8 +337,9 @@ def _row_groups(blocks):
 def write_blocks(blocks, fs, root: str, run_id: str, partition: int):
     """Write one task's block rows (``blocks``: Arrow batches in
     ``_BLOCKS_ARROW``) to ``blocks/part-<run_id>-<partition>.parquet``
-    under ``root`` on ``fs``, then yield their metadata columns
-    (``STATS_SCHEMA``). The one writer of block files.
+    under ``root`` on ``fs``, then yield their manifest rows
+    (``MANIFEST_SCHEMA``: the metadata columns and ``file``, that base
+    name). The one writer of block files.
 
     The file is written under a dot-prefixed temp name, which every
     reader ignores, and renamed into place once complete, as
@@ -362,7 +363,9 @@ def write_blocks(blocks, fs, root: str, run_id: str, partition: int):
                     use_dictionary=_DICTIONARY_COLS, write_statistics=False,
                     store_schema=False)
             writer.write_table(group, row_group_size=group.num_rows)
-            stats += group.select(_STATS_ARROW.names).to_batches()
+            stats += group.select(MANIFEST_SCHEMA.names[:-1]).append_column(
+                "file", pa.repeat(pa.scalar(name), group.num_rows)).cast(
+                MANIFEST_SCHEMA).to_batches()
     finally:
         if writer is not None:
             writer.close()
@@ -388,29 +391,6 @@ def block_writer(rows_of, out_dir: str, run_id: str):
     return write
 
 
-def _manifest_rows(stats: pa.Table, run_id: str) -> pa.Table:
-    """One manifest row per (part, col) of ``stats``, the metadata columns
-    of run ``run_id``'s block rows: chunk count, value/null/byte sums,
-    the sorted codec set, and the part-level zone-map rollups
-    (null-skipping min vmin / max vmax) that ``decode.qualifying_parts``
-    prunes whole parts by."""
-    keys = ["part_id", "col", "col_idx", "ptype"]
-    g = stats.group_by(keys).aggregate([
-        ("n", "count"), ("n", "sum"), ("n_nulls", "sum"),
-        ("raw_bytes", "sum"), ("enc_bytes", "sum"), ("codec", "distinct"),
-        ("vmin", "min"), ("vmax", "max")])
-    return pa.table({
-        **{k: g[k] for k in keys},
-        "n_chunks": g["n_count"], "n_values": g["n_sum"],
-        "n_nulls": g["n_nulls_sum"], "raw_bytes": g["raw_bytes_sum"],
-        "enc_bytes": g["enc_bytes_sum"],
-        "codecs": pa.array([sorted(c) for c in g["codec_distinct"].to_pylist()],
-                           MANIFEST_SCHEMA.field("codecs").type),
-        "vmin": g["vmin_min"], "vmax": g["vmax_max"],
-        "run_id": pa.repeat(pa.scalar(run_id), g.num_rows),
-    }).cast(MANIFEST_SCHEMA)
-
-
 def commit_blocks(stats: DataFrame, out_dir: str, run_id: str,
                   metrics: EngineMetrics | None = None,
                   salts: dict | None = None) -> pa.Table:
@@ -419,17 +399,18 @@ def commit_blocks(stats: DataFrame, out_dir: str, run_id: str,
     written. The one commit of every table writer.
 
     The job is one action, ``toArrow``: each task writes its own block
-    file and returns only the metadata columns of its block rows, so no
-    payload crosses back into the JVM. The manifest is aggregated on the
-    driver from those rows: ``blocks/`` is neither listed nor read, and
-    stale files of a crashed earlier run never count. Manifest and
-    lineage are appended on the driver with pyarrow: the rows are
-    metadata-scale (parts x cols), and a Spark job costs ~0.5 s of fixed
-    driver latency in local mode. The lineage append lands LAST: it is
-    the run's commit point (readers trust only lineage-committed parts).
-    Parts another run committed are refused before either append (two
-    runs of one part make the table unreadable); ``maintain.vacuum``
-    reclaims the refused block files."""
+    file and returns only the manifest rows of its block rows, so no
+    payload crosses back into the JVM, and ``blocks/`` is neither listed
+    nor read. Before any append the rows must pass
+    ``snapshot.check_layout`` (no block row twice, no part in two files)
+    and hold no part another run committed: a table breaking either is
+    one every reader refuses. The rows are then written on the driver
+    with pyarrow as the run's manifest, and lineage's per-part counts
+    and sizes are summed from them: the rows are metadata-scale, and a
+    Spark job costs ~0.5 s of fixed driver latency in local mode. The
+    lineage append lands LAST: it is the run's commit point (readers
+    trust only lineage-committed parts). ``maintain.vacuum`` reclaims
+    the block files of a refused or crashed commit."""
     stage = (metrics.stage if metrics is not None
              else lambda _: contextlib.nullcontext())
     with stage("encode_write"):
@@ -437,7 +418,8 @@ def commit_blocks(stats: DataFrame, out_dir: str, run_id: str,
 
     with stage("manifest"):
         snap = Snapshot.resolve(out_dir)
-        man = _manifest_rows(written, run_id)
+        man = conform(written, MANIFEST_SCHEMA)
+        check_layout(man, f"run {run_id} of {out_dir}")
         done = snap.committed_rows
         others = set(done.filter(pc.not_equal(
             done["run_id"], run_id))["part_id"].to_pylist())
@@ -445,26 +427,26 @@ def commit_blocks(stats: DataFrame, out_dir: str, run_id: str,
         if taken:
             raise ValueError(f"parts {taken} of {out_dir} are already "
                              "committed by another run; use part_offset")
-        _atomic_parquet_append(snap.fs, f"{snap.root}/manifest", man,
-                               f"part-direct-{run_id}.parquet")
-        per = man.group_by("part_id").aggregate([
-            ("n_chunks", "max"), ("n_values", "max"), ("raw_bytes", "sum"),
-            ("enc_bytes", "sum")])
+        name = f"part-direct-{run_id}.parquet"
+        _atomic_parquet_append(snap.fs, f"{snap.root}/manifest", man, name)
+        chunks = man.group_by(["part_id", "chunk_id"]).aggregate([
+            ("n", "max"), ("raw_bytes", "sum"), ("enc_bytes", "sum")])
+        per = chunks.group_by("part_id").aggregate([
+            ("chunk_id", "count"), ("n_max", "sum"), ("raw_bytes_sum", "sum"),
+            ("enc_bytes_sum", "sum")])
         n = per.num_rows
         _atomic_parquet_append(
             snap.fs, f"{snap.root}/lineage",
             pa.table({
-                "part_id": per["part_id"], "n_chunks": per["n_chunks_max"],
-                "n_rows": per["n_values_max"],
-                "raw_bytes": per["raw_bytes_sum"],
-                "enc_bytes": per["enc_bytes_sum"],
+                "part_id": per["part_id"], "n_chunks": per["chunk_id_count"],
+                "n_rows": per["n_max_sum"],
+                "raw_bytes": per["raw_bytes_sum_sum"],
+                "enc_bytes": per["enc_bytes_sum_sum"],
                 "run_id": pa.repeat(pa.scalar(run_id), n),
                 "status": pa.repeat(pa.scalar("done"), n),
                 "finished_at": pa.repeat(pa.scalar(time.time()), n),
                 "salts_json": pa.repeat(pa.scalar(json.dumps(salts or {})), n),
-            }).cast(LINEAGE_SCHEMA),
-            f"part-direct-{run_id}.parquet",
-        )
+            }).cast(LINEAGE_SCHEMA), name)
     return man
 
 
@@ -533,9 +515,9 @@ def encode_table(
 
     ``part_offset`` shifts this run's part ids (streaming ingest gives each
     epoch a disjoint part range so block keys stay globally unique).
-    Crash safety: blocks carry ``run_id``; manifest aggregates ONLY this
-    run's blocks, and decode trusts only (part_id, run_id) pairs committed
-    in lineage — stale partials from a crashed run are inert.
+    Crash safety: blocks carry ``run_id``; the manifest lists ONLY this
+    run's block rows, and decode trusts only (part_id, run_id) pairs
+    committed in lineage — stale partials from a crashed run are inert.
 
     ``pre_partitioned``: the caller already shuffled ``df`` and attached a
     ``part_id`` column (e.g. ``zorder.cluster_by_zorder``) — skip the

@@ -3,8 +3,8 @@ re-encode and compaction. Each takes its facts from ``snapshot.Snapshot``;
 none reads ``blocks/`` through Spark.
 
 ``vacuum`` is file-level garbage collection: it deletes the block files
-that hold no committed ``(part_id, run_id)`` pair (the leftovers of
-crashed or retried runs) and the temp files of writers that failed
+no committed manifest row names (the leftovers of crashed or refused
+runs, and copies) and the temp files of writers that failed
 mid-write, and never rewrites a live file, so it runs no Spark job and
 can never split or duplicate a chunk. Every writer gives a block file
 the rows of one run, so no file mixes committed and stale rows.
@@ -134,9 +134,9 @@ def reencode_columns(
 
 
 def vacuum(spark: SparkSession, out_dir: str) -> dict:
-    """Garbage-collect what no reader trusts: block files whose
-    ``(part_id, run_id)`` never committed to lineage (crashed or retried
-    runs: ``Snapshot.all_block_files`` minus ``Snapshot.block_files``),
+    """Garbage-collect what no reader trusts: block files no committed
+    manifest row names (crashed or refused runs' files, and copies:
+    ``Snapshot.all_block_files`` minus ``Snapshot.block_files``),
     the ``.inprogress-*`` files of block, manifest and lineage writers
     that failed mid-write (``Snapshot.leftover_files``), and the
     uncommitted ``Snapshot.delete_dirs`` (delete runs that crashed
@@ -173,23 +173,21 @@ def vacuum(spark: SparkSession, out_dir: str) -> dict:
 
 def table_stats(out_dir: str) -> dict:
     """Per-column value, null and byte counts, ratio and codec set of the
-    committed table, summed on the driver over ``Snapshot.manifest`` (the
-    manifest rows of committed runs only; no Spark job): the report
+    committed table, summed on the driver over ``Snapshot.chunk_stats``
+    (the manifest rows of committed runs only; no Spark job): the report
     ``cli stats`` prints, and what an operator reads before deciding a
     re-encode."""
-    sums = ("n_values", "n_nulls", "raw_bytes", "enc_bytes")
-    per: dict[tuple, dict] = {}
-    for r in Snapshot.resolve(out_dir).manifest.to_pylist():
-        a = per.setdefault((r["col"], r["ptype"]),
-                           {**dict.fromkeys(sums, 0), "codecs": set()})
-        for k in sums:
-            a[k] += r[k]
-        a["codecs"].update(r["codecs"])
+    sums = {"n": "n_values", "n_nulls": "n_nulls", "raw_bytes": "raw_bytes",
+            "enc_bytes": "enc_bytes"}
+    g = Snapshot.resolve(out_dir).chunk_stats.group_by(
+        ["col", "ptype"]).aggregate(
+        [(k, "sum") for k in sums] + [("codec", "distinct")])
     columns = [
-        {"col": col, "ptype": ptype, **{k: a[k] for k in sums},
-         "ratio": round(a["raw_bytes"] / max(a["enc_bytes"], 1), 4),
-         "codecs": sorted(a["codecs"])}
-        for (col, ptype), a in sorted(per.items())
+        {"col": r["col"], "ptype": r["ptype"],
+         **{v: r[f"{k}_sum"] for k, v in sums.items()},
+         "ratio": round(r["raw_bytes_sum"] / max(r["enc_bytes_sum"], 1), 4),
+         "codecs": sorted(r["codec_distinct"])}
+        for r in sorted(g.to_pylist(), key=lambda r: (r["col"], r["ptype"]))
     ]
     raw = sum(c["raw_bytes"] for c in columns)
     enc = sum(c["enc_bytes"] for c in columns)

@@ -1,13 +1,14 @@
 """The table Snapshot: the one reader of an encoded table's metadata.
 
 An encoded table dir holds ``blocks/`` (one row per chunk x column, the
-payload beside its stats), ``manifest/``, ``lineage/`` (one row per part
-per committed run: the commit log) and ``deletes/run-*`` (merge-on-read
-tombstones). :meth:`Snapshot.resolve` is the only code that reads
-``lineage/`` and ``deletes/`` or lists ``blocks/``. Every reader (the
-Spark decode transport, the Spark-free ``localio`` reader, metadata
-aggregation, compaction) and every resume/merge writer takes its facts
-from here, so they cannot disagree:
+payload beside its stats), ``manifest/`` (one file per run: the stats of
+each of its block rows), ``lineage/`` (one row per part per committed
+run: the commit log) and ``deletes/run-*`` (merge-on-read tombstones).
+:meth:`Snapshot.resolve` is the only code that reads ``lineage/``,
+``manifest/`` and ``deletes/`` or lists ``blocks/``; it never opens a
+block file. Every reader (the Spark decode transport, the Spark-free
+``localio`` reader, metadata aggregation, compaction) and every
+resume/merge writer takes its facts from here, so they cannot disagree:
 
 * **Committed pairs.** ``(part_id, run_id)`` is committed when lineage
   holds a ``status == 'done'`` row for it. ``as_of`` keeps runs finished
@@ -16,7 +17,13 @@ from here, so they cannot disagree:
   committed nothing (its first encode crashed before the lineage append)
   and reads as an empty table. A part committed by two runs would decode
   twice, so any read of such a table raises ``ValueError``.
-* **Schema.** The union of ``(col, ptype)`` over the block rows of ALL
+* **Manifest.** The committed runs' ``manifest/part-direct-<run_id>``
+  files, read in one pass, in :data:`MANIFEST_SCHEMA`: one row per block
+  row, its stats without the payload, and ``file``, the block file
+  holding it. ``encode.commit_blocks`` writes a run's file from the rows
+  its tasks wrote, before the lineage append, so a crashed run's file is
+  never read. Rows of a part lineage does not commit are dropped.
+* **Schema.** The union of ``(col, ptype)`` over the manifest rows of ALL
   committed runs, in first-seen column order. It ignores ``as_of``,
   ``since`` and any part or column restriction, so every reader of one
   table returns the same columns; chunks that predate a column decode
@@ -27,19 +34,16 @@ from here, so they cannot disagree:
   carry one ``committed_at`` stamp; under ``as_of`` a run applies when
   that stamp is at or before it. Other dirs there are inert;
   ``maintain.vacuum`` reclaims them.
-* **Block files.** The ``blocks/*.parquet`` files holding at least one
-  row of a committed pair in the window, with their sizes.
-* **Chunk stats.** Those files' block rows of the in-window pairs,
-  without the payload: the zone maps, Bloom filters and counts that
-  chunk pruning and metadata aggregation read on the driver. They come
-  from the same pass over the block files as the schema, and hold
-  O(chunks x columns) rows, each tagged with the block file it came from.
+* **Chunk stats.** The manifest rows of the in-window pairs: the zone
+  maps, Bloom filters, counts, codecs and sizes that chunk pruning,
+  metadata aggregation and ``table_stats`` read on the driver. They hold
+  O(chunks x columns) rows.
+* **Block files.** The ``blocks/*.parquet`` files the chunk stats name,
+  with their sizes from one listing of ``blocks/``. A file no committed
+  manifest row names is an orphan (a crashed or refused run's, or a
+  copy): no reader opens it, and ``maintain.vacuum`` deletes it.
 * **File groups.** One entry per block file, with the chunk keys it
   holds: the unit a reader decodes and ``compact`` re-chunks.
-* **Manifest.** The ``manifest/`` rows (one per part and column of a
-  run) of the committed pairs in the window, read with pyarrow: the
-  per-column sizes and codecs ``maintain.table_stats`` reports. A
-  crashed run's manifest rows are not read, as its blocks are not.
 * **Deleted positions.** The live tombstones as ``(part_id, chunk_id)``
   -> row positions, read with pyarrow: the form the chunk assembler
   drops them in.
@@ -56,18 +60,22 @@ scheme pyarrow cannot open (``s3a://``, or ``hdfs://`` without libhdfs)
 raises here instead of reading as an empty table.
 
 Only ``lineage/`` is read eagerly; everything else is derived on first
-use, so resume and merge, which need only the commit log, never touch
-the block files. The Snapshot never writes.
+use, so resume and merge, which need only the commit log, never read
+the manifest. The Snapshot never writes.
 
 **One layout.** Every writer puts each part whole into one block file,
 with one block row per ``(part_id, chunk_id, col)``, and commits it in
-one run. The Snapshot reads that layout and refuses, with
-``ValueError``, any table that breaks it, rather than guess at what
-another layout meant: a block row present twice (a block file copied
-by a task retry), a committed part whose rows are in two files, and a
-committed part with no block rows at all (a lost block file, which
-would otherwise read as a table without that part's rows). A block or
-manifest file lacking one of the layout's columns fails to read.
+one run. :func:`check_layout` refuses, with ``ValueError``, rows that
+break it, rather than guess at what another layout meant: a block row
+present twice (a block file copied by a task retry and named by two
+manifest rows, or one part written by two tasks) and a part whose rows
+are in two files. ``encode.commit_blocks`` runs it on a run's rows
+before it commits them, and the Snapshot on the committed rows. The
+Snapshot also refuses a committed part whose block file is missing from
+``blocks/`` (a lost file, which would otherwise read as a table without
+that part's rows). A manifest file lacking one of
+:data:`MANIFEST_SCHEMA`'s columns (one in an older layout) fails to
+read with ``KeyError``.
 """
 
 from __future__ import annotations
@@ -83,7 +91,7 @@ import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 
 __all__ = ["Snapshot", "LINEAGE_SCHEMA", "MANIFEST_SCHEMA", "ADDRESS_COLS",
-           "ADDRESS_SCHEMA"]
+           "ADDRESS_SCHEMA", "check_layout"]
 
 LINEAGE_SCHEMA = pa.schema([
     ("part_id", pa.int32()),
@@ -97,42 +105,29 @@ LINEAGE_SCHEMA = pa.schema([
     ("salts_json", pa.string()),
 ])
 
-#: one row per part and column of a run, aggregated from its block rows
+#: one row per block row of a run: the row without ``params`` and the
+#: payload, and ``file``, the base name of the block file holding it.
+#: ``encode.commit_blocks`` writes a run's rows as its manifest file,
+#: ``manifest/part-direct-<run_id>.parquet``
 MANIFEST_SCHEMA = pa.schema([
     ("part_id", pa.int32()),
+    ("chunk_id", pa.int64()),
     ("col", pa.string()),
     ("col_idx", pa.int32()),
     ("ptype", pa.string()),
-    ("n_chunks", pa.int64()),
-    ("n_values", pa.int64()),
+    ("codec", pa.string()),
+    ("n", pa.int64()),
     ("n_nulls", pa.int64()),
     ("raw_bytes", pa.int64()),
     ("enc_bytes", pa.int64()),
-    # element name + non-null mirror Spark's array<string> parquet layout
-    ("codecs", pa.list_(pa.field("element", pa.string(), nullable=False))),
-    ("vmin", pa.int64()),
-    ("vmax", pa.int64()),
-    ("run_id", pa.string()),
-])
-
-_SCHEMA_COLS = ["part_id", "run_id", "col_idx", "col", "ptype"]
-# the metadata columns of a block file: everything but the payload
-_SCAN = pa.schema([
-    ("part_id", pa.int32()),
-    ("chunk_id", pa.int64()),
-    ("run_id", pa.string()),
-    ("col_idx", pa.int32()),
-    ("col", pa.string()),
-    ("ptype", pa.string()),
-    ("n", pa.int64()),
-    ("n_nulls", pa.int64()),
     ("vmin", pa.int64()),
     ("vmax", pa.int64()),
     ("vsum", pa.int64()),
+    ("run_id", pa.string()),
     ("bloom", pa.binary()),
+    ("file", pa.string()),
 ])
-_STATS_COLS = ["part_id", "chunk_id", "col", "ptype", "n", "n_nulls",
-               "vmin", "vmax", "vsum", "bloom"]
+
 _CHUNK_KEY = ["part_id", "chunk_id"]
 #: a row's stable address, the columns of a tombstone row
 ADDRESS_SCHEMA = pa.schema([("_part_id", pa.int32()),
@@ -198,6 +193,40 @@ def _union_schema(rows) -> list[tuple[str, str]]:
     return out
 
 
+def _of_pairs(rows: pa.Table, pairs: frozenset) -> pa.Table:
+    """The ``rows`` whose ``(part_id, run_id)`` is in ``pairs``."""
+    key = pc.binary_join_element_wise(
+        rows["part_id"].cast(pa.string()), rows["run_id"], "/")
+    return rows.filter(pc.is_in(key, value_set=pa.array(
+        [f"{p}/{r}" for p, r in pairs], pa.string())))
+
+
+def check_layout(rows: pa.Table, where: str) -> None:
+    """Refuse, with ``ValueError``, manifest rows (of one run, or a
+    table's committed rows) that break the one layout (module docstring):
+    a ``(part_id, chunk_id, col)`` present twice, or a part whose rows
+    are in two files. The duplicate check comes first, as a copied block
+    file also puts its parts in two files."""
+    keys = _CHUNK_KEY + ["col"]
+    counts = rows.group_by(keys).aggregate([("n", "count")])
+    dup = counts.filter(pc.greater(counts["n_count"], 1))
+    if dup.num_rows:
+        p, c, col = (dup[k][0].as_py() for k in keys)
+        raise ValueError(
+            f"duplicate block for part={p} chunk={c} col={col}: two rows "
+            f"in {where} (a block file copied by a task retry, or a part "
+            "written by two tasks?); remove the copy or rebuild"
+        )
+    files = rows.group_by("part_id").aggregate([("file", "count_distinct")])
+    split = files.filter(pc.greater(files["file_count_distinct"], 1))
+    if split.num_rows:
+        raise ValueError(
+            f"part {split['part_id'][0].as_py()} of {where} has block rows "
+            f"in {split['file_count_distinct'][0].as_py()} files, but "
+            "every writer puts a part whole into one file; rebuild the table"
+        )
+
+
 class Snapshot:
     """One table's metadata at one point in time (see the module
     docstring). Build it with :meth:`resolve`."""
@@ -212,7 +241,7 @@ class Snapshot:
         #: every lineage row as written (none when the dir has no lineage)
         self.lineage: pa.Table = (
             ds.dataset(lin, schema=LINEAGE_SCHEMA, filesystem=self.fs,
-                       format="parquet").to_table()
+                       format="parquet").to_table().combine_chunks()
             if _exists(self.fs, lin) else LINEAGE_SCHEMA.empty_table()
         )
 
@@ -291,97 +320,69 @@ class Snapshot:
         )
 
     @functools.cached_property
-    def _block_scan(self) -> tuple[list, list, pa.Table]:
-        # one pass over the block files' metadata columns (payloads are
-        # never read): distinct (part, run, col) rows per file give both
-        # the schema and which files hold committed rows, and the rows of
-        # the in-window pairs are the chunk stats
-        all_pairs, pairs = self._all_pairs, self.pairs
-        trips: set = set()
-        live: list[tuple[str, int]] = []
-        stats: list[pa.Table] = []
-        for path, size in self.all_block_files:
-            meta = conform(pq.ParquetFile(path, filesystem=self.fs).read(
-                columns=_SCAN.names, use_threads=False), _SCAN)
-            distinct = meta.select(_SCHEMA_COLS).group_by(
-                _SCHEMA_COLS).aggregate([])
-            seen, win = set(), set()
-            for p, r, idx, col, ptype in zip(
-                    *(distinct[c].to_pylist() for c in _SCHEMA_COLS)):
-                seen.add((p, r))
-                if (p, r) in all_pairs:
-                    trips.add((idx, col, ptype))
-                if (p, r) in pairs:
-                    win.add((p, r))
-            if not win:
-                continue
-            if win != seen:
-                meta = meta.filter(pa.array([
-                    k in win for k in zip(meta["part_id"].to_pylist(),
-                                          meta["run_id"].to_pylist())]))
-            stats.append(meta.select(_STATS_COLS).append_column(
-                "file", pa.repeat(pa.scalar(len(live), pa.int32()),
-                                  meta.num_rows)))
-            live.append((path, size))
-        chunk_stats = (pa.concat_tables(stats) if stats else
-                       _SCAN.empty_table().select(_STATS_COLS).append_column(
-                           "file", pa.array([], pa.int32())))
-        self._check_layout(chunk_stats)
-        return (_union_schema((c, p) for _, c, p in sorted(trips)), live,
-                chunk_stats)
+    def _manifest(self) -> pa.Table:
+        # the committed runs' manifest files in one pass. The dataset's
+        # schema is its first file's, and it null-fills a column another
+        # file lacks, so each file's own schema (read by the scan) is
+        # checked too
+        runs = sorted({r for _, r in self._all_pairs})
+        if not runs:
+            return MANIFEST_SCHEMA.empty_table()
+        man = ds.dataset([f"{self.root}/manifest/part-direct-{r}.parquet"
+                          for r in runs], filesystem=self.fs,
+                         format="parquet")
+        rows = man.to_table()
+        for frag in man.get_fragments():
+            lacks = set(MANIFEST_SCHEMA.names).difference(
+                frag.physical_schema.names)
+            if lacks:
+                raise KeyError(f"manifest file {frag.path} lacks "
+                               f"{sorted(lacks)}")
+        return _of_pairs(conform(rows, MANIFEST_SCHEMA).combine_chunks(),
+                         self._all_pairs)
 
-    @property
+    @functools.cached_property
     def columns(self) -> list[tuple[str, str]]:
         """The union schema: ``[(col, ptype)]`` in column order."""
-        return self._block_scan[0]
+        keys = ["col_idx", "col", "ptype"]
+        trips = self._manifest.group_by(keys).aggregate([])
+        return _union_schema((c, p) for _, c, p in sorted(zip(
+            *(trips[k].to_pylist() for k in keys))))
 
-    @property
-    def block_files(self) -> list[tuple[str, int]]:
-        """``[(path, size)]`` of the block files holding committed rows in
-        the window; paths are on :attr:`fs`."""
-        return self._block_scan[1]
+    @functools.cached_property
+    def _listing(self) -> dict[str, tuple[str, int]]:
+        return {path.rsplit("/", 1)[-1]: (path, size)
+                for path, size in self.all_block_files}
 
-    @property
+    @functools.cached_property
     def chunk_stats(self) -> pa.Table:
-        """One row per committed block row in the window: ``part_id,
-        chunk_id, col, ptype, n, n_nulls, vmin, vmax, vsum, bloom`` and
-        ``file``, the row's index into :attr:`block_files`. The driver
-        prunes chunks and answers metadata aggregates from it
-        (``operators.decode.prune``)."""
-        return self._block_scan[2]
-
-    def _check_layout(self, stats: pa.Table) -> None:
-        # the one layout (module docstring), checked over the chunk stats
-        # of the in-window pairs; the duplicate check comes first, as a
-        # copied block file also puts its parts in two files
-        rows = stats.group_by(_CHUNK_KEY + ["col"]).aggregate(
-            [("n", "count")])
-        dup = rows.filter(pc.greater(rows["n_count"], 1))
-        if dup.num_rows:
-            p, c, col = (dup[k][0].as_py() for k in _CHUNK_KEY + ["col"])
-            raise ValueError(
-                f"duplicate block for part={p} chunk={c} col={col}: two "
-                f"committed rows in {self.out_dir}/blocks (a block file "
-                "copied by a task retry?); remove the copy or rebuild"
-            )
-        files = stats.group_by("part_id").aggregate(
-            [("file", "count_distinct")])
-        split = files.filter(pc.greater(files["file_count_distinct"], 1))
-        if split.num_rows:
-            raise ValueError(
-                f"part {split['part_id'][0].as_py()} of {self.out_dir} has "
-                f"block rows in {split['file_count_distinct'][0].as_py()} "
-                "files, but every writer puts a part whole into one file; "
-                "rebuild the table"
-            )
+        """The manifest rows (:data:`MANIFEST_SCHEMA`) of the committed
+        pairs in the window: one per block row, with its zone map, Bloom
+        filter, counts, codec and sizes, and ``file``, the base name of
+        the block file holding it. The driver prunes chunks and answers
+        metadata aggregates from it (``operators.decode.prune``)."""
+        rows = self._manifest
+        if self.pairs != self._all_pairs:
+            rows = _of_pairs(rows, self.pairs)
+        check_layout(rows, self.out_dir)
+        held = rows.filter(pc.is_in(rows["file"], value_set=pa.array(
+            list(self._listing), pa.string())))
         lost = sorted({p for p, _ in self.pairs}
-                      - set(files["part_id"].to_pylist()))
+                      - set(pc.unique(held["part_id"]).to_pylist()))
         if lost:
             raise ValueError(
                 f"committed part {lost[0]} of {self.out_dir} has no block "
                 f"rows ({len(lost)} parts lack them): a block file is "
                 "missing; restore it or rebuild the table"
             )
+        return rows
+
+    @functools.cached_property
+    def block_files(self) -> list[tuple[str, int]]:
+        """``[(path, size)]`` of the block files holding committed rows in
+        the window; paths are on :attr:`fs`."""
+        return sorted(self._listing[f] for f in
+                      pc.unique(self.chunk_stats["file"]).to_pylist())
 
     @functools.cached_property
     def file_groups(self) -> list[tuple[str, int, frozenset]]:
@@ -391,30 +392,12 @@ class Snapshot:
         in one file)."""
         places = self.chunk_stats.group_by(
             _CHUNK_KEY + ["file"]).aggregate([])
-        keys: list[set] = [set() for _ in self.block_files]
+        keys: dict[str, set] = {}
         for p, c, f in zip(*(places[k].to_pylist()
                              for k in _CHUNK_KEY + ["file"])):
-            keys[f].add((p, c))
-        return [(path, size, frozenset(k))
-                for (path, size), k in zip(self.block_files, keys)]
-
-    @functools.cached_property
-    def manifest(self) -> pa.Table:
-        """The ``manifest/`` rows of the committed pairs in the window, in
-        :data:`MANIFEST_SCHEMA`. A run that crashed before its lineage
-        append left manifest rows that, like its blocks, are not read."""
-        try:
-            files = ds.dataset(f"{self.root}/manifest", filesystem=self.fs,
-                               format="parquet").files
-        except FileNotFoundError:
-            files = []
-        man = pa.concat_tables(
-            [conform(pq.read_table(f, filesystem=self.fs), MANIFEST_SCHEMA)
-             for f in files] or [MANIFEST_SCHEMA.empty_table()])
-        return man.filter(pa.array(
-            [k in self.pairs for k in zip(man["part_id"].to_pylist(),
-                                          man["run_id"].to_pylist())],
-            pa.bool_()))
+            keys.setdefault(f, set()).add((p, c))
+        return [(path, size, frozenset(keys[path.rsplit("/", 1)[-1]]))
+                for path, size in self.block_files]
 
     @functools.cached_property
     def delete_dirs(self) -> list[tuple[str, bool]]:

@@ -583,9 +583,9 @@ def test_throughput_profile_roundtrip_bit_identical(spark, tmp_path, scratch):
     )
     assert stats["rows"] == 600
     codecs = {
-        c
-        for r in spark.read.parquet(f"{scratch}/manifest").select("codecs").collect()
-        for c in r["codecs"]
+        r["codec"]
+        for r in spark.read.parquet(f"{scratch}/manifest")
+        .select("codec").collect()
     }
     assert "bytes_lz4" in codecs, codecs
     assert "bytes_zstd" not in codecs and "bytes_fsst" not in codecs, codecs
@@ -1200,8 +1200,9 @@ def test_lost_block_file_refused(spark, tmp_path, read_cols_count, reader,
 def test_part_split_across_files_refused(spark, tmp_path, read_cols_count,
                                          reader):
     """Every writer puts a part whole into one block file. A block file
-    rewritten as two, each holding whole chunks of its one part, breaks
-    that layout: every reader raises, naming the part."""
+    rewritten as two, each holding whole chunks of its one part, with its
+    manifest rows naming the two, breaks that layout: every reader
+    raises, naming the part."""
     import glob
     import os
 
@@ -1216,6 +1217,15 @@ def test_part_split_across_files_refused(spark, tmp_path, read_cols_count,
     pq.write_table(rows.filter(cut), path[:-8] + "-a.parquet")
     pq.write_table(rows.filter(pc.invert(cut)), path[:-8] + "-b.parquet")
     os.remove(path)
+    (man_path,) = glob.glob(f"{out}/manifest/*.parquet")
+    man = pq.read_table(man_path)
+    base = os.path.basename(path)[:-8]
+    moved = pc.equal(man["file"], base + ".parquet")
+    half = pc.if_else(pc.less(man["chunk_id"], 2), base + "-a.parquet",
+                      base + "-b.parquet")
+    man = man.set_column(man.schema.get_field_index("file"), "file",
+                         pc.if_else(moved, half, man["file"]))
+    pq.write_table(man, man_path)
     with pytest.raises(ValueError, match=r"part \d+ .* in 2 files"):
         read_cols_count(reader, out)
 
@@ -1223,18 +1233,68 @@ def test_part_split_across_files_refused(spark, tmp_path, read_cols_count,
 @pytest.mark.parametrize("reader", _READERS)
 def test_duplicated_block_file_refused(spark, tmp_path, read_cols_count,
                                        reader):
-    """A committed block file present twice under two names (what a
-    committer-v2 task retry can leave) holds every block row of its
-    chunks twice: every reader refuses the table. decode_table_direct
-    and read_table_local used to return 900 rows of 600."""
+    """A committed block file present twice under two names, with
+    manifest rows naming both, holds every block row of its chunks
+    twice: every reader refuses the table. decode_table_direct and
+    read_table_local used to return 900 rows of 600."""
     import glob
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    out, first = _copied_block_file(spark, tmp_path, "dup")
+    (man_path,) = glob.glob(f"{out}/manifest/*.parquet")
+    man = pq.read_table(man_path)
+    copy = man.filter(pc.equal(man["file"], first))
+    copy = copy.set_column(copy.schema.get_field_index("file"), "file",
+                           pa.repeat(pa.scalar(_COPY), copy.num_rows))
+    pq.write_table(pa.concat_tables([man, copy]), man_path)
+    with pytest.raises(ValueError, match="duplicate block"):
+        read_cols_count(reader, out)
+
+
+_COPY = "part-99999-retry.parquet"
+
+
+def _copied_block_file(spark, tmp_path, name: str) -> str:
+    """A 600-row direct encode into two block files, the first of them
+    copied (what a committer-v2 task retry can leave); returns the table
+    dir and the copied file's name."""
+    import glob
+    import os
     import shutil
 
-    src, out = str(tmp_path / "dup_src"), str(tmp_path / "dup")
+    src, out = str(tmp_path / f"{name}_src"), str(tmp_path / name)
     generate_webpages_df(spark, 600, partitions=2).write.parquet(src)
     encode_table_direct(spark, src, out, resume=False,
                         target_rows_per_split=300)
     first = sorted(glob.glob(f"{out}/blocks/*.parquet"))[0]
-    shutil.copy(first, f"{out}/blocks/part-99999-retry.parquet")
-    with pytest.raises(ValueError, match="duplicate block"):
-        read_cols_count(reader, out)
+    shutil.copy(first, f"{out}/blocks/{_COPY}")
+    return out, os.path.basename(first)
+
+
+def test_unnamed_block_file_copy_is_an_orphan(spark, tmp_path):
+    """A copied block file no manifest row names is an orphan: every
+    reader returns exactly the 600 source rows, and vacuum deletes the
+    copy."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from cuda_float_compress_spark.localio import read_table_local
+    from cuda_float_compress_spark.operators.direct import decode_table_direct
+    from cuda_float_compress_spark.operators.maintain import vacuum
+
+    out, _ = _copied_block_file(spark, tmp_path, "orphan")
+    want = pq.read_table(str(tmp_path / "orphan_src")).sort_by("url")
+    for got in (decode_table(spark, out).toArrow(),
+                decode_table_direct(spark, out).toArrow(),
+                read_table_local(out)):
+        got = got.sort_by("url")
+        assert got.num_rows == 600
+        for c in want.column_names:
+            assert got[c].equals(want[c].cast(got[c].type)), c
+    assert vacuum(spark, out)["bytes_reclaimed"] > 0
+    assert not os.path.exists(f"{out}/blocks/{_COPY}")
+    assert read_table_local(out).num_rows == 600

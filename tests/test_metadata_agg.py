@@ -8,6 +8,7 @@ import glob
 import os
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -58,14 +59,15 @@ def test_metadata_agg_falls_back_after_delete(spark, enc_docs):
 def test_null_chunk_sum_falls_back_to_decode(spark, enc_docs, monkeypatch):
     """A chunk holding values whose ``vsum`` is null (its sum left the
     int64 domain) cannot give a sum from metadata. With ``vsum`` nulled
-    in one block file, the column kept, the operator decodes once and
-    still answers exactly."""
+    in the manifest rows of one block file, the column kept, the
+    operator decodes once and still answers exactly."""
     out, rows = enc_docs
-    f = sorted(glob.glob(os.path.join(out, "blocks", "*.parquet")))[0]
+    (f,) = glob.glob(os.path.join(out, "manifest", "*.parquet"))
     tbl = pq.read_table(f)
+    one = pc.equal(tbl["file"], sorted(tbl["file"].to_pylist())[0])
     pq.write_table(tbl.set_column(
         tbl.schema.get_field_index("vsum"), "vsum",
-        pa.nulls(tbl.num_rows, pa.int64())), f)
+        pc.if_else(one, pa.nulls(tbl.num_rows, pa.int64()), tbl["vsum"])), f)
     import cuda_float_compress_spark.operators.decode as decode_mod
 
     calls = []
@@ -83,11 +85,11 @@ def test_null_chunk_sum_falls_back_to_decode(spark, enc_docs, monkeypatch):
 
 
 def test_block_file_without_vsum_refused(spark, enc_docs):
-    """One block file without the ``vsum``/``bloom`` columns among
-    complete ones breaks the table layout: the read raises ``KeyError``
-    instead of answering from stats that lack the sums."""
+    """A manifest file without the ``vsum``/``bloom`` columns breaks the
+    table layout: the read raises ``KeyError`` instead of answering from
+    stats that lack the sums."""
     out, _ = enc_docs
-    f = sorted(glob.glob(os.path.join(out, "blocks", "*.parquet")))[0]
+    (f,) = glob.glob(os.path.join(out, "manifest", "*.parquet"))
     tbl = pq.read_table(f)
     pq.write_table(tbl.drop_columns(["vsum", "bloom"]), f)
     with pytest.raises(KeyError, match="vsum"):

@@ -455,6 +455,58 @@ def test_double_commit_refused(spark, webpages, scratch):
         decode_table(spark, scratch).count()
 
 
+def test_pre_partitioned_part_in_two_tasks_refused(spark, scratch):
+    """``pre_partitioned=True`` takes the caller's ``part_id`` as given.
+    When one part reaches two tasks, each writes chunks 0.. of it to its
+    own block file. The commit refuses that run before any append,
+    instead of committing a table every reader refuses, and vacuum
+    reclaims the block files it wrote."""
+    import os
+
+    from cuda_float_compress_spark.operators.maintain import vacuum
+
+    df = spark.range(0, 2000, numPartitions=4).withColumn(
+        "part_id", (F.col("id") % 2).cast("int"))
+    with pytest.raises(ValueError, match="duplicate block"):
+        encode_table(spark, df, scratch, pre_partitioned=True, resume=False,
+                     sort_keys=["id"])
+    blocks = f"{scratch}/blocks"
+    written = [f"{blocks}/{f}" for f in os.listdir(blocks)]
+    assert len(written) == 4
+    for sub in ("manifest", "lineage"):
+        assert not os.path.exists(f"{scratch}/{sub}")
+    size = sum(os.path.getsize(f) for f in written)
+    assert vacuum(spark, scratch)["bytes_reclaimed"] == size
+    assert os.listdir(blocks) == []
+
+
+def test_resolve_opens_no_block_file(spark, webpages, scratch):
+    """The Snapshot plans a read from lineage, the committed runs'
+    manifest files and one listing of ``blocks/``. With every committed
+    block file overwritten by as many junk bytes, it resolves to the same
+    columns, chunk stats, file groups, block files and table stats."""
+    from cuda_float_compress_spark.operators.maintain import table_stats
+    from cuda_float_compress_spark.snapshot import Snapshot
+
+    encode_table(spark, webpages, scratch, n_parts=4, chunk_rows=512,
+                 resume=False, bloom_cols=["url"])
+
+    def facts():
+        snap = Snapshot.resolve(scratch)
+        return (snap.columns, snap.chunk_stats, snap.file_groups,
+                snap.block_files, table_stats(scratch))
+
+    before = facts()
+    assert before[3] and before[1].num_rows
+    for path, size in before[3]:
+        with open(path, "wb") as f:
+            f.write(b"\xff" * size)
+    after = facts()
+    assert after[0] == before[0]
+    assert after[1].equals(before[1])
+    assert after[2:] == before[2:]
+
+
 def test_all_null_dict_chunk_roundtrip(spark, scratch):
     """An all-null string column stored via the dict codec (card=0) must
     decode to all nulls, not IndexError."""

@@ -1,5 +1,5 @@
-"""Two-level pruning: manifest part-level zone-map rollups drop whole
-parts before the chunk-metadata scan."""
+"""Two-level pruning: ``qualifying_parts`` prunes the manifest's chunk
+stats by part, dropping whole parts, and the reads stay exact."""
 from __future__ import annotations
 
 import pytest
